@@ -471,9 +471,10 @@ object GraftOps {
     * row-op shapes (CoW delete, MoR posdel, DV, CoW update). This is the
     * oracle-gated guard for the round-15 `_gf` encoding seam:
     * `_metadata.file_path` is URI-percent-encoded while manifest entries
-    * and persisted delete targets are raw paths, and before the decode
-    * fix a CoW op on any escapable partition silently resurrected its
-    * "deleted" rows (SegStatsSpec pins the unit; this key makes the
+    * and persisted delete targets are raw paths, and when `_gf` came from
+    * it undecoded a CoW op on any escapable partition silently
+    * resurrected its "deleted" rows. `_gf` is now the manifest path
+    * itself (ManifestScanSpec pins the identity; this key makes the
     * DuckDB hash gate guard the seam end-to-end, permanently). */
   def escapedPartition(spark: SparkSession, dir: String): DataFrame = {
     val t = GraftTable.create(spark, scratch(),

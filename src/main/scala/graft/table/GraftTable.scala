@@ -7,8 +7,11 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 
 /** Deletion vectors (v3): one bitmap of deleted row positions per data file.
@@ -57,8 +60,16 @@ private[graft] object MergeStats {
   * rename/add/drop/promote are O(1) metadata commits. Data files carry
   * their schemaId and specId; reads group files by schemaId, align each
   * group to the presented schema (cast promotions, fill v3 defaults), and
-  * union — no rewrites on evolution. Merge-on-read deletes resolve with a
-  * broadcast anti-join on Spark's native `_metadata.file_path`/`row_index`.
+  * union — no rewrites on evolution.
+  *
+  * A scan is planned from the manifest alone: each file group is a
+  * relation over a [[ManifestFileIndex]] of the planned entries, so Spark
+  * neither lists files nor infers a schema. The index gives every row its
+  * file's constants (`_gf` path, `_fseq` sequence number, `_frid` first
+  * row id) as partition values, and Spark's `_metadata.row_index` gives
+  * its position. Merge-on-read deletes resolve with a broadcast anti-join
+  * on (`_gf`, position); delete files are read with the schemas the
+  * format fixes.
   */
 class GraftTable(val spark: SparkSession, val location: String) {
 
@@ -70,26 +81,10 @@ class GraftTable(val spark: SparkSession, val location: String) {
     StructType.fromDDL(s"x $ddl").head.dataType
   private def normPath(s: String): String = s.replaceFirst("^file:/+", "/")
   private def normCol(c: Column): Column = regexp_replace(c, "^file:/+", "/")
-  /** `_metadata.file_path` is a Hadoop-Path URI string — percent-ENCODED
-    * (directory "a b" arrives as ".../a%20b/..."), while manifest
-    * entries, FooterStats walks, and delete-row targets all carry RAW
-    * filesystem paths. Comparing across the two spaces silently matches
-    * NOTHING on any path with an escapable character: a CoW delete's
-    * removedPaths then drop no entry and the "deleted" rows stay live
-    * (found by SegStatsSpec's escaped-partition leg, round 15). Decode
-    * at materialization so every downstream comparison — and every
-    * PERSISTED delete-row target — lives in raw-path space. url_decode
-    * has URLDecoder semantics ('+' → space) while the URI layer leaves a
-    * literal '+' raw, so '+' is pre-escaped; '%' itself is always
-    * URI-encoded (%25), making the decode unambiguous. All three
-    * functions are codegen'd — the MoR read path stays inside
-    * WholeStageCodegen. */
-  private def decodeFilePath(c: Column): Column =
-    url_decode(regexp_replace(regexp_replace(c, "^file:/+", "/"), "\\+", "%2B"))
   /** Canonicalize PERSISTED delete-row targets into raw-path space.
-    * Delete files written before the round-15 `_gf` decode stored the
-    * URI-percent-encoded `_metadata.file_path`; files written after store
-    * raw paths. For any live data file whose legacy encoding differs from
+    * Delete files written before round 15 stored the URI-percent-encoded
+    * `_metadata.file_path`; later files store the raw manifest path. For
+    * any live data file whose legacy encoding differs from
     * its raw path, remap the encoded form back to raw via a broadcast
     * dictionary — UNLESS the encoded form is itself a live raw path (a
     * literal `%xx` directory name), where decoding is ambiguous and the
@@ -111,6 +106,30 @@ class GraftTable(val spark: SparkSession, val location: String) {
   }
   private def abs(rel: String): String =
     if (rel.startsWith("/")) rel else s"$location/$rel"
+
+  /** Read a delete file with the schema the format fixes for its kind
+    * (FORMAT.md §Row-level changes) — no schema-inference job. Equality
+    * keys are typed from the schema the delete was written under. */
+  private def readDeletes(m: TableMeta, f: FileMeta): DataFrame = {
+    val schema = f.fileType match {
+      case "posdel" => GraftTable.PosDelSchema
+      case "dv" => GraftTable.DvSchema
+      case "eqdel" =>
+        val s = m.schema(f.schemaId)
+        StructType(f.eqFieldIds.map(id =>
+          StructField(s"f$id", sparkType(s.byId(id).get.dtype))))
+    }
+    spark.read.schema(schema).parquet(abs(f.path))
+  }
+
+  /** The newest vector per target file from DV rows tagged with their
+    * file's `_dseq`. A DV commit drops the entries it supersedes, so a
+    * branch normally holds one DV file, which needs no window (and no
+    * shuffle); overlapping files keep the highest-sequence vector. */
+  private def latestDvs(rows: DataFrame, files: Int): DataFrame =
+    if (files == 1) rows
+    else rows.withColumn("_mx", max(col("_dseq")).over(Window.partitionBy(col("file_path"))))
+      .filter(col("_dseq") === col("_mx"))
 
   // ==========================================================================
   // Scan
@@ -199,7 +218,9 @@ class GraftTable(val spark: SparkSession, val location: String) {
 
     // per-schema file groups: read with that schema's physical layout, align.
     // name-mapped (imported) files form their own group per schema and are
-    // read by LOGICAL column name — Iceberg's name-mapping analog
+    // read by LOGICAL column name — Iceberg's name-mapping analog. Each group
+    // is a relation over exactly its manifest entries: no listing, and the
+    // per-file constants arrive as partition values (ManifestFileIndex).
     val groups = dataFiles.groupBy(f => (f.schemaId, f.nameMapped)).toSeq
       .map { case ((sid, mapped), files) =>
       val gs = m.schema(sid)
@@ -207,10 +228,10 @@ class GraftTable(val spark: SparkSession, val location: String) {
       val physSchema = StructType(
         gs.fields.map(f => StructField(pname(f), sparkType(f.dtype))) ++
           Seq(StructField("_row_id", LongType), StructField("_last_seq", LongType)))
-      var df = spark.read.schema(physSchema).parquet(files.map(f => abs(f.path)): _*)
-      if (needPos) df = df
-        .withColumn("_gf", decodeFilePath(col("_metadata.file_path")))
-        .withColumn("_gp", col("_metadata.row_index"))
+      val index = ManifestFileIndex(files.map(f => ManifestFileIndex.Entry(
+        normPath(abs(f.path)), f.sizeBytes, f.sequenceNumber, f.firstRowId)))
+      val df = Bridge.ofRows(spark, LogicalRelation(HadoopFsRelation(index,
+        index.partitionSchema, physSchema, None, new ParquetFileFormat, Map.empty)(spark)))
       val aligned = presented.fields.map { pf =>
         gs.byId(pf.id) match {
           case Some(gf) => col(pname(gf)).cast(sparkType(pf.dtype)).as(pf.name)
@@ -220,36 +241,27 @@ class GraftTable(val spark: SparkSession, val location: String) {
           }
         }
       }
-      val extras = Seq(col("_row_id"), col("_last_seq")) ++
-        (if (needPos) Seq(col("_gf"), col("_gp")) else Nil)
+      val pos = col("_metadata.row_index")
+      val extras =
+        (if (needPos) Seq(col("_gf"), pos.as("_gp")) else Nil) ++
+        (if (needFileMeta) Seq(coalesce(col("_last_seq"), col("_fseq")).as("_seq"),
+          coalesce(col("_row_id"), col("_frid") + pos).as("_rid")) else Nil)
       df.select(aligned ++ extras: _*)
     }
     var df = groups.reduce(_ unionByName _)
-    if (needFileMeta) {
-      val fmeta = dataFiles.map(f => (normPath(abs(f.path)), f.sequenceNumber, f.firstRowId))
-      val fdf = spark.createDataFrame(fmeta).toDF("_gf", "_fseq", "_frid")
-      df = df.join(broadcast(fdf), Seq("_gf"))
-        .withColumn("_seq", coalesce(col("_last_seq"), col("_fseq")))
-        .withColumn("_rid", coalesce(col("_row_id"), col("_frid") + col("_gp")))
-    }
 
     // position deletes + deletion vectors: broadcast anti-join on (file, pos).
     // Stored targets pass through canonTargets so legacy URI-encoded
     // values (pre-round-15 writers) keep applying after the raw-path move.
     val livePaths = dataFiles.map(f => normPath(abs(f.path)))
-    val posPart = posDel.map(f => canonTargets(
-      spark.read.parquet(abs(f.path)).select("file_path", "pos"), livePaths))
+    val posPart = posDel.map(f => canonTargets(readDeletes(m, f), livePaths))
     val dvPart = if (dvs.isEmpty) None else Some {
       // canonicalize BEFORE the latest-per-file window so a legacy and a
       // raw encoding of the same target land in one window partition
-      val raw = canonTargets(dvs.map(f => spark.read.parquet(abs(f.path))
-        .select(col("file_path"), col("dv"), lit(f.sequenceNumber).as("_dseq")))
-        .reduce(_ unionByName _), livePaths)
-      val w = Window.partitionBy(col("file_path"))
-      val latest = raw.withColumn("_mx", max(col("_dseq")).over(w))
-        .filter(col("_dseq") === col("_mx"))
-      val toPos = udf((b: Array[Byte]) => Dv.decode(b))
-      latest.select(col("file_path"), explode(toPos(col("dv"))).as("pos"))
+      val raw = canonTargets(dvs.map(f => readDeletes(m, f)
+        .withColumn("_dseq", lit(f.sequenceNumber))).reduce(_ unionByName _), livePaths)
+      latestDvs(raw, dvs.size)
+        .select(col("file_path"), explode(GraftTable.DvPositions(col("dv"))).as("pos"))
     }
     val delPos = (posPart ++ dvPart).reduceOption(_ unionByName _)
     delPos.foreach { d =>
@@ -260,7 +272,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
     // equality deletes: anti-join on key values, only rows older than the delete
     val eqGroups = eqDels.groupBy(_.eqFieldIds)
     eqGroups.foreach { case (ids, files) =>
-      val dels = files.map(f => spark.read.parquet(abs(f.path))
+      val dels = files.map(f => readDeletes(m, f)
         .withColumn("_dseq", lit(f.sequenceNumber))).reduce(_ unionByName _)
       val cond = ids.map { id =>
         val name = presented.byId(id).map(_.name)
@@ -793,12 +805,10 @@ class GraftTable(val spark: SparkSession, val location: String) {
             x.toByteArray
           })
         val old = if (existing.isEmpty) None else Some {
-          val raw = existing.map(f => spark.read.parquet(abs(f.path))
-              .select(col("file_path"), col("dv"), lit(f.sequenceNumber).as("_dseq")))
+          val raw = existing.map(f => readDeletes(m, f)
+              .withColumn("_dseq", lit(f.sequenceNumber)))
             .reduce(_ unionByName _)
-          val w = Window.partitionBy(col("file_path"))
-          raw.withColumn("_mx", max(col("_dseq")).over(w))
-            .filter(col("_dseq") === col("_mx"))
+          latestDvs(raw, existing.size)
             .select(col("file_path"), col("dv").as("dv_old"))
         }
         // full outer: files with no new deletes must carry their old vector
@@ -1499,7 +1509,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
     // URI-encoded value is tolerated via its decoded form — over-inclusion
     // only widens the scan, never changes the join's answer.
     val touched = fileScoped.iterator.flatMap { e =>
-      spark.read.parquet(abs(e.path)).select("file_path").distinct()
+      readDeletes(m, e).select("file_path").distinct()
         .collect().iterator.map(_.getString(0))
         .flatMap { t =>
           val dec = try java.net.URLDecoder.decode(
@@ -1542,7 +1552,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
     val schema = m.schema(e.schemaId)
     val keyFields = e.eqFieldIds.flatMap(id => schema.byId(id).map(id -> _))
     if (keyFields.isEmpty) return Nil
-    val rows = spark.read.parquet(abs(e.path))
+    val rows = readDeletes(m, e)
       .select(keyFields.map { case (id, _) => col(s"f$id") }: _*).collect()
     keyFields.zipWithIndex.flatMap { case ((_, fld), i) =>
       val vs = rows.map(_.get(i)).toSeq
@@ -1716,9 +1726,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
     // canonTargets BEFORE the distinct: a legacy URI-encoded target and
     // its raw form merge into ONE canonical row, and the rewritten file
     // persists raw paths — this rewrite is the legacy-table migration
-    val merged = canonTargets(pds.map(f => spark.read.parquet(abs(f.path))
-        .select(col("file_path"), col("pos")))
-      .reduce(_ unionByName _), liveData)
+    val merged = canonTargets(pds.map(readDeletes(m, _)).reduce(_ unionByName _), liveData)
       .distinct()
       .join(broadcast(liveDf),
         normCol(col("file_path")) === col("live_path"), "left_semi")
@@ -2247,6 +2255,11 @@ class GraftTable(val spark: SparkSession, val location: String) {
 }
 
 object GraftTable {
+
+  private val PosDelSchema = StructType.fromDDL("file_path string, pos bigint")
+  private val DvSchema = StructType.fromDDL("file_path string, dv binary")
+  /** One shared UDF instance, so equal scans keep equal (cacheable) plans. */
+  private val DvPositions = udf((b: Array[Byte]) => Dv.decode(b))
 
   /** parse "day(o_orderdate)" / "bucket(8, a, b)" / "truncate(4, s)" /
     * "identity(c)" (or bare "c") into a PartFieldMeta */

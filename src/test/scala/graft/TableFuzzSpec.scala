@@ -642,6 +642,52 @@ class TableFuzzSpec extends SparkSpec {
     }
   }
 
+  test("over 32 small files per scan: lineage and equality deletes stay per file (seed 61)") {
+    // Spark bin-packs small files into few tasks, so one task reads files
+    // with different sequence numbers and first row ids. Keys repeat
+    // across appends: an equality delete must remove only the rows OLDER
+    // than it, and every row keeps its own file's `_row_id` block.
+    import spark.implicits._
+    val rnd = new Random(61)
+    val t = GraftTable.create(spark, tmp(), "id bigint, v bigint")
+    // model: unique v -> (id, insert seq, row-id block [lo, hi))
+    val model = mutable.LinkedHashMap.empty[Long, (Long, Long, Long, Long)]
+    val firstRid = mutable.Map.empty[Long, Long]
+    var nextV = 0L
+    def check(tag: String): Unit = {
+      val got = t.scan(withLineage = true).collect().map(r => (r.getAs[Long]("v"),
+        (r.getAs[Long]("id"), r.getAs[Long]("_row_id"),
+          r.getAs[Long]("_last_updated_sequence_number"))))
+      assert(got.map(_._1).toSet == model.keySet && got.length == model.size, tag)
+      assert(got.map(_._2._2).distinct.length == got.length, s"$tag: duplicate _row_id")
+      for ((v, (id, rid, seq)) <- got) {
+        val (mid, mseq, lo, hi) = model(v)
+        assert(id == mid && seq == mseq, s"$tag: v=$v seq $seq != $mseq")
+        assert(rid >= lo && rid < hi, s"$tag: v=$v _row_id $rid outside [$lo, $hi)")
+        assert(firstRid.getOrElseUpdate(v, rid) == rid, s"$tag: v=$v _row_id moved")
+      }
+    }
+    for (step <- 0 until 48) {
+      if (step % 6 == 5 && model.nonEmpty) {
+        val ids = rnd.shuffle(model.values.map(_._1).toSeq.distinct).take(1 + rnd.nextInt(3))
+        t.deleteByKeys(ids.toDF("id"))
+        model.filterInPlace { case (_, r) => !ids.contains(r._1) }
+        check(s"step=$step eqdel ${ids.mkString(",")}")
+      } else {
+        val rows = Seq.fill(2 + rnd.nextInt(3)) { nextV += 1; (rnd.nextInt(12).toLong, nextV) }
+        val lo = t.meta.lastRowId
+        val s = t.append(rows.toDF("id", "v").coalesce(1))
+        rows.foreach { case (id, v) =>
+          model(v) = (id, s.sequenceNumber, lo, t.meta.lastRowId) }
+      }
+    }
+    val files = Meta.readEntries(t.location, t.meta.head("main").get)
+      .count(_.fileType == "data")
+    assert(files > 32, s"only $files data files")
+    assert(t.scan().rdd.getNumPartitions < files, "files were not bin-packed")
+    check("final")
+  }
+
   test("random op sequences on a PARTITIONED table match the models (seed 99)") {
     // same state machine, but every write now routes through hidden
     // partition dirs and per-file partition tuples: deletes/updates must
