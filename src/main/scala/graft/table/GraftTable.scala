@@ -13,6 +13,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Deletion vectors (v3): one bitmap of deleted row positions per data file.
   * Encoding is a DENSE java.util.BitSet image (not roaring containers) —
@@ -67,8 +68,11 @@ private[graft] object MergeStats {
   * neither lists files nor infers a schema. The index gives every row its
   * file's constants (`_gf` path, `_fseq` sequence number, `_frid` first
   * row id) as partition values, and Spark's `_metadata.row_index` gives
-  * its position. Merge-on-read deletes resolve with a broadcast anti-join
-  * on (`_gf`, position); delete files are read with the schemas the
+  * its position. Merge-on-read deletes key on (`_gf`, position) or on
+  * equality-key values. A delete set within Spark's broadcast bound is
+  * decoded on the driver from cached delete files into one scan-stage
+  * filter (see DeleteFilter.scala); a larger one becomes anti-joins whose
+  * strategy Spark picks. Delete files are read with the schemas the
   * format fixes.
   */
 class GraftTable(val spark: SparkSession, val location: String) {
@@ -85,41 +89,49 @@ class GraftTable(val spark: SparkSession, val location: String) {
     * Delete files written before round 15 stored the URI-percent-encoded
     * `_metadata.file_path`; later files store the raw manifest path. For
     * any live data file whose legacy encoding differs from
-    * its raw path, remap the encoded form back to raw via a broadcast
-    * dictionary — UNLESS the encoded form is itself a live raw path (a
-    * literal `%xx` directory name), where decoding is ambiguous and the
-    * stored value must be trusted as raw. Unescapable tables (the common
-    * case) build an empty dictionary and pass through untouched. */
-  private def canonTargets(d: DataFrame, livePaths: Seq[String]): DataFrame = {
+    * its raw path, remap the encoded form back to raw — UNLESS the
+    * encoded form is itself a live raw path (a literal `%xx` directory
+    * name), where decoding is ambiguous and the stored value must be
+    * trusted as raw. Unescapable tables (the common case) build an empty
+    * dictionary and pass through untouched. */
+  private def legacyTargets(livePaths: Seq[String]): Map[String, String] = {
     val liveSet = livePaths.toSet
-    val legacy = livePaths.flatMap { p =>
+    livePaths.flatMap { p =>
       val enc = try new java.net.URI("file", null, p, null).getRawPath
         catch { case _: Exception => p }
       if (enc != p && !liveSet(enc)) Some((enc, p)) else None
-    }
+    }.toMap
+  }
+  private def canonTargets(d: DataFrame, livePaths: Seq[String]): DataFrame = {
+    val legacy = legacyTargets(livePaths)
     if (legacy.isEmpty) return d
     import spark.implicits._
-    val mapDf = legacy.toDF("_enc", "_rawp")
-    d.join(broadcast(mapDf), d("file_path") === col("_enc"), "left")
+    val mapDf = legacy.toSeq.toDF("_enc", "_rawp")
+    d.join(mapDf, d("file_path") === col("_enc"), "left")
       .withColumn("file_path", coalesce(col("_rawp"), col("file_path")))
       .drop("_enc", "_rawp")
   }
   private def abs(rel: String): String =
     if (rel.startsWith("/")) rel else s"$location/$rel"
+  private def deleteDir(rel: String): String =
+    Paths.get(normPath(abs(rel))).toAbsolutePath.toString
 
-  /** Read a delete file with the schema the format fixes for its kind
-    * (FORMAT.md §Row-level changes) — no schema-inference job. Equality
-    * keys are typed from the schema the delete was written under. */
+  /** The schema the format fixes for a delete file's kind (FORMAT.md
+    * §Row-level changes). Equality keys are typed from the schema the
+    * delete was written under. */
+  private def deleteSchema(m: TableMeta, f: FileMeta): StructType = f.fileType match {
+    case "posdel" => GraftTable.PosDelSchema
+    case "dv" => GraftTable.DvSchema
+    case "eqdel" =>
+      val s = m.schema(f.schemaId)
+      StructType(f.eqFieldIds.map(id =>
+        StructField(s"f$id", sparkType(s.byId(id).get.dtype))))
+  }
+
+  /** Read a delete file with its fixed schema — no schema-inference job. */
   private def readDeletes(m: TableMeta, f: FileMeta): DataFrame = {
-    val schema = f.fileType match {
-      case "posdel" => GraftTable.PosDelSchema
-      case "dv" => GraftTable.DvSchema
-      case "eqdel" =>
-        val s = m.schema(f.schemaId)
-        StructType(f.eqFieldIds.map(id =>
-          StructField(s"f$id", sparkType(s.byId(id).get.dtype))))
-    }
-    spark.read.schema(schema).parquet(abs(f.path))
+    DeleteFiles.partFiles(deleteDir(f.path)) // an entry without part files is malformed
+    spark.read.schema(deleteSchema(m, f)).parquet(abs(f.path))
   }
 
   /** The newest vector per target file from DV rows tagged with their
@@ -195,10 +207,9 @@ class GraftTable(val spark: SparkSession, val location: String) {
     // eq-delete entries always load; skipped entries would have been
     // dropped by the per-entry fileMatches below anyway (Pruning
     // .segmentScanSkippable), so the planned file set is identical.
-    val all = snap.manifests
-      .filterNot(seg => Pruning.segmentScanSkippable(
-        m, snap.manifestStats.get(seg), preds))
-      .flatMap(Meta.readManifest(location, _))
+    val (skipped, kept) = snap.manifests.partition(seg =>
+      Pruning.segmentScanSkippable(m, snap.manifestStats.get(seg), preds))
+    val all = kept.flatMap(Meta.readManifest(location, _))
     var dataFiles = all.filter(_.fileType == "data")
       .filter(f => Pruning.fileMatches(f, m, preds))
     fileSubset.foreach(sub => dataFiles = dataFiles.filter(f => sub(normPath(abs(f.path)))))
@@ -250,10 +261,115 @@ class GraftTable(val spark: SparkSession, val location: String) {
     }
     var df = groups.reduce(_ unionByName _)
 
-    // position deletes + deletion vectors: broadcast anti-join on (file, pos).
-    // Stored targets pass through canonTargets so legacy URI-encoded
-    // values (pre-round-15 writers) keep applying after the raw-path move.
-    val livePaths = dataFiles.map(f => normPath(abs(f.path)))
+    // merge-on-read deletes: a delete set within Spark's broadcast bound
+    // is decoded on the driver into one scan filter; a larger one keeps
+    // the anti-joins, with the join strategy left to Spark
+    val deletes = posDel ++ dvs ++ eqDels
+    if (deletes.nonEmpty) {
+      val livePaths = dataFiles.map(f => normPath(abs(f.path)))
+      val bound = spark.sessionState.conf.autoBroadcastJoinThreshold
+      // a delete file decodes whole, whatever the scan planned: size it
+      // against every data file of the snapshot, skipped segments too
+      def snapshotData = (all ++ skipped.flatMap(Meta.readManifest(location, _)))
+        .filter(_.fileType == "data")
+      df = if (bound >= 0 && decodedBytes(m, snapshotData, deletes).exists(_ <= bound))
+        deleteFilter(m, presented, livePaths, posDel, dvs, eqDels)
+          .map(df.filter).getOrElse(df)
+      else antiJoinDeletes(df, m, presented, livePaths, posDel, dvs, eqDels)
+    }
+
+    val out = presented.fields.map(f => col(f.name)) ++
+      (if (withLineage) Seq(col("_rid").as("_row_id"),
+        col("_seq").as("_last_updated_sequence_number")) else Nil) ++
+      (if (withPos) Seq(col("_gf"), col("_gp")) else Nil)
+    df = df.select(out: _*)
+    filter.map(f => df.filter(expr(f))).getOrElse(df)
+  }
+
+  /** Decoded size of a delete set, estimated from the manifest; None when
+    * the driver cannot decode it (a nested-type key, which only a join
+    * compares by `<=>`). A position or vector file decodes to at most one
+    * bitmap a row, each at most one bit per row of the largest data file
+    * of the snapshot (`data`), and all together at most one bit per data
+    * row of the snapshot (its targets are the snapshot's). An equality
+    * key costs [[DeleteFiles.keyBytes]] plus, for string and binary keys,
+    * the delete file's bytes on disk (entries from older writers record
+    * no size; their files are measured). */
+  private def decodedBytes(m: TableMeta, data: => Seq[FileMeta],
+      deletes: Seq[FileMeta]): Option[Long] = {
+    lazy val vectors = data.map(_.rowCount / 8 + 1)
+    val sizes = deletes.map(f => f.fileType match {
+      case "posdel" | "dv" => Some(math.min(f.rowCount * vectors.max, vectors.sum))
+      case _ =>
+        val types = deleteSchema(m, f).fields.map(_.dataType).toSeq
+        val nested = types.exists {
+          case _: StructType | _: ArrayType | _: MapType => true
+          case _ => false
+        }
+        val payload =
+          if (!types.exists(t => t == StringType || t == BinaryType)) 0L
+          else if (f.sizeBytes > 0) f.sizeBytes
+          else DeleteFiles.diskBytes(deleteDir(f.path))
+        if (nested) None
+        else Some(f.rowCount * DeleteFiles.keyBytes(types.size) + payload)
+    })
+    if (sizes.contains(None)) None else Some(sizes.flatten.sum)
+  }
+
+  /** The delete set as one filter over the scan, decoded on the driver
+    * from the (cached) delete files; None when nothing planned is deleted.
+    * Positions: `NOT deleted(_gf, _gp)` over one bitmap per live data
+    * file — stored targets canonicalized, the highest-sequence vector per
+    * file kept (ties unite). Equality deletes, per file:
+    * `NOT (_seq < dseq AND deleted(keys))`, keys in the presented types. */
+  private def deleteFilter(m: TableMeta, presented: SchemaMeta, livePaths: Seq[String],
+      posDel: Seq[FileMeta], dvs: Seq[FileMeta], eqDels: Seq[FileMeta]): Option[Column] = {
+    val live = livePaths.toSet
+    val legacy = legacyTargets(livePaths)
+    def targets(f: FileMeta): Seq[(String, java.util.BitSet)] =
+      DeleteFiles.positions(spark, deleteDir(f.path), deleteSchema(m, f), f.fileType == "dv")
+        .toSeq.flatMap { case (t, b) =>
+          (if (live(t)) Some(t) else legacy.get(t)).map(_ -> b) }
+    // cached bitmaps are shared: OR into a copy
+    val bits = mutable.HashMap.empty[String, java.util.BitSet]
+    def or(t: String, b: java.util.BitSet): Unit = bits.updateWith(t) {
+      case None => Some(b)
+      case Some(cur) =>
+        val c = cur.clone().asInstanceOf[java.util.BitSet]
+        c.or(b)
+        Some(c)
+    }
+    for (f <- posDel; (t, b) <- targets(f)) or(t, b)
+    dvs.flatMap(f => targets(f).map { case (t, b) => (t, f.sequenceNumber, b) })
+      .groupBy(_._1).foreach { case (t, vs) =>
+        val top = vs.map(_._2).max
+        vs.foreach { case (_, s, b) => if (s == top) or(t, b) }
+      }
+    val pos = if (bits.isEmpty) None else Some(!Bridge.column(PositionDeleted(
+      Bridge.expression(col("_gf")), Bridge.expression(col("_gp")),
+      DeletedPositions(bits.map { case (t, b) => UTF8String.fromString(t) -> b }.toMap))))
+    val tz = spark.sessionState.conf.sessionLocalTimeZone
+    val eq = eqDels.flatMap { f =>
+      val fields = f.eqFieldIds.map(id => presented.byId(id)
+        .getOrElse(throw new IllegalStateException(s"eq-delete field $id dropped")))
+      val schema = deleteSchema(m, f)
+      val keys = DeleteFiles.convert(DeleteFiles.keys(spark, deleteDir(f.path), schema),
+        schema.fields.map(_.dataType).toSeq, fields.map(pf => sparkType(pf.dtype)), tz)
+      if (keys.isEmpty) None
+      else Some(!(col("_seq") < lit(f.sequenceNumber) && Bridge.column(KeyDeleted(
+        fields.map(pf => Bridge.expression(col(pf.name))), DeletedKeys(keys)))))
+    }
+    (pos ++ eq).reduceOption(_ && _)
+  }
+
+  /** The delete set as anti-joins: (file, pos) for positions and vectors,
+    * key `<=>` and `_seq < dseq` for equality deletes. */
+  private def antiJoinDeletes(df0: DataFrame, m: TableMeta, presented: SchemaMeta,
+      livePaths: Seq[String], posDel: Seq[FileMeta], dvs: Seq[FileMeta],
+      eqDels: Seq[FileMeta]): DataFrame = {
+    var df = df0
+    // stored targets pass through canonTargets so legacy URI-encoded
+    // values (pre-round-15 writers) keep applying after the raw-path move
     val posPart = posDel.map(f => canonTargets(readDeletes(m, f), livePaths))
     val dvPart = if (dvs.isEmpty) None else Some {
       // canonicalize BEFORE the latest-per-file window so a legacy and a
@@ -263,15 +379,11 @@ class GraftTable(val spark: SparkSession, val location: String) {
       latestDvs(raw, dvs.size)
         .select(col("file_path"), explode(GraftTable.DvPositions(col("dv"))).as("pos"))
     }
-    val delPos = (posPart ++ dvPart).reduceOption(_ unionByName _)
-    delPos.foreach { d =>
-      df = df.join(broadcast(d),
-        df("_gf") === d("file_path") && df("_gp") === d("pos"), "left_anti")
+    (posPart ++ dvPart).reduceOption(_ unionByName _).foreach { d =>
+      df = df.join(d, df("_gf") === d("file_path") && df("_gp") === d("pos"), "left_anti")
     }
-
-    // equality deletes: anti-join on key values, only rows older than the delete
-    val eqGroups = eqDels.groupBy(_.eqFieldIds)
-    eqGroups.foreach { case (ids, files) =>
+    // equality deletes: only rows older than the delete
+    eqDels.groupBy(_.eqFieldIds).foreach { case (ids, files) =>
       val dels = files.map(f => readDeletes(m, f)
         .withColumn("_dseq", lit(f.sequenceNumber))).reduce(_ unionByName _)
       val cond = ids.map { id =>
@@ -279,15 +391,9 @@ class GraftTable(val spark: SparkSession, val location: String) {
           .getOrElse(throw new IllegalStateException(s"eq-delete field $id dropped"))
         df(name) <=> dels(s"f$id")
       }.reduce(_ && _) && df("_seq") < dels("_dseq")
-      df = df.join(broadcast(dels), cond, "left_anti")
+      df = df.join(dels, cond, "left_anti")
     }
-
-    val out = presented.fields.map(f => col(f.name)) ++
-      (if (withLineage) Seq(col("_rid").as("_row_id"),
-        col("_seq").as("_last_updated_sequence_number")) else Nil) ++
-      (if (withPos) Seq(col("_gf"), col("_gp")) else Nil)
-    df = df.select(out: _*)
-    filter.map(f => df.filter(expr(f))).getOrElse(df)
+    df
   }
 
   // ==========================================================================
@@ -846,7 +952,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
     physKeys.write.parquet(abs(rel))
     val n = FooterStats.rowCount(abs(rel))
     val entry = FileMeta(rel, "eqdel", meta.currentSpecId, meta.currentSchemaId,
-      Map.empty, n, 0L, seq, Map.empty, eqFieldIds = ids)
+      Map.empty, n, DeleteFiles.diskBytes(deleteDir(rel)), seq, Map.empty, eqFieldIds = ids)
     commit("delete", branch, Seq(entry), Set.empty, snapId, seq, rebaseable = true)
   }
 

@@ -284,21 +284,27 @@ object Meta {
     * Cache hits still hit the read log: the SegStats read-log proofs pin
     * which segments a commit/scan DECIDES to open — the algorithmic
     * layer — not disk syscalls; MetaCacheSpec pins the immutability
-    * contract and the scan-resistance itself. */
+    * contract and the scan-resistance itself.
+    *
+    * The same cache, under the same bound, holds the decoded contents
+    * of delete files ([[cached]], keyed by the entry's absolute path):
+    * they are as immutable once published as segments are (FORMAT.md
+    * invariant 2), so a repeated scan re-reads no delete file. */
   private val manifestCacheMaxBytes: Long =
     sys.props.get("graft.manifest.cache.entries").flatMap(_.toLongOption) match {
       case Some(n) => math.max(0L, n) * 300L
       case None => sys.props.get("graft.manifest.cache.bytes")
         .flatMap(_.toLongOption).getOrElse(128L << 20)
     }
-  private[graft] final case class SegVal(entries: Seq[FileMeta], weight: Long)
+  /** A parsed value and its weight in bytes against the cache bound. */
+  private[graft] final case class Weighed[+V](value: V, weight: Long)
 
   /** The cache policy, instantiable with a small bound for tests
     * (MetaCacheSpec's scan-resistance leg). Thread-safe; `get` runs one
     * parse per key under concurrency (single-flight). */
   private[graft] final class ManifestCache(val maxBytes: Long) {
     private val resident =
-      new java.util.LinkedHashMap[String, SegVal](64, 0.75f, true)
+      new java.util.LinkedHashMap[String, Weighed[Any]](64, 0.75f, true)
     private var residentBytes = 0L
     def sizeBytes: Long = resident.synchronized(residentBytes)
     // access-frequency sketch for admission decisions; halved (zeros
@@ -322,20 +328,21 @@ object Meta {
     }
     private val inflight =
       new java.util.concurrent.ConcurrentHashMap[String,
-        java.util.concurrent.CompletableFuture[SegVal]]()
+        java.util.concurrent.CompletableFuture[Weighed[Any]]]()
     @volatile private[graft] var hits = 0L
     @volatile private[graft] var misses = 0L
 
-    def get(key: String, parse: () => SegVal): Seq[FileMeta] = {
+    /** The value under `key`; callers keep one value type per key. */
+    def get[V](key: String, parse: () => Weighed[V]): V = {
       val hit = resident.synchronized {
         val v = resident.get(key)
         if (v != null) { bumpFreq(key); v } else null
       }
-      if (hit != null) { hits += 1; return hit.entries }
+      if (hit != null) { hits += 1; return hit.value.asInstanceOf[V] }
       misses += 1
-      val mine = new java.util.concurrent.CompletableFuture[SegVal]()
+      val mine = new java.util.concurrent.CompletableFuture[Weighed[Any]]()
       val race = inflight.putIfAbsent(key, mine)
-      if (race != null) return race.join().entries
+      if (race != null) return race.join().value.asInstanceOf[V]
       try {
         val v = parse()
         resident.synchronized {
@@ -367,7 +374,7 @@ object Meta {
           }
         }
         mine.complete(v)
-        v.entries
+        v.value
       } catch {
         case t: Throwable => mine.completeExceptionally(t); throw t
       } finally inflight.remove(key)
@@ -376,21 +383,29 @@ object Meta {
 
   private val manifestCache = new ManifestCache(manifestCacheMaxBytes)
   private[graft] def manifestCacheSize: Long = manifestCache.sizeBytes
+  /** (hits, misses) of the process-wide cache since start-up. */
+  private[graft] def manifestCacheCounts: (Long, Long) =
+    (manifestCache.hits, manifestCache.misses)
 
-  private[graft] def parseManifest(location: String, rel: String): SegVal = {
+  /** `parse()`'s value for an immutable file, cached under its absolute
+    * path unless the cache is disabled. */
+  private[graft] def cached[V](absPath: String, parse: () => Weighed[V]): V =
+    if (manifestCacheMaxBytes <= 0) parse().value
+    else manifestCache.get(absPath, parse)
+
+  private[graft] def parseManifest(location: String, rel: String): Weighed[Seq[FileMeta]] = {
     val s = Files.readString(Paths.get(location, rel))
     val entries =
       if (s.isEmpty) Nil
       else s.split('\n').toSeq.filter(_.nonEmpty)
         .map(mapper.readValue(_, classOf[FileMeta]))
-    SegVal(entries, math.max(1L, s.length.toLong))
+    Weighed(entries, math.max(1L, s.length.toLong))
   }
 
   def readManifest(location: String, rel: String): Seq[FileMeta] = {
     if (recordReads) readLog.add(rel)
-    if (manifestCacheMaxBytes <= 0) return parseManifest(location, rel).entries
-    val key = Paths.get(location, rel).toAbsolutePath.toString
-    manifestCache.get(key, () => parseManifest(location, rel))
+    cached(Paths.get(location, rel).toAbsolutePath.toString,
+      () => parseManifest(location, rel))
   }
 
   /** all live file entries at a snapshot, across its manifest segments */

@@ -5,7 +5,13 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.graft.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.LeftAnti
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 
 import graft.table._
 
@@ -13,8 +19,9 @@ import graft.table._
   * [[ManifestFileIndex]] over the planned entries and delete files with
   * the schemas the format fixes, so building a scan starts no Spark job
   * (no listing, no schema inference) and the per-file constants need no
-  * join. */
-class ManifestScanSpec extends SparkSpec {
+  * join. A delete set within Spark's broadcast bound applies as one
+  * filter in the scan stage; beyond it, as anti-joins Spark plans. */
+class ManifestScanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def tmp(): String =
     Files.createTempDirectory("graft-mscan").resolve("t").toString
@@ -41,7 +48,8 @@ class ManifestScanSpec extends SparkSpec {
   private def entryPath(t: GraftTable, e: FileMeta): String =
     if (e.path.startsWith("/")) e.path else s"${t.location}/${e.path}"
 
-  test("a point scan over posdel, DV and eqdel builds with 0 jobs and collects with 3") {
+  /** A bucketed table holding one posdel, one DV and one eqdel file. */
+  private def morTable(): GraftTable = {
     import spark.implicits._
     val t = GraftTable.create(spark, tmp(), "k bigint, v string",
       partitionBy = Seq("bucket(4, k)"))
@@ -52,15 +60,44 @@ class ManifestScanSpec extends SparkSpec {
     val kinds = Meta.readEntries(t.location, t.meta.head("main").get)
       .groupBy(_.fileType).map { case (k, es) => k -> es.size }
     assert(kinds - "data" == Map("posdel" -> 1, "dv" -> 1, "eqdel" -> 1), s"$kinds")
+    t
+  }
 
+  /** Every node of an executed plan, inside adaptive query stages too. */
+  private def nodes(df: DataFrame): Seq[SparkPlan] =
+    collect(df.queryExecution.executedPlan) { case p => p }
+
+  private def keysOf(rows: Array[Row]): Seq[(Long, String)] =
+    rows.map(r => (r.getLong(0), r.getString(1))).toSeq
+
+  test("a point scan over posdel, DV and eqdel builds with 0 jobs and collects with 1") {
+    val t = morTable()
     val (df, buildJobs) = jobsDuring(t.scan(filter = Some("k = 35")))
-    assert(buildJobs == 0, "building the scan must not list files or infer schemas")
-    // one broadcast of the posdel+DV positions, one of the eqdel keys, the scan
+    assert(buildJobs == 0, "building the scan must not list files, infer schemas or read deletes")
+    // the deletes are one filter in the scan stage: no broadcast job
     val (rows, collectJobs) = jobsDuring(df.collect())
-    assert(collectJobs == 3, df.queryExecution.executedPlan.treeString)
-    assert(rows.map(r => (r.getLong(0), r.getString(1))).toSeq == Seq((35L, "v35")))
+    val plan = df.queryExecution.executedPlan.treeString
+    assert(collectJobs == 1, plan)
+    assert(!nodes(df).exists(_.isInstanceOf[BroadcastExchangeExec]), plan)
+    assert(keysOf(rows) == Seq((35L, "v35")))
     for (gone <- Seq(31L, 32L, 25L))
       assert(t.scan(filter = Some(s"k = $gone")).collect().isEmpty, s"k=$gone")
+  }
+
+  test("with the broadcast bound off, the same scan plans shuffled anti-joins and returns the same rows") {
+    val t = morTable()
+    val want = keysOf(t.scan().collect()).sorted
+    assert(want.size == 200 - 20 - 20 - 2)
+    withJoinDeletes {
+      val point = t.scan(filter = Some("k = 35"))
+      assert(keysOf(point.collect()) == Seq((35L, "v35")))
+      val all = t.scan()
+      assert(keysOf(all.collect()).sorted == want)
+      val plan = all.queryExecution.executedPlan.treeString
+      val antis = nodes(all).collect { case j: SortMergeJoinExec if j.joinType == LeftAnti => j }
+      assert(antis.size == 2, plan)
+      assert(!nodes(all).exists(_.isInstanceOf[BroadcastExchangeExec]), plan)
+    }
   }
 
   test("a 40-file scan builds with 0 jobs (no listing job past 32 paths)") {

@@ -2,16 +2,15 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.scalatest.funsuite.AnyFunSuite
-
 import graft.table._
 
 /** Round-15 parsed-manifest cache: pins the IMMUTABILITY contract the
   * cache stands on (segments are create-new, atomic-rename, never
   * rewritten in place — both the native writer and extwriter name them
   * snapId-uuid), and that cache hits still feed the read log so the
-  * SegStats decision-layer proofs keep their meaning. */
-class MetaCacheSpec extends AnyFunSuite {
+  * SegStats decision-layer proofs keep their meaning. The same cache
+  * holds decoded delete files, so a repeated scan reads none. */
+class MetaCacheSpec extends SparkSpec {
 
   private def loc(): String =
     Files.createTempDirectory("graft-metacache").toString
@@ -114,5 +113,27 @@ class MetaCacheSpec extends AnyFunSuite {
     Meta.readManifest(l, rel)
     assert(Meta.manifestCacheSize >= before + 5,
       s"5-entry segment must weigh >= 5: before=$before after=${Meta.manifestCacheSize}")
+  }
+
+  test("a second scan of the same snapshot reads no delete file") {
+    import spark.implicits._
+    val t = GraftTable.create(spark, Files.createTempDirectory("graft-metacache")
+      .resolve("t").toString, "k bigint, v string")
+    t.append((0L until 40L).map(k => (k, s"v$k")).toDF("k", "v"))
+    t.delete("k % 5 = 0", WriteMode.MergeOnRead)
+    t.delete("k % 5 = 1", WriteMode.DeletionVector)
+    t.deleteByKeys(Seq(2L, 7L).toDF("k"))
+    val head = t.meta.head("main").get
+    val deletes = Meta.readEntries(t.location, head).count(_.fileType != "data")
+    assert(deletes == 3)
+    val (_, m0) = Meta.manifestCacheCounts
+    assert(t.scan().count() == 40 - 8 - 8 - 2)
+    val (h1, m1) = Meta.manifestCacheCounts
+    assert(m1 > m0, "the first scan decodes the delete files it has not seen")
+    assert(t.scan().count() == 40 - 8 - 8 - 2)
+    val (h2, m2) = Meta.manifestCacheCounts
+    assert(m2 == m1, s"the second scan missed the cache ${m2 - m1} times")
+    assert(h2 - h1 == head.manifests.size + deletes,
+      s"${h2 - h1} hits for ${head.manifests.size} segments and $deletes delete files")
   }
 }

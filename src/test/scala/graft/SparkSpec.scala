@@ -8,6 +8,22 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sf: String = "/root/testdata/sf0.001"
   val sf01: String = "/root/testdata/sf0.01"
+
+  /** `body` with Spark's broadcast bound off, so scans apply merge-on-read
+    * deletes through anti-joins instead of the driver-built filter. */
+  def withJoinDeletes[T](body: => T): T = withBroadcastBound(-1)(body)
+
+  /** `body` with Spark's broadcast bound at `bytes`. */
+  def withBroadcastBound[T](bytes: Long)(body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, bytes.toString)
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }
 
 object SparkSpec {

@@ -21,6 +21,9 @@ import graft.table._
   * schema — the recorded model width differs across the evolution
   * boundary, which is exactly what the check pins).
   *
+  * Every read runs through both merge-on-read paths (the driver-built
+  * delete filter and the anti-joins) and checks both against the model.
+  *
   * The deterministic specs in TableSpec each pin one path; this spec
   * exists for the interleavings nobody writes by hand (DV after eqdel
   * after MoR update, compaction between tombstone generations, branch
@@ -40,13 +43,24 @@ class TableFuzzSpec extends SparkSpec {
   private def canon(rows: Seq[Seq[Any]]): Vector[String] =
     rows.map(_.map(String.valueOf).mkString("|")).sorted.toVector
 
-  private def scanRows(t: GraftTable, cols: Seq[String],
-      snapshotId: Option[Long] = None, ref: Option[String] = None): Vector[String] = {
-    val df = t.scan(snapshotId = snapshotId, ref = ref)
-    assert(df.columns.toSeq == cols,
-      s"schema mismatch at snap=$snapshotId ref=$ref: ${df.columns.toSeq} vs $cols")
-    canon(df.collect().toIndexedSeq.map(r => cols.map(c => r.getAs[Any](c))))
+  /** `read` through both merge-on-read paths — the driver-built delete
+    * filter (the default) and anti-joins (broadcast bound off) — which
+    * must agree; the caller checks the result against its model. */
+  private def bothPaths[T](tag: => String)(read: => T): T = {
+    val viaFilter = read
+    val viaJoins = withJoinDeletes(read)
+    assert(viaJoins == viaFilter, s"$tag: the anti-join path diverged from the filter path")
+    viaFilter
   }
+
+  private def scanRows(t: GraftTable, cols: Seq[String],
+      snapshotId: Option[Long] = None, ref: Option[String] = None): Vector[String] =
+    bothPaths(s"snap=$snapshotId ref=$ref") {
+      val df = t.scan(snapshotId = snapshotId, ref = ref)
+      assert(df.columns.toSeq == cols,
+        s"schema mismatch at snap=$snapshotId ref=$ref: ${df.columns.toSeq} vs $cols")
+      canon(df.collect().toIndexedSeq.map(r => cols.map(c => r.getAs[Any](c))))
+    }
 
   private def modelRows(model: Seq[MRow], cols: Seq[String]): Vector[String] =
     canon(model.map(r => cols.map(r(_))))
@@ -452,7 +466,7 @@ class TableFuzzSpec extends SparkSpec {
       rows.toDF("id", "k", "s")
     }
     def scanCanon(): Vector[String] =
-      canon(t.scan().collect().toIndexedSeq.map(_.toSeq))
+      bothPaths(s"seed=$seedVal")(canon(t.scan().collect().toIndexedSeq.map(_.toSeq)))
     def check(tag: String): Unit =
       assert(scanCanon() == canon(model.toSeq.map(r => Seq(r._1, r._2, r._3))),
         s"seed=$seedVal $tag")
@@ -583,9 +597,10 @@ class TableFuzzSpec extends SparkSpec {
       nextId += 1; (nextId, rnd.nextInt(7).toLong, "s" + rnd.nextInt(4))
     }
     def df(rows: Seq[(Long, Long, String)]) = rows.toDF("id", "k", "s")
-    def canonOf(tt: GraftTable): Vector[String] =
+    def canonOf(tt: GraftTable): Vector[String] = bothPaths(tt.location) {
       tt.scan().select("id", "k", "s").collect().toVector
         .map(r => s"${r.getLong(0)}|${r.getLong(1)}|${r.getString(2)}").sorted
+    }
     def canonM(m: Vector[(Long, Long, String)]): Vector[String] =
       m.map(r => s"${r._1}|${r._2}|${r._3}").sorted
 
@@ -655,9 +670,11 @@ class TableFuzzSpec extends SparkSpec {
     val firstRid = mutable.Map.empty[Long, Long]
     var nextV = 0L
     def check(tag: String): Unit = {
-      val got = t.scan(withLineage = true).collect().map(r => (r.getAs[Long]("v"),
-        (r.getAs[Long]("id"), r.getAs[Long]("_row_id"),
-          r.getAs[Long]("_last_updated_sequence_number"))))
+      val got = bothPaths(tag) {
+        t.scan(withLineage = true).collect().toSeq.map(r => (r.getAs[Long]("v"),
+          (r.getAs[Long]("id"), r.getAs[Long]("_row_id"),
+            r.getAs[Long]("_last_updated_sequence_number")))).sortBy(_._1)
+      }
       assert(got.map(_._1).toSet == model.keySet && got.length == model.size, tag)
       assert(got.map(_._2._2).distinct.length == got.length, s"$tag: duplicate _row_id")
       for ((v, (id, rid, seq)) <- got) {
