@@ -17,7 +17,7 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
 # GRAFT_JAVA_OPTS: extra -D/-X flags for A/B runs (e.g.
-# -Dgraft.manifest.cache.entries=0 to measure without the manifest cache)
+# -Dgraft.manifest.cache.bytes=0 to measure without the manifest cache)
 exec java $OPENS \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-24g}" -XX:ReservedCodeCacheSize=512m \

@@ -21,18 +21,19 @@ import graft.table.{Catalog, GraftTable, Pruning}
   * }}}
   *
   * The substituted subtree is the SAME plan `GraftTable.scan()` builds —
-  * schema-evolution alignment, MoR delete anti-joins, everything — and
+  * schema-evolution alignment, merge-on-read deletes, everything — and
   * because it lands during analysis, Catalyst then pushes the query's
   * filters/projections into the underlying parquet scans exactly as it
   * does for the DataFrame API.
   *
   * Manifest pruning: when the relation sits directly under a Filter (the
   * common `SELECT ... WHERE ...` shape), the rule extracts the simple
-  * conjuncts from the still-unresolved WHERE tree and prunes the file list
-  * BEFORE the scan is constructed — the Filter node itself stays in the
-  * plan, so pruning only skips task launch, never changes results. At
-  * 100 TB this is the difference between listing 100k files and the
-  * handful whose partition/stats ranges can match.
+  * conjuncts from the still-unresolved WHERE tree and hands them to
+  * `scan` as pruning predicates, for a head, branch or tag read alike.
+  * The scan plans them like a `scan(filter)`: segments whose stats prove
+  * no match are not read, and only matching files enter the relation.
+  * The Filter node itself stays in the plan, so pruning only skips work,
+  * never changes results.
   */
 class GraftSqlResolution(spark: SparkSession) extends Rule[LogicalPlan] {
 
@@ -100,11 +101,8 @@ class GraftSqlResolution(spark: SparkSession) extends Rule[LogicalPlan] {
       val t: GraftTable = cat.loadTable(ns, tbl)
       val df = metaKind match {
         case Some(k) => t.metaTable(k, ref.getOrElse("main"))
-        case None =>
-          val preds = cond.map(Pruning.extractExpr).getOrElse(Nil)
-          if (preds.nonEmpty && snapshotId.isEmpty && asOfMs.isEmpty && ref.isEmpty)
-            t.scanPruned(preds)
-          else t.scan(snapshotId = snapshotId, asOfTimestampMs = asOfMs, ref = ref)
+        case None => t.scan(snapshotId = snapshotId, asOfTimestampMs = asOfMs, ref = ref,
+          preds = cond.map(Pruning.extractExpr).getOrElse(Nil))
       }
       Some(df.queryExecution.analyzed)
     }

@@ -157,14 +157,11 @@ object FooterStats {
     }.toMap
   }
 
-  /** undo Spark's %xx partition-path escaping (shared with
-    * [[GraftTable]]'s touched-partition path parse, which must apply the
-    * exact same rule to reproduce committed partition tuples) */
-  private[table] def unescape(s: String): String = {
-    // a '%' NOT followed by two hex digits is a literal character (the
-    // Hive/Spark unescape rule): touchedOf applies this to arbitrary
-    // committed path segments, so a foreign writer's dir name like "x%zy"
-    // must fall through as-is, never crash the commit
+  /** undo Spark's %xx partition-path escaping in a `_p_` directory value.
+    * A '%' NOT followed by two hex digits is a literal character (the
+    * Hive/Spark unescape rule), so a malformed name like "x%zy" reads
+    * as-is instead of failing the commit that collects its stats. */
+  private def unescape(s: String): String = {
     def hex(c: Char): Boolean =
       (c >= '0' && c <= '9') || (c >= 'a' && c <= 'f') || (c >= 'A' && c <= 'F')
     val sb = new StringBuilder

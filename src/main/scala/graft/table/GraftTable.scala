@@ -151,7 +151,9 @@ class GraftTable(val spark: SparkSession, val location: String) {
     * @param filter SQL predicate over logical column names — applied to the
     *   DataFrame AND used for driver-side manifest pruning
     * @param withLineage expose v3 `_row_id`/`_last_updated_sequence_number`
-    * @param withPos expose internal `_gf` (file) / `_gp` (position) */
+    * @param withPos expose internal `_gf` (file) / `_gp` (position)
+    * @param preds pruning predicates the caller already extracted (the SQL
+    *   rule, whose WHERE clause stays in the plan above): they only prune */
   def scan(
       filter: Option[String] = None,
       snapshotId: Option[Long] = None,
@@ -159,7 +161,36 @@ class GraftTable(val spark: SparkSession, val location: String) {
       ref: Option[String] = None,
       withLineage: Boolean = false,
       withPos: Boolean = false,
-      fileSubset: Option[Set[String]] = None): DataFrame = {
+      fileSubset: Option[Set[String]] = None,
+      preds: Seq[Pruning.Pred] = Nil): DataFrame =
+    scanSnapshot(planRead(snapshotId, asOfTimestampMs, ref,
+      preds ++ filter.map(Pruning.extract(_, spark)).getOrElse(Nil), fileSubset),
+      filter, withLineage, withPos)
+
+  /** What one read of a snapshot involves, from its manifest alone: the
+    * entries of the segments it read (`read`; `skipped` names the segments
+    * it proved it need not read) and, among them, the data files it plans.
+    * Every scan, row-level commit and pruned-file listing takes its entries
+    * from here, so they agree on one snapshot and one planned file set. */
+  private case class ScanPlan(m: TableMeta, presentedId: Int, read: Seq[FileMeta],
+      skipped: Seq[String], data: Seq[FileMeta]) {
+    def deletes: Seq[FileMeta] = read.filter(_.fileType != "data")
+    def keep(p: FileMeta => Boolean): ScanPlan = copy(data = data.filter(p))
+    def only(paths: Set[String]): ScanPlan = keep(f => paths(normPath(abs(f.path))))
+    /** Partition tuples of the planned files at `paths` (raw absolute
+      * paths, the `_gf` space); None when one of them is not planned. */
+    def partitionsOf(paths: Set[String]): Option[Set[Map[String, String]]] = {
+      val byPath = data.map(f => normPath(abs(f.path)) -> f.partition).toMap
+      val tuples = paths.toSeq.map(byPath.get)
+      if (tuples.contains(None)) None else Some(tuples.flatten.toSet)
+    }
+  }
+
+  /** Resolve the snapshot a read sees (one metadata read, so pruning and
+    * scanning cannot straddle a commit) and plan it. */
+  private def planRead(snapshotId: Option[Long] = None, asOfTimestampMs: Option[Long] = None,
+      ref: Option[String] = None, preds: Seq[Pruning.Pred] = Nil,
+      fileSubset: Option[Set[String]] = None): ScanPlan = {
     // reads always see the freshest published state but do NOT move this
     // writer's commit base — that is what lets commit() detect conflicts
     val m = Meta.readJson(location)
@@ -168,10 +199,9 @@ class GraftTable(val spark: SparkSession, val location: String) {
     // time travel presents the schema the snapshot was written under
     val timeTravel = snapshotId.isDefined || asOfTimestampMs.isDefined
     snap match {
-      case None => emptyDf(m.currentSchema, withLineage, withPos)
+      case None => ScanPlan(m, m.currentSchemaId, Nil, Nil, Nil)
       case Some(s) =>
-        val presentedId = if (timeTravel) s.schemaId else m.currentSchemaId
-        scanSnapshot(m, s, presentedId, filter, withLineage, withPos, fileSubset)
+        planScan(m, s, if (timeTravel) s.schemaId else m.currentSchemaId, preds, fileSubset)
     }
   }
 
@@ -186,6 +216,24 @@ class GraftTable(val spark: SparkSession, val location: String) {
       case (_, _, r) => m.head(r.getOrElse("main"))
     }
 
+  /** The one planning step: a snapshot plus pruning predicates (and an
+    * optional subset of raw file paths) to planned data and delete entries.
+    * A segment whose complete stats prove no entry can match is never read
+    * (round 15) — planning I/O is O(matching shards), not O(table
+    * segments). Overlay segments are incomplete by construction, so every
+    * delete entry loads; a skipped entry would have failed the per-entry
+    * [[Pruning.fileMatches]] anyway ([[Pruning.segmentScanSkippable]]), so
+    * the planned file set is the same with or without skipping. */
+  private def planScan(m: TableMeta, snap: SnapshotMeta, presentedId: Int,
+      preds: Seq[Pruning.Pred], fileSubset: Option[Set[String]]): ScanPlan = {
+    val (skipped, kept) = snap.manifests.partition(seg =>
+      Pruning.segmentScanSkippable(m, snap.manifestStats.get(seg), preds))
+    val read = kept.flatMap(Meta.readManifest(location, _))
+    val plan = ScanPlan(m, presentedId, read, skipped,
+      read.filter(f => f.fileType == "data" && Pruning.fileMatches(f, m, preds)))
+    fileSubset.map(plan.only).getOrElse(plan)
+  }
+
   private def emptyDf(schema: SchemaMeta, lineage: Boolean, pos: Boolean): DataFrame = {
     val st = StructType(
       schema.fields.map(f => StructField(f.name, sparkType(f.dtype))) ++
@@ -195,32 +243,21 @@ class GraftTable(val spark: SparkSession, val location: String) {
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], st)
   }
 
-  private def scanSnapshot(m: TableMeta, snap: SnapshotMeta, presentedId: Int,
-      filter: Option[String],
-      withLineage: Boolean, withPos: Boolean, fileSubset: Option[Set[String]]): DataFrame = {
-    val presented = m.schema(presentedId)
-    val preds = filter.map(Pruning.extract(_, spark)).getOrElse(Nil)
-    // segment-pruned PLANNING (round 15): a shard whose complete stats
-    // prove no entry can match the filter is never even read — scan
-    // planning I/O is O(matching shards), not O(table segments).
-    // Overlay segments are incomplete by construction, so delete/DV/
-    // eq-delete entries always load; skipped entries would have been
-    // dropped by the per-entry fileMatches below anyway (Pruning
-    // .segmentScanSkippable), so the planned file set is identical.
-    val (skipped, kept) = snap.manifests.partition(seg =>
-      Pruning.segmentScanSkippable(m, snap.manifestStats.get(seg), preds))
-    val all = kept.flatMap(Meta.readManifest(location, _))
-    var dataFiles = all.filter(_.fileType == "data")
-      .filter(f => Pruning.fileMatches(f, m, preds))
-    fileSubset.foreach(sub => dataFiles = dataFiles.filter(f => sub(normPath(abs(f.path)))))
+  /** The DataFrame of a plan: its data files read through manifest-built
+    * relations, its delete files applied, `filter` on top. */
+  private def scanSnapshot(plan: ScanPlan, filter: Option[String],
+      withLineage: Boolean, withPos: Boolean): DataFrame = {
+    val m = plan.m
+    val presented = m.schema(plan.presentedId)
+    val dataFiles = plan.data
     if (dataFiles.isEmpty) {
       val e = emptyDf(presented, withLineage, withPos)
       return filter.map(f => e.filter(expr(f))).getOrElse(e)
     }
 
-    val posDel = all.filter(_.fileType == "posdel")
-    val dvs = all.filter(_.fileType == "dv")
-    val eqDels = all.filter(_.fileType == "eqdel")
+    val posDel = plan.deletes.filter(_.fileType == "posdel")
+    val dvs = plan.deletes.filter(_.fileType == "dv")
+    val eqDels = plan.deletes.filter(_.fileType == "eqdel")
     val needFileMeta = withLineage || eqDels.nonEmpty
     // file/position identity cols are only materialized when a consumer
     // exists (deletes, lineage, rewrite) — a plain read stays a pure
@@ -270,7 +307,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
       val bound = spark.sessionState.conf.autoBroadcastJoinThreshold
       // a delete file decodes whole, whatever the scan planned: size it
       // against every data file of the snapshot, skipped segments too
-      def snapshotData = (all ++ skipped.flatMap(Meta.readManifest(location, _)))
+      def snapshotData = (plan.read ++ plan.skipped.flatMap(Meta.readManifest(location, _)))
         .filter(_.fileType == "data")
       df = if (bound >= 0 && decodedBytes(m, snapshotData, deletes).exists(_ <= bound))
         deleteFilter(m, presented, livePaths, posDel, dvs, eqDels)
@@ -802,64 +839,26 @@ class GraftTable(val spark: SparkSession, val location: String) {
   // Row-level operations
   // ==========================================================================
 
-  /** Row-level ops must resolve their row/file sets against the ref they
-    * COMMIT to — resolving against main while committing to a branch
-    * silently operates on the wrong table state (found by TableFuzzSpec's
-    * branch-routed op sequences). Every caller threads its branch here. */
-  private def affectedFiles(cond: String, branch: String): Set[String] =
-    scan(filter = Some(cond), withPos = true, ref = Some(branch))
+  /** The data files holding rows that match `cond`, and the plan they were
+    * found in. Row-level ops must resolve their row/file sets against the
+    * ref they COMMIT to — resolving against main while committing to a
+    * branch silently operates on the wrong table state (found by
+    * TableFuzzSpec's branch-routed op sequences). Every caller threads its
+    * branch here. */
+  private def affectedFiles(cond: String, branch: String): (ScanPlan, Set[String]) = {
+    val plan = planRead(ref = Some(branch), preds = Pruning.extract(cond, spark))
+    val files = scanSnapshot(plan, Some(cond), withLineage = false, withPos = true)
       .select("_gf").distinct().collect().map(_.getString(0)).toSet
-
-  /** Touched-partition hint for a file-scoped row-op commit (round 15,
-    * SURVEY §20.1 residual): the partition tuples of NATIVE data files,
-    * parsed from their `_p_<name>=<value>` path segments with the exact
-    * rule [[FooterStats.partitionValues]] wrote them under (first-`=`
-    * split, same %xx unescape), so each parse equals the file's committed
-    * FileMeta.partition — no manifest read needed. commit() may then skip
-    * parent segments whose COMPLETE stats are disjoint from this set;
-    * sound because every removed path's tuple is IN the set, so the
-    * segment holding it always reads. None when any path is not a native
-    * data file under this table's data/ tree (add_files imports carry
-    * partition {} but an arbitrary user path could contain `_p_`
-    * lookalike segments) — the commit then reads every parent segment,
-    * the pre-round-15 behavior. */
-  private def touchedOf(paths: Set[String]): Option[Set[Map[String, String]]] = {
-    val root = normPath(location).stripSuffix("/") + "/data/"
-    // parse ONLY paths whose first segment after data/ has the native
-    // write-dir shape (s<digits>-<8 hex>, from writeDataFiles): a file
-    // REGISTERED via add_files from a directory inside the table's own
-    // data/ tree carries partition {} in its manifest entry, but a
-    // `_p_<k>=<v>` lookalike segment in its path would parse into a wrong
-    // tuple and let the commit skip the segment holding the real entry —
-    // any non-native shape falls back to reading all parent segments
-    val nativeDir = "^s\\d+-[0-9a-f]{8}$".r
-    def segsOf(p: String): Option[Array[String]] = {
-      if (!p.startsWith(root)) return None
-      val segs = p.stripPrefix(root).split('/')
-      if (segs.nonEmpty && nativeDir.matches(segs.head)) Some(segs.drop(1)) else None
-    }
-    val parsed = paths.toSeq.map(segsOf)
-    if (parsed.exists(_.isEmpty)) None
-    else Some(parsed.flatten.map { segs =>
-      // remaining interior segments are the partition dirs (the filename
-      // carries no `_p_`)
-      segs.flatMap { s =>
-        val i = s.indexOf('=')
-        if (i > 0 && s.startsWith("_p_"))
-          Some(s.substring(3, i) -> FooterStats.unescape(s.substring(i + 1)))
-        else None
-      }.toMap
-    }.toSet)
+    (plan, files)
   }
 
-  private def lineageNames: Seq[String] = Seq("_row_id", "_last_updated_sequence_number")
-
-  /** read only `files` OF THE GIVEN BRANCH, that branch's deletes applied,
-    * lineage materialized — the input to any copy-on-write rewrite */
-  private def readForRewrite(files: Set[String], branch: String,
+  /** read only `files` of the plan's snapshot, its deletes applied, lineage
+    * materialized — the input to any copy-on-write rewrite. Reusing the
+    * plan that found the files rewrites exactly the snapshot they came
+    * from, without planning it again. */
+  private def readForRewrite(plan: ScanPlan, files: Set[String],
       withPos: Boolean = false): DataFrame =
-    scan(withLineage = true, withPos = withPos, fileSubset = Some(files),
-      ref = Some(branch))
+    scanSnapshot(plan.only(files), None, withLineage = true, withPos = withPos)
       .withColumnRenamed("_last_updated_sequence_number", "_last_seq")
 
   def delete(cond: String, mode: WriteMode.Value = WriteMode.CopyOnWrite,
@@ -867,14 +866,14 @@ class GraftTable(val spark: SparkSession, val location: String) {
     val (snapId, seq) = nextIds()
     mode match {
       case WriteMode.CopyOnWrite =>
-        val files = affectedFiles(cond, branch)
+        val (plan, files) = affectedFiles(cond, branch)
         if (files.isEmpty) return commit("delete", branch, Nil, Set.empty, snapId, seq)
-        val keep = readForRewrite(files, branch)
+        val keep = readForRewrite(plan, files)
           .filter(!coalesce(expr(cond), lit(false)))
         val out = writeDataFiles(toPhysical(keep, meta.currentSchema), snapId, seq,
           meta.currentSchemaId, meta.currentSpecId)
         commit("delete", branch, out, files, snapId, seq,
-          touched = touchedOf(files))
+          touched = plan.partitionsOf(files))
       case WriteMode.MergeOnRead =>
         val hits = scan(filter = Some(cond), withPos = true, ref = Some(branch))
           .select(col("_gf").as("file_path"), col("_gp").as("pos"))
@@ -964,9 +963,9 @@ class GraftTable(val spark: SparkSession, val location: String) {
     val hit = coalesce(expr(cond), lit(false))
     mode match {
       case WriteMode.CopyOnWrite =>
-        val files = affectedFiles(cond, branch)
+        val (plan, files) = affectedFiles(cond, branch)
         if (files.isEmpty) return commit("overwrite", branch, Nil, Set.empty, snapId, seq)
-        val src = readForRewrite(files, branch)
+        val src = readForRewrite(plan, files)
         val updated = src.select(schema.fields.map { f =>
           set.get(f.name) match {
             case Some(e) => when(hit, expr(e).cast(sparkType(f.dtype)))
@@ -980,7 +979,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
             snapId, seq, meta.currentSchemaId, meta.currentSpecId)
         }
         commit("overwrite", branch, out, files, snapId, seq,
-          touched = touchedOf(files))
+          touched = plan.partitionsOf(files))
       case _ =>
         // MoR update = position-delete the old rows + append the new versions
         // (row ids preserved — v3 lineage survives the rewrite)
@@ -1020,14 +1019,16 @@ class GraftTable(val spark: SparkSession, val location: String) {
     *     over M (MERGE must error when a target row matches two source
     *     rows, not duplicate it through the rewrite);
     *   - the rewrite joins the affected-file subset to M on (file, pos),
-    *     an equi-join on compact keys (broadcast while M is small);
+    *     an equi-join on compact keys that Spark broadcasts while M's exact
+    *     size is within its broadcast bound;
     *   - inserts anti-join the source against M's carried target keys,
     *     never rescanning the table. Any (t, s) pair satisfying ON puts
     *     t's keys in M, so "s matches no row of M's keys" ⇔ "s matches no
     *     row of the table".
-    * Per commit the table is scanned once pruned (match pass) and once
-    * file-scoped (rewrite) — this is the per-micro-batch cost a streaming
-    * MERGE apply pays, so no third full scan and no repeated ON join. */
+    * Per commit the table is planned once: the match pass scans it whole
+    * and the rewrite reads the matched files of that same plan — this is
+    * the per-micro-batch cost a streaming MERGE apply pays, so no third
+    * scan and no repeated ON join. */
   def merge(source: DataFrame, on: String,
       matchedSet: Map[String, String] = Map.empty,
       matchedDelete: Boolean = false,
@@ -1084,7 +1085,8 @@ class GraftTable(val spark: SparkSession, val location: String) {
     val tRefs: Seq[String] = onAttrs.collect {
       case ua if ua.nameParts.head.equalsIgnoreCase("t") => ua.nameParts(1)
     }.distinct
-    val tgt = scan(withPos = true, ref = Some(branch))
+    val plan = planRead(ref = Some(branch))
+    val tgt = scanSnapshot(plan, None, withLineage = false, withPos = true)
     MergeStats.onJoinPasses.incrementAndGet()
     val m = tgt.alias("t").join(source.alias("s"), expr(on), "inner")
       .select(Seq(col("t._gf").as("_mf"), col("t._gp").as("_mp")) ++
@@ -1092,35 +1094,20 @@ class GraftTable(val spark: SparkSession, val location: String) {
         source.columns.toSeq.map(c => col(s"s.$c").as(c)): _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
+      // collecting the stats materializes M, so its size statistics are
+      // exact and Spark's own bound picks broadcast or shuffle for the
+      // joins against it below
       val stats = m.groupBy(col("_mf"), col("_mp")).agg(count(lit(1)).as("_n"))
-        .groupBy(col("_mf")).agg(max(col("_n")).as("_mx"), sum(col("_n")).as("_rows"))
+        .groupBy(col("_mf")).agg(max(col("_n")).as("_mx"))
         .collect()
       if (stats.exists(_.getAs[Long]("_mx") > 1))
         throw new IllegalStateException(
           "MERGE: a target row matches more than one source row (ambiguous merge)")
       val files = stats.map(_.getString(0)).toSet
-      val matchedRows = stats.map(_.getAs[Long]("_rows")).sum
-      // M is micro-batch/source-bounded in the streaming-apply hot path —
-      // broadcast it; past EITHER bound fall back to a shuffled equi-join
-      // on (file, pos) so a giant batch MERGE cannot overflow the driver.
-      // The row bound alone is not enough: each M row carries the file
-      // path, ON keys, and ALL source columns, so a wide source schema at
-      // millions of rows is multi-GB — bound the MATERIALIZED byte size
-      // too, read from the persisted relation's accumulated stats (exact
-      // once the stats collect above has touched every partition).
-      val bcastMax = sys.props.get("graft.merge.bcast.rows")
-        .orElse(sys.env.get("SPARK_GRAFT_MERGE_BCAST_ROWS"))
-        .flatMap(_.toLongOption).getOrElse(4000000L)
-      val bcastMaxBytes = sys.props.get("graft.merge.bcast.bytes")
-        .orElse(sys.env.get("SPARK_GRAFT_MERGE_BCAST_BYTES"))
-        .flatMap(_.toLongOption).getOrElse(256L << 20)
-      val mBytes = m.queryExecution.optimizedPlan.stats.sizeInBytes
-      val doBcast = matchedRows <= bcastMax && mBytes <= BigInt(bcastMaxBytes)
-      val mJoin = if (doBcast) broadcast(m) else m
 
       val rewritten: Seq[FileMeta] = if (files.isEmpty) Nil else {
-        val part = readForRewrite(files, branch, withPos = true)
-        val joined = part.alias("t").join(mJoin.alias("s"),
+        val part = readForRewrite(plan, files, withPos = true)
+        val joined = part.alias("t").join(m.alias("s"),
           col("t._gf") === col("s._mf") && col("t._gp") === col("s._mp"),
           "left_outer")
         val matched = col("s._mf").isNotNull
@@ -1141,15 +1128,13 @@ class GraftTable(val spark: SparkSession, val location: String) {
       val inserted: Seq[FileMeta] = insertValues match {
         case None => Nil
         case Some(iv) =>
-          // anti-join against M's carried ON keys (broadcast-sized), not the
-          // table; fall back to the table scan only if ON references no
-          // target column at all (degenerate, but keep the old semantics)
+          // anti-join against M's carried ON keys, not the table; fall back
+          // to the table scan only if ON references no target column at all
+          // (degenerate, but keep the old semantics)
           val notMatched =
             if (tRefs.nonEmpty) {
               val tKeys = m.select(tRefs.map(c => col(s"_tk_$c").as(c)): _*)
-              source.alias("s").join(
-                (if (doBcast) broadcast(tKeys) else tKeys).alias("t"),
-                expr(on), "left_anti")
+              source.alias("s").join(tKeys.alias("t"), expr(on), "left_anti")
             } else {
               MergeStats.onJoinPasses.incrementAndGet()
               source.alias("s").join(tgt.alias("t"), expr(on), "left_anti")
@@ -1169,7 +1154,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
           }.filter(_.rowCount > 0L)
       }
       commit("overwrite", branch, rewritten ++ inserted, files, snapId, seq,
-        touched = touchedOf(files))
+        touched = plan.partitionsOf(files))
     } finally m.unpersist(blocking = false)
   }
 
@@ -1540,14 +1525,10 @@ class GraftTable(val spark: SparkSession, val location: String) {
     val names = m.schema(toSnap.schemaId).fields.map(_.name)
     val empty = emptyDf(m.schema(toSnap.schemaId), lineage = false, pos = false)
     chain.reverse.filter(s => Set("append", "add-files")(s.operation))
-      .flatMap { s =>
-        val added = Meta.readEntries(location, s)
-          .filter(e => e.fileType == "data" && e.sequenceNumber == s.sequenceNumber)
-          .map(e => normPath(abs(e.path))).toSet
-        if (added.isEmpty) None
-        else Some(scanSnapshot(m, s, toSnap.schemaId, None,
-          withLineage = false, withPos = false, fileSubset = Some(added)))
-      }
+      .map(s => planScan(m, s, toSnap.schemaId, Nil, None)
+        .keep(_.sequenceNumber == s.sequenceNumber))
+      .filter(_.data.nonEmpty)
+      .map(scanSnapshot(_, None, withLineage = false, withPos = false))
       .reduceOption(_ unionByName _).getOrElse(empty)
       .select(names.map(col): _*)
   }
@@ -1612,16 +1593,12 @@ class GraftTable(val spark: SparkSession, val location: String) {
     // posdel/DV targets that survive at both ends must scan on BOTH sides:
     // the overlay delta is exactly what deleted (or resurrected) rows in
     // them. Stored targets are raw-path space post-round-15; a legacy
-    // URI-encoded value is tolerated via its decoded form — over-inclusion
-    // only widens the scan, never changes the join's answer.
+    // URI-encoded value maps back by the same rule the scan applies
+    val legacy = legacyTargets(survivors.toSeq)
     val touched = fileScoped.iterator.flatMap { e =>
       readDeletes(m, e).select("file_path").distinct()
         .collect().iterator.map(_.getString(0))
-        .flatMap { t =>
-          val dec = try java.net.URLDecoder.decode(
-            t.replace("+", "%2B"), "UTF-8") catch { case _: Exception => t }
-          Seq(t, dec).filter(survivors)
-        }
+        .flatMap(t => if (survivors(t)) Some(t) else legacy.get(t))
     }.toSet
     // (d): survivors an in-window equality delete could touch, bounded by
     // their manifest column stats against the delete's key values — a
@@ -1719,14 +1696,8 @@ class GraftTable(val spark: SparkSession, val location: String) {
         s.sequenceNumber <= toSnap.sequenceNumber)
     lastChangesScope = None
     if (windowOps.forall(_.operation == "append")) {
-      val entries = Meta.readEntries(location, toSnap)
-      val newFiles = entries
-        .filter(e => e.fileType == "data" && e.sequenceNumber > from.sequenceNumber)
-        .map(e => normPath(abs(e.path))).toSet
-      val base =
-        if (newFiles.isEmpty) emptyDf(m.schema(toSnap.schemaId), lineage = true, pos = false)
-        else scanSnapshot(m, toSnap, toSnap.schemaId, None,
-          withLineage = true, withPos = false, fileSubset = Some(newFiles))
+      val base = scanSnapshot(planScan(m, toSnap, toSnap.schemaId, Nil, None)
+        .keep(_.sequenceNumber > from.sequenceNumber), None, withLineage = true, withPos = false)
       return base.select(names.map(col) ++ Seq(lit("insert").as("_change_type"),
         col("_last_updated_sequence_number").as("_commit_seq")): _*)
     }
@@ -1736,8 +1707,8 @@ class GraftTable(val spark: SparkSession, val location: String) {
     val scope = if (scoped) deltaFileSets(m, from, toSnap) else None
     lastChangesScope = scope
     def side(s: SnapshotMeta, subset: Option[Set[String]]) =
-      scanSnapshot(m, s, toSnap.schemaId, None,
-        withLineage = true, withPos = false, fileSubset = subset)
+      scanSnapshot(planScan(m, s, toSnap.schemaId, Nil, subset), None,
+        withLineage = true, withPos = false)
         .select(struct(names.map(col): _*).as("_v"), col("_row_id"),
           col("_last_updated_sequence_number").as("_seqn"))
     val a = side(from, scope.map(_._1))
@@ -1795,15 +1766,15 @@ class GraftTable(val spark: SparkSession, val location: String) {
     val m = meta
     val snap = m.head(branch).getOrElse(
       return commit("replace", branch, Nil, Set.empty, snapId, seq))
-    val entries = Meta.readEntries(location, snap)
-    val small = entries.filter(e =>
-      e.fileType == "data" && e.sizeBytes < smallerThanBytes)
+    val plan = planScan(m, snap, m.currentSchemaId, Nil, None)
+      .keep(_.sizeBytes < smallerThanBytes)
+    val small = plan.data
     if (small.size < 2)
       return commit("replace", branch, Nil, Set.empty, snapId, seq)
     val paths = small.map(e => normPath(abs(e.path))).toSet
     val totalBytes = small.map(_.sizeBytes).sum
     val n = math.max(1, (totalBytes / (targetMB.toLong << 20)).toInt)
-    val rows = readForRewrite(paths, branch)
+    val rows = readForRewrite(plan, paths)
     val out = writeDataFiles(toPhysical(rows, m.currentSchema), snapId, seq,
       m.currentSchemaId, m.currentSpecId, repartitionTo = Some(n))
     commit("replace", branch, out, paths, snapId, seq)
@@ -2117,12 +2088,8 @@ class GraftTable(val spark: SparkSession, val location: String) {
         "compaction or copy-on-write delete/update/overwrite) whose " +
         "re-sequenced files would corrupt the delta; use appendsBetween() " +
         "or changes()")
-    val entries = Meta.readEntries(location, end)
-    val newFiles = entries.filter(e => e.fileType == "data" && e.sequenceNumber > fromSeq)
-      .map(e => normPath(abs(e.path))).toSet
-    if (newFiles.isEmpty) emptyDf(m.schema(end.schemaId), lineage = false, pos = false)
-    else scanSnapshot(m, end, end.schemaId, None, withLineage = false,
-      withPos = false, fileSubset = Some(newFiles))
+    scanSnapshot(planScan(m, end, end.schemaId, Nil, None)
+      .keep(_.sequenceNumber > fromSeq), None, withLineage = false, withPos = false)
   }
 
   /** Puffin-analog table statistics: approximate per-column NDV sketches
@@ -2233,12 +2200,9 @@ class GraftTable(val spark: SparkSession, val location: String) {
     m.head(ref).map(s => Meta.readEntries(location, s)).getOrElse(Nil)
   }
 
-  /** driver-side pruned data-file list for a filter — for specs/inspection */
-  def prunedFiles(filter: String): Seq[FileMeta] = {
-    val m = Meta.readJson(location)
-    val preds = Pruning.extract(filter, spark)
-    liveFiles().filter(_.fileType == "data").filter(f => Pruning.fileMatches(f, m, preds))
-  }
+  /** the data files a read of main with `filter` plans — for specs/inspection */
+  def prunedFiles(filter: String): Seq[FileMeta] =
+    planRead(preds = Pruning.extract(filter, spark)).data
 
   // ==========================================================================
   // CHECK constraints
@@ -2331,33 +2295,9 @@ class GraftTable(val spark: SparkSession, val location: String) {
   /** scan restricted to the data files of ONE partition-field value (plus
     * any live delete files, which scan() applies as usual) — the unit of
     * bucket-wise co-located execution */
-  def scanPartition(field: String, value: String): DataFrame = {
-    val keep = liveFiles().filter(f => f.fileType == "data" &&
-      f.partition.get(field).contains(value))
-      .map(f => normPath(abs(f.path))).toSet
-    scan(fileSubset = Some(keep))
-  }
-
-  /** Scan with manifest pruning driven by already-extracted predicates —
-    * the SQL-analyzer path: the WHERE clause exists as a Catalyst tree, the
-    * row-level filter stays in the plan above, and this only shrinks the
-    * file list the scan launches tasks for. */
-  def scanPruned(preds: Seq[Pruning.Pred]): DataFrame = {
-    // one metadata read for BOTH pruning and scanning: re-reading inside
-    // scan() would let a commit land in between, silently dropping files of
-    // the newer snapshot from the fileSubset intersection (torn read)
-    val m = Meta.readJson(location)
-    m.head("main") match {
-      case None => emptyDf(m.currentSchema, lineage = false, pos = false)
-      case Some(s) =>
-        val keep = Meta.readEntries(location, s)
-          .filter(_.fileType == "data")
-          .filter(f => Pruning.fileMatches(f, m, preds))
-          .map(f => normPath(abs(f.path))).toSet
-        scanSnapshot(m, s, m.currentSchemaId, None,
-          withLineage = false, withPos = false, fileSubset = Some(keep))
-    }
-  }
+  def scanPartition(field: String, value: String): DataFrame =
+    scanSnapshot(planRead().keep(_.partition.get(field).contains(value)), None,
+      withLineage = false, withPos = false)
 }
 
 object GraftTable {

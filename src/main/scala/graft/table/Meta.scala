@@ -261,15 +261,14 @@ object Meta {
     * [[writeManifest]] AND scripts/extwriter.py), atomic-rename
     * create-new, never rewritten in place — so a parse is valid for
     * the file's lifetime, and the jackson pass is the real cost of a
-    * metadata read (ManifestDiag, this machine: a 100k-entry plane
-    * parses in ~245 ms cold and ~2 ms cached; 1M entries ~3.2 s cold).
+    * metadata read (a round-15 driver-only probe parsed a 100k-entry
+    * plane in ~245 ms cold and ~2 ms cached, 1M entries in ~3.2 s cold;
+    * perfbench's traced `meta.manifest_read_ms` is the standing measure).
     * Round-16 shape (closing the round-15 ADVICE + VERDICT items):
     *  - BYTE-weighted bound — the weight is the raw JSONL length, what
     *    the heap actually pays within a small constant — default 128 MB
     *    (~400k entries at the measured ~300 B/entry) via
-    *    -Dgraft.manifest.cache.bytes; the old entry knob
-    *    -Dgraft.manifest.cache.entries is still honored when set
-    *    (0 disables, N caps at N x 300 B). The 1M-entry default pinned
+    *    -Dgraft.manifest.cache.bytes (0 disables). The 1M-entry default pinned
     *    several hundred MB in any embedding JVM; a bounded default with
     *    scan-resistant admission keeps the useful residency instead.
     *  - SCAN-RESISTANT admission: once full, a candidate is admitted
@@ -291,11 +290,7 @@ object Meta {
     * they are as immutable once published as segments are (FORMAT.md
     * invariant 2), so a repeated scan re-reads no delete file. */
   private val manifestCacheMaxBytes: Long =
-    sys.props.get("graft.manifest.cache.entries").flatMap(_.toLongOption) match {
-      case Some(n) => math.max(0L, n) * 300L
-      case None => sys.props.get("graft.manifest.cache.bytes")
-        .flatMap(_.toLongOption).getOrElse(128L << 20)
-    }
+    sys.props.get("graft.manifest.cache.bytes").flatMap(_.toLongOption).getOrElse(128L << 20)
   /** A parsed value and its weight in bytes against the cache bound. */
   private[graft] final case class Weighed[+V](value: V, weight: Long)
 

@@ -79,6 +79,36 @@ class ChangesScopeSpec extends SparkSpec {
     }
   }
 
+  test("a legacy URI-encoded position-delete target scopes to its survivor file") {
+    // delete files written before round 15 stored the URI-encoded file
+    // path; the scope must map it back to the raw survivor path by the
+    // same rule the scan applies, or the delete would be missed
+    import spark.implicits._
+    val loc = tmp()
+    val t = mk(loc, partitionBy = Seq("s"))
+    val s0 = t.append(df(Seq((1L, 1L, "a b%c"), (2L, 2L, "a b%c"), (3L, 3L, "plain"))))
+    t.delete("id = 1", WriteMode.MergeOnRead)
+    val pd = Meta.readEntries(loc, t.meta.head("main").get).find(_.fileType == "posdel").get
+    val dir = s"$loc/${pd.path}"
+    val rows = spark.read.parquet(dir).as[(String, Long)].collect().toSeq
+    val raw = rows.map(_._1).distinct
+    assert(raw.size == 1 && raw.head.contains("a b%25c"), s"got $raw")
+    val encoded = new java.net.URI("file", null, raw.head, null).getRawPath
+    assert(encoded != raw.head)
+    // rewrite the delete file as an older writer stored it
+    rows.map { case (_, pos) => (encoded, pos) }.toDF("file_path", "pos")
+      .write.mode("overwrite").parquet(dir)
+    assert(t.scan().orderBy("id").collect().map(_.getLong(0)).toSeq == Seq(2L, 3L))
+    val ch = t.changes(s0.snapshotId)
+    val (before, after) = t.lastChangesScope.getOrElse(
+      fail("a posdel window must take the scoped path"))
+    assert(before == Set(raw.head) && after == Set(raw.head),
+      s"both sides must be the targeted survivor, got $before / $after")
+    assert(canon(ch) == canon(t.changesStateDiff(s0.snapshotId)))
+    assert(ch.collect().map(r => (r.getAs[String]("_change_type"), r.getAs[Long]("id")))
+      .toSeq == Seq(("delete", 1L)))
+  }
+
   test("in-window compaction contributes no change rows (lineage squashes rewrites)") {
     val loc = tmp()
     val t = mk(loc)

@@ -1741,6 +1741,49 @@ class OpsSpec extends SparkSpec {
     }
   }
 
+  test("SQL reads of a branch prune the manifest like head reads") {
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val wh = java.nio.file.Files.createTempDirectory("graft-sqlwh3").toString
+    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
+    val s2 = SparkSession.builder().master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .withExtensions(new graft.functions.GraftExtensions())
+      .getOrCreate()
+    try {
+      s2.conf.set("spark.graft.warehouse", wh)
+      val cat = new graft.table.GraftCatalog(s2, wh)
+      val t = cat.createTable("db1", "bt", "k bigint, v string",
+        partitionBy = Seq("bucket(8, k)"))
+      import s2.implicits._
+      t.append((0L until 64L).map(k => (k, s"v$k")).toDF("k", "v"))
+      t.createBranch("b")
+      t.append((64L until 128L).map(k => (k, s"v$k")).toDF("k", "v"), branch = "b")
+      // files in the relations the plan was built from (one
+      // ManifestFileIndex per schema group)
+      def plannedFiles(df: org.apache.spark.sql.DataFrame): Long =
+        df.queryExecution.executedPlan.collectLeaves().collect {
+          case f: FileSourceScanExec => f.relation.location.inputFiles.length.toLong
+        }.sum
+      val sqlDf = s2.sql("SELECT v FROM graft.db1.`bt@b` WHERE k = 17")
+      val apiDf = t.scan(filter = Some("k = 17"), ref = Some("b"))
+      val branchFiles = t.liveFiles("b").count(_.fileType == "data").toLong
+      assert(plannedFiles(apiDf) < branchFiles, "bucket pruning must drop files")
+      assert(plannedFiles(sqlDf) == plannedFiles(apiDf),
+        s"SQL branch read plans ${plannedFiles(sqlDf)} of $branchFiles files, " +
+          s"the API read ${plannedFiles(apiDf)}")
+      assert(sqlDf.collect().map(_.getString(0)).toSeq == Seq("v17"))
+      // the branch's own appends are planned, main's head is not
+      assert(s2.sql("SELECT v FROM graft.db1.`bt@b` WHERE k = 81").collect()
+        .map(_.getString(0)).toSeq == Seq("v81"))
+      assert(s2.sql("SELECT v FROM graft.db1.bt WHERE k = 81").collect().isEmpty)
+    } finally {
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+    }
+  }
+
   test("frame sampling explodes payloads at the stride and keeps slice identity") {
     val rows = Multimodal.frameSample(spark, sf).collect()
     assert(rows.nonEmpty)

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 
 import graft.ops._
 
@@ -29,6 +30,35 @@ class PlanSpec extends SparkSpec {
 
   private def countShuffles(plan: String): Int =
     "Exchange (hash|range)partitioning".r.findAllIn(plan).size
+
+  /** The physical plans of every query `body` executes, AQE off so the
+    * join strategies are visible in the tree. */
+  private def executedDuring(body: => Unit): Seq[SparkPlan] = {
+    val plans = new java.util.concurrent.CopyOnWriteArrayList[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // AQE wraps executed plans in an opaque leaf — off for tree inspection
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.listenerManager.register(listener)
+    try body
+    finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    // the listener fires asynchronously — drain until the count is stable
+    var last = -1; var tries = 0
+    while (plans.size != last && tries < 50) {
+      last = plans.size; Thread.sleep(100); tries += 1
+    }
+    spark.listenerManager.unregister(listener)
+    plans.toArray(Array.empty[SparkPlan]).toSeq
+  }
+
+  /** `p` reads data files under the table location `loc` */
+  private def scansTable(p: SparkPlan, loc: String): Boolean = p.collect {
+    case f: FileSourceScanExec
+      if f.relation.location.rootPaths.exists(_.toString.contains(loc)) => f
+  }.nonEmpty
 
   test("q06: all predicates reach the parquet scan, schema pruned") {
     val plan = fullPlan(Analytics.q06(spark, sf))
@@ -288,38 +318,18 @@ class PlanSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     import graft.table.{GraftTable, MergeStats}
-    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
     val loc = java.nio.file.Files.createTempDirectory("graft-mergeplan").toString
     val t = GraftTable.create(spark, loc, "k bigint, v double")
     t.append((0L until 100L).map(k => (k, k * 1.0)).toDF("k", "v"))
     val src = (50L until 150L).map(k => (k, k + 0.5)).toDF("k", "v")
-    val plans = new java.util.concurrent.CopyOnWriteArrayList[SparkPlan]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
-        plans.add(qe.executedPlan)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
     val before = MergeStats.onJoinPasses.get
-    // AQE wraps executed plans in an opaque leaf — off for tree inspection
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.listenerManager.register(listener)
-    try {
+    val all = executedDuring {
       t.merge(src, on = "t.k = s.k", matchedSet = Map("v" -> "s.v"),
         insertValues = Some(Map("k" -> "s.k", "v" -> "s.v")))
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
     assert(MergeStats.onJoinPasses.get - before == 1,
       "merge must build exactly one target×source ON-expression join")
-    // the listener fires asynchronously — drain until the count is stable
-    var last = -1; var tries = 0
-    while (plans.size != last && tries < 50) {
-      last = plans.size; Thread.sleep(100); tries += 1
-    }
-    spark.listenerManager.unregister(listener)
-    def scansTable(p: SparkPlan): Boolean = p.collect {
-      case f: FileSourceScanExec
-        if f.relation.location.rootPaths.exists(_.toString.contains(loc)) => f
-    }.nonEmpty
-    val all = plans.toArray(Array.empty[SparkPlan]).toSeq
+    def scansTable(p: SparkPlan): Boolean = PlanSpec.this.scansTable(p, loc)
     val writes = all.filter(_.toString.contains("InsertIntoHadoopFsRelationCommand"))
     assert(writes.size == 2, s"expected rewrite+insert writes, got ${writes.size}")
     // the ON join executes once, inside the cached match set: the only
@@ -341,6 +351,40 @@ class PlanSpec extends SparkSpec {
     assert(out.count() == 150)
     assert(out.filter(col("k") === 60L).select("v").as[Double].head() == 60.5)
     assert(out.filter(col("k") === 10L).select("v").as[Double].head() == 10.0)
+  }
+
+  test("merge: Spark's broadcast bound alone picks the rewrite join; rows agree") {
+    import spark.implicits._
+    import graft.table.GraftTable
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    // an ingest-sized merge: 8 of 12 source rows match, 4 insert
+    def run(): (Seq[SparkPlan], SparkPlan, Seq[String]) = {
+      val loc = java.nio.file.Files.createTempDirectory("graft-mergebound").toString
+      val t = GraftTable.create(spark, loc, "k bigint, v double, s string")
+      t.append((0L until 200L).map(k => (k, k * 1.0, s"r$k")).toDF("k", "v", "s"))
+      val src = ((40L until 48L) ++ (500L until 504L))
+        .map(k => (k, k + 0.5, s"m$k")).toDF("k", "v", "s")
+      val plans = executedDuring {
+        t.merge(src, on = "t.k = s.k", matchedSet = Map("v" -> "s.v", "s" -> "s.s"),
+          insertValues = Some(Map("k" -> "s.k", "v" -> "s.v", "s" -> "s.s")))
+      }
+      val writes = plans.filter(_.toString.contains("InsertIntoHadoopFsRelationCommand"))
+      val rewrite = writes.filter(scansTable(_, loc))
+      assert(rewrite.size == 1, s"expected one rewrite write, got ${rewrite.size}")
+      (writes, rewrite.head, t.scan().orderBy("k").collect().map(_.mkString("|")).toSeq)
+    }
+    val (_, rewrite, rowsByDefault) = run()
+    assert(rewrite.collect {
+      case j: BroadcastHashJoinExec if j.rightKeys.exists(_.toString.contains("_mf")) => j
+    }.nonEmpty, s"by default the rewrite must broadcast-join the matched set:\n$rewrite")
+    val (unbounded, _, rowsUnbounded) = withBroadcastBound(-1)(run())
+    val broadcasts = unbounded.flatMap(_.collect { case b: BroadcastExchangeExec => b })
+    assert(broadcasts.isEmpty,
+      s"with the bound off no merge write may broadcast:\n${unbounded.mkString("\n")}")
+    assert(rowsUnbounded == rowsByDefault)
+    assert(rowsByDefault.size == 204)
+    assert(rowsByDefault.contains("41|41.5|m41") && rowsByDefault.contains("501|501.5|m501"))
   }
 
   test("boilerplate: the frequent set broadcasts; the corpus never join-shuffles") {

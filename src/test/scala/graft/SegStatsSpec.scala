@@ -249,8 +249,9 @@ class SegStatsSpec extends SparkSpec {
 
   test("round 15: a file-scoped CoW update commit skips shards disjoint from its touched partitions") {
     // VERDICT r14 item 5 (SURVEY §20.1 residual): CoW row-ops know their
-    // affected files; their partition tuples parse from the `_p_` path
-    // segments, so commit() prunes like overwritePartitions does
+    // affected files; their partition tuples come from the manifest
+    // entries the row-resolving scan planned, so commit() prunes like
+    // overwritePartitions does
     import spark.implicits._
     val t = GraftTable.create(spark, loc(),
       "id bigint, ts timestamp, v double", partitionBy = Seq("day(ts)"),
@@ -274,10 +275,10 @@ class SegStatsSpec extends SparkSpec {
     finally Meta.recordReads = false
     val reads = Meta.readLog.asScala.toSeq
     def countOf(s: String) = reads.count(_ == s)
-    // the op's two row-resolving scans read every segment alike; only
-    // the COMMIT is partition-scoped — it opens the Feb/Mar shard (it
-    // holds the removed file) exactly once more than the Jan shard,
-    // which it must never open
+    // the op's row-resolving scan reads every segment alike (the rewrite
+    // reuses its plan); only the COMMIT is partition-scoped — it opens
+    // the Feb/Mar shard (it holds the removed file) exactly once more
+    // than the Jan shard, which it must never open
     assert(countOf(febMarShard) == countOf(janShard.head) + 1,
       s"commit read counts drifted: jan=${countOf(janShard.head)} " +
         s"febmar=${countOf(febMarShard)} reads=$reads")
@@ -287,7 +288,7 @@ class SegStatsSpec extends SparkSpec {
   }
 
   test("round 15: touched-partition parse round-trips escaped partition values") {
-    // the touchedOf path parse must reproduce FooterStats.partitionValues
+    // the commit's touched tuples must equal the committed partitions
     // exactly — pin it on values Spark %xx-escapes in directory names
     // (percent, colon, equals) plus a space
     import spark.implicits._
@@ -310,8 +311,9 @@ class SegStatsSpec extends SparkSpec {
     val reads = Meta.readLog.asScala.toSeq
     assert(reads.count(_ == plain) == reads.count(_ == weird) + 1,
       s"escaped-tuple commit read counts drifted: $reads")
-    // and the same on the escaped partition itself — parse must yield
-    // exactly {cat -> p%q:r=s} or the removal would be silently skipped
+    // and the same on the escaped partition itself — the touched tuple
+    // must be exactly {cat -> p%q:r=s} or the removal would be silently
+    // skipped
     val head2 = t.meta.head("main").get
     val weird2 = head2.manifests.find(s =>
       head2.manifestStats.get(s).exists(_.partitions ==
@@ -324,6 +326,42 @@ class SegStatsSpec extends SparkSpec {
       "commit must open the escaped partition's own segment")
     val rows = t.scan().orderBy("id").collect().map(_.getLong(0)).toSeq
     assert(rows == Seq(2L), s"got $rows")
+  }
+
+  test("a CoW delete on a shallow clone never opens the shard disjoint from its partition") {
+    // a clone's entries carry absolute paths into the source table: the
+    // commit scopes itself by the removed entries' manifest partitions,
+    // as the row-resolving scan planned them, so the clone's shards prune
+    // exactly like a native table's
+    import spark.implicits._
+    val src = GraftTable.create(spark, loc(),
+      "id bigint, ts timestamp, v double", partitionBy = Seq("day(ts)"),
+      properties = Map("write.manifest.shard-entries" -> "2"))
+    def add(id: Long, day: String): Unit =
+      src.append(Seq((id, s"$day 10:0$id:00", id.toDouble))
+        .toDF("id", "ts", "v").withColumn("ts", col("ts").cast("timestamp")))
+    add(1, "2024-01-01"); add(2, "2024-01-01")
+    add(3, "2024-02-01"); add(4, "2024-03-01")
+    val t = src.shallowClone(
+      Files.createTempDirectory("graft-segstats-clone").resolve("c").toString)
+    t.rewriteManifests()
+    val head = t.meta.head("main").get
+    assert(head.manifests.size == 2, s"got ${head.manifests}")
+    val janShard = head.manifests.filter(s =>
+      head.manifestStats(s).partitions.size == 1)
+    assert(janShard.size == 1, s"expected one single-tuple (Jan) shard: " +
+      s"${head.manifestStats}")
+    val febMarShard = (head.manifests.toSet -- janShard).head
+    Meta.readLog.clear()
+    Meta.recordReads = true
+    try t.delete("ts < timestamp'2024-01-02 00:00:00' AND id = 1")
+    finally Meta.recordReads = false
+    val reads = Meta.readLog.asScala.toSeq
+    assert(!reads.contains(febMarShard),
+      s"the Feb/Mar shard was opened by a Jan-scoped clone delete: $reads")
+    assert(reads.contains(janShard.head), s"the Jan shard must be read: $reads")
+    assert(t.scan().orderBy("id").collect().map(_.getLong(0)).toSeq == Seq(2L, 3L, 4L))
+    assert(src.scan().count() == 4, "the source table must be untouched")
   }
 
   test("round 15: stats backfill — extwriter append, then the first reading native commit re-seeds pruning") {
