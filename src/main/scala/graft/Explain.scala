@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.debug._
 
 /** Plan auditor: prints the formatted physical plan for selected queries so
   * pushdown (PushedFilters/ReadSchema), join strategies (BroadcastHashJoin

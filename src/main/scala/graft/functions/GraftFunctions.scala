@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType}
+import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType}
 
 /** Native Catalyst expressions for the graft engine — the (b) rung of the
   * operator ladder: compose built-ins when possible, write a codegen'd

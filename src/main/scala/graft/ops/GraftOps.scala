@@ -2,6 +2,8 @@ package graft.ops
 
 import java.nio.file.Files
 
+import scala.annotation.unused
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -30,7 +32,7 @@ object GraftOps {
     "o_orderkey bigint, o_custkey bigint, o_orderstatus string, " +
       "o_totalprice double, o_orderdate timestamp, o_orderpriority string"
 
-  private def mkOrders(spark: SparkSession, dir: String,
+  private def mkOrders(spark: SparkSession,
       partitionBy: Seq[String] = Nil,
       props: Map[String, String] = Map.empty): GraftTable =
     GraftTable.create(spark, scratch(), ordersDdl, partitionBy, props)
@@ -59,7 +61,7 @@ object GraftOps {
 
   // --- #2 read with filter + projection (pushdown / pruning path) ----------
   def readFilterProject(spark: SparkSession, dir: String): DataFrame = {
-    val t = mkOrders(spark, dir)
+    val t = mkOrders(spark)
     t.append(orders(spark, dir))
     t.scan(filter = Some("o_totalprice > 150000.0 and o_orderstatus = 'O'"))
       .select("o_orderkey", "o_totalprice")
@@ -68,7 +70,7 @@ object GraftOps {
 
   // --- #3 insert: two appends, snapshot chain -------------------------------
   def writeInsert(spark: SparkSession, dir: String): DataFrame = {
-    val t = mkOrders(spark, dir)
+    val t = mkOrders(spark)
     val o = orders(spark, dir)
     t.append(o.filter(col("o_orderkey") % 3 === 0))
     t.append(o.filter(col("o_orderkey") % 3 === 1))
@@ -77,7 +79,7 @@ object GraftOps {
 
   // --- #4 merge upsert (CoW, file-scoped) -----------------------------------
   def mergeUpsert(spark: SparkSession, dir: String): DataFrame = {
-    val t = mkOrders(spark, dir)
+    val t = mkOrders(spark)
     val o = orders(spark, dir)
     t.append(o.filter(col("o_orderkey") % 2 === 0))
     val src = o.filter(col("o_orderkey") % 4 === 1 || col("o_orderkey") % 4 === 2)
@@ -97,7 +99,7 @@ object GraftOps {
 
   // --- #5 positional delete (merge-on-read) ---------------------------------
   def deletePositional(spark: SparkSession, dir: String): DataFrame = {
-    val t = mkOrders(spark, dir)
+    val t = mkOrders(spark)
     t.append(orders(spark, dir))
     t.delete("o_orderstatus = 'F'", WriteMode.MergeOnRead)
     t.scan().groupBy(col("o_orderpriority"))
@@ -107,7 +109,7 @@ object GraftOps {
 
   // --- #6 equality delete: applies only to older rows -----------------------
   def deleteEquality(spark: SparkSession, dir: String): DataFrame = {
-    val t = mkOrders(spark, dir)
+    val t = mkOrders(spark)
     val o = orders(spark, dir)
     t.append(o)
     t.deleteByKeys(o.select("o_custkey").filter(col("o_custkey") < 50).distinct())
@@ -118,7 +120,7 @@ object GraftOps {
 
   // --- #7 update merge-on-read ----------------------------------------------
   def updateMor(spark: SparkSession, dir: String): DataFrame = {
-    val t = mkOrders(spark, dir)
+    val t = mkOrders(spark)
     t.append(orders(spark, dir))
     t.update("o_orderstatus = 'O'", Map("o_totalprice" -> "o_totalprice + 10.0"),
       WriteMode.MergeOnRead)
@@ -127,7 +129,7 @@ object GraftOps {
 
   // --- #8 update copy-on-write ----------------------------------------------
   def updateCow(spark: SparkSession, dir: String): DataFrame = {
-    val t = mkOrders(spark, dir)
+    val t = mkOrders(spark)
     t.append(orders(spark, dir))
     t.update("o_orderpriority = '1-URGENT'", Map("o_totalprice" -> "o_totalprice + 10.0"),
       WriteMode.CopyOnWrite)
@@ -138,7 +140,7 @@ object GraftOps {
 
   // --- #9 deletion vectors (v3): two DV commits, vectors merge --------------
   def deleteDv(spark: SparkSession, dir: String): DataFrame = {
-    val t = mkOrders(spark, dir)
+    val t = mkOrders(spark)
     t.append(orders(spark, dir))
     t.delete("o_orderkey % 7 = 0", WriteMode.DeletionVector)
     t.delete("o_orderkey % 11 = 0", WriteMode.DeletionVector)
@@ -194,7 +196,7 @@ object GraftOps {
 
   // --- #13 time travel -------------------------------------------------------
   def timeTravel(spark: SparkSession, dir: String): DataFrame = {
-    val t = mkOrders(spark, dir)
+    val t = mkOrders(spark)
     val o = orders(spark, dir)
     val s1 = t.append(o.filter(col("o_orderkey") % 2 === 0))
     t.append(o.filter(col("o_orderkey") % 2 === 1))
@@ -209,7 +211,7 @@ object GraftOps {
 
   // --- #14 maintenance: compaction + snapshot expiry -------------------------
   def compaction(spark: SparkSession, dir: String): DataFrame = {
-    val t = mkOrders(spark, dir)
+    val t = mkOrders(spark)
     val o = orders(spark, dir)
     (0 until 4).foreach(i => t.append(o.filter(col("o_orderkey") % 4 === i)))
     t.delete("o_orderkey % 10 = 0", WriteMode.MergeOnRead)
@@ -232,7 +234,7 @@ object GraftOps {
     * nothing (or a delete-rewrite that leaves delete files live) fails
     * the hash gate loudly instead of silently degrading. */
   def maintenance(spark: SparkSession, dir: String): DataFrame = {
-    val t = mkOrders(spark, dir)
+    val t = mkOrders(spark)
     val o = orders(spark, dir)
     (0 until 3).foreach(i => t.append(o.filter(col("o_orderkey") % 3 === i)))
     // two MoR deletes -> >=2 positional delete files, so the rewrite has
@@ -260,7 +262,7 @@ object GraftOps {
     * AFTER the expiry, so an over-eager gc fails the gate, not just a
     * spec. */
   def expireRefs(spark: SparkSession, dir: String): DataFrame = {
-    val t = mkOrders(spark, dir)
+    val t = mkOrders(spark)
     val o = orders(spark, dir)
     t.append(o.filter(col("o_orderkey") % 2 === 0))
     t.createTag("v1")
@@ -278,7 +280,7 @@ object GraftOps {
 
   // --- #15 branching & tagging ----------------------------------------------
   def branchTag(spark: SparkSession, dir: String): DataFrame = {
-    val t = mkOrders(spark, dir)
+    val t = mkOrders(spark)
     val o = orders(spark, dir)
     t.append(o.filter(col("o_orderkey") % 2 === 0))
     t.createTag("v1")
@@ -299,7 +301,7 @@ object GraftOps {
     * The oracle reconstructs both refs from the source table with the
     * ops' predicates composed in commit order. */
   def branchRowOps(spark: SparkSession, dir: String): DataFrame = {
-    val t = mkOrders(spark, dir)
+    val t = mkOrders(spark)
     val o = orders(spark, dir)
     t.append(o.filter(col("o_orderkey") % 3 === 0))          // shared base
     t.createBranch("dev")
@@ -321,7 +323,7 @@ object GraftOps {
   /** rollbackTo moves only the main ref; the undone snapshot stays
     * time-travelable and the next append diverges from the restored head */
   def rollback(spark: SparkSession, dir: String): DataFrame = {
-    val t = mkOrders(spark, dir)
+    val t = mkOrders(spark)
     val o = orders(spark, dir)
     val s1 = t.append(o.filter(col("o_orderkey") % 3 === 0))
     t.append(o.filter(col("o_orderkey") % 3 === 1))
@@ -335,7 +337,7 @@ object GraftOps {
     * publish by fast-forwarding main — readers of main never see
     * unaudited data, and the publish is a metadata-only atomic ref move */
   def wap(spark: SparkSession, dir: String): DataFrame = {
-    val t = mkOrders(spark, dir)
+    val t = mkOrders(spark)
     val o = orders(spark, dir)
     t.append(o.filter(col("o_orderstatus") === "F"))
     t.createBranch("audit")
@@ -356,7 +358,7 @@ object GraftOps {
     * clean batch proceeds. Final state = the two clean appends only;
     * the refusal's atomicity is what the oracle hash actually gates. */
   def checkConstraintsQ(spark: SparkSession, dir: String): DataFrame = {
-    val t = mkOrders(spark, dir)
+    val t = mkOrders(spark)
     val o = orders(spark, dir)
     t.append(o.filter(col("o_orderkey") % 3 === 0))
     t.addConstraint("positive_total", "o_totalprice > 0.0")
@@ -383,7 +385,7 @@ object GraftOps {
     * zero data bytes (TableSpec pins no parquet under the clone tree
     * until its own append). */
   def tableClone(spark: SparkSession, dir: String): DataFrame = {
-    val t = mkOrders(spark, dir)
+    val t = mkOrders(spark)
     val o = orders(spark, dir)
     t.append(o.filter(col("o_orderkey") % 4 === 0))
     t.append(o.filter(col("o_orderkey") % 4 === 1))
@@ -403,7 +405,7 @@ object GraftOps {
     * manifest-pruned incremental read whose cost is the delta, not the
     * table (TableSpec pins that only the window's files are scanned) */
   def incrScan(spark: SparkSession, dir: String): DataFrame = {
-    val t = mkOrders(spark, dir)
+    val t = mkOrders(spark)
     val o = orders(spark, dir)
     val s1 = t.append(o.filter(col("o_orderkey") % 3 === 0))
     t.append(o.filter(col("o_orderkey") % 3 === 1))
@@ -418,7 +420,7 @@ object GraftOps {
     * final value) and unchanged rows carried through the CoW rewrite
     * (no change emitted) */
   def cdcChanges(spark: SparkSession, dir: String): DataFrame = {
-    val t = mkOrders(spark, dir)
+    val t = mkOrders(spark)
     val o = orders(spark, dir)
     val s1 = t.append(o.filter(col("o_orderkey") % 2 === 0))
     t.append(o.filter(col("o_orderkey") % 2 === 1 && col("o_orderkey") % 5 =!= 0))
@@ -498,7 +500,7 @@ object GraftOps {
 
   // --- #17 partition evolution ----------------------------------------------
   def partitionEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val t = mkOrders(spark, dir)
+    val t = mkOrders(spark)
     val o = orders(spark, dir)
     t.append(o.filter(col("o_orderkey") % 2 === 0))
     t.updateSpec(Seq(GraftTable.parseSpecField("bucket(4, o_custkey)", t.meta.currentSchema)))
@@ -511,7 +513,7 @@ object GraftOps {
 
   // --- #18 multi-argument bucket transform (v3) ------------------------------
   def multiargBucket(spark: SparkSession, dir: String): DataFrame = {
-    val t = mkOrders(spark, dir, partitionBy = Seq("bucket(8, o_custkey, o_orderkey)"))
+    val t = mkOrders(spark, partitionBy = Seq("bucket(8, o_custkey, o_orderkey)"))
     t.append(orders(spark, dir))
     t.scan(filter = Some("o_custkey < 25"))
       .groupBy(col("o_custkey"))
@@ -521,7 +523,7 @@ object GraftOps {
 
   // --- #19 file statistics & manifest pruning --------------------------------
   def statsPruning(spark: SparkSession, dir: String): DataFrame = {
-    val t = mkOrders(spark, dir)
+    val t = mkOrders(spark)
     val o = orders(spark, dir)
     // range-sliced appends -> disjoint per-file min/max on o_orderkey
     t.append(o.filter(col("o_orderkey") < 1000))
@@ -563,7 +565,7 @@ object GraftOps {
 
   // --- #21 catalog operations ------------------------------------------------
   /** filesystem backend (hadoop-catalog analog) */
-  def catalogOps(spark: SparkSession, dir: String): DataFrame =
+  def catalogOps(spark: SparkSession, @unused dir: String): DataFrame =
     catalogOpsOn(spark, wh => new GraftCatalog(spark, wh))
 
   /** Derby pointer backend (jdbc-catalog analog) — the SAME lifecycle and
@@ -571,7 +573,7 @@ object GraftOps {
     * behind [[graft.table.Catalog]], which is the pluggability claim this
     * query certifies. Rename here is a single pointer UPDATE (no data
     * move), the shape that survives object storage at 100 TB. */
-  def catalogOpsJdbc(spark: SparkSession, dir: String): DataFrame =
+  def catalogOpsJdbc(spark: SparkSession, @unused dir: String): DataFrame =
     catalogOpsOn(spark,
       wh => new JdbcGraftCatalog(spark, JdbcGraftCatalog.defaultUrl(wh), wh))
 
@@ -581,7 +583,7 @@ object GraftOps {
     * points `spark.graft.catalog.rest.url` at a long-lived service,
     * which is how N drivers share one catalog without a shared
     * filesystem or embedded database). */
-  def catalogOpsRest(spark: SparkSession, dir: String): DataFrame = {
+  def catalogOpsRest(spark: SparkSession, @unused dir: String): DataFrame = {
     val srv = RestCatalogServer.start()
     try catalogOpsOn(spark, wh => new RestGraftCatalog(spark, srv.url, wh))
     finally srv.stop()
@@ -617,7 +619,7 @@ object GraftOps {
     * manifests only — no data file is opened), and main-ancestry flags.
     * Timestamps and file counts are deliberately excluded: they depend
     * on wall clock / write parallelism, and the gate needs exact rows. */
-  def metaTablesQ(spark: SparkSession, dir: String): DataFrame = {
+  def metaTablesQ(spark: SparkSession, @unused dir: String): DataFrame = {
     import spark.implicits._
     val t = GraftTable.create(spark, scratch(),
       "id bigint, status string, total double", Seq("identity(status)"))
@@ -823,10 +825,10 @@ object GraftOps {
     * table. */
   def cdcApply(spark: SparkSession, dir: String): DataFrame = {
     val o = orders(spark, dir)
-    val src = mkOrders(spark, dir)
+    val src = mkOrders(spark)
     val s1 = src.append(o.filter(col("o_orderkey") % 2 === 0))
     // replica syncs to snapshot 1
-    val rep = mkOrders(spark, dir)
+    val rep = mkOrders(spark)
     rep.append(src.scan(snapshotId = Some(s1.snapshotId)))
     // source moves on: insert + update + delete
     src.append(o.filter(col("o_orderkey") % 2 === 1))

@@ -14,7 +14,7 @@ private[graft] final class LruCache[K, V](val max: Int) {
   require(max > 0, s"LruCache bound must be positive, got $max")
   private val map = new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
     override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
-      size() > max
+      this.size() > max
   }
   def getOrElseUpdate(k: K, build: => V): V = map.synchronized {
     val hit = map.get(k) // access-order bump on hit

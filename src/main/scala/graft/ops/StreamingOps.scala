@@ -3,6 +3,7 @@ package graft.ops
 import java.nio.file.Files
 import java.util.UUID
 
+import scala.annotation.unused
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -421,7 +422,7 @@ object StreamingOps {
           closed += 1
           out += SOut(uid, closed, n, s, l)
           open = if (e.event_id == -1L) None else Some((e.ts_us, e.ts_us, 1L))
-        case Some((s, l, n)) =>
+        case Some((s, _, n)) =>
           open = Some((s, e.ts_us, if (e.event_id == -1L) n else n + 1))
         case None =>
           open = if (e.event_id == -1L) None else Some((e.ts_us, e.ts_us, 1L))
@@ -479,7 +480,7 @@ object StreamingOps {
     * event_id) within the micro-batch; across batches the state carries
     * the last click, so the replay is exact as long as the source feeds
     * batches in event order (the staged single-file source does). */
-  def attributionFn(uid: Long, it: Iterator[AEv],
+  def attributionFn(@unused uid: Long, it: Iterator[AEv],
       state: GroupState[AClick]): Iterator[AOut] = {
     val evs = it.toArray.sortBy(e => (e.ts_us, e.event_id))
     var click: Option[(Long, Long)] =
@@ -862,7 +863,7 @@ object StreamingOps {
     // would otherwise change the maintenance cadence)
     (0 until 6).foreach(i =>
       a.append(src.filter(col("event_id") % 6 === i).coalesce(1)))
-    val b = graft.table.GraftTable.create(spark, s"$tmp/b", ddl)
+    graft.table.GraftTable.create(spark, s"$tmp/b", ddl)
     var commits = 0
     val q = a.readStream(maxFilesPerTrigger = Some(1)).writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>

@@ -41,7 +41,7 @@ object TextOps {
     if (pinned.count() <= bound) broadcast(pinned) else pinned
   }
 
-  private def countIn(c: Column, markers: Seq[String]): Column = {
+  private def countIn(markers: Seq[String]): Column = {
     val pred = markers.map(m => s"w = '$m'").mkString(" OR ")
     expr(s"size(filter(split(text, ' '), w -> $pred))").cast(LongType)
   }
@@ -64,7 +64,7 @@ object TextOps {
         col("doc_id"),
         length(col("text")).cast(LongType).as("n_chars"),
         size(words(col("text"))).cast(LongType).as("n_words"),
-        countIn(col("text"), stop).as("n_stopwords"),
+        countIn(stop).as("n_stopwords"),
         regexp_count(col("text"), lit("[.,!?;:]")).cast(LongType).as("n_punct"))
       .withColumn("mean_word_len",
         (col("n_chars") - (col("n_words") - 1)).cast("double") / col("n_words"))
@@ -84,7 +84,7 @@ object TextOps {
       "fr" -> Seq("le", "la", "et", "les"),
       "zh" -> Seq("的", "是"))
     val tagged = markers.map { case (code, ws) =>
-      concat(lpad(countIn(col("text"), ws).cast("string"), 10, "0"), lit(code))
+      concat(lpad(countIn(ws).cast("string"), 10, "0"), lit(code))
     }
     Tables(spark, dir, "documents")
       .select(col("doc_id"), substring(greatest(tagged: _*), 11, 2).as("pred_lang"))
@@ -103,7 +103,7 @@ object TextOps {
       "fr" -> Seq("le", "la", "et", "les"),
       "zh" -> Seq("的", "是"))
     val tagged = markers.map { case (code, ws) =>
-      concat(lpad(countIn(col("text"), ws).cast("string"), 10, "0"), lit(code))
+      concat(lpad(countIn(ws).cast("string"), 10, "0"), lit(code))
     }
     Tables(spark, dir, "documents")
       .select(col("lang"), substring(greatest(tagged: _*), 11, 2).as("pred_lang"))
@@ -276,12 +276,12 @@ object TextOps {
       "fr" -> Seq("le", "la", "et", "les"),
       "zh" -> Seq("的", "是"))
     val tagged = markers.map { case (code, ws) =>
-      concat(lpad(countIn(col("text"), ws).cast("string"), 10, "0"), lit(code))
+      concat(lpad(countIn(ws).cast("string"), 10, "0"), lit(code))
     }
     docs.select(
       col("doc_id"), col("source"),
       size(words(col("text"))).cast(LongType).as("n_words"),
-      (countIn(col("text"), stop).cast("double") /
+      (countIn(stop).cast("double") /
         size(words(col("text")))).as("swr"),
       substring(greatest(tagged: _*), 11, 2).as("pred_lang"))
   }

@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
-import org.apache.spark.sql.types.{BooleanType, StringType}
+import org.apache.spark.sql.types.StringType
 
 import graft.table.Catalog
 

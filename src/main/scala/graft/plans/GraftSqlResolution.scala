@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{FieldName, RelationTimeTravel, UnresolvedAttribute, UnresolvedFieldName, UnresolvedIdentifier, UnresolvedNamespace, UnresolvedProcedure, UnresolvedRelation, UnresolvedTable, UnresolvedTableOrView}
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal, NamedArgumentExpression}
-import org.apache.spark.sql.catalyst.plans.logical.{AddCheckConstraint, AddColumns, AlterColumns, Assignment, Call, ColumnDefinition, CreateNamespace, CreateTable, DeleteAction, DeleteFromTable, DescribeRelation, DropColumns, DropConstraint, DropNamespace, DropTable, Filter, InsertAction, InsertIntoStatement, InsertStarAction, LogicalPlan, MergeIntoTable, QualifiedColType, RenameColumn, RenameTable, SetTableProperties, ShowCreateTable, ShowTableProperties, ShowTables, SubqueryAlias, TruncateTable, UnresolvedTableSpec, UnsetTableProperties, UpdateAction, UpdateStarAction, UpdateTable}
+import org.apache.spark.sql.catalyst.plans.logical.{AddCheckConstraint, AddColumns, AlterColumns, Assignment, Call, CreateNamespace, CreateTable, DeleteAction, DeleteFromTable, DescribeRelation, DropColumns, DropConstraint, DropNamespace, DropTable, Filter, InsertAction, InsertIntoStatement, InsertStarAction, LogicalPlan, MergeIntoTable, QualifiedColType, RenameColumn, RenameTable, SetTableProperties, ShowCreateTable, ShowTableProperties, ShowTables, SubqueryAlias, TruncateTable, UnresolvedTableSpec, UnsetTableProperties, UpdateAction, UpdateStarAction, UpdateTable}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.execution.command.ShowNamespacesCommand
@@ -29,7 +29,8 @@ import graft.table.{Catalog, GraftTable, Pruning}
   * Manifest pruning: when the relation sits directly under a Filter (the
   * common `SELECT ... WHERE ...` shape), the rule extracts the simple
   * conjuncts from the still-unresolved WHERE tree and hands them to
-  * `scan` as pruning predicates, for a head, branch or tag read alike.
+  * `scan` as pruning predicates, for a head, branch, tag or time-travel
+  * (`FOR VERSION AS OF` / `FOR TIMESTAMP AS OF`) read alike.
   * The scan plans them like a `scan(filter)`: segments whose stats prove
   * no match are not read, and only matching files enter the relation.
   * The Filter node itself stays in the plan, so pruning only skips work,
@@ -112,7 +113,7 @@ class GraftSqlResolution(spark: SparkSession) extends Rule[LogicalPlan] {
     * version is the snapshot id; the timestamp expression evaluates in the
     * session timezone to epoch millis */
   private def timeTravel(u: UnresolvedRelation, ts: Option[Expression],
-      version: Option[String]): Option[LogicalPlan] = {
+      version: Option[String], cond: Option[Expression]): Option[LogicalPlan] = {
     val asOfMs = ts.map { e =>
       val v = Cast(e, TimestampType,
         Some(spark.sessionState.conf.sessionLocalTimeZone)).eval(null)
@@ -122,7 +123,7 @@ class GraftSqlResolution(spark: SparkSession) extends Rule[LogicalPlan] {
         s"invalid TIMESTAMP AS OF expression: ${e.sql}")
       Math.floorDiv(v.asInstanceOf[Long], 1000L)
     }
-    substitute(u, None, snapshotId = version.map(_.toLong), asOfMs = asOfMs)
+    substitute(u, cond, snapshotId = version.map(_.toLong), asOfMs = asOfMs)
   }
 
   // ==========================================================================
@@ -336,7 +337,7 @@ class GraftSqlResolution(spark: SparkSession) extends Rule[LogicalPlan] {
     case DropNamespace(UnresolvedNamespace(parts, _), ifExists, cascade)
         if graftNs(parts).exists(_.isDefined) =>
       GraftDropNamespaceCommand(graftNs(parts).get.get, ifExists, cascade)
-    case st @ ShowTables(UnresolvedNamespace(parts, _), pattern, output)
+    case ShowTables(UnresolvedNamespace(parts, _), pattern, output)
         if graftNs(parts).isDefined =>
       if (pattern.nonEmpty) throw new UnsupportedOperationException(
         "graft SHOW TABLES: LIKE patterns are not supported")
@@ -402,7 +403,7 @@ class GraftSqlResolution(spark: SparkSession) extends Rule[LogicalPlan] {
         case NamedArgumentExpression(name, v) => (Some(name), litStr(v))
         case e => (None, litStr(e))
       })
-    case i @ InsertIntoStatement(target, partSpec, userCols, query, overwrite,
+    case InsertIntoStatement(target, partSpec, userCols, query, overwrite,
         ifNotExists, byName) if dmlTarget(target).isDefined =>
       val (ns, tbl, branch, _) = dmlTarget(target).get
       if (partSpec.nonEmpty || ifNotExists) throw new UnsupportedOperationException(
@@ -440,8 +441,14 @@ class GraftSqlResolution(spark: SparkSession) extends Rule[LogicalPlan] {
             .Range(0, cnt, 1, Some(1)))
         case None => p
       }
+    case f @ Filter(cond, RelationTimeTravel(u: UnresolvedRelation, ts, version)) if isGraft(u) =>
+      timeTravel(u, ts, version, Some(cond)).map(rel => f.copy(child = rel)).getOrElse(f)
+    case f @ Filter(cond, a @ SubqueryAlias(_, RelationTimeTravel(u: UnresolvedRelation, ts, version)))
+        if isGraft(u) =>
+      timeTravel(u, ts, version, Some(cond))
+        .map(rel => f.copy(child = a.copy(child = rel))).getOrElse(f)
     case tt @ RelationTimeTravel(u: UnresolvedRelation, ts, version) if isGraft(u) =>
-      timeTravel(u, ts, version).getOrElse(tt)
+      timeTravel(u, ts, version, None).getOrElse(tt)
     case f @ Filter(cond, u: UnresolvedRelation) if isGraft(u) =>
       substitute(u, Some(cond)).map(rel => f.copy(child = rel)).getOrElse(f)
     case f @ Filter(cond, a @ SubqueryAlias(_, u: UnresolvedRelation)) if isGraft(u) =>

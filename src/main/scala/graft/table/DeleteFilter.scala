@@ -111,48 +111,12 @@ case class KeyDeleted(children: Seq[Expression], keys: DeletedKeys) extends Expr
       newChildren: IndexedSeq[Expression]): Expression = copy(children = newChildren)
 }
 
-/** Delete files decoded on the driver: each part file is read with the
+/** Delete files read on the driver: each part file is read with the
   * schema the format fixes for its kind, by Spark's vectorized parquet
-  * reader, with no Spark job and no broadcast. The decoded contents are
-  * cached in [[Meta]]'s bounded cache under the entry's absolute path —
-  * delete files are immutable once published. */
+  * reader, with no Spark job and no broadcast. [[DeleteReader]] decodes
+  * the rows and caches them in [[Meta]]'s bounded cache under the
+  * entry's absolute path — delete files are immutable once published. */
 private[table] object DeleteFiles {
-
-  /** Stored target path -> deleted positions, from a position-delete or
-    * DV file (several vectors for one target in one file union). */
-  def positions(spark: SparkSession, dir: String, schema: StructType,
-      isDv: Boolean): Map[String, BitSet] =
-    Meta.cached(dir, () => {
-      val acc = mutable.HashMap.empty[String, BitSet]
-      for (r <- rows(spark, dir, schema) if !r.isNullAt(0) && !r.isNullAt(1)) {
-        val bits = acc.getOrElseUpdate(r.getUTF8String(0).toString, new BitSet)
-        if (isDv) bits.or(BitSet.valueOf(r.getBinary(1)))
-        else {
-          val p = r.getLong(1)
-          require(p >= 0 && p <= Int.MaxValue,
-            s"position delete $p outside [0, 2^31) in $dir")
-          bits.set(p.toInt)
-        }
-      }
-      val weight = acc.iterator.map { case (t, b) => 64L + 2L * t.length + b.size / 8 }.sum
-      Meta.Weighed(acc.toMap, math.max(1L, weight))
-    })
-
-  /** The normalized key tuples of an equality-delete file, in the types of
-    * `schema` (the schema the delete was written under). */
-  def keys(spark: SparkSession, dir: String, schema: StructType): Set[Any] =
-    Meta.cached(dir, () => {
-      val types = schema.fields.map(_.dataType)
-      val ks = rows(spark, dir, schema)
-        .map(r => DeletedKeys.key(types.indices.map(i => r.get(i, types(i))))).toSet
-      def payload(v: Any): Long = v match {
-        case s: UTF8String => s.numBytes
-        case b: ArraySeq.ofByte => b.length
-        case vs: Seq[_] => vs.map(payload).sum
-        case _ => 0L
-      }
-      Meta.Weighed(ks, math.max(1L, ks.iterator.map(k => keyBytes(types.length) + payload(k)).sum))
-    })
 
   /** The decoded cost of one key tuple of `fields` fields, apart from the
     * bytes of its string and binary values. */
@@ -196,7 +160,8 @@ private[table] object DeleteFiles {
     parts
   }
 
-  private def rows(spark: SparkSession, dir: String, schema: StructType): Seq[InternalRow] = {
+  /** Every row of a delete entry's part files, in `schema`. */
+  def rows(spark: SparkSession, dir: String, schema: StructType): Seq[InternalRow] = {
     val conf = spark.sessionState.newHadoopConf()
     val sql = spark.sessionState.conf
     conf.set(ParquetInputFormat.READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)

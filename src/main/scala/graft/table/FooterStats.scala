@@ -176,7 +176,7 @@ object FooterStats {
   }
 
   private def readFooter(p: Path, schema: SchemaMeta,
-      nameMapped: Boolean = false): (Long, Map[String, ColStats]) = {
+      nameMapped: Boolean): (Long, Map[String, ColStats]) = {
     val reader = ParquetFileReader.open(
       HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(p.toString), hconf))
     try {

@@ -3,17 +3,14 @@ package graft.table
 import java.nio.file.{Files, Paths}
 import java.util.UUID
 
-import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Deletion vectors (v3): one bitmap of deleted row positions per data file.
   * Encoding is a DENSE java.util.BitSet image (not roaring containers) —
@@ -33,13 +30,8 @@ object Dv {
     }
     bs.toByteArray
   }
-  def decode(bytes: Array[Byte]): Array[Long] = {
-    val bs = java.util.BitSet.valueOf(bytes)
-    val out = mutable.ArrayBuffer[Long]()
-    var i = bs.nextSetBit(0)
-    while (i >= 0) { out += i.toLong; i = bs.nextSetBit(i + 1) }
-    out.toArray
-  }
+  def decode(bytes: Array[Byte]): Array[Long] =
+    java.util.BitSet.valueOf(bytes).stream().mapToLong(_.toLong).toArray
 }
 
 object WriteMode extends Enumeration {
@@ -69,11 +61,12 @@ private[graft] object MergeStats {
   * file's constants (`_gf` path, `_fseq` sequence number, `_frid` first
   * row id) as partition values, and Spark's `_metadata.row_index` gives
   * its position. Merge-on-read deletes key on (`_gf`, position) or on
-  * equality-key values. A delete set within Spark's broadcast bound is
-  * decoded on the driver from cached delete files into one scan-stage
-  * filter (see DeleteFilter.scala); a larger one becomes anti-joins whose
-  * strategy Spark picks. Delete files are read with the schemas the
-  * format fixes.
+  * equality-key values. Every read of a delete file goes through
+  * [[DeleteReader]]: a delete set within Spark's broadcast bound is
+  * decoded on the driver from cached delete files (the scan filter of
+  * DeleteFilter.scala, `changes()` scoping, the dangling-delete rule of
+  * [[commit]]); a larger one, the DV commit and `rewriteDeleteFiles` read
+  * delete rows through Spark, whose join strategy Spark picks.
   */
 class GraftTable(val spark: SparkSession, val location: String) {
 
@@ -84,64 +77,12 @@ class GraftTable(val spark: SparkSession, val location: String) {
   private def sparkType(ddl: String): DataType =
     StructType.fromDDL(s"x $ddl").head.dataType
   private def normPath(s: String): String = s.replaceFirst("^file:/+", "/")
-  private def normCol(c: Column): Column = regexp_replace(c, "^file:/+", "/")
-  /** Canonicalize PERSISTED delete-row targets into raw-path space.
-    * Delete files written before round 15 stored the URI-percent-encoded
-    * `_metadata.file_path`; later files store the raw manifest path. For
-    * any live data file whose legacy encoding differs from
-    * its raw path, remap the encoded form back to raw — UNLESS the
-    * encoded form is itself a live raw path (a literal `%xx` directory
-    * name), where decoding is ambiguous and the stored value must be
-    * trusted as raw. Unescapable tables (the common case) build an empty
-    * dictionary and pass through untouched. */
-  private def legacyTargets(livePaths: Seq[String]): Map[String, String] = {
-    val liveSet = livePaths.toSet
-    livePaths.flatMap { p =>
-      val enc = try new java.net.URI("file", null, p, null).getRawPath
-        catch { case _: Exception => p }
-      if (enc != p && !liveSet(enc)) Some((enc, p)) else None
-    }.toMap
-  }
-  private def canonTargets(d: DataFrame, livePaths: Seq[String]): DataFrame = {
-    val legacy = legacyTargets(livePaths)
-    if (legacy.isEmpty) return d
-    import spark.implicits._
-    val mapDf = legacy.toSeq.toDF("_enc", "_rawp")
-    d.join(mapDf, d("file_path") === col("_enc"), "left")
-      .withColumn("file_path", coalesce(col("_rawp"), col("file_path")))
-      .drop("_enc", "_rawp")
-  }
   private def abs(rel: String): String =
     if (rel.startsWith("/")) rel else s"$location/$rel"
-  private def deleteDir(rel: String): String =
-    Paths.get(normPath(abs(rel))).toAbsolutePath.toString
-
-  /** The schema the format fixes for a delete file's kind (FORMAT.md
-    * §Row-level changes). Equality keys are typed from the schema the
-    * delete was written under. */
-  private def deleteSchema(m: TableMeta, f: FileMeta): StructType = f.fileType match {
-    case "posdel" => GraftTable.PosDelSchema
-    case "dv" => GraftTable.DvSchema
-    case "eqdel" =>
-      val s = m.schema(f.schemaId)
-      StructType(f.eqFieldIds.map(id =>
-        StructField(s"f$id", sparkType(s.byId(id).get.dtype))))
-  }
-
-  /** Read a delete file with its fixed schema — no schema-inference job. */
-  private def readDeletes(m: TableMeta, f: FileMeta): DataFrame = {
-    DeleteFiles.partFiles(deleteDir(f.path)) // an entry without part files is malformed
-    spark.read.schema(deleteSchema(m, f)).parquet(abs(f.path))
-  }
-
-  /** The newest vector per target file from DV rows tagged with their
-    * file's `_dseq`. A DV commit drops the entries it supersedes, so a
-    * branch normally holds one DV file, which needs no window (and no
-    * shuffle); overlapping files keep the highest-sequence vector. */
-  private def latestDvs(rows: DataFrame, files: Int): DataFrame =
-    if (files == 1) rows
-    else rows.withColumn("_mx", max(col("_dseq")).over(Window.partitionBy(col("file_path"))))
-      .filter(col("_dseq") === col("_mx"))
+  private val deletes = new DeleteReader(spark, rel => normPath(abs(rel)))
+  /** every entry of `ref`'s head in `m` */
+  private def headEntries(m: TableMeta, ref: String): Seq[FileMeta] =
+    m.head(ref).toSeq.flatMap(Meta.readEntries(location, _))
 
   // ==========================================================================
   // Scan
@@ -161,10 +102,9 @@ class GraftTable(val spark: SparkSession, val location: String) {
       ref: Option[String] = None,
       withLineage: Boolean = false,
       withPos: Boolean = false,
-      fileSubset: Option[Set[String]] = None,
       preds: Seq[Pruning.Pred] = Nil): DataFrame =
     scanSnapshot(planRead(snapshotId, asOfTimestampMs, ref,
-      preds ++ filter.map(Pruning.extract(_, spark)).getOrElse(Nil), fileSubset),
+      preds ++ filter.map(Pruning.extract(_, spark)).getOrElse(Nil)),
       filter, withLineage, withPos)
 
   /** What one read of a snapshot involves, from its manifest alone: the
@@ -189,8 +129,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
   /** Resolve the snapshot a read sees (one metadata read, so pruning and
     * scanning cannot straddle a commit) and plan it. */
   private def planRead(snapshotId: Option[Long] = None, asOfTimestampMs: Option[Long] = None,
-      ref: Option[String] = None, preds: Seq[Pruning.Pred] = Nil,
-      fileSubset: Option[Set[String]] = None): ScanPlan = {
+      ref: Option[String] = None, preds: Seq[Pruning.Pred] = Nil): ScanPlan = {
     // reads always see the freshest published state but do NOT move this
     // writer's commit base — that is what lets commit() detect conflicts
     val m = Meta.readJson(location)
@@ -201,7 +140,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
     snap match {
       case None => ScanPlan(m, m.currentSchemaId, Nil, Nil, Nil)
       case Some(s) =>
-        planScan(m, s, if (timeTravel) s.schemaId else m.currentSchemaId, preds, fileSubset)
+        planScan(m, s, if (timeTravel) s.schemaId else m.currentSchemaId, preds)
     }
   }
 
@@ -216,8 +155,8 @@ class GraftTable(val spark: SparkSession, val location: String) {
       case (_, _, r) => m.head(r.getOrElse("main"))
     }
 
-  /** The one planning step: a snapshot plus pruning predicates (and an
-    * optional subset of raw file paths) to planned data and delete entries.
+  /** The one planning step: a snapshot plus pruning predicates to planned
+    * data and delete entries.
     * A segment whose complete stats prove no entry can match is never read
     * (round 15) — planning I/O is O(matching shards), not O(table
     * segments). Overlay segments are incomplete by construction, so every
@@ -225,13 +164,12 @@ class GraftTable(val spark: SparkSession, val location: String) {
     * [[Pruning.fileMatches]] anyway ([[Pruning.segmentScanSkippable]]), so
     * the planned file set is the same with or without skipping. */
   private def planScan(m: TableMeta, snap: SnapshotMeta, presentedId: Int,
-      preds: Seq[Pruning.Pred], fileSubset: Option[Set[String]]): ScanPlan = {
+      preds: Seq[Pruning.Pred]): ScanPlan = {
     val (skipped, kept) = snap.manifests.partition(seg =>
       Pruning.segmentScanSkippable(m, snap.manifestStats.get(seg), preds))
     val read = kept.flatMap(Meta.readManifest(location, _))
-    val plan = ScanPlan(m, presentedId, read, skipped,
+    ScanPlan(m, presentedId, read, skipped,
       read.filter(f => f.fileType == "data" && Pruning.fileMatches(f, m, preds)))
-    fileSubset.map(plan.only).getOrElse(plan)
   }
 
   private def emptyDf(schema: SchemaMeta, lineage: Boolean, pos: Boolean): DataFrame = {
@@ -301,18 +239,17 @@ class GraftTable(val spark: SparkSession, val location: String) {
     // merge-on-read deletes: a delete set within Spark's broadcast bound
     // is decoded on the driver into one scan filter; a larger one keeps
     // the anti-joins, with the join strategy left to Spark
-    val deletes = posDel ++ dvs ++ eqDels
-    if (deletes.nonEmpty) {
+    val deleteSet = posDel ++ dvs ++ eqDels
+    if (deleteSet.nonEmpty) {
       val livePaths = dataFiles.map(f => normPath(abs(f.path)))
-      val bound = spark.sessionState.conf.autoBroadcastJoinThreshold
       // a delete file decodes whole, whatever the scan planned: size it
       // against every data file of the snapshot, skipped segments too
       def snapshotData = (plan.read ++ plan.skipped.flatMap(Meta.readManifest(location, _)))
         .filter(_.fileType == "data")
-      df = if (bound >= 0 && decodedBytes(m, snapshotData, deletes).exists(_ <= bound))
-        deleteFilter(m, presented, livePaths, posDel, dvs, eqDels)
+      df = if (deletes.decodable(m, snapshotData, deleteSet))
+        deletes.deleteFilter(m, presented, livePaths, posDel, dvs, eqDels)
           .map(df.filter).getOrElse(df)
-      else antiJoinDeletes(df, m, presented, livePaths, posDel, dvs, eqDels)
+      else deletes.antiJoinDeletes(df, m, presented, livePaths, posDel, dvs, eqDels)
     }
 
     val out = presented.fields.map(f => col(f.name)) ++
@@ -321,116 +258,6 @@ class GraftTable(val spark: SparkSession, val location: String) {
       (if (withPos) Seq(col("_gf"), col("_gp")) else Nil)
     df = df.select(out: _*)
     filter.map(f => df.filter(expr(f))).getOrElse(df)
-  }
-
-  /** Decoded size of a delete set, estimated from the manifest; None when
-    * the driver cannot decode it (a nested-type key, which only a join
-    * compares by `<=>`). A position or vector file decodes to at most one
-    * bitmap a row, each at most one bit per row of the largest data file
-    * of the snapshot (`data`), and all together at most one bit per data
-    * row of the snapshot (its targets are the snapshot's). An equality
-    * key costs [[DeleteFiles.keyBytes]] plus, for string and binary keys,
-    * the delete file's bytes on disk (entries from older writers record
-    * no size; their files are measured). */
-  private def decodedBytes(m: TableMeta, data: => Seq[FileMeta],
-      deletes: Seq[FileMeta]): Option[Long] = {
-    lazy val vectors = data.map(_.rowCount / 8 + 1)
-    val sizes = deletes.map(f => f.fileType match {
-      case "posdel" | "dv" => Some(math.min(f.rowCount * vectors.max, vectors.sum))
-      case _ =>
-        val types = deleteSchema(m, f).fields.map(_.dataType).toSeq
-        val nested = types.exists {
-          case _: StructType | _: ArrayType | _: MapType => true
-          case _ => false
-        }
-        val payload =
-          if (!types.exists(t => t == StringType || t == BinaryType)) 0L
-          else if (f.sizeBytes > 0) f.sizeBytes
-          else DeleteFiles.diskBytes(deleteDir(f.path))
-        if (nested) None
-        else Some(f.rowCount * DeleteFiles.keyBytes(types.size) + payload)
-    })
-    if (sizes.contains(None)) None else Some(sizes.flatten.sum)
-  }
-
-  /** The delete set as one filter over the scan, decoded on the driver
-    * from the (cached) delete files; None when nothing planned is deleted.
-    * Positions: `NOT deleted(_gf, _gp)` over one bitmap per live data
-    * file — stored targets canonicalized, the highest-sequence vector per
-    * file kept (ties unite). Equality deletes, per file:
-    * `NOT (_seq < dseq AND deleted(keys))`, keys in the presented types. */
-  private def deleteFilter(m: TableMeta, presented: SchemaMeta, livePaths: Seq[String],
-      posDel: Seq[FileMeta], dvs: Seq[FileMeta], eqDels: Seq[FileMeta]): Option[Column] = {
-    val live = livePaths.toSet
-    val legacy = legacyTargets(livePaths)
-    def targets(f: FileMeta): Seq[(String, java.util.BitSet)] =
-      DeleteFiles.positions(spark, deleteDir(f.path), deleteSchema(m, f), f.fileType == "dv")
-        .toSeq.flatMap { case (t, b) =>
-          (if (live(t)) Some(t) else legacy.get(t)).map(_ -> b) }
-    // cached bitmaps are shared: OR into a copy
-    val bits = mutable.HashMap.empty[String, java.util.BitSet]
-    def or(t: String, b: java.util.BitSet): Unit = bits.updateWith(t) {
-      case None => Some(b)
-      case Some(cur) =>
-        val c = cur.clone().asInstanceOf[java.util.BitSet]
-        c.or(b)
-        Some(c)
-    }
-    for (f <- posDel; (t, b) <- targets(f)) or(t, b)
-    dvs.flatMap(f => targets(f).map { case (t, b) => (t, f.sequenceNumber, b) })
-      .groupBy(_._1).foreach { case (t, vs) =>
-        val top = vs.map(_._2).max
-        vs.foreach { case (_, s, b) => if (s == top) or(t, b) }
-      }
-    val pos = if (bits.isEmpty) None else Some(!Bridge.column(PositionDeleted(
-      Bridge.expression(col("_gf")), Bridge.expression(col("_gp")),
-      DeletedPositions(bits.map { case (t, b) => UTF8String.fromString(t) -> b }.toMap))))
-    val tz = spark.sessionState.conf.sessionLocalTimeZone
-    val eq = eqDels.flatMap { f =>
-      val fields = f.eqFieldIds.map(id => presented.byId(id)
-        .getOrElse(throw new IllegalStateException(s"eq-delete field $id dropped")))
-      val schema = deleteSchema(m, f)
-      val keys = DeleteFiles.convert(DeleteFiles.keys(spark, deleteDir(f.path), schema),
-        schema.fields.map(_.dataType).toSeq, fields.map(pf => sparkType(pf.dtype)), tz)
-      if (keys.isEmpty) None
-      else Some(!(col("_seq") < lit(f.sequenceNumber) && Bridge.column(KeyDeleted(
-        fields.map(pf => Bridge.expression(col(pf.name))), DeletedKeys(keys)))))
-    }
-    (pos ++ eq).reduceOption(_ && _)
-  }
-
-  /** The delete set as anti-joins: (file, pos) for positions and vectors,
-    * key `<=>` and `_seq < dseq` for equality deletes. */
-  private def antiJoinDeletes(df0: DataFrame, m: TableMeta, presented: SchemaMeta,
-      livePaths: Seq[String], posDel: Seq[FileMeta], dvs: Seq[FileMeta],
-      eqDels: Seq[FileMeta]): DataFrame = {
-    var df = df0
-    // stored targets pass through canonTargets so legacy URI-encoded
-    // values (pre-round-15 writers) keep applying after the raw-path move
-    val posPart = posDel.map(f => canonTargets(readDeletes(m, f), livePaths))
-    val dvPart = if (dvs.isEmpty) None else Some {
-      // canonicalize BEFORE the latest-per-file window so a legacy and a
-      // raw encoding of the same target land in one window partition
-      val raw = canonTargets(dvs.map(f => readDeletes(m, f)
-        .withColumn("_dseq", lit(f.sequenceNumber))).reduce(_ unionByName _), livePaths)
-      latestDvs(raw, dvs.size)
-        .select(col("file_path"), explode(GraftTable.DvPositions(col("dv"))).as("pos"))
-    }
-    (posPart ++ dvPart).reduceOption(_ unionByName _).foreach { d =>
-      df = df.join(d, df("_gf") === d("file_path") && df("_gp") === d("pos"), "left_anti")
-    }
-    // equality deletes: only rows older than the delete
-    eqDels.groupBy(_.eqFieldIds).foreach { case (ids, files) =>
-      val dels = files.map(f => readDeletes(m, f)
-        .withColumn("_dseq", lit(f.sequenceNumber))).reduce(_ unionByName _)
-      val cond = ids.map { id =>
-        val name = presented.byId(id).map(_.name)
-          .getOrElse(throw new IllegalStateException(s"eq-delete field $id dropped"))
-        df(name) <=> dels(s"f$id")
-      }.reduce(_ && _) && df("_seq") < dels("_dseq")
-      df = df.join(dels, cond, "left_anti")
-    }
-    df
   }
 
   // ==========================================================================
@@ -584,12 +411,8 @@ class GraftTable(val spark: SparkSession, val location: String) {
         // paths (or sequence numbers) that no longer exist and silently
         // delete nothing — the deleted rows would resurface.
         if (added.exists(_.fileType != "data")) {
-          val baseData = meta.head(branch).toSeq
-            .flatMap(p => Meta.readEntries(location, p))
-            .filter(_.fileType == "data").map(_.path).toSet
-          val freshData = fresh.head(branch).toSeq
-            .flatMap(p => Meta.readEntries(location, p))
-            .filter(_.fileType == "data").map(_.path).toSet
+          val baseData = headEntries(meta, branch).filter(_.fileType == "data").map(_.path).toSet
+          val freshData = headEntries(fresh, branch).filter(_.fileType == "data").map(_.path).toSet
           val missing = baseData -- freshData
           if (missing.nonEmpty)
             throw new CommitConflictException(
@@ -603,9 +426,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
         // and silently double-count its rows, the exact hazard the
         // pre-commit check exists to prevent.
         if (op == "add-files") {
-          val freshPaths = fresh.head(branch).toSeq
-            .flatMap(p => Meta.readEntries(location, p))
-            .map(e => normPath(abs(e.path))).toSet
+          val freshPaths = headEntries(fresh, branch).map(e => normPath(abs(e.path))).toSet
           val dups = added.map(e => normPath(abs(e.path))).filter(freshPaths)
           if (dups.nonEmpty) throw new CommitConflictException(
             s"cannot rebase 'add-files': already registered concurrently: " +
@@ -631,7 +452,6 @@ class GraftTable(val spark: SparkSession, val location: String) {
     // O(change), not O(table). Segment names carry a uuid: two racing
     // committers can compute the same snapshot id, and the loser of the
     // version-file race must not have clobbered the winner's segments.
-    val isRemoved = (e: FileMeta) => removedPaths(normPath(abs(e.path)))
     val parentStats = parent.map(_.manifestStats).getOrElse(Map.empty)
     val parentSegNames = parent.map(_.manifests).getOrElse(Nil)
     // a segment proven disjoint from the touched partitions cannot hold
@@ -647,6 +467,16 @@ class GraftTable(val spark: SparkSession, val location: String) {
       else parentSegNames.partition(seg =>
         touched.exists(t => Meta.segmentSkippable(parentStats.get(seg), t)))
     val parentSegs = readable.map(seg => seg -> Meta.readManifest(location, seg))
+    // a position or DV entry whose targets all lie among the data files
+    // this commit removes goes with them (remove-dangling-deletes).
+    // Overlays live in incomplete segments, which are always read, so
+    // every such entry is in hand; above the decode bound they stay.
+    val inHand = parentSegs.flatMap(_._2)
+    val (gone, kept) = inHand.partition(e => removedPaths(normPath(abs(e.path))))
+    val dangling = if (!gone.exists(_.fileType == "data")) Set.empty[String]
+      else deletes.dangling(m, inHand.filter(_.fileType == "data"), kept, removedPaths)
+    val goneNow = removedPaths ++ dangling
+    val isRemoved = (e: FileMeta) => goneNow(normPath(abs(e.path)))
     val uuid = UUID.randomUUID.toString.take(8)
     val (dirty, clean) = parentSegs.partition(_._2.exists(isRemoved))
     val keptNames = (skipped ++ clean.map(_._1)).toSet
@@ -770,8 +600,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
       m.currentSpec, m.currentSpecId, m.currentSchemaId, seq, nameMapped = true)
     if (entries.isEmpty) throw new IllegalArgumentException(
       s"add_files: no parquet files under $sourceAbs")
-    val live = m.head(branch).toSeq.flatMap(s => Meta.readEntries(location, s))
-      .map(e => normPath(abs(e.path))).toSet
+    val live = headEntries(m, branch).map(e => normPath(abs(e.path))).toSet
     val dups = entries.map(e => normPath(abs(e.path))).filter(live)
     if (dups.nonEmpty) throw new IllegalArgumentException(
       s"add_files: already registered in '$branch': ${dups.take(3).mkString(", ")}" +
@@ -790,9 +619,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
       writeDataFiles(toPhysical(enforceChecks(df, "overwrite"), meta.currentSchema),
         snapId, seq, meta.currentSchemaId, meta.currentSpecId)
     }
-    val prior = meta.head(branch).toSeq
-      .flatMap(s => Meta.readEntries(location, s))
-      .map(e => normPath(abs(e.path))).toSet
+    val prior = headEntries(meta, branch).map(e => normPath(abs(e.path))).toSet
     commit("overwrite", branch, files, prior, snapId, seq)
   }
 
@@ -801,8 +628,8 @@ class GraftTable(val spark: SparkSession, val location: String) {
     * daily-backfill primitive ("recompute day X and swap it in") that a
     * full [[overwrite]] over-deletes for. One snapshot: the new files land,
     * and every prior data file whose partition tuple appears in the new
-    * file set is dropped (with its partition-scoped delete/DV entries —
-    * posdel/dv entries keyed to removed files would be dead weight).
+    * file set is dropped; the commit drops the position and DV entries
+    * that named only those files ([[commit]]'s dangling rule).
     * Requires a partitioned table; at scale the commit is manifest-only
     * work proportional to the touched partitions, never a table rewrite. */
   def overwritePartitions(df: DataFrame, branch: String = "main"): SnapshotMeta = {
@@ -826,13 +653,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
     val removedData = priorEntries
       .filter(e => e.fileType == "data" && touched.contains(e.partition))
       .map(e => normPath(abs(e.path))).toSet
-    // delete/DV entries that applied only to removed files go with them
-    val removedOverlays = priorEntries
-      .filter(e => e.fileType != "data" &&
-        e.appliesTo.exists(p => removedData.contains(normPath(abs(p)))))
-      .map(e => normPath(abs(e.path))).toSet
-    commit("overwrite", branch, files, removedData ++ removedOverlays,
-      snapId, seq, touched = Some(touched))
+    commit("overwrite", branch, files, removedData, snapId, seq, touched = Some(touched))
   }
 
   // ==========================================================================
@@ -877,20 +698,15 @@ class GraftTable(val spark: SparkSession, val location: String) {
       case WriteMode.MergeOnRead =>
         val hits = scan(filter = Some(cond), withPos = true, ref = Some(branch))
           .select(col("_gf").as("file_path"), col("_gp").as("pos"))
-        val rel = s"deletes/pd$snapId-${UUID.randomUUID.toString.take(8)}"
-        hits.write.parquet(abs(rel))
-        val n = FooterStats.rowCount(abs(rel))
-        val entry = FileMeta(rel, "posdel", meta.currentSpecId, meta.currentSchemaId,
-          Map.empty, n, 0L, seq, Map.empty)
-        commit("delete", branch, Seq(entry), Set.empty, snapId, seq, rebaseable = true)
+        commit("delete", branch, Seq(writeDeletes(hits, "posdel", snapId, seq)), Set.empty,
+          snapId, seq, rebaseable = true)
       case WriteMode.DeletionVector =>
         val hits = scan(filter = Some(cond), withPos = true, ref = Some(branch))
           .select(col("_gf").as("file_path"), col("_gp").as("pos"))
         val m = meta
-        val snapOpt = m.head(branch)
-        val existing = snapOpt.toSeq
-          .flatMap(s => Meta.readEntries(location, s))
-          .filter(_.fileType == "dv")
+        val head = headEntries(m, branch)
+        val existing = head.filter(_.fileType == "dv")
+        val live = head.filter(_.fileType == "data").map(e => normPath(abs(e.path)))
         import spark.implicits._
         // bitmap per target file from the NEW hit positions only — one
         // shuffle keyed by file; duplicate positions are absorbed by the
@@ -909,13 +725,9 @@ class GraftTable(val spark: SparkSession, val location: String) {
             x.or(java.util.BitSet.valueOf(b))
             x.toByteArray
           })
-        val old = if (existing.isEmpty) None else Some {
-          val raw = existing.map(f => readDeletes(m, f)
-              .withColumn("_dseq", lit(f.sequenceNumber)))
-            .reduce(_ unionByName _)
-          latestDvs(raw, existing.size)
-            .select(col("file_path"), col("dv").as("dv_old"))
-        }
+        // vectors of files no longer live (rewritten since) are not carried
+        val old = deletes.vectorRows(m, live, existing).map(v =>
+          deletes.liveOnly(v, live).select(col("file_path"), col("dv").as("dv_old")))
         // full outer: files with no new deletes must carry their old vector
         // forward because the superseded DV entries leave the manifest below
         val vecs = old match {
@@ -923,11 +735,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
           case Some(o) => newVecs.join(o, Seq("file_path"), "full_outer")
             .select(col("file_path"), orDv(col("dv"), col("dv_old")).as("dv"))
         }
-        val rel = s"deletes/dv$snapId-${UUID.randomUUID.toString.take(8)}"
-        vecs.write.parquet(abs(rel))
-        val n = FooterStats.rowCount(abs(rel))
-        val entry = FileMeta(rel, "dv", meta.currentSpecId, meta.currentSchemaId,
-          Map.empty, n, 0L, seq, Map.empty)
+        val entry = writeDeletes(vecs, "dv", snapId, seq)
         // drop superseded DV entries: the latest-seq filter at read handles
         // overlap, but removing them keeps manifests lean. The removals are
         // all OVERLAY entries, which only live in incomplete (never
@@ -939,6 +747,18 @@ class GraftTable(val spark: SparkSession, val location: String) {
     }
   }
 
+  /** `rows` as one new delete entry of kind `fileType`, in the schema the
+    * format fixes for it. An equality delete records its bytes on disk. */
+  private def writeDeletes(rows: DataFrame, fileType: String, snapId: Long, seq: Long,
+      eqFieldIds: List[Int] = Nil): FileMeta = {
+    val prefix = Map("posdel" -> "pd", "dv" -> "dv", "eqdel" -> "eq")(fileType)
+    val rel = s"deletes/$prefix$snapId-${UUID.randomUUID.toString.take(8)}"
+    rows.write.parquet(abs(rel))
+    FileMeta(rel, fileType, meta.currentSpecId, meta.currentSchemaId, Map.empty,
+      FooterStats.rowCount(abs(rel)), if (fileType == "eqdel") DeleteFiles.diskBytes(
+        deletes.dir(rel)) else 0L, seq, Map.empty, eqFieldIds = eqFieldIds)
+  }
+
   /** equality delete (always merge-on-read): rows whose key columns match a
     * row of `keys` are deleted, if written before this delete */
   def deleteByKeys(keys: DataFrame, branch: String = "main"): SnapshotMeta = {
@@ -947,12 +767,8 @@ class GraftTable(val spark: SparkSession, val location: String) {
     val ids = keys.columns.map(n => schema.byName(n).id).toList
     val physKeys = keys.select(keys.columns.map(n =>
       col(n).cast(sparkType(schema.byName(n).dtype)).as(s"f${schema.byName(n).id}")): _*)
-    val rel = s"deletes/eq$snapId-${UUID.randomUUID.toString.take(8)}"
-    physKeys.write.parquet(abs(rel))
-    val n = FooterStats.rowCount(abs(rel))
-    val entry = FileMeta(rel, "eqdel", meta.currentSpecId, meta.currentSchemaId,
-      Map.empty, n, DeleteFiles.diskBytes(deleteDir(rel)), seq, Map.empty, eqFieldIds = ids)
-    commit("delete", branch, Seq(entry), Set.empty, snapId, seq, rebaseable = true)
+    commit("delete", branch, Seq(writeDeletes(physKeys, "eqdel", snapId, seq, ids)), Set.empty,
+      snapId, seq, rebaseable = true)
   }
 
   def update(cond: String, set: Map[String, String],
@@ -987,11 +803,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
           ref = Some(branch))
         val rows2 = rows.withColumnRenamed("_last_updated_sequence_number", "_last_seq")
         val dels = rows2.select(col("_gf").as("file_path"), col("_gp").as("pos"))
-        val relD = s"deletes/pd$snapId-${UUID.randomUUID.toString.take(8)}"
-        dels.write.parquet(abs(relD))
-        val nd = FooterStats.rowCount(abs(relD))
-        val delEntry = FileMeta(relD, "posdel", meta.currentSpecId, meta.currentSchemaId,
-          Map.empty, nd, 0L, seq, Map.empty)
+        val delEntry = writeDeletes(dels, "posdel", snapId, seq)
         val updated = rows2.select(schema.fields.map { f =>
           set.get(f.name) match {
             case Some(e) => expr(e).cast(sparkType(f.dtype)).as(f.name)
@@ -1248,11 +1060,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
         s"table exists at $target — a clone target must have no snapshots")
     }
     val m = refresh()
-    val entries = m.head(branch).toSeq
-      .flatMap(s => Meta.readEntries(location, s))
-      .map(e => e.copy(
-        path = normPath(abs(e.path)),
-        appliesTo = e.appliesTo.map(p => normPath(abs(p)))))
+    val entries = headEntries(m, branch).map(e => e.copy(path = normPath(abs(e.path))))
     val cloneUuid = UUID.randomUUID.toString
     // Register retention leases FIRST, in EVERY table root the cloned
     // entries point into — the direct source plus any upstream root a
@@ -1268,7 +1076,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
     // not /x), and a mis-rooted lease is invisible to the source's GC:
     // the exact silent corruption the registry exists to prevent.
     val roots = knownEntryRoots(m)
-    entries.flatMap(e => Seq(e.path) ++ e.appliesTo)
+    entries.map(_.path)
       .flatMap { p =>
         roots.find(r => p.startsWith(s"$r/data/") || p.startsWith(s"$r/deletes/"))
           .orElse {
@@ -1403,7 +1211,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
           else inFlight = true
           Nil
         } else cm.snapshots.flatMap(s => Meta.readEntries(cloneLoc, s))
-          .flatMap(e => Seq(e.path) ++ e.appliesTo)
+          .map(_.path)
           .map(p => normPath(if (p.startsWith("/")) p else s"$cloneLoc/$p"))
           .filter(_.startsWith(rootPrefix))
       }
@@ -1525,7 +1333,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
     val names = m.schema(toSnap.schemaId).fields.map(_.name)
     val empty = emptyDf(m.schema(toSnap.schemaId), lineage = false, pos = false)
     chain.reverse.filter(s => Set("append", "add-files")(s.operation))
-      .map(s => planScan(m, s, toSnap.schemaId, Nil, None)
+      .map(s => planScan(m, s, toSnap.schemaId, Nil)
         .keep(_.sequenceNumber == s.sequenceNumber))
       .filter(_.data.nonEmpty)
       .map(scanSnapshot(_, None, withLineage = false, withPos = false))
@@ -1564,9 +1372,10 @@ class GraftTable(val spark: SparkSession, val location: String) {
     *      equality delete that changed in-window.
     * before-side = (a) ∪ (c) ∪ (d), after-side = (b) ∪ (c) ∪ (d); every
     * other file is byte-identical with an identical overlay set at both
-    * ends and cannot contribute a change row. posdel/DV targets are read
-    * from the (tiny) delete parquet itself — O(delete files in the
-    * window), never O(table). Equality deletes (round 16, second pass)
+    * ends and cannot contribute a change row. posdel/DV targets come from
+    * the driver decoder — O(delete files in the window), never O(table),
+    * and no Spark job; above the decode bound (c) is every survivor.
+    * Equality deletes (round 16, second pass)
     * have value-scoped targets with no file_path list, so (d) bounds
     * them by manifest stats instead: a survivor excluded by
     * [[Pruning.fileMatches]] under the per-column key bounds cannot hold
@@ -1574,8 +1383,9 @@ class GraftTable(val spark: SparkSession, val location: String) {
     * does NOT narrow (d) — a compaction-written file carries rows with
     * older `_last_seq` than its own seq, and those rows an eq delete
     * still targets. When no bound is computable (oversized key set, null
-    * keys, unmappable types) (d) degrades to all survivors — still a
-    * file subset, never the state-diff fallback. */
+    * keys, unmappable types, a key set above the decode bound) (d)
+    * degrades to all survivors — still a file subset, never the
+    * state-diff fallback. */
   private def deltaFileSets(m: TableMeta, from: SnapshotMeta,
       toSnap: SnapshotMeta): Option[(Set[String], Set[String])] = {
     val entFrom = Meta.readEntries(location, from)
@@ -1592,14 +1402,15 @@ class GraftTable(val spark: SparkSession, val location: String) {
     val (eqChanged, fileScoped) = changedMeta.partition(_.fileType == "eqdel")
     // posdel/DV targets that survive at both ends must scan on BOTH sides:
     // the overlay delta is exactly what deleted (or resurrected) rows in
-    // them. Stored targets are raw-path space post-round-15; a legacy
-    // URI-encoded value maps back by the same rule the scan applies
-    val legacy = legacyTargets(survivors.toSeq)
-    val touched = fileScoped.iterator.flatMap { e =>
-      readDeletes(m, e).select("file_path").distinct()
-        .collect().iterator.map(_.getString(0))
-        .flatMap(t => if (survivors(t)) Some(t) else legacy.get(t))
-    }.toSet
+    // them. Stored targets resolve by the rule the scan applies
+    val data = (entFrom ++ entTo).filter(_.fileType == "data").distinctBy(_.path)
+    val touched =
+      if (fileScoped.isEmpty) Set.empty[String]
+      else if (!deletes.decodable(m, data, fileScoped)) survivors
+      else {
+        val resolve = deletes.resolver(survivors.toSeq)
+        fileScoped.flatMap(e => deletes.targets(m, e).keys.flatMap(resolve)).toSet
+      }
     // (d): survivors an in-window equality delete could touch, bounded by
     // their manifest column stats against the delete's key values — a
     // survivor excluded here provably holds no row any deleted tuple
@@ -1619,69 +1430,35 @@ class GraftTable(val spark: SparkSession, val location: String) {
   }
 
   /** Conservative per-column stat bounds for one equality-delete file:
-    * `Pred(col, "in", keys)` for every key column whose collected values
-    * are all non-null and representable in the stats' internal encoding.
-    * Empty result = no exclusion possible (oversized key set, a null key
-    * — null-safe equality matches rows min/max can't see — or a type
-    * cmp() can't order): every survivor stays a candidate, which is
-    * still a file subset, never a state-diff fallback. */
-  // above this many keys the driver-side collect of an eq-delete file is
-  // no longer "tiny metadata" — skip the bound (all survivors scan) rather
-  // than ship a large key list through the planner
+    * `Pred(col, "in", keys)` for every key column whose decoded values
+    * the stats can all order. Empty result = no exclusion possible (a key
+    * set above [[EqScopeMaxKeys]], no longer tiny metadata, or above the
+    * decode bound; a null key — null-safe equality matches rows min/max
+    * can't see — a NaN, or a type the stats don't order): every survivor
+    * stays a candidate, which is still a file subset, never a state-diff
+    * fallback. */
   private val EqScopeMaxKeys = 4096L
 
   private def eqScopePreds(m: TableMeta, e: FileMeta): Seq[Pruning.Pred] = {
-    if (e.rowCount > EqScopeMaxKeys) return Nil
+    if (e.rowCount > EqScopeMaxKeys || !deletes.decodable(m, Nil, Seq(e))) return Nil
     val schema = m.schema(e.schemaId)
-    val keyFields = e.eqFieldIds.flatMap(id => schema.byId(id).map(id -> _))
-    if (keyFields.isEmpty) return Nil
-    val rows = readDeletes(m, e)
-      .select(keyFields.map { case (id, _) => col(s"f$id") }: _*).collect()
-    keyFields.zipWithIndex.flatMap { case ((_, fld), i) =>
-      val vs = rows.map(_.get(i)).toSeq
-      if (vs.contains(null)) None
-      else {
-        val norm = vs.distinct.map(statValue(fld.dtype, _))
-        if (norm.exists(_.isEmpty)) None
-        else Some(Pruning.Pred(fld.name, "in", norm.map(_.get)))
-      }
+    val tuples = deletes.keys(m, e).toSeq.map {
+      case k if e.eqFieldIds.size == 1 => Seq(k)
+      case k => k.asInstanceOf[Seq[Any]]
+    }
+    e.eqFieldIds.zipWithIndex.flatMap { case (id, i) =>
+      val fld = schema.byId(id).get
+      val vs = tuples.map(_(i)).distinct
+      // decoded keys are Spark's internal values, already the encoding
+      // the stats compare against (Long micros, Int days, Decimal)
+      if (vs.exists(v => v == null || v == DeletedKeys.NaN) ||
+          !StatOrdered(fld.dtype.takeWhile(_ != '('))) None
+      else Some(Pruning.Pred(fld.name, "in", vs))
     }
   }
 
-  /** Collected JVM value → the internal encoding [[Pruning]] compares
-    * stats against (Long micros for timestamps, Int days for dates,
-    * boxed numerics, String); None = not orderable against stats. */
-  private def statValue(dtype: String, v: Any): Option[Any] = {
-    val base = dtype.takeWhile(_ != '(')
-    base match {
-      case "int" | "bigint" | "smallint" | "tinyint" | "double" | "float" => v match {
-        case _: Int | _: Long | _: Short | _: Byte | _: Double | _: Float => Some(v)
-        case _ => None
-      }
-      case "decimal" => v match {
-        case bd: java.math.BigDecimal => Some(org.apache.spark.sql.types.Decimal(bd))
-        case _ => None
-      }
-      case "string" => v match { case s: String => Some(s); case _ => None }
-      case "timestamp" | "timestamp_ntz" => v match {
-        case inst: java.time.Instant =>
-          Some(java.time.temporal.ChronoUnit.MICROS.between(java.time.Instant.EPOCH, inst))
-        case ts: java.sql.Timestamp =>
-          Some(java.time.temporal.ChronoUnit.MICROS.between(
-            java.time.Instant.EPOCH, ts.toInstant))
-        case ldt: java.time.LocalDateTime =>
-          Some(java.time.temporal.ChronoUnit.MICROS.between(
-            java.time.LocalDateTime.of(1970, 1, 1, 0, 0), ldt))
-        case _ => None
-      }
-      case "date" => v match {
-        case ld: java.time.LocalDate => Some(ld.toEpochDay.toInt)
-        case sd: java.sql.Date => Some(sd.toLocalDate.toEpochDay.toInt)
-        case _ => None
-      }
-      case _ => None
-    }
-  }
+  private val StatOrdered = Set("int", "bigint", "smallint", "tinyint", "double", "float",
+    "decimal", "string", "timestamp", "timestamp_ntz", "date")
 
   private def changesImpl(fromSnapshotId: Long, toSnapshotId: Option[Long],
       scoped: Boolean): DataFrame = {
@@ -1696,7 +1473,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
         s.sequenceNumber <= toSnap.sequenceNumber)
     lastChangesScope = None
     if (windowOps.forall(_.operation == "append")) {
-      val base = scanSnapshot(planScan(m, toSnap, toSnap.schemaId, Nil, None)
+      val base = scanSnapshot(planScan(m, toSnap, toSnap.schemaId, Nil)
         .keep(_.sequenceNumber > from.sequenceNumber), None, withLineage = true, withPos = false)
       return base.select(names.map(col) ++ Seq(lit("insert").as("_change_type"),
         col("_last_updated_sequence_number").as("_commit_seq")): _*)
@@ -1706,9 +1483,11 @@ class GraftTable(val spark: SparkSession, val location: String) {
     // table-cost-for-delta-work path, paid per micro-batch by stream CDC)
     val scope = if (scoped) deltaFileSets(m, from, toSnap) else None
     lastChangesScope = scope
-    def side(s: SnapshotMeta, subset: Option[Set[String]]) =
-      scanSnapshot(planScan(m, s, toSnap.schemaId, Nil, subset), None,
+    def side(s: SnapshotMeta, subset: Option[Set[String]]) = {
+      val plan = planScan(m, s, toSnap.schemaId, Nil)
+      scanSnapshot(subset.map(plan.only).getOrElse(plan), None,
         withLineage = true, withPos = false)
+    }
         .select(struct(names.map(col): _*).as("_v"), col("_row_id"),
           col("_last_updated_sequence_number").as("_seqn"))
     val a = side(from, scope.map(_._1))
@@ -1766,7 +1545,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
     val m = meta
     val snap = m.head(branch).getOrElse(
       return commit("replace", branch, Nil, Set.empty, snapId, seq))
-    val plan = planScan(m, snap, m.currentSchemaId, Nil, None)
+    val plan = planScan(m, snap, m.currentSchemaId, Nil)
       .keep(_.sizeBytes < smallerThanBytes)
     val small = plan.data
     if (small.size < 2)
@@ -1783,38 +1562,24 @@ class GraftTable(val spark: SparkSession, val location: String) {
   /** Iceberg `rewrite_position_delete_files` analog: merge accumulated
     * position-delete files into ONE deduplicated file, dropping
     * tombstones whose target data file no longer exists (rewritten or
-    * compacted away) — MoR read cost is an anti-join against EVERY live
-    * delete file, so steady-state MoR tables need this like data files
-    * need compaction. Equality deletes are NOT merged: their semantics
-    * depend on each file's sequence number. */
+    * compacted away) — MoR read cost grows with EVERY live delete file,
+    * so steady-state MoR tables need this like data files need
+    * compaction. The rows come from the row reader with the scan's
+    * legacy-target rule, so the rewritten file persists raw paths (this
+    * rewrite is the legacy-table migration); Spark picks the join
+    * against the live files. Equality deletes are NOT merged: their
+    * semantics depend on each file's sequence number. */
   def rewriteDeleteFiles(branch: String = "main"): SnapshotMeta = {
-    import spark.implicits._
     val (snapId, seq) = nextIds()
     val m = meta
-    val snap = m.head(branch).getOrElse(
-      return commit("rewrite-deletes", branch, Nil, Set.empty, snapId, seq))
-    val entries = Meta.readEntries(location, snap)
+    val entries = headEntries(m, branch)
     val pds = entries.filter(_.fileType == "posdel")
     if (pds.size < 2)
       return commit("rewrite-deletes", branch, Nil, Set.empty, snapId, seq)
-    val liveData = entries.filter(_.fileType == "data")
-      .map(e => normPath(abs(e.path)))
-    val liveDf = liveData.toDF("live_path")
-    // canonTargets BEFORE the distinct: a legacy URI-encoded target and
-    // its raw form merge into ONE canonical row, and the rewritten file
-    // persists raw paths — this rewrite is the legacy-table migration
-    val merged = canonTargets(pds.map(readDeletes(m, _)).reduce(_ unionByName _), liveData)
-      .distinct()
-      .join(broadcast(liveDf),
-        normCol(col("file_path")) === col("live_path"), "left_semi")
-    val rel = s"deletes/pd$snapId-${UUID.randomUUID.toString.take(8)}"
-    merged.write.parquet(abs(rel))
-    val n = FooterStats.rowCount(abs(rel))
+    val live = entries.filter(_.fileType == "data").map(e => normPath(abs(e.path)))
+    val merged = deletes.liveOnly(deletes.positionRows(m, live, pds, Nil).get.distinct(), live)
     val removed = pds.map(e => normPath(abs(e.path))).toSet
-    val added =
-      if (n == 0) Nil
-      else Seq(FileMeta(rel, "posdel", m.currentSpecId, m.currentSchemaId,
-        Map.empty, n, 0L, seq, Map.empty))
+    val added = Seq(writeDeletes(merged, "posdel", snapId, seq)).filter(_.rowCount > 0)
     // removals are overlay entries only — complete (all-data) segments
     // cannot hold one, so the empty touched set skips them all unread
     commit("rewrite-deletes", branch, added, removed, snapId, seq,
@@ -2088,7 +1853,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
         "compaction or copy-on-write delete/update/overwrite) whose " +
         "re-sequenced files would corrupt the delta; use appendsBetween() " +
         "or changes()")
-    scanSnapshot(planScan(m, end, end.schemaId, Nil, None)
+    scanSnapshot(planScan(m, end, end.schemaId, Nil)
       .keep(_.sequenceNumber > fromSeq), None, withLineage = false, withPos = false)
   }
 
@@ -2139,8 +1904,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
     val m = Meta.readJson(location)
     kind match {
       case "files" =>
-        m.head(ref).map(s => Meta.readEntries(location, s)).getOrElse(Nil)
-          .map(e => (e.path, e.fileType, e.specId, e.schemaId, e.rowCount,
+        headEntries(m, ref).map(e => (e.path, e.fileType, e.specId, e.schemaId, e.rowCount,
             e.sizeBytes, e.sequenceNumber, e.firstRowId, e.partition))
           .toDF("path", "file_type", "spec_id", "schema_id", "row_count",
             "size_bytes", "sequence_number", "first_row_id", "partition")
@@ -2159,8 +1923,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
       case "partitions" =>
         // per-partition rollup from manifest entries — answers "how is my
         // data distributed" without reading a single data file
-        m.head(ref).map(s => Meta.readEntries(location, s)).getOrElse(Nil)
-          .filter(_.fileType == "data")
+        headEntries(m, ref).filter(_.fileType == "data")
           .groupBy(_.partition).toSeq
           .map { case (p, fs) =>
             (p.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString("/"),
@@ -2197,7 +1960,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
   /** live files of the current (or ref'd) snapshot — for specs/inspection */
   def liveFiles(ref: String = "main"): Seq[FileMeta] = {
     val m = Meta.readJson(location)
-    m.head(ref).map(s => Meta.readEntries(location, s)).getOrElse(Nil)
+    headEntries(m, ref)
   }
 
   /** the data files a read of main with `filter` plans — for specs/inspection */
@@ -2301,11 +2064,6 @@ class GraftTable(val spark: SparkSession, val location: String) {
 }
 
 object GraftTable {
-
-  private val PosDelSchema = StructType.fromDDL("file_path string, pos bigint")
-  private val DvSchema = StructType.fromDDL("file_path string, dv binary")
-  /** One shared UDF instance, so equal scans keep equal (cacheable) plans. */
-  private val DvPositions = udf((b: Array[Byte]) => Dv.decode(b))
 
   /** parse "day(o_orderdate)" / "bucket(8, a, b)" / "truncate(4, s)" /
     * "identity(c)" (or bare "c") into a PartFieldMeta */

@@ -1,6 +1,6 @@
 package graft.table
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
@@ -61,7 +61,6 @@ final case class ColStats(min: Option[String], max: Option[String], nullCount: L
   * - stats keyed by field id (as string, for json map keys)
   * - partition keyed by partition-field name, value encoded as string
   * - eqFieldIds: key fields for equality deletes
-  * - appliesTo: target data file for deletion vectors
   * - firstRowId: v3 row lineage — rows in a data file without a
   *   materialized `_row_id` column get firstRowId + rowIndex. */
 final case class FileMeta(
@@ -75,7 +74,6 @@ final case class FileMeta(
     sequenceNumber: Long,
     stats: Map[String, ColStats],
     eqFieldIds: List[Int] = Nil,
-    appliesTo: Option[String] = None,
     firstRowId: Long = -1L,
     // true for files REGISTERED in place by add_files (Iceberg migrate
     // analog): columns carry LOGICAL names (name mapping), path may be

@@ -117,7 +117,7 @@ class BenchSampleSpec extends AnyFunSuite {
     // the recheck; an attempt is clean iff it starts after the burst
     var clock = 0L
     val stealUntilMs = 140000L
-    def attempt(i: Int): (Long, Boolean) = {
+    val attempt: Int => (Long, Boolean) = _ => {
       val at = clock
       clock += 2000 // each attempt itself takes ~2 s
       (at, at >= stealUntilMs)

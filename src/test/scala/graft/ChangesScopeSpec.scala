@@ -79,6 +79,22 @@ class ChangesScopeSpec extends SparkSpec {
     }
   }
 
+  test("building a scoped changes() over posdel, DV and eqdel runs no Spark job") {
+    import spark.implicits._
+    val loc = tmp()
+    val t = mk(loc, partitionBy = Seq("k"))
+    val s0 = t.append(df((0L until 40L).map(i => (i, i % 8, s"v$i"))))
+    t.delete("id = 7", WriteMode.MergeOnRead)
+    t.delete("id = 9", WriteMode.DeletionVector)
+    t.deleteByKeys(Seq(11L).toDF("id"))
+    val (ch, jobs) = jobsDuring(t.changes(s0.snapshotId))
+    assert(jobs == 0, "delete targets and keys must come from the driver decoder")
+    assert(t.lastChangesScope.isDefined, "a delete window must take the scoped path")
+    assert(canon(ch) == canon(t.changesStateDiff(s0.snapshotId)))
+    assert(ch.collect().map(r => (r.getAs[String]("_change_type"), r.getAs[Long]("id")))
+      .toSeq.sortBy(_._2) == Seq(("delete", 7L), ("delete", 9L), ("delete", 11L)))
+  }
+
   test("a legacy URI-encoded position-delete target scopes to its survivor file") {
     // delete files written before round 15 stored the URI-encoded file
     // path; the scope must map it back to the raw survivor path by the

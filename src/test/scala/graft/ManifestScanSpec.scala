@@ -1,10 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.graft.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.LeftAnti
 import org.apache.spark.sql.execution.SparkPlan
@@ -25,22 +22,6 @@ class ManifestScanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def tmp(): String =
     Files.createTempDirectory("graft-mscan").resolve("t").toString
-
-  /** `body`'s result and the number of Spark jobs started while it ran. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(l)
-    try {
-      val r = body
-      ListenerBusDrain(sc)
-      (r, n.get)
-    } finally sc.removeSparkListener(l)
-  }
 
   private def dataEntries(t: GraftTable): Seq[FileMeta] =
     Meta.readEntries(t.location, t.meta.head("main").get).filter(_.fileType == "data")

@@ -1784,6 +1784,55 @@ class OpsSpec extends SparkSpec {
     }
   }
 
+  test("SQL time-travel reads prune the manifest like API reads") {
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val wh = java.nio.file.Files.createTempDirectory("graft-sqlwh4").toString
+    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
+    val s2 = SparkSession.builder().master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .withExtensions(new graft.functions.GraftExtensions())
+      .getOrCreate()
+    try {
+      s2.conf.set("spark.graft.warehouse", wh)
+      val cat = new graft.table.GraftCatalog(s2, wh)
+      val t = cat.createTable("db1", "tt", "k bigint, v string",
+        partitionBy = Seq("bucket(8, k)"))
+      import s2.implicits._
+      val s1 = t.append((0L until 64L).map(k => (k, s"v$k")).toDF("k", "v"))
+      t.append((64L until 128L).map(k => (k, s"v$k")).toDF("k", "v"))
+      // files in the relations the plan was built from (one
+      // ManifestFileIndex per schema group)
+      def plannedFiles(df: org.apache.spark.sql.DataFrame): Long =
+        df.queryExecution.executedPlan.collectLeaves().collect {
+          case f: FileSourceScanExec => f.relation.location.inputFiles.length.toLong
+        }.sum
+      val v = s1.snapshotId
+      val apiDf = t.scan(filter = Some("k = 17"), snapshotId = Some(v))
+      val snapFiles = graft.table.Meta.readEntries(t.location, s1)
+        .count(_.fileType == "data").toLong
+      assert(plannedFiles(apiDf) < snapFiles, "bucket pruning must drop files")
+      for (sql <- Seq(
+          s"SELECT v FROM graft.db1.tt FOR VERSION AS OF $v WHERE k = 17",
+          s"SELECT v FROM graft.db1.tt FOR VERSION AS OF $v AS x WHERE k = 17")) {
+        val sqlDf = s2.sql(sql)
+        assert(plannedFiles(sqlDf) == plannedFiles(apiDf),
+          s"$sql plans ${plannedFiles(sqlDf)} of $snapFiles files, " +
+            s"the API read ${plannedFiles(apiDf)}")
+        assert(sqlDf.collect().map(_.getString(0)).toSeq == Seq("v17"))
+      }
+      // the snapshot's state is read, not the head's
+      assert(s2.sql(s"SELECT v FROM graft.db1.tt FOR VERSION AS OF $v WHERE k = 81")
+        .collect().isEmpty)
+      assert(s2.sql("SELECT v FROM graft.db1.tt WHERE k = 81").collect()
+        .map(_.getString(0)).toSeq == Seq("v81"))
+    } finally {
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+    }
+  }
+
   test("frame sampling explodes payloads at the stride and keeps slice identity") {
     val rows = Multimodal.frameSample(spark, sf).collect()
     assert(rows.nonEmpty)

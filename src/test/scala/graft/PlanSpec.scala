@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 
 import graft.ops._
 
@@ -30,29 +30,6 @@ class PlanSpec extends SparkSpec {
 
   private def countShuffles(plan: String): Int =
     "Exchange (hash|range)partitioning".r.findAllIn(plan).size
-
-  /** The physical plans of every query `body` executes, AQE off so the
-    * join strategies are visible in the tree. */
-  private def executedDuring(body: => Unit): Seq[SparkPlan] = {
-    val plans = new java.util.concurrent.CopyOnWriteArrayList[SparkPlan]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
-        plans.add(qe.executedPlan)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    // AQE wraps executed plans in an opaque leaf — off for tree inspection
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.listenerManager.register(listener)
-    try body
-    finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-    // the listener fires asynchronously — drain until the count is stable
-    var last = -1; var tries = 0
-    while (plans.size != last && tries < 50) {
-      last = plans.size; Thread.sleep(100); tries += 1
-    }
-    spark.listenerManager.unregister(listener)
-    plans.toArray(Array.empty[SparkPlan]).toSeq
-  }
 
   /** `p` reads data files under the table location `loc` */
   private def scansTable(p: SparkPlan, loc: String): Boolean = p.collect {

@@ -33,8 +33,7 @@ class SegStatsSpec extends SparkSpec {
     assert(Meta.segStats(Seq(a, a)).partitions == List(part("1")))
     // any non-data entry (posdel/dv/eqdel applies by path or keys, not
     // partition) poisons completeness — the segment must always be read
-    val dv = FileMeta("v.parquet", "dv", 0, 0, Map.empty, 1, 1, 2,
-      Map.empty, appliesTo = Some("a"))
+    val dv = FileMeta("v.parquet", "dv", 0, 0, Map.empty, 1, 1, 2, Map.empty)
     assert(!Meta.segStats(Seq(a, dv)).complete)
     // tuple-count overflow -> incomplete (bounded metadata growth)
     val many = (0 to Meta.SegStatsCap).map(i => dataEntry(part(i.toString), s"f$i"))

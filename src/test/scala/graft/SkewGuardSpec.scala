@@ -9,7 +9,6 @@ import graft.ops.Similarity
   * salted join BOUNDS the hot key's max partition while producing the
   * exact same rows as the unsalted join. */
 class SkewGuardSpec extends SparkSpec {
-  import spark.implicits._
 
   // planted assignment table: 100 lists, ~uniform background, list 7
   // holds 40% of all assignments (the dense-cluster collapse)

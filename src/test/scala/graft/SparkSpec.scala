@@ -1,6 +1,12 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.graft.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local Spark session for specs. */
@@ -23,6 +29,45 @@ trait SparkSpec extends AnyFunSuite {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
     }
+  }
+
+  /** `body`'s result and the number of Spark jobs started while it ran. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val n = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(l)
+    try {
+      val r = body
+      ListenerBusDrain(sc)
+      (r, n.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  /** The physical plans of every query `body` executes, AQE off so the
+    * join strategies are visible in the tree. */
+  def executedDuring(body: => Unit): Seq[SparkPlan] = {
+    val plans = new java.util.concurrent.CopyOnWriteArrayList[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // AQE wraps executed plans in an opaque leaf — off for tree inspection
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.listenerManager.register(listener)
+    try body
+    finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    // the listener fires asynchronously — drain until the count is stable
+    var last = -1; var tries = 0
+    while (plans.size != last && tries < 50) {
+      last = plans.size; Thread.sleep(100); tries += 1
+    }
+    spark.listenerManager.unregister(listener)
+    plans.toArray(Array.empty[SparkPlan]).toSeq
   }
 }
 

@@ -101,7 +101,7 @@ class StreamingRestartSpec extends SparkSpec {
     val tmp = Files.createTempDirectory("graft-sc").toString
     val a = GraftTable.create(spark, s"$tmp/a", "k bigint, v double")
     (0 until 4).foreach(i => a.append(Seq((i.toLong, i * 1.0)).toDF("k", "v")))
-    val b = GraftTable.create(spark, s"$tmp/b", "k bigint, v double")
+    GraftTable.create(spark, s"$tmp/b", "k bigint, v double")
     var commits = 0
     val q = a.readStream(maxFilesPerTrigger = Some(1)).writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>

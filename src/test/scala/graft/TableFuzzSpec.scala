@@ -5,8 +5,6 @@ import java.nio.file.Files
 import scala.collection.mutable
 import scala.util.Random
 
-import org.apache.spark.sql.functions._
-
 import graft.table._
 
 /** Model-based fuzzing of the table format: a seeded random sequence of

@@ -604,7 +604,6 @@ class TableSpec extends SparkSpec {
     val p = java.nio.file.Paths.get(t.location, "metadata", f"v$v%05d.json")
     import org.json4s._
     import org.json4s.jackson.JsonMethods
-    implicit val fmts: Formats = DefaultFormats
     val legacy = JsonMethods.parse(Files.readString(p)).transformField {
       case ("manifests", JArray(List(one))) => ("manifest", one)
     }
