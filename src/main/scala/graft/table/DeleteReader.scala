@@ -28,11 +28,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * by the legacy-target rule ([[resolver]]), and per target file the
   * highest-sequence vector applies (vectors of equal sequence unite).
   * Paths are raw absolute paths, the `_gf` space; `path` maps a manifest
-  * path into it. */
+  * path into it ([[TableScan.entryPath]]). */
 private[table] final class DeleteReader(spark: SparkSession, path: String => String) {
   import DeleteReader._
-
-  private def sparkType(ddl: String): DataType = StructType.fromDDL(s"x $ddl").head.dataType
+  import TableScan.sparkType
 
   /** The directory of a delete entry. */
   def dir(rel: String): String = Paths.get(path(rel)).toAbsolutePath.toString

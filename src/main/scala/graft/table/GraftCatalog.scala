@@ -1,7 +1,6 @@
 package graft.table
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.Comparator
 
 import scala.jdk.CollectionConverters._
 
@@ -82,11 +81,6 @@ trait Catalog {
     *
     * @return (restored, removed) counts */
   def cleanStaging(ns: String, olderThanMs: Long): (Int, Int)
-
-  protected final def deleteTree(d: Path): Unit =
-    if (Files.exists(d))
-      Files.walk(d).sorted(Comparator.reverseOrder[Path]())
-        .iterator().asScala.foreach(Files.deleteIfExists(_))
 }
 
 object Catalog {
@@ -175,7 +169,7 @@ class GraftCatalog(val spark: SparkSession, val warehouse: String)
   }
 
   def dropTable(ns: String, name: String): Unit =
-    deleteTree(tblPath(ns, name))
+    GraftTable.deleteTree(tblPath(ns, name))
 
   def dropNamespace(ns: String): Unit =
     Files.deleteIfExists(nsPath(ns))
@@ -195,7 +189,7 @@ class GraftCatalog(val spark: SparkSession, val warehouse: String)
       }
       target.filter(t => stagingComplete(d.toString) && !tableExists(ns, t)) match {
         case Some(t) => Files.move(d, tblPath(ns, t)); restored += 1
-        case None => deleteTree(d)
+        case None => GraftTable.deleteTree(d)
       }
     }
     (restored, stale.size - restored)

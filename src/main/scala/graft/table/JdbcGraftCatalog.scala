@@ -119,7 +119,7 @@ class JdbcGraftCatalog(val spark: SparkSession, val url: String,
   def dropTable(ns: String, name: String): Unit = lock.synchronized {
     location(ns, name).foreach { loc =>
       update("DELETE FROM graft_tables WHERE ns = ? AND tbl = ?", ns, name)
-      deleteTree(Paths.get(loc))
+      GraftTable.deleteTree(Paths.get(loc))
     }
   }
 

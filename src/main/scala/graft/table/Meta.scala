@@ -4,8 +4,11 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
-import org.json4s.{DefaultFormats, Formats}
-import org.json4s.jackson.Serialization
+import com.fasterxml.jackson.annotation.JsonInclude
+import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
+import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
+import com.fasterxml.jackson.module.scala.{ClassTagExtensions, DefaultScalaModule}
+import com.fasterxml.jackson.module.scala.introspect.ScalaAnnotationIntrospectorModule
 
 /** Metadata model for the graft table format — a Spark-native lakehouse
   * layout with Iceberg-equivalent semantics (snapshots, manifests, hidden
@@ -141,6 +144,15 @@ final case class TableMeta(
     .getOrElse(throw new IllegalArgumentException(s"no snapshot $id"))
   def head(ref: String): Option[SnapshotMeta] =
     refs.get(ref).map(r => snapshot(r.snapshotId))
+
+  /** `headId`'s snapshot and its ancestors, newest first; the chain stops
+    * (rather than throws) where expired snapshots have pruned the history */
+  def ancestry(headId: Long): List[SnapshotMeta] = {
+    val byId = snapshots.map(s => s.snapshotId -> s).toMap
+    Iterator.iterate(byId.get(headId))(_.flatMap(_.parentId).flatMap(byId.get))
+      .takeWhile(_.isDefined).map(_.get).toList
+  }
+  def ancestorsOf(headId: Long): Set[Long] = ancestry(headId).map(_.snapshotId).toSet
 }
 
 /** Thrown when an optimistic commit loses the race for the next metadata
@@ -152,11 +164,6 @@ class CommitConflictException(msg: String) extends RuntimeException(msg)
 class ConstraintViolationException(msg: String) extends RuntimeException(msg)
 
 object Meta {
-  implicit val formats: Formats = DefaultFormats
-
-  def writeJson(meta: TableMeta, location: String): Unit =
-    writeJsonAt(meta, location, 1 + currentVersion(location).getOrElse(0))
-
   /** Publish table state as version file `next`. The publish is atomic
     * CREATE-NEW, so when two committers compute the same next version the
     * second one throws [[CommitConflictException]] instead of silently
@@ -169,7 +176,7 @@ object Meta {
     // winner could link the loser's bytes
     val tmp = dir.resolve(
       s".v$next-${java.util.UUID.randomUUID.toString.take(8)}.json.tmp")
-    Files.writeString(tmp, Serialization.writePretty(meta))
+    Files.writeString(tmp, mapper.writeValueAsString(meta))
     // hard link fails if the target exists; a plain rename (ATOMIC_MOVE)
     // REPLACES an existing target on POSIX, which is exactly the
     // lost-commit hole this closes
@@ -197,30 +204,23 @@ object Meta {
     readJsonVersion(location, currentVersion(location)
       .getOrElse(throw new IllegalArgumentException(s"not a graft table: $location")))
 
-  /** read the table state at a SPECIFIC metadata version — committers pin
-    * the version they validated against and publish at exactly version+1,
-    * so any interleaved publication turns into a create-new conflict
-    * instead of a lost update */
+  /** the table state at metadata version `v` (the version a committer pins) */
   def readJsonVersion(location: String, v: Int): TableMeta = {
-    val p = Paths.get(location, "metadata", f"v$v%05d.json")
-    import org.json4s.{JArray, JString}
+    val tree = mapper.readTree(Files.readString(
+      Paths.get(location, "metadata", f"v$v%05d.json"))).asInstanceOf[ObjectNode]
     // legacy-format shim: pre-segmented-manifest snapshots carried a single
     // `manifest` string — map it to a one-segment `manifests` list so tables
     // written by older builds stay readable (no formatVersion bump needed:
     // the on-disk segment files themselves are unchanged). Scoped to the
-    // elements of the top-level `snapshots` array: an unscoped recursive
-    // transform would also mangle a table PROPERTY literally keyed
-    // "manifest" (properties are user-controlled strings) into an array
-    // and make the table unreadable.
-    val ast = org.json4s.jackson.JsonMethods.parse(Files.readString(p))
-      .transformField {
-        case ("snapshots", JArray(snaps)) =>
-          ("snapshots", JArray(snaps.map(_.transformField {
-            case ("manifest", JString(m)) =>
-              ("manifests", JArray(List(JString(m))))
-          })))
-      }
-    ast.extract[TableMeta]
+    // top-level fields of the `snapshots` array's elements: a table
+    // PROPERTY literally keyed "manifest" (properties are user-controlled
+    // strings) must stay a string.
+    Option(tree.get("snapshots")).foreach(_.forEach {
+      case snap: ObjectNode if snap.path("manifest").isTextual =>
+        snap.set[ArrayNode]("manifests", mapper.createArrayNode().add(snap.remove("manifest")))
+      case _ =>
+    })
+    mapper.treeToValue(tree, classOf[TableMeta])
   }
 
   def writeManifest(location: String, name: String, entries: Seq[FileMeta]): String = {
@@ -228,22 +228,22 @@ object Meta {
     Files.createDirectories(dir)
     val rel = s"manifests/$name.jsonl"
     val tmp = dir.resolve(s".$name.jsonl.tmp")
-    Files.writeString(tmp, entries.map(Serialization.write(_)).mkString("\n"))
+    Files.writeString(tmp, entries.map(mapper.writeValueAsString).mkString("\n"))
     Files.move(tmp, Paths.get(location, rel), StandardCopyOption.ATOMIC_MOVE)
     rel
   }
 
-  /** jackson-module-scala mapper for the manifest hot path: json4s extracts
-    * through runtime reflection per field (~100 µs/entry — 10k-file tables
-    * pay ~1 s per metadata read, 100k-file tables ~10 s of driver stall);
-    * databind with the Scala module is ~10x faster and Spark already ships
-    * it. Metadata v*.json stays on json4s (one small document, and its
-    * writer controls the shape); manifests are the O(files) plane. */
-  private[table] val mapper = {
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    m.registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
-    m.configure(com.fasterxml.jackson.databind.DeserializationFeature
-      .FAIL_ON_UNKNOWN_PROPERTIES, false)
+  /** The metadata plane's one JSON codec (`vN.json`, manifests, table
+    * statistics): compact, an absent `Option` omitted. `Option[Long]`
+    * erases to `Option[Object]` (a small number would read back as a
+    * boxed Int), so its element type is registered. */
+  private[table] val mapper: ObjectMapper with ClassTagExtensions = {
+    val m = new ObjectMapper() with ClassTagExtensions
+    m.registerModule(DefaultScalaModule)
+    m.configure(DeserializationFeature.FAIL_ON_UNKNOWN_PROPERTIES, false)
+    m.setDefaultPropertyInclusion(JsonInclude.Include.NON_ABSENT)
+    ScalaAnnotationIntrospectorModule.registerReferencedValueType(
+      classOf[SnapshotMeta], "parentId", classOf[Long])
     m
   }
 
@@ -322,8 +322,9 @@ object Meta {
     private val inflight =
       new java.util.concurrent.ConcurrentHashMap[String,
         java.util.concurrent.CompletableFuture[Weighed[Any]]]()
-    @volatile private[graft] var hits = 0L
-    @volatile private[graft] var misses = 0L
+    private val hitCount, missCount = new java.util.concurrent.atomic.LongAdder
+    private[graft] def hits: Long = hitCount.sum()
+    private[graft] def misses: Long = missCount.sum()
 
     /** The value under `key`; callers keep one value type per key. */
     def get[V](key: String, parse: () => Weighed[V]): V = {
@@ -331,8 +332,8 @@ object Meta {
         val v = resident.get(key)
         if (v != null) { bumpFreq(key); v } else null
       }
-      if (hit != null) { hits += 1; return hit.value.asInstanceOf[V] }
-      misses += 1
+      if (hit != null) { hitCount.increment(); return hit.value.asInstanceOf[V] }
+      missCount.increment()
       val mine = new java.util.concurrent.CompletableFuture[Weighed[Any]]()
       val race = inflight.putIfAbsent(key, mine)
       if (race != null) return race.join().value.asInstanceOf[V]
@@ -404,6 +405,10 @@ object Meta {
   /** all live file entries at a snapshot, across its manifest segments */
   def readEntries(location: String, snap: SnapshotMeta): Seq[FileMeta] =
     snap.manifests.flatMap(readManifest(location, _))
+
+  /** every entry of `ref`'s head in `m` */
+  def headEntries(location: String, m: TableMeta, ref: String): Seq[FileMeta] =
+    m.head(ref).toSeq.flatMap(readEntries(location, _))
 
   /** Per-segment partition-summary cap: beyond this many distinct tuples
     * a segment is recorded incomplete (unprunable) — bounds metadata

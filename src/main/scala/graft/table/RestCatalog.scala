@@ -135,7 +135,7 @@ class RestGraftCatalog(val spark: SparkSession, val baseUrl: String,
     val (code, body) = req("DELETE", s"/v1/namespaces/${enc(ns)}/tables/${enc(name)}")
     // delete the data tree the returned pointer names; a 404 is a no-op
     if (code == 200) field(body, "location")
-      .foreach(l => deleteTree(Paths.get(l)))
+      .foreach(l => GraftTable.deleteTree(Paths.get(l)))
   }
 
   def cleanStaging(ns: String, olderThanMs: Long): (Int, Int) = {

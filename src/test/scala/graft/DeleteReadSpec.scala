@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 
@@ -134,6 +136,29 @@ class DeleteReadSpec extends SparkSpec {
     assert(broadcasts.isEmpty, s"no rewrite query may broadcast:\n${plans.mkString("\n")}")
     val pds = t.liveFiles().filter(_.fileType == "posdel")
     assert(pds.size == 1 && pds.head.rowCount == 4, s"one merged file of 4 tombstones: $pds")
+    assertReads(t, m, "after")
+  }
+
+  test("a rewrite that keeps no tombstone leaves no directory; delete entries record their size") {
+    val (t, m0) = table()
+    t.delete("k = 1", WriteMode.MergeOnRead)
+    t.delete("k = 9", WriteMode.MergeOnRead)
+    t.delete("k = 102", WriteMode.DeletionVector)
+    val m = m0 -- Seq(1L, 9L, 102L)
+    // above the decode bound the dangling rule keeps both position
+    // entries when the compaction removes every file they name
+    withBroadcastBound(-1)(t.compactSmallFiles(smallerThanBytes = SmallBytes))
+    assert(t.liveFiles().count(_.fileType == "posdel") == 2)
+    withBroadcastBound(-1)(t.rewriteDeleteFiles())
+    assert(!t.liveFiles().exists(_.fileType == "posdel"), "no tombstone survives the rewrite")
+    val entries = t.meta.snapshots.flatMap(s => Meta.readEntries(t.location, s))
+    val referenced = entries.map(e => java.nio.file.Paths.get(t.location, e.path)).toSet
+    val listing = Files.list(java.nio.file.Paths.get(t.location, "deletes"))
+    val dirs = try listing.iterator().asScala.toList finally listing.close()
+    assert(dirs.nonEmpty && dirs.forall(referenced), s"unreferenced: ${dirs.filterNot(referenced)}")
+    val overlays = entries.filter(e => e.fileType == "posdel" || e.fileType == "dv")
+    assert(overlays.nonEmpty && overlays.forall(_.sizeBytes > 0),
+      s"sizes: ${overlays.map(e => e.path -> e.sizeBytes)}")
     assertReads(t, m, "after")
   }
 }

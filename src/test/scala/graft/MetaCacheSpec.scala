@@ -105,6 +105,35 @@ class MetaCacheSpec extends SparkSpec {
     } finally pool.shutdown()
   }
 
+  test("hit and miss counters lose no count under concurrent gets") {
+    val l = loc()
+    val rels = (1 to 4).map(i =>
+      Meta.writeManifest(l, s"seg-count-$i", Seq(entry(s"c$i.parquet", "1"))))
+    val keys = rels.map(r => Paths.get(l, r).toAbsolutePath.toString -> r)
+    val cache = new Meta.ManifestCache(1L << 20)
+    val threads = 8
+    val perThread = 50000
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    try {
+      val gate = new java.util.concurrent.CountDownLatch(1)
+      val tasks = (0 until threads).map { t =>
+        pool.submit(new java.util.concurrent.Callable[Unit] {
+          override def call(): Unit = {
+            gate.await()
+            for (i <- 0 until perThread) {
+              val (k, r) = keys((t + i) % keys.size)
+              cache.get(k, () => Meta.parseManifest(l, r))
+            }
+          }
+        })
+      }
+      gate.countDown()
+      tasks.foreach(_.get())
+    } finally pool.shutdown()
+    assert(cache.hits + cache.misses == threads.toLong * perThread,
+      s"hits ${cache.hits} + misses ${cache.misses} != ${threads.toLong * perThread} calls")
+  }
+
   test("the entry-weighted size accounts for what is cached") {
     val l = loc()
     val before = Meta.manifestCacheSize

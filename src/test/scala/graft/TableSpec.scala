@@ -652,10 +652,11 @@ class TableSpec extends SparkSpec {
       }.toList
       val snap = SnapshotMeta(1L, None, 1L, System.currentTimeMillis(),
         "append", 0, segs)
-      Meta.writeJson(TableMeta(3, java.util.UUID.randomUUID.toString, 2, 0, 0,
+      Meta.writeJsonAt(TableMeta(3, java.util.UUID.randomUUID.toString, 2, 0, 0,
         1L, 1L, segments.toLong * perSeg * 100, 0, 0,
         List(SchemaMeta(0, fields)), List(PartSpecMeta(0, Nil)),
-        List(snap), Map("main" -> RefMeta(1L, isBranch = true)), Map.empty), loc)
+        List(snap), Map("main" -> RefMeta(1L, isBranch = true)), Map.empty), loc,
+        Meta.currentVersion(loc).getOrElse(0) + 1)
     }
     // (a) 10k files in 50 segments (under the 64 coalesce bound)
     val loc = tmp()
@@ -1044,6 +1045,7 @@ class TableSpec extends SparkSpec {
     assert(ndv("o_orderkey") == 6, s"exactly distinct keys, got $ndv")
     assert(ndv("o_status") == 2)
     assert(t.tableStats().contains(ndv), "stats file round-trips")
+    assert(t.tableStats().get.values.sum == ndv.values.sum, "counts read back as Long")
   }
 
   test("year/month/day/hour + truncate transforms prune on ranges") {
@@ -1332,6 +1334,32 @@ class TableSpec extends SparkSpec {
       Meta.writeJsonAt(m.copy(properties = Map("w" -> "2")), loc, v + 1)
     }
     assert(Meta.readJson(loc).properties("w") == "1", "winner's commit survives")
+    // the committer's one publish rule, metadata-only: an edit whose pinned
+    // version went stale before its write conflicts, and the winner stays
+    val stale = GraftTable.load(spark, loc)
+    intercept[CommitConflictException] {
+      stale.committer.publish { pinned =>
+        GraftTable.load(spark, loc).updateProperties(Map("w" -> "3"))
+        pinned.copy(properties = pinned.properties + ("w" -> "4"))
+      }
+    }
+    assert(Meta.currentVersion(loc).contains(v + 2))
+    assert(Meta.readJson(loc).properties("w") == "3", "winner's edit survives")
+    assert(stale.meta.properties.get("w").contains("1"), "the loser adopts nothing")
+    // the same rule for a clone onto an empty catalog table: the version
+    // pinned by the emptiness check moves before the clone publishes
+    val target = tmp()
+    mkOrders(target)
+    intercept[CommitConflictException] {
+      Committer.publishNew(target) {
+        GraftTable.load(spark, target).updateProperties(Map("w" -> "winner"))
+        Meta.readJson(loc).copy(tableUuid = "clone")
+      }
+    }
+    assert(Meta.currentVersion(target).contains(2))
+    val won = Meta.readJson(target)
+    assert(won.properties.get("w").contains("winner") && won.snapshots.isEmpty,
+      "the commit that landed during the clone stays the head")
   }
 
   test("orphan cleanup removes unreferenced write dirs, keeps live data") {
@@ -1543,8 +1571,9 @@ class TableSpec extends SparkSpec {
       .select("o_orderkey").collect().map(_.getLong(0)).toSeq == Seq(3L))
     // strip every snapshot summary (simulate pre-summary persistence)
     val m = graft.table.Meta.readJson(loc)
-    graft.table.Meta.writeJson(
-      m.copy(snapshots = m.snapshots.map(_.copy(summary = Map.empty))), loc)
+    graft.table.Meta.writeJsonAt(
+      m.copy(snapshots = m.snapshots.map(_.copy(summary = Map.empty))), loc,
+      graft.table.Meta.currentVersion(loc).get + 1)
     val err = intercept[IllegalArgumentException](
       graft.table.GraftTable.load(spark, loc).scanIncremental(s1.snapshotId))
     assert(err.getMessage.contains("delete"), err.getMessage)
