@@ -422,10 +422,7 @@ object Bench {
         .parquet(s"$dir/p")
       spark.read.parquet(s"$dir/p").count()
       val secs = (System.nanoTime() - t0) / 1e9
-      val walk = java.nio.file.Files.walk(dir)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally walk.close()
+      graft.table.GraftTable.deleteTree(dir)
       secs
     }
     ioCanary() // warm the write/read codegen + committer paths

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Path}
-import java.util.Comparator
 
 /** Per-JVM scratch space that is actually reclaimed: every `dir()` lives
   * under one session root which a shutdown hook deletes recursively, so
@@ -21,11 +20,5 @@ object Scratch {
 
   /** best-effort recursive delete (exit path: never throws) */
   def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try {
-        walk.sorted(Comparator.reverseOrder[Path]())
-          .forEach(f => try Files.deleteIfExists(f) catch { case _: Exception => () })
-      } catch { case _: Exception => () } finally walk.close()
-    }
+    try graft.table.GraftTable.deleteTree(p) catch { case _: Exception => () }
 }

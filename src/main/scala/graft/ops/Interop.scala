@@ -48,12 +48,7 @@ object Interop {
     * queries must not depend on each other's execution order) */
   val Loc3 = "/tmp/graft_interop_history"
 
-  private def wipe(loc: String): Unit = {
-    val root = Paths.get(loc)
-    if (Files.exists(root))
-      Files.walk(root).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .iterator().forEachRemaining(p => Files.deleteIfExists(p))
-  }
+  private def wipe(loc: String): Unit = GraftTable.deleteTree(Paths.get(loc))
 
   /** base table: 2 appends around 4 delete commits of all three shapes */
   private def buildBase(spark: SparkSession, dir: String, loc: String): GraftTable = {

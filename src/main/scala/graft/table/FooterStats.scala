@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
@@ -49,6 +50,15 @@ object FooterStats {
 
   private val hconf = new Configuration()
 
+  /** A footer reader over `p`, its read options built from `hconf`:
+    * opening a file without options constructs a fresh `Configuration`,
+    * re-parsing Hadoop's XML defaults (~9 ms) per file. The options are
+    * built per reader because closing a reader releases their codec
+    * factory. */
+  private def open(p: Path): ParquetFileReader = ParquetFileReader.open(
+    HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(p.toString), hconf),
+    HadoopReadOptions.builder(hconf).build())
+
   /** every .parquet regular file under `root`, with the walk stream CLOSED
     * after materialization (a leaked walk holds a directory handle) */
   private def parquetFiles(root: Path): Seq[Path] = {
@@ -65,8 +75,7 @@ object FooterStats {
     val root = Paths.get(dirAbs)
     if (!Files.isDirectory(root)) return 0L
     parquetFiles(root).map { p =>
-      val r = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(p.toString), hconf))
+      val r = open(p)
       try r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
       finally r.close()
     }.sum
@@ -88,8 +97,7 @@ object FooterStats {
       else parquetFiles(root)
     if (files.isEmpty) return None
     val perFile = files.map { p =>
-      val r = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(p.toString), hconf))
+      val r = open(p)
       try {
         val vals = r.getFooter.getBlocks.asScala.flatMap { b =>
           b.getColumns.asScala.filter(_.getPath.toDotString == column).flatMap { c =>
@@ -177,8 +185,7 @@ object FooterStats {
 
   private def readFooter(p: Path, schema: SchemaMeta,
       nameMapped: Boolean): (Long, Map[String, ColStats]) = {
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(p.toString), hconf))
+    val reader = open(p)
     try {
       val blocks = reader.getFooter.getBlocks.asScala.toSeq
       val rows = blocks.map(_.getRowCount).sum

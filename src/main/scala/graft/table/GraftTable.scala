@@ -6,6 +6,8 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project}
+import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -106,18 +108,34 @@ class GraftTable(val spark: SparkSession, val location: String) extends TableCha
 
   /** Write `df` (logical column names, optional materialized lineage)
     * as new data files under data/s<snapId> in the current schema and
-    * partition spec. Returns manifest entries (stats collected in ONE
-    * distributed agg job over the freshly written files — never a driver
-    * loop). */
+    * partition spec. Returns manifest entries, their stats read from the
+    * written files' parquet footers ([[FooterStats]]).
+    *
+    * A partitioned write hash-clusters its rows by the partition columns
+    * so that each partition tuple lands in one file — unless the input is
+    * already ONE Spark partition. One task then writes one file per
+    * tuple by itself (the parquet writer sorts its rows by the partition
+    * columns), and the exchange would only add a shuffle map job and an
+    * adaptive re-plan that coalesces back to that same single reducer.
+    * The decision reads the one projection's analyzed plan
+    * ([[GraftTable.singlePartition]]): nothing is optimized, planned or
+    * run to make it, and every input it cannot prove single keeps the
+    * exchange. */
   private def writeDataFiles(df: DataFrame, snapId: Long, seq: Long,
       repartitionTo: Option[Int] = None): Seq[FileMeta] = {
     val m = meta
     val (schemaId, specId) = (m.currentSchemaId, m.currentSpecId)
     val (schema, spec) = (m.schema(schemaId), m.spec(specId))
-    // logical → physical: select every schema field, cast, rename
-    val physDf = df.select(schema.fields.map(f =>
-      col(f.name).cast(sparkType(f.dtype)).as(phys(f))) ++
-      Seq("_row_id", "_last_seq").filter(df.columns.contains).map(c => col(c).cast(LongType)): _*)
+    // logical → physical in ONE projection (one analysis of the input):
+    // every schema field cast and renamed, the materialized lineage, and
+    // the `_p_*` partition values computed over the same casts
+    val typed = schema.fields.map(f => f.id -> col(f.name).cast(sparkType(f.dtype))).toMap
+    val pcols = spec.fields.map(pf =>
+      Transforms.column(pf, pf.sourceIds.map(typed),
+        pf.sourceIds.map(id => schema.byId(id).get.dtype)).as(s"_p_${pf.name}"))
+    var out = df.select(schema.fields.map(f => typed(f.id).as(phys(f))) ++
+      Seq("_row_id", "_last_seq").filter(df.columns.contains).map(c => col(c).cast(LongType)) ++
+      pcols: _*)
     val rel = s"data/s$snapId-${UUID.randomUUID.toString.take(8)}"
     val dir = entryPath(location, rel)
     // INT96 timestamps carry no usable footer statistics — write micros for
@@ -125,10 +143,6 @@ class GraftTable(val spark: SparkSession, val location: String) extends TableCha
     // writers in the session must keep their own timestamp physical type)
     val tsKey = "spark.sql.parquet.outputTimestampType"
     val prevTs = spark.conf.getOption(tsKey)
-    val pcols = spec.fields.map(pf =>
-      Transforms.column(pf, pf.sourceIds.map(id => col(s"f$id")),
-        pf.sourceIds.map(id => schema.byId(id).get.dtype)).as(s"_p_${pf.name}"))
-    var out = physDf.select(physDf.columns.map(col) ++ pcols: _*)
     def propCols(key: String) = m.properties.get(key).toSeq
       .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
       .map(n => col(s"f${schema.byName(n).id}"))
@@ -149,7 +163,7 @@ class GraftTable(val spark: SparkSession, val location: String) extends TableCha
       .orElse(m.properties.get("write.target-partitions").map(_.toInt))
     if (pcols.nonEmpty) {
       val pRefs = spec.fields.map(pf => col(s"_p_${pf.name}"))
-      out = out.repartition(pRefs: _*)
+      if (!GraftTable.singlePartition(out.queryExecution.analyzed)) out = out.repartition(pRefs: _*)
       // with a partition spec, clustering properties apply WITHIN partitions
       // (z-order wins over a linear sort when both are set). The sort must
       // LEAD with the partition columns: the parquet writer requires rows
@@ -458,7 +472,10 @@ class GraftTable(val spark: SparkSession, val location: String) extends TableCha
     *   WHEN MATCHED [AND matchedDelete] THEN DELETE / UPDATE SET matchedSet
     *   WHEN NOT MATCHED THEN INSERT insertValues.
     * Copy-on-write, file-scoped: only files holding matched rows are
-    * rewritten; inserts append. Expressions may reference `t.` and `s.`.
+    * rewritten; inserts append, in the same data-file write as the
+    * rewritten rows (one write job per MERGE, so a new file may mix
+    * materialized and inherited lineage rows). Expressions may reference
+    * `t.` and `s.`.
     *
     * The target×source ON-expression join runs ONCE: its matched set M
     * (file, pos, the ON-referenced target keys, all source columns) is
@@ -553,49 +570,51 @@ class GraftTable(val spark: SparkSession, val location: String) extends TableCha
           "MERGE: a target row matches more than one source row (ambiguous merge)")
       val files = stats.map(_.getString(0)).toSet
 
-      val rewritten: Seq[FileMeta] = if (files.isEmpty) Nil else {
+      val rewritten: Option[DataFrame] = if (files.isEmpty) None else {
         val part = readForRewrite(plan, files, withPos = true)
         val joined = part.alias("t").join(m.alias("s"),
           col("t._gf") === col("s._mf") && col("t._gp") === col("s._mp"),
           "left_outer")
         val matched = col("s._mf").isNotNull
         val base = if (matchedDelete) joined.filter(!matched) else joined
-        val outRows = base.select(schema.fields.map { f =>
+        Some(base.select(schema.fields.map { f =>
           matchedSet.get(f.name) match {
             case Some(e) => when(matched, expr(e).cast(sparkType(f.dtype)))
               .otherwise(col(s"t.${f.name}")).as(f.name)
             case None => col(s"t.${f.name}").as(f.name)
           }
         } ++ Seq(col("t._row_id").as("_row_id"),
-          when(matched, lit(seq)).otherwise(col("t._last_seq")).as("_last_seq")): _*)
-        writeChecked(outRows, "merge", snapId, seq)
+          when(matched, lit(seq)).otherwise(col("t._last_seq")).as("_last_seq")): _*))
       }
-      val inserted: Seq[FileMeta] = insertValues match {
-        case None => Nil
-        case Some(iv) =>
-          // anti-join against M's carried ON keys, not the table; fall back
-          // to the table scan only if ON references no target column at all
-          // (degenerate, but keep the old semantics)
-          val notMatched =
-            if (tRefs.nonEmpty) {
-              val tKeys = m.select(tRefs.map(c => col(s"_tk_$c").as(c)): _*)
-              source.alias("s").join(tKeys.alias("t"), expr(on), "left_anti")
-            } else {
-              MergeStats.onJoinPasses.incrementAndGet()
-              source.alias("s").join(tgt.alias("t"), expr(on), "left_anti")
-            }
-          val rows = notMatched.select(schema.fields.map { f =>
-            iv.get(f.name) match {
-              case Some(e) => expr(e).cast(sparkType(f.dtype)).as(f.name)
-              case None => lit(null).cast(sparkType(f.dtype)).as(f.name)
-            }
-          }: _*)
-          // no isEmpty pre-check: that would execute the anti-join twice
-          // (once to count, once to write). Write directly — an empty
-          // result produces no part files — and drop zero-row entries.
-          writeChecked(rows, "merge-insert", snapId, seq).filter(_.rowCount > 0L)
+      val inserted: Option[DataFrame] = insertValues.map { iv =>
+        // anti-join against M's carried ON keys, not the table; fall back
+        // to the table scan only if ON references no target column at all
+        // (degenerate, but keep the old semantics)
+        val notMatched =
+          if (tRefs.nonEmpty) {
+            val tKeys = m.select(tRefs.map(c => col(s"_tk_$c").as(c)): _*)
+            source.alias("s").join(tKeys.alias("t"), expr(on), "left_anti")
+          } else {
+            MergeStats.onJoinPasses.incrementAndGet()
+            source.alias("s").join(tgt.alias("t"), expr(on), "left_anti")
+          }
+        // beside rewritten rows an insert carries null lineage: the reader
+        // inherits its row id and sequence from the file, per row
+        val lineage = if (rewritten.isEmpty) Nil
+          else Seq(lit(null).cast(LongType).as("_row_id"), lit(null).cast(LongType).as("_last_seq"))
+        notMatched.select(schema.fields.map { f =>
+          iv.get(f.name) match {
+            case Some(e) => expr(e).cast(sparkType(f.dtype)).as(f.name)
+            case None => lit(null).cast(sparkType(f.dtype)).as(f.name)
+          }
+        } ++ lineage: _*)
       }
-      commit("overwrite", branch, rewritten ++ inserted, files, snapId, seq,
+      // rewritten and inserted rows go out in ONE write (one job, one
+      // footer pass). No isEmpty pre-check on the inserts: that would run
+      // the anti-join twice. Zero-row entries of the write are dropped.
+      val written = (rewritten ++ inserted).reduceOption(_ union _).toSeq
+        .flatMap(writeChecked(_, "merge", snapId, seq).filter(_.rowCount > 0L))
+      commit("overwrite", branch, written, files, snapId, seq,
         touched = plan.partitionsOf(files))
     } finally m.unpersist(blocking = false)
   }
@@ -1339,8 +1358,32 @@ object GraftTable {
   def load(spark: SparkSession, location: String): GraftTable =
     new GraftTable(spark, location)
 
+  /** Whether `p`, an analyzed plan, runs as at most one Spark partition,
+    * judged without optimizing, planning or running it. A file relation
+    * is single when it holds at most one file, no larger than Spark's
+    * split size (its scan splits nothing and packs that file alone); a
+    * local relation when it holds at most one row (Spark spreads rows
+    * over min(rows, parallelism) partitions); a projection or filter
+    * when its child is. Any other plan is not. */
+  private def singlePartition(p: LogicalPlan): Boolean = p match {
+    case r: LogicalRelation => r.relation match {
+      case fs: HadoopFsRelation if fs.bucketSpec.isEmpty =>
+        val dirs = fs.location.listFiles(Nil, Nil)
+        dirs.flatMap(_.files) match {
+          case Seq() => true
+          case Seq(f) => f.getLen <= FilePartition.maxSplitBytes(fs.sparkSession, dirs)
+          case _ => false
+        }
+      case _ => false
+    }
+    case l: LocalRelation => l.data.size <= 1
+    case proj: Project => singlePartition(proj.child)
+    case f: Filter => singlePartition(f.child)
+    case _ => false
+  }
+
   /** Delete a file, or a directory with everything under it. */
-  private[table] def deleteTree(p: java.nio.file.Path): Unit =
+  private[graft] def deleteTree(p: java.nio.file.Path): Unit =
     if (Files.exists(p)) {
       val walk = Files.walk(p)
       try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())

@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** What one read of a snapshot involves, from its manifest alone: the
@@ -176,7 +177,14 @@ private[table] object TableScan {
   /** A field's physical parquet column name. */
   def phys(f: FieldMeta): String = s"f${f.id}"
 
-  def sparkType(ddl: String): DataType = StructType.fromDDL(s"x $ddl").head.dataType
+  /** parsed types by DDL string (and the session's TIMESTAMP meaning):
+    * every scan, write and delete schema resolves its fields here, and
+    * `DataType` values are immutable */
+  private val parsedTypes = new java.util.concurrent.ConcurrentHashMap[(String, DataType), DataType]
+
+  def sparkType(ddl: String): DataType =
+    parsedTypes.computeIfAbsent((ddl, SQLConf.get.timestampType),
+      _ => StructType.fromDDL(s"x $ddl").head.dataType)
 
   def normPath(s: String): String = s.replaceFirst("^file:/+", "/")
 

@@ -308,21 +308,24 @@ class PlanSpec extends SparkSpec {
       "merge must build exactly one target×source ON-expression join")
     def scansTable(p: SparkPlan): Boolean = PlanSpec.this.scansTable(p, loc)
     val writes = all.filter(_.toString.contains("InsertIntoHadoopFsRelationCommand"))
-    assert(writes.size == 2, s"expected rewrite+insert writes, got ${writes.size}")
+    assert(writes.size == 1, s"rewritten and inserted rows go out in one write, got ${writes.size}")
     // the ON join executes once, inside the cached match set: the only
-    // plan that scans the table directly is the file-scoped rewrite
+    // plan that scans the table directly is the write, through its
+    // file-scoped rewrite branch
     assert(all.count(scansTable) == 1,
-      "exactly one executed plan (the rewrite) may scan the table's data files")
+      "exactly one executed plan (the write) may scan the table's data files")
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     val rewrite = writes.filter(scansTable)
-    assert(rewrite.size == 1, "exactly one write (the rewrite) scans the table")
+    assert(rewrite.size == 1, "the write scans the table")
     assert(rewrite.head.collect {
       case j: BroadcastHashJoinExec
         if j.rightKeys.exists(_.toString.contains("_mf")) => j
     }.nonEmpty, "rewrite must broadcast-join the matched set on (file, pos)")
-    val insertW = writes.filterNot(scansTable).head
-    assert(!scansTable(insertW),
-      s"insert anti-join must run against the matched set's keys, not the table:\n$insertW")
+    val tableScans = rewrite.head.collect {
+      case f: FileSourceScanExec if f.relation.location.rootPaths.exists(_.toString.contains(loc)) => f
+    }
+    assert(tableScans.size == 1,
+      s"insert anti-join must run against the matched set's keys, not the table:\n${rewrite.head}")
     // semantics unchanged: 100 originals (50 updated) + 50 inserts
     val out = t.scan()
     assert(out.count() == 150)
