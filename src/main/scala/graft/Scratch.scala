@@ -20,5 +20,5 @@ object Scratch {
 
   /** best-effort recursive delete (exit path: never throws) */
   def deleteRecursively(p: Path): Unit =
-    try graft.table.GraftTable.deleteTree(p) catch { case _: Exception => () }
+    try graft.table.GraftTable.deleteTree(p, bestEffort = true) catch { case _: Exception => () }
 }

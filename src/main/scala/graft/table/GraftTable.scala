@@ -6,7 +6,8 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -1358,36 +1359,37 @@ object GraftTable {
   def load(spark: SparkSession, location: String): GraftTable =
     new GraftTable(spark, location)
 
-  /** Whether `p`, an analyzed plan, runs as at most one Spark partition,
+  /** Whether `p`, an analyzed plan, runs as one Spark partition,
     * judged without optimizing, planning or running it. A file relation
-    * is single when it holds at most one file, no larger than Spark's
+    * is single when it holds one file, no larger than Spark's
     * split size (its scan splits nothing and packs that file alone); a
-    * local relation when it holds at most one row (Spark spreads rows
-    * over min(rows, parallelism) partitions); a projection or filter
-    * when its child is. Any other plan is not. */
+    * projection when its child is and it holds no subquery (the optimizer
+    * turns an IN, EXISTS or correlated scalar subquery into a join, whose
+    * shuffle spreads the rows again). Any other plan is not. */
   private def singlePartition(p: LogicalPlan): Boolean = p match {
     case r: LogicalRelation => r.relation match {
       case fs: HadoopFsRelation if fs.bucketSpec.isEmpty =>
         val dirs = fs.location.listFiles(Nil, Nil)
         dirs.flatMap(_.files) match {
-          case Seq() => true
           case Seq(f) => f.getLen <= FilePartition.maxSplitBytes(fs.sparkSession, dirs)
           case _ => false
         }
       case _ => false
     }
-    case l: LocalRelation => l.data.size <= 1
-    case proj: Project => singlePartition(proj.child)
-    case f: Filter => singlePartition(f.child)
+    case proj: Project if !proj.projectList.exists(SubqueryExpression.hasSubquery) =>
+      singlePartition(proj.child)
     case _ => false
   }
 
-  /** Delete a file, or a directory with everything under it. */
-  private[graft] def deleteTree(p: java.nio.file.Path): Unit =
+  /** Delete a file, or a directory with everything under it. With
+    * `bestEffort`, a file that cannot be deleted is skipped and the walk
+    * goes on to the rest. */
+  private[graft] def deleteTree(p: java.nio.file.Path, bestEffort: Boolean = false): Unit =
     if (Files.exists(p)) {
       val walk = Files.walk(p)
       try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .iterator().asScala.foreach(Files.deleteIfExists(_))
+        .iterator().asScala.foreach(f =>
+          try Files.deleteIfExists(f) catch { case _: Exception if bestEffort => false })
       finally walk.close()
     }
 }

@@ -14,8 +14,10 @@ import graft.table._
   *  1. a partitioned write shuffles its input by the partition columns only
   *     when that can cluster it: an input of one Spark partition already
   *     writes one file per partition tuple, in one job;
-  *  2. every multi-partition input, and the update, MERGE and compaction
-  *     rewrites, keep the exchange and still write one file per tuple;
+  *  2. every multi-partition input, a one-file input under a subquery
+  *     (which the optimizer turns into a shuffled join), and the update,
+  *     MERGE and compaction rewrites keep the exchange and still write one
+  *     file per tuple;
   *  3. footer statistics read through one set of parquet read options
   *     equal the data they describe;
   *  4. a MERGE writes its rewritten and inserted rows in one write, with
@@ -82,6 +84,39 @@ class WritePathSpec extends SparkSpec {
     assert(files.size == 3 && files.map(_.partition).distinct.size == 3,
       s"each day's rows from all 4 inputs land in one file: ${files.map(_.path)}")
     assert(t.scan().count() == 120L)
+  }
+
+  /** `body` with broadcast joins and adaptive partition coalescing off, so
+    * a join shuffles its input into `spark.sql.shuffle.partitions` (4) */
+  private def withShuffledJoins[T](body: => T): T = {
+    val set = Seq("spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> "4")
+    val prev = set.map { case (k, _) => k -> spark.conf.getOption(k) }
+    set.foreach { case (k, v) => spark.conf.set(k, v) }
+    try withBroadcastBound(-1)(body)
+    finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  test("a one-file input under an IN subquery keeps the exchange, one file per day") {
+    oneFile(events(0L until 60L)).createOrReplaceTempView("write_path_keys")
+    val inKeys = "id IN (SELECT id FROM write_path_keys WHERE id % 2 = 0)"
+    try withShuffledJoins {
+      Seq[(String, DataFrame => DataFrame)](
+        "filter" -> (_.where(inKeys)),
+        "projection" -> (_.withColumn("v", when(expr(inKeys), lit("even")).otherwise(col("v"))))
+      ).foreach { case (shape, of) =>
+        val t = mk(tmp())
+        val batch = of(oneFile(events(0L until 30L)))
+        val plans = executedDuring(t.append(batch))
+        assert(partitionExchanges(plans).nonEmpty,
+          s"a $shape subquery must keep the exchange:\n${plans.mkString("\n")}")
+        val files = t.liveFiles().filter(_.fileType == "data")
+        assert(files.size == 3 && files.map(_.partition).distinct.size == 3,
+          s"a $shape subquery still writes one file per day: ${files.map(_.path)}")
+        assert(t.scan().orderBy("id").as[(Long, java.sql.Timestamp, String)].collect().toSeq ==
+          batch.orderBy("id").as[(Long, java.sql.Timestamp, String)].collect().toSeq, shape)
+      }
+    } finally { spark.catalog.dropTempView("write_path_keys"); () }
   }
 
   test("update, MERGE and compactSmallFiles keep their partition exchange") {
