@@ -3,7 +3,8 @@
 # (JDK17 add-opens, 24g heap, 512m code cache), classpath = compiled
 # classes + /opt/spark/jars. Measurement windows can then run without
 # paying sbt startup, and without contending for the single sbt lock.
-# All SPARK_GRAFT_* knobs pass through. Usage: scripts/benchjvm.sh
+# Bench's four settings (SPARK_GRAFT_SF_DIR, _CPUS, _RUNS, _ONLY) pass
+# through; floors come from floors.json. Usage: scripts/benchjvm.sh
 set -euo pipefail
 cd "$(dirname "$0")/.."
 CP="target/scala-2.13/classes"

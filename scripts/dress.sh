@@ -9,8 +9,9 @@
 # run's own fields.
 #
 # Usage: scripts/dress.sh [out.json]
-#   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) and the other
-#   SPARK_GRAFT_* knobs pass through to graft.Bench.
+#   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS
+#   (default 32), SPARK_GRAFT_RUNS and SPARK_GRAFT_ONLY pass through to
+#   graft.Bench, which reads its floors from floors.json.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 OUT="${1:-/tmp/dress_$$.json}"

@@ -4,27 +4,18 @@
 Reads two isolated bench windows (JSON lines from graft.Bench over the
 sweep key set), applies the batch re-floor rule — a key re-floors when
 its CLEAN-window medians exceed the threshold multiple of its committed
-floor in BOTH windows — and prints the BASELINE.md two-column re-floor
-table plus the per-window evidence line. q_sql_ctas re-floors
+floor in BOTH windows — and prints the two-column re-floor table plus
+the per-window evidence line. Floors come from floors.json (run from the
+repo root); a re-floor writes the new values there. q_sql_ctas re-floors
 unconditionally (its committed round-14 trigger already fired).
 
 Usage: sweep_eval.py windowA.json windowB.json [threshold=1.8]
 """
 import json, sys
 
-def floors(path="BASELINE.md"):
-    out = {}
-    for line in open(path):
-        cells = [c.strip() for c in line.split('|')]
-        if len(cells) >= 3 and cells[1].startswith('q'):
-            vals = []
-            for c in cells[2:]:
-                try:
-                    v = float(c)
-                    if v > 0: vals.append(v)
-                except ValueError: pass
-            if vals: out[cells[1]] = min(vals)
-    return out
+def floors(path="floors.json"):
+    """The committed per-key floors, the same file graft.Bench reads."""
+    return json.load(open(path))["floors"]
 
 def load(path):
     for line in open(path):

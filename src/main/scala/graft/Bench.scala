@@ -1,8 +1,14 @@
 package graft
+import com.fasterxml.jackson.databind.{DeserializationFeature, PropertyNamingStrategies}
+import com.fasterxml.jackson.databind.annotation.JsonDeserialize
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.SparkSession
+import java.lang.{Double => JDouble}
 
 /** Benchmark main: one JSON line with per-query MEDIAN seconds plus a
-  * machine-readable vs-floor verdict against BASELINE.md.
+  * machine-readable vs-floor verdict against the committed floors
+  * (`floors.json`, [[loadFloors]]).
   *
   * Sampling is ROUND-INTERLEAVED and STEAL-AWARE. Each round runs the
   * WHOLE suite once (round 1: q1..qN, round 2: q1..qN, ...) instead of
@@ -14,8 +20,7 @@ import org.apache.spark.sql.SparkSession
   * a round whose worse bracket reads above `clean_threshold` × the
   * committed canary floor measured the VM, not the engine, and its
   * samples are DROPPED from the medians. Rounds keep running (bounded
-  * by SPARK_GRAFT_MAX_ROUNDS) until `SPARK_GRAFT_CLEAN_ROUNDS` clean
-  * rounds exist — rounds 5 and 6 both ran entirely inside 5×-steal
+  * by [[MaxRounds]]) until [[CleanRounds]] clean rounds exist — rounds 5 and 6 both ran entirely inside 5×-steal
   * windows, so a fixed 3-round run can end with nothing trustworthy;
   * the bounded retry is what finally grounds a verdict in clean
   * windows when the VM offers any. If NO round is clean the medians
@@ -23,132 +28,65 @@ import org.apache.spark.sql.SparkSession
   * something; the canary-normalized verdict then carries the
   * adjudication) and the JSON says so via per-round provenance. */
 object Bench {
-  /** per-query floor = best historical column in BASELINE.md's table
-    * (the repo's committed comparison protocol). Tolerant parse: rows
-    * look like `| q_name | 1.06 | — | 0.59 | 0.42 |`. */
-  def floors(path: String = "BASELINE.md"): Map[String, Double] = {
-    val p = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.isReadable(p)) return Map.empty
-    scala.jdk.CollectionConverters.IteratorHasAsScala(
-      java.nio.file.Files.lines(p).iterator()).asScala
-      .flatMap { line =>
-        val cells = line.split("\\|").map(_.trim)
-        if (cells.length >= 3 && cells(1).startsWith("q")) {
-          val ts = cells.drop(2).flatMap(_.toDoubleOption).filter(_ > 0)
-          if (ts.nonEmpty) Some(cells(1) -> ts.min) else None
-        } else None
-      }.toMap
-  }
+  // Sampling and recheck policy: fixed, every committed run used these.
+  /** rounds keep running, up to this many in total (or SPARK_GRAFT_RUNS
+    * when larger), until [[CleanRounds]] rounds are clean */
+  val MaxRounds = 7
+  val CleanRounds = 3
+  /** a round is clean when both canary brackets read under this
+    * multiple of the committed canary floor */
+  val CanaryClean = 2.0
+  /** isolated-recheck attempts, and the settle pause before each retry
+    * ([[backoffMs]]: doubles from the base, capped) */
+  val RecheckAttempts = 5
+  val RecheckBackoffMs = 10000L
+  val RecheckBackoffCapMs = 120000L
+  /** loose io gate of a recheck attempt: both io bracket samples under
+    * this multiple of the committed io floor */
+  val IoClean = 2.0
 
-  /** Canary floor from BASELINE.md. Whitespace-tolerant: round 5's
-    * `"canary floor: N s"` regex silently found nothing because the
-    * phrase was line-wrapped (`canary\nfloor:`) — the headline
-    * normalized verdict never fired and nobody noticed. Tolerate any
-    * whitespace (incl. newlines) between the words and around the
-    * number; BenchParseSpec pins this against the committed file. The
-    * LAST match wins, like every floor: a later round may append a
-    * refreshed phrase without editing history. */
-  def canaryFloor(path: String = "BASELINE.md"): Option[Double] = {
-    val p = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.isReadable(p)) None
-    else "(?s)canary\\s+floor:\\s*([0-9.]+)\\s*s".r
-      .findAllMatchIn(java.nio.file.Files.readString(p)).toSeq.lastOption
-      .map(_.group(1).toDouble)
-  }
+  /** Queries whose committed floor does not measure the engine alone —
+    * e.g. the `subprocess` class, dominated by python-interpreter
+    * startup, where a 2x ratio on a loaded machine flags the OS fork
+    * path. They are reported under `floor_classes` and flagged only
+    * above their class `tolerance`, never by the default 2x rule. */
+  final case class FloorClass(tolerance: Double, keys: Set[String])
 
-  /** Scheduling-canary floor (`sched floor: N s` in BASELINE.md) — the
-    * committed quiet-window task-dispatch latency at local[32]. Same
-    * whitespace tolerance as [[canaryFloor]]; BenchParseSpec pins it. */
-  def schedFloor(path: String = "BASELINE.md"): Option[Double] = {
-    val p = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.isReadable(p)) None
-    else "(?s)sched\\s+floor:\\s*([0-9.]+)\\s*s".r
-      .findAllMatchIn(java.nio.file.Files.readString(p)).toSeq.lastOption
-      .map(_.group(1).toDouble)
-  }
+  /** Bench's committed comparison protocol, kept in `floors.json`:
+    * per-query floor seconds; the quiet-window seconds of the CPU,
+    * scheduling and I/O canaries at local[32]; the aging threshold (max
+    * ratio of the last kept round's suite wall to the first's — the
+    * round-10/11 streaming regressions showed as a monotone round-over-
+    * round climb inside one bench JVM); the strict io-clean multiple and
+    * the io-bound keys it applies to (queries dominated by parquet data
+    * writes: round 13's recheck read io 1.5-1.7x the io floor, passed the
+    * loose [[IoClean]] gate and published a flag the window could not
+    * rule); and the [[FloorClass]]es. */
+  final case class Floors(
+      @JsonDeserialize(contentAs = classOf[JDouble]) floors: Map[String, Double],
+      @JsonDeserialize(contentAs = classOf[JDouble]) canaryFloor: Option[Double],
+      @JsonDeserialize(contentAs = classOf[JDouble]) schedFloor: Option[Double],
+      @JsonDeserialize(contentAs = classOf[JDouble]) ioFloor: Option[Double],
+      @JsonDeserialize(contentAs = classOf[JDouble]) agingThreshold: Option[Double],
+      @JsonDeserialize(contentAs = classOf[JDouble]) ioCleanThreshold: Option[Double],
+      ioBound: Set[String], floorClasses: Map[String, FloorClass])
 
-  /** I/O-canary floor (`io floor: N s` in BASELINE.md) — the committed
-    * quiet-window parquet write+read round-trip at local[32]. */
-  def ioFloor(path: String = "BASELINE.md"): Option[Double] = {
-    val p = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.isReadable(p)) None
-    else "(?s)io\\s+floor:\\s*([0-9.]+)\\s*s".r
-      .findAllMatchIn(java.nio.file.Files.readString(p)).toSeq.lastOption
-      .map(_.group(1).toDouble)
-  }
+  // snake_case fields; a missing, null, unknown or non-numeric field throws
+  private val floorsMapper = JsonMapper.builder()
+    .addModule(DefaultScalaModule)
+    .propertyNamingStrategy(PropertyNamingStrategies.SNAKE_CASE)
+    .enable(DeserializationFeature.FAIL_ON_MISSING_CREATOR_PROPERTIES,
+      DeserializationFeature.FAIL_ON_NULL_CREATOR_PROPERTIES)
+    .build()
 
-  /** Committed aging-slope bound (`aging threshold: N` in BASELINE.md):
-    * the maximum allowed ratio of the LAST kept round's suite wall to
-    * the FIRST kept round's. The round-10/11 streaming regressions
-    * (catalog-pinned memory sinks; a per-checkpoint-rename process fork
-    * whose cost scales with JVM mapped memory) both presented as a
-    * monotone round-over-round wall climb inside one bench JVM — a
-    * failure class three rounds of flags circled before a dedicated
-    * harness isolated it. This makes the slope a committed,
-    * machine-checkable number per run instead of a post-hoc diagnosis. */
-  def agingThreshold(path: String = "BASELINE.md"): Option[Double] = {
+  /** The committed floors. A missing file is a fresh checkout: no floors,
+    * so every window counts as clean and ratios publish as null. A
+    * malformed file throws. A re-floor edits the file. */
+  def loadFloors(path: String = "floors.json"): Floors = {
     val p = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.isReadable(p)) None
-    else "(?s)aging\\s+threshold:\\s*([0-9.]+)".r
-      .findAllMatchIn(java.nio.file.Files.readString(p)).toSeq.lastOption
-      .map(_.group(1).toDouble)
-  }
-
-  /** Floor CLASSES from BASELINE.md: queries whose committed floor does
-    * not measure the engine alone — e.g. the `subprocess` class, whose
-    * floors are dominated by python-interpreter startup (three-process
-    * queries by construction), so a 2x ratio on a loaded machine flags
-    * the OS fork path, not a regression. Parsed from lines shaped
-    * `floor class <name> (tolerance <N>x): q_a q_b ...`; such queries
-    * are reported under `floor_classes` in the JSON and flagged only
-    * above their class tolerance, instead of the default 2x rule.
-    * Later definitions of the same class override earlier ones (the
-    * floors' refresh semantics). Returns class -> (tolerance, keys). */
-  def floorClasses(path: String = "BASELINE.md"): Map[String, (Double, Set[String])] = {
-    val p = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.isReadable(p)) return Map.empty
-    // keys must match the committed registry shape q[digits]*_<word> —
-    // a looser q\w+ once let any q-prefixed PROSE word on the same line
-    // ("queries", "q.v." neighbors) silently join the class (ADVICE r14)
-    ("(?s)floor\\s+class\\s+([A-Za-z0-9_-]+)\\s*\\(tolerance\\s+([0-9.]+)x?\\)" +
-      "\\s*:\\s*((?:q[a-z0-9]*_[a-z0-9_]+[ \\t,]*)+)").r
-      .findAllMatchIn(java.nio.file.Files.readString(p)).map { m =>
-        m.group(1) -> ((m.group(2).toDouble,
-          m.group(3).split("[ \\t,]+").filter(_.nonEmpty).toSet))
-      }.toMap
-  }
-
-  /** Strict io-clean multiple for IO-BOUND queries (`io clean
-    * threshold: N` in BASELINE.md, last match wins — the floors'
-    * refresh semantics). The default recheck io gate (2.0x) exists to
-    * catch grossly stolen disk; a WRITE-HEAVY query needs a tighter
-    * bar, because its wall is mostly the disk term: round 13's driver
-    * recheck read io 1.5-1.7x the 0.33 s io floor, passed the loose
-    * gate, and published a confirmed-looking 2.19x flag on
-    * q_overwrite_partitions that the window could not actually rule. */
-  def ioCleanStrict(path: String = "BASELINE.md"): Option[Double] = {
-    val p = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.isReadable(p)) None
-    else "(?s)io\\s+clean\\s+threshold:\\s*([0-9.]+)".r
-      .findAllMatchIn(java.nio.file.Files.readString(p)).toSeq.lastOption
-      .map(_.group(1).toDouble)
-  }
-
-  /** IO-BOUND query keys (`io-bound queries: q_a q_b ...` in
-    * BASELINE.md, last match wins): queries whose committed floor is
-    * dominated by parquet DATA writes (full-table appends, CoW
-    * rewrites, compaction), so a window is only adjudicable for them
-    * when the io canary was quiet under [[ioCleanStrict]] — the CPU
-    * canary provably cannot see the disk term (round-8 evidence). */
-  def ioBoundKeys(path: String = "BASELINE.md"): Set[String] = {
-    val p = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.isReadable(p)) return Set.empty
-    // same committed q[digits]*_<word> key shape as [[floorClasses]]:
-    // trailing same-line prose can never join the list (ADVICE r14)
-    "(?s)io-bound\\s+queries\\s*:\\s*((?:q[a-z0-9]*_[a-z0-9_]+[ \\t,]*)+)".r
-      .findAllMatchIn(java.nio.file.Files.readString(p)).toSeq.lastOption
-      .map(_.group(1).split("[ \\t,]+").filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty)
+    if (!java.nio.file.Files.exists(p))
+      Floors(Map.empty, None, None, None, None, None, Set.empty, Map.empty)
+    else floorsMapper.readValue(p.toFile, classOf[Floors])
   }
 
   /** Is an io bracket clean under `thresh` x the committed io floor?
@@ -218,15 +156,7 @@ object Bench {
       agingRatio: Option[Double], agingExceeded: Option[Boolean],
       flagged: Seq[(String, Double)], flaggedNorm: Seq[(String, Double)],
       recheck: Seq[RecheckVerdict]): String = {
-    def num3(o: Option[Double]) = o.map(v => f"$v%.3f").getOrElse("null")
-    def num2(o: Option[Double]) = o.map(v => f"$v%.2f").getOrElse("null")
-    def fmap(xs: Seq[(String, Double)]) = xs.sortBy(-_._2).take(SummaryFlagCap)
-      .map { case (k, r) => "\"" + k + "\":" + f"$r%.2f" }
-      .mkString("{", ",", "}")
-    val rj = recheck.map { v =>
-      s"""\"${v.key}\":{"sec":${f"${v.sec}%.3f"},"ratio":${num2(v.ratio)},""" +
-        s""""io_bound":${v.ioBound},"window_dirty":${v.windowDirty}}"""
-    }.mkString("{", ",", "}")
+    def fmap(xs: Seq[(String, Double)]) = ratioMap(xs.sortBy(-_._2).take(SummaryFlagCap))
     s"""{"summary":{"total":${f"$total%.2f"},"median_ratio":${num3(medianRatio)},""" +
       s""""median_ratio_normalized":${num3(normMedian)},""" +
       s""""canary_ratio":${num2(canaryRatio)},"io_ratio":${num2(ioRatio)},""" +
@@ -236,8 +166,19 @@ object Bench {
       s""""aging_exceeded":${agingExceeded.map(_.toString).getOrElse("null")},""" +
       s""""flagged_count":${flagged.size},"flagged":${fmap(flagged)},""" +
       s""""flagged_normalized_count":${flaggedNorm.size},""" +
-      s""""flagged_normalized":${fmap(flaggedNorm)},"recheck":$rj}}"""
+      s""""flagged_normalized":${fmap(flaggedNorm)},"recheck":${recheckJson(recheck)}}}"""
   }
+
+  // JSON pieces shared by the detail line and the summary line
+  private def num2(o: Option[Double]) = o.map(v => f"$v%.2f").getOrElse("null")
+  private def num3(o: Option[Double]) = o.map(v => f"$v%.3f").getOrElse("null")
+  /** `{"q_a":2.31,...}`, in the order given */
+  private def ratioMap(xs: Seq[(String, Double)]): String =
+    xs.map { case (k, r) => "\"" + k + "\":" + f"$r%.2f" }.mkString("{", ",", "}")
+  private def recheckJson(vs: Seq[RecheckVerdict]): String = vs.map { v =>
+    s"""\"${v.key}\":{"sec":${f"${v.sec}%.3f"},"ratio":${num2(v.ratio)},""" +
+      s""""io_bound":${v.ioBound},"window_dirty":${v.windowDirty}}"""
+  }.mkString("{", ",", "}")
 
   def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
@@ -274,7 +215,7 @@ object Bench {
       cleanThresh: Double, io: Bracket, ioFloor: Option[Double],
       ioThresh: Double): Boolean =
     cleanFlags(Seq(bracket), gateFloor, cleanThresh).head &&
-      ioFloor.filter(_ > 0).forall(f => io.worst / f < ioThresh)
+      ioBracketClean(io, ioFloor, ioThresh)
 
   /** Settle pause before retry attempt `attempt` (1-based count of
     * attempts already made): exponential doubling from `baseMs`, capped
@@ -336,11 +277,8 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt.max(1)
-    // bounded retry budget: keep adding rounds (up to maxRounds total)
-    // until cleanTarget rounds have clean brackets
-    val maxRounds = sys.env.getOrElse("SPARK_GRAFT_MAX_ROUNDS", "7").toInt.max(runs)
-    val cleanTarget = sys.env.getOrElse("SPARK_GRAFT_CLEAN_ROUNDS", "3").toInt
-    val cleanThresh = sys.env.getOrElse("SPARK_GRAFT_CANARY_CLEAN", "2.0").toDouble
+    val committed = loadFloors() // before any work: a malformed file throws
+    val fl = committed.floors
     val spark = Tables.SessionConfs.foldLeft(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -365,16 +303,16 @@ object Bench {
     val picked = only
       .map(sel => SparkEntry.queries.filter { case (k, _) => sel(k) })
       .getOrElse(SparkEntry.queries)
+    def secs(body: => Any): Double = {
+      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
+    }
     // machine-speed canary: a fixed engine-independent workload (range
     // sum through whole-stage codegen). Its ratio vs the committed
-    // clean-window floor (BASELINE.md, `canary floor:`) tells the READER
+    // clean-window floor (`canary_floor`) tells the READER
     // whether a window measured the VM or the engine — and tells THIS
     // HARNESS which rounds to drop.
-    def canarySample(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(200000000L).selectExpr("sum(id * 3 + 1)").collect()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def canarySample(): Double =
+      secs(spark.range(200000000L).selectExpr("sum(id * 3 + 1)").collect())
     // the first canary execution compiles its codegen (~0.3-4 s cold);
     // warm it once so bracket samples measure the machine, not the JIT
     canarySample()
@@ -394,12 +332,8 @@ object Bench {
     // short query at ~2-2.5x and multi-second write-path queries at
     // ~1.1-1.4x). Emitted as provenance only; the clean gate stays on
     // the CPU canary until a quiet-window floor exists for this one.
-    def schedCanary(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0, 1024, 1, 8).repartition(cpus.toInt)
-        .repartition(7).count()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def schedCanary(): Double =
+      secs(spark.range(0, 1024, 1, 8).repartition(cpus.toInt).repartition(7).count())
     schedCanary() // warm its codegen/plan once, same as the CPU canary
     // I/O canary: a small parquet write+read round-trip — the THIRD
     // machine dimension, which neither the CPU canary (one codegen
@@ -412,38 +346,38 @@ object Bench {
     // disk, not the engine — adjudicate them by isolated re-check.
     def ioCanary(): Double = {
       val dir = java.nio.file.Files.createTempDirectory("graft-iocanary")
-      val t0 = System.nanoTime()
-      spark.range(0L, 2000000L, 1L, 8)
-        .selectExpr("id", "id * 7 as v")
-        // the committed io floor was measured with snappy data files;
-        // the round-16 zstd session default must not move the CANARY —
-        // the instrument keeps its floor-era codec explicitly
-        .write.mode("overwrite").option("compression", "snappy")
-        .parquet(s"$dir/p")
-      spark.read.parquet(s"$dir/p").count()
-      val secs = (System.nanoTime() - t0) / 1e9
+      val t = secs {
+        spark.range(0L, 2000000L, 1L, 8)
+          .selectExpr("id", "id * 7 as v")
+          // the committed io floor was measured with snappy data files;
+          // the round-16 zstd session default must not move the CANARY —
+          // the instrument keeps its floor-era codec explicitly
+          .write.mode("overwrite").option("compression", "snappy")
+          .parquet(s"$dir/p")
+        spark.read.parquet(s"$dir/p").count()
+      }
       graft.table.GraftTable.deleteTree(dir)
-      secs
+      t
     }
     ioCanary() // warm the write/read codegen + committer paths
     // one timed execution; a failed query must be visible: negative secs
     def sample(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
-      }
-      val secs = (System.nanoTime() - t0) / 1e9
-      if (ok) secs else -secs
+      var ok = true
+      val t = secs(try fn(spark, sfDir).count() catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}"); ok = false
+      })
+      if (ok) t else -t
     }
     val names = picked.keys.toSeq
-    val cFloor = canaryFloor()
     // the committed canary floor was measured at local[32] and the canary
     // workload parallelizes — at any other thread count the comparison is
     // meaningless (observed: CPUS=8 reads ~4x the floor on an idle box),
     // so round cleanliness is only judged at the driver's 32-thread
-    // config; other configs run exactly `runs` rounds and keep everything
-    val gateFloor = if (cpus == "32") cFloor else None
+    // config; other configs count every round clean, so they run
+    // max(runs, CleanRounds) rounds and keep them all. The sched and io
+    // floors were measured at local[32] too.
+    def at32(f: Option[Double]) = if (cpus == "32") f else None
+    val gateFloor = at32(committed.canaryFloor)
     val samples = scala.collection.mutable.Map[String, Vector[Double]]()
       .withDefaultValue(Vector.empty)
     val brackets = scala.collection.mutable.ArrayBuffer[Bracket]()
@@ -458,9 +392,11 @@ object Bench {
         .asScala.map(b => math.max(b.getCollectionTime, 0L)).sum / 1e3
     }
     var gcPrev = gcSecs()
-    def cleanCount: Int = cleanFlags(brackets.toSeq, gateFloor, cleanThresh).count(identity)
+    def cleanCount: Int = cleanFlags(brackets.toSeq, gateFloor, CanaryClean).count(identity)
     var round = 0
-    while (round < runs || (round < maxRounds && cleanCount < cleanTarget)) {
+    // bounded retry budget: keep adding rounds (up to MaxRounds total)
+    // until CleanRounds rounds have clean brackets
+    while (round < runs || (round < MaxRounds && cleanCount < CleanRounds)) {
       val pre = canarySample()
       val sched = schedCanary()
       val io = ioCanary()
@@ -479,30 +415,26 @@ object Bench {
         f"sched ${sched}%.3f io ${io}%.3f gc ${gcRound}%.1fs heap ${heapMb}MB " +
         f"clean_rounds=$cleanCount")
     }
-    val kept = keptRounds(brackets.toSeq, gateFloor, cleanThresh)
+    val kept = keptRounds(brackets.toSeq, gateFloor, CanaryClean)
     // any failed sample poisons the query: report the (negative) median
     // of magnitudes so the failure is visible regardless of sample order
     def medOf(xs: Vector[Double]): Double =
       if (xs.isEmpty) 0.0
       else if (xs.forall(_ > 0)) median(xs) else -median(xs.map(math.abs))
-    val fl = floors()
-    // scheduling-canary verdict inputs: kept-round median vs the committed
-    // quiet-window floor (32-thread config only, same rule as the CPU
-    // canary). The EXCESS over the floor is the additive dispatch-latency
-    // term of THIS window — the machine term that dominates sub-second
-    // queries and that the CPU canary provably cannot see.
-    def schedKeptSamples(kept: Seq[Boolean]): Seq[Double] =
-      schedRounds.toSeq.zip(kept).collect { case (s, true) => s }
-    val schedFloorV = if (cpus == "32") schedFloor() else None
-    // floor classes (BASELINE.md `floor class <name> (tolerance Nx): ...`):
-    // queries whose floor doesn't measure the engine alone (subprocess-
-    // bound interop) are judged at their class tolerance and reported
-    // under `floor_classes`, never in the default 2x lists — a loaded
-    // machine otherwise flags the OS fork path without measuring the
-    // engine at all (the round-12 blind spot)
-    val fclasses = floorClasses()
+    def keptMedian(xs: Seq[Double]): Option[Double] = {
+      val k = xs.zip(kept).collect { case (s, true) => s }
+      if (k.nonEmpty) Some(median(k)) else None
+    }
+    val schedFloorV = at32(committed.schedFloor)
+    val ioFl = at32(committed.ioFloor)
+    // floor classes: queries whose floor doesn't measure the engine alone
+    // (subprocess-bound interop) are judged at their class tolerance and
+    // reported under `floor_classes`, never in the default 2x lists — a
+    // loaded machine otherwise flags the OS fork path without measuring
+    // the engine at all (the round-12 blind spot)
+    val fclasses = committed.floorClasses
     val classOf: Map[String, (String, Double)] = fclasses.flatMap {
-      case (c, (tol, ks)) => ks.map(k => k -> ((c, tol)))
+      case (c, fc) => fc.keys.map(k => k -> ((c, fc.tolerance)))
     }
     def flaggedOf(res: Map[String, Double]): Seq[(String, Double)] =
       res.toSeq.flatMap { case (k, v) =>
@@ -540,11 +472,10 @@ object Bench {
       tailBracket = Some(Bracket(pre, post))
     }
     val tailKept = tailBracket.exists(b =>
-      cleanFlags(Seq(b), gateFloor, cleanThresh).head)
+      cleanFlags(Seq(b), gateFloor, CanaryClean).head)
     val results = names.map(n =>
       n -> medOf(selectSamples(samples(n), kept, tailSamples(n), tailKept))).toMap
-    val qs = names.map(k => s"\"" + k + "\":" + results(k))
-      .mkString("{", ",", "}")
+    val qs = names.map(k => "\"" + k + "\":" + results(k)).mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     // the canary that normalizes the verdict is the median over the SAME
     // rounds the query medians came from — kept-round brackets (plus the
@@ -553,8 +484,8 @@ object Bench {
     val usedBrackets = brackets.toSeq.zip(kept).collect { case (b, true) => b } ++
       (if (tailKept) tailBracket.toSeq else Nil)
     val canary = median(usedBrackets.flatMap(b => Seq(b.pre, b.post)))
-    // vs-floor verdict: per-query median / best committed BASELINE.md
-    // column; flagged = ratio > 2 (the documented noise tolerance)
+    // vs-floor verdict: per-query median / committed floor;
+    // flagged = ratio > 2 (the documented noise tolerance)
     val ratios = results.toSeq.flatMap { case (k, v) =>
       fl.get(k).filter(_ => v > 0).map(f => k -> v / f)
     }
@@ -568,9 +499,13 @@ object Bench {
     // steal-aware selection the kept windows are usually clean, so the
     // normalization is ~identity; it earns its keep exactly when no
     // clean window existed all run.
-    val canaryR = cFloor.map(canary / _)
-    val schedKept = schedKeptSamples(kept)
-    val schedSecV = if (schedKept.nonEmpty) Some(median(schedKept)) else None
+    val canaryR = committed.canaryFloor.map(canary / _)
+    // scheduling-canary verdict inputs: kept-round median vs the committed
+    // quiet-window floor (32-thread config only, same rule as the CPU
+    // canary). The EXCESS over the floor is the additive dispatch-latency
+    // term of THIS window — the machine term that dominates sub-second
+    // queries and that the CPU canary provably cannot see.
+    val schedSecV = keptMedian(schedRounds.toSeq)
     val schedExcess = for { f <- schedFloorV; s <- schedSecV }
       yield math.max(0.0, s - f)
     // canary-normalized per-query ratios (None when no canary floor):
@@ -592,7 +527,7 @@ object Bench {
       normRatios.getOrElse(Nil)
         .filter { case (k, r) => r > 2.0 && !classOf.contains(k) }.map(_._1) ++
       classFlaggedOf(results).map(_._1)).distinct.take(12)
-    val (recheckJson, recheckVerdicts): (String, Seq[RecheckVerdict]) =
+    val (recheckDetail, recheckVerdicts): (String, Seq[RecheckVerdict]) =
       if (recheckKeys.isEmpty) ("null", Nil) else {
       // the recheck defends its OWN window ([[recheckAttemptClean]]):
       // an attempt whose brackets read dirty retries (bounded, with an
@@ -600,31 +535,23 @@ object Bench {
       // pause lost to a multi-minute steal window, leaving every flag
       // unadjudicated); keys never measured inside a clean attempt are
       // published `window_dirty: true` instead of standing as evidence.
-      val maxAttempts = sys.env.getOrElse("SPARK_GRAFT_RECHECK_ATTEMPTS", "5")
-        .toInt.max(1)
-      val backoffBase = sys.env.getOrElse("SPARK_GRAFT_RECHECK_BACKOFF_MS", "10000")
-        .toLong.max(0)
-      val backoffCap = sys.env.getOrElse("SPARK_GRAFT_RECHECK_BACKOFF_CAP_MS", "120000")
-        .toLong.max(backoffBase)
-      val ioThresh = sys.env.getOrElse("SPARK_GRAFT_IO_CLEAN", "2.0").toDouble
-      val ioFl = if (cpus == "32") ioFloor() else None
       // io-bound keys are adjudicable only under the STRICT io multiple
-      // ([[recheckKeyDirty]]); with no committed phrase the strict bar
+      // ([[recheckKeyDirty]]); with no committed threshold the strict bar
       // degrades to the loose one and the rule is the round-13 behavior
-      val ioBound = ioBoundKeys()
-      val strictT = ioCleanStrict().getOrElse(ioThresh)
+      val ioBound = committed.ioBound
+      val strictT = committed.ioCleanThreshold.getOrElse(IoClean)
       val anyIoBound = recheckKeys.exists(ioBound)
       final case class Attempt(cpu: Bracket, io: Bracket, clean: Boolean)
       // last measurement per key (overwritten until a clean attempt)
       val measured = scala.collection.mutable.Map[String, (Double, Boolean)]()
-      val attempts = retryUntilClean(maxAttempts, backoffBase, backoffCap,
+      val attempts = retryUntilClean(RecheckAttempts, RecheckBackoffMs, RecheckBackoffCapMs,
         Thread.sleep, { _ =>
           val pre = warmedCanary(); val ioPre = ioCanary()
           val secs = recheckKeys.map(k => k -> medOf(Vector.fill(2)(sample(k, picked(k)))))
           val post = warmedCanary(); val ioPost = ioCanary()
           val ioB = Bracket(ioPre, ioPost)
           val baseClean = recheckAttemptClean(Bracket(pre, post), gateFloor,
-            cleanThresh, ioB, ioFl, ioThresh)
+            CanaryClean, ioB, ioFl, IoClean)
           secs.foreach { case (k, s) =>
             measured(k) = (s, recheckKeyDirty(baseClean, ioBound(k), ioB, ioFl, strictT))
           }
@@ -636,20 +563,13 @@ object Bench {
         RecheckVerdict(k, sec, fl.get(k).filter(_ => sec > 0).map(sec / _),
           ioBound(k), dirty)
       }
-      val entries = verdicts.map { v =>
-        s"""\"${v.key}\":{"sec":${f"${v.sec}%.3f"},""" +
-          s""""ratio":${v.ratio.map(r => f"$r%.2f").getOrElse("null")},""" +
-          s""""io_bound":${v.ioBound},"window_dirty":${v.windowDirty}}"""
-      }
-      val attJson = attempts.map(a =>
-        s"""{"canary_pre":${f"${a.cpu.pre}%.3f"},"canary_post":${f"${a.cpu.post}%.3f"},""" +
-          s""""io_pre":${f"${a.io.pre}%.3f"},"io_post":${f"${a.io.post}%.3f"},"clean":${a.clean}}""")
+      def bracketFields(a: Attempt) =
+        s""""canary_pre":${f"${a.cpu.pre}%.3f"},"canary_post":${f"${a.cpu.post}%.3f"},""" +
+          s""""io_pre":${f"${a.io.pre}%.3f"},"io_post":${f"${a.io.post}%.3f"}"""
+      val attJson = attempts.map(a => s"""{${bracketFields(a)},"clean":${a.clean}}""")
         .mkString("[", ",", "]")
-      val last = attempts.last
-      (s"""{"queries":${entries.mkString("{", ",", "}")},"attempts":$attJson,""" +
-        s""""canary_pre":${f"${last.cpu.pre}%.3f"},"canary_post":${f"${last.cpu.post}%.3f"},""" +
-        s""""io_pre":${f"${last.io.pre}%.3f"},"io_post":${f"${last.io.post}%.3f"}}""",
-        verdicts)
+      (s"""{"queries":${recheckJson(verdicts)},"attempts":$attJson,""" +
+        s"""${bracketFields(attempts.last)}}""", verdicts)
     }
     // headline pieces, shared by the full detail line and the summary line
     val medRatioOpt = if (ratios.isEmpty) None else Some(median(ratios.map(_._2)))
@@ -657,28 +577,18 @@ object Bench {
     val flaggedNormList = normRatios.getOrElse(Nil)
       .filter { case (k, r) => r > 2.0 && !classOf.contains(k) }.sortBy(-_._2)
     val vsFloor = if (ratios.isEmpty) "null" else {
-      val medR = medRatioOpt.get
-      val fj = flagged.map { case (k, r) => s"\"" + k + "\":" + f"$r%.2f" }
-        .mkString("{", ",", "}")
       val norm = normMedOpt.map { nm =>
-        val nf = flaggedNormList
-          .map { case (k, r) => s"\"" + k + "\":" + f"$r%.2f" }
-          .mkString("{", ",", "}")
-        s""","median_ratio_normalized":${f"$nm%.3f"},"flagged_normalized":$nf"""
+        s""","median_ratio_normalized":${f"$nm%.3f"},""" +
+          s""""flagged_normalized":${ratioMap(flaggedNormList)}"""
       }.getOrElse("")
       // per-class report: every tagged query's ratio plus the flags that
       // exceed the CLASS tolerance — separated from the default lists so
       // a subprocess-bound ratio never masquerades as an engine verdict
       val fcJson = if (fclasses.isEmpty) "" else {
-        val parts = fclasses.toSeq.sortBy(_._1).map { case (c, (tol, ks)) =>
-          val rs = ratios.filter { case (k, _) => ks(k) }
-          val rj = rs.sortBy(_._1)
-            .map { case (k, r) => s"\"" + k + "\":" + f"$r%.2f" }
-            .mkString("{", ",", "}")
-          val fj2 = rs.filter(_._2 > tol).sortBy(-_._2)
-            .map { case (k, r) => s"\"" + k + "\":" + f"$r%.2f" }
-            .mkString("{", ",", "}")
-          s""""$c":{"tolerance":$tol,"ratios":$rj,"flagged":$fj2}"""
+        val parts = fclasses.toSeq.sortBy(_._1).map { case (c, fc) =>
+          val rs = ratios.filter { case (k, _) => fc.keys(k) }
+          s""""$c":{"tolerance":${fc.tolerance},"ratios":${ratioMap(rs.sortBy(_._1))},""" +
+            s""""flagged":${ratioMap(rs.filter(_._2 > fc.tolerance).sortBy(-_._2))}}"""
         }
         s""","floor_classes":${parts.mkString("{", ",", "}")}"""
       }
@@ -692,41 +602,27 @@ object Bench {
         val af = flagged
           .map { case (k, _) => k -> (results(k) - ex) / fl(k) }
           .filter(_._2 > 2.0)
-          .map { case (k, r) => s"\"" + k + "\":" + f"$r%.2f" }
-          .mkString("{", ",", "}")
-        s""","flagged_sched_adjusted":$af"""
+        s""","flagged_sched_adjusted":${ratioMap(af)}"""
       }.getOrElse("")
-      s"""{"median_ratio":${f"$medR%.3f"},"n_compared":${ratios.size},""" +
-        s""""flagged":$fj$norm$adj$fcJson,"flagged_recheck":$recheckJson}"""
+      s"""{"median_ratio":${num3(medRatioOpt)},"n_compared":${ratios.size},""" +
+        s""""flagged":${ratioMap(flagged)}$norm$adj$fcJson,"flagged_recheck":$recheckDetail}"""
     }
     // canary emits top-level: it is meaningful even when no floor rows
     // matched (fresh checkout, SPARK_GRAFT_ONLY on brand-new queries).
     // "rounds" carries full per-round provenance — bracket canaries and
     // whether the round's samples made it into the medians — so a reader
     // can see WHICH windows the verdict stands on.
-    val cr = canaryR.map(f => f"$f%.2f").getOrElse("null")
-    val cleanSeq = cleanFlags(brackets.toSeq, gateFloor, cleanThresh)
-    val roundsJson = brackets.toSeq.zip(kept).map { case (b, k) =>
+    def secs3(xs: Seq[Double]) = xs.map(c => f"$c%.3f").mkString("[", ",", "]")
+    def bracketJson(b: Bracket, k: Boolean) =
       s"""{"pre":${f"${b.pre}%.3f"},"post":${f"${b.post}%.3f"},"kept":$k}"""
-    }.mkString("[", ",", "]")
-    val tailJson = tailBracket.map(b =>
-      s"""{"pre":${f"${b.pre}%.3f"},"post":${f"${b.post}%.3f"},"kept":$tailKept}""")
-      .getOrElse("null")
+    val roundsKept = cleanFlags(brackets.toSeq, gateFloor, CanaryClean).count(identity)
+    val roundsJson = brackets.toSeq.zip(kept).map((bracketJson _).tupled).mkString("[", ",", "]")
+    val tailJson = tailBracket.map(bracketJson(_, tailKept)).getOrElse("null")
     // canary_rounds: flat bracket list in time order (back-compat field)
-    val crs = (brackets.toSeq.flatMap(b => Seq(b.pre, b.post)) ++
-      tailBracket.toSeq.flatMap(b => Seq(b.pre, b.post)))
-      .map(c => f"$c%.3f").mkString("[", ",", "]")
-    val schedJson = schedRounds.map(c => f"$c%.3f").mkString("[", ",", "]")
-    val schedSec = schedSecV.map(s => f"$s%.3f").getOrElse("null")
+    val crs = secs3((brackets.toSeq ++ tailBracket).flatMap(b => Seq(b.pre, b.post)))
     val schedRatioOpt = for { f <- schedFloorV; s <- schedSecV } yield s / f
-    val schedRatio = schedRatioOpt.map(r => f"$r%.2f").getOrElse("null")
-    val ioJson = ioRounds.map(c => f"$c%.3f").mkString("[", ",", "]")
-    val ioKept = ioRounds.toSeq.zip(kept).collect { case (s, true) => s }
-    val ioSecV = if (ioKept.nonEmpty) Some(median(ioKept)) else None
-    val ioSec = ioSecV.map(s => f"$s%.3f").getOrElse("null")
-    val ioFloorV = if (cpus == "32") ioFloor() else None
-    val ioRatioOpt = for { f <- ioFloorV; s <- ioSecV } yield s / f
-    val ioRatio = ioRatioOpt.map(r => f"$r%.2f").getOrElse("null")
+    val ioSecV = keptMedian(ioRounds.toSeq)
+    val ioRatioOpt = for { f <- ioFl; s <- ioSecV } yield s / f
     val rr = toRerun.map("\"" + _ + "\"").mkString("[", ",", "]")
     // aging telemetry: per-round suite wall (sum of that round's samples,
     // magnitudes so a failed query still counts its time) and the
@@ -734,29 +630,28 @@ object Bench {
     val roundWalls: Seq[Double] = (0 until brackets.size).map(r =>
       names.map(n => math.abs(samples(n)(r))).sum)
     val agingR = agingRatio(roundWalls, kept)
-    val agingT = agingThreshold()
-    val agingJson = agingR.map(a => f"$a%.3f").getOrElse("null")
-    val agingTJson = agingT.map(t => f"$t%.2f").getOrElse("null")
+    val agingT = committed.agingThreshold
     val agingExceededOpt = for { a <- agingR; t <- agingT } yield a > t
     val agingExceeded = agingExceededOpt.map(_.toString).getOrElse("null")
     val wallsJson = roundWalls.map(w => f"$w%.2f").mkString("[", ",", "]")
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
       s""""sf":"$sfDir","runs":${brackets.size},"stat":"median","interleaved":true,""" +
-      s""""canary_sec":${f"$canary%.3f"},"canary_ratio":$cr,""" +
-      s""""canary_rounds":$crs,"sched_rounds":$schedJson,"sched_sec":$schedSec,""" +
-      s""""sched_ratio":$schedRatio,""" +
-      s""""io_rounds":$ioJson,"io_sec":$ioSec,"io_ratio":$ioRatio,""" +
+      s""""canary_sec":${f"$canary%.3f"},"canary_ratio":${num2(canaryR)},""" +
+      s""""canary_rounds":$crs,"sched_rounds":${secs3(schedRounds.toSeq)},""" +
+      s""""sched_sec":${num3(schedSecV)},"sched_ratio":${num2(schedRatioOpt)},""" +
+      s""""io_rounds":${secs3(ioRounds.toSeq)},"io_sec":${num3(ioSecV)},""" +
+      s""""io_ratio":${num2(ioRatioOpt)},""" +
       s""""rounds":$roundsJson,"tail":$tailJson,""" +
-      s""""clean_threshold":$cleanThresh,"rounds_kept":${cleanSeq.count(identity)},""" +
+      s""""clean_threshold":$CanaryClean,"rounds_kept":$roundsKept,""" +
       s""""rounds_total":${brackets.size},"reran":$rr,""" +
-      s""""round_walls":$wallsJson,"aging_ratio":$agingJson,""" +
-      s""""aging_threshold":$agingTJson,"aging_exceeded":$agingExceeded,""" +
+      s""""round_walls":$wallsJson,"aging_ratio":${num3(agingR)},""" +
+      s""""aging_threshold":${num2(agingT)},"aging_exceeded":$agingExceeded,""" +
       s""""vs_floor":$vsFloor}""")
     // the compact summary is the FINAL line: the driver's archived tail
     // always carries the adjudicable numbers even though the full detail
     // line above overflows it (round 15; format pinned by BenchParseSpec)
     println(summaryLine(total, medRatioOpt, normMedOpt, canaryR,
-      ioRatioOpt, schedRatioOpt, cleanSeq.count(identity), brackets.size,
+      ioRatioOpt, schedRatioOpt, roundsKept, brackets.size,
       agingR, agingExceededOpt, flagged, flaggedNormList, recheckVerdicts))
     spark.stop()
   }

@@ -36,8 +36,8 @@ object CorpusGraph {
   /** Small-graph fast path bound for [[connectedComponents]]: an edge
     * list at or below this size is collected and solved with driver-side
     * union-find (one job, exact same contract); beyond it the
-    * alternating-star loop runs. Env-tunable via
-    * SPARK_GRAFT_CC_LOCAL_EDGES.
+    * alternating-star loop runs. Callers pass a different bound through
+    * `localEdgeBound`.
     *
     * 100 TB sizing: the edge sets fed here are NOT corpus-scale. A
     * mutual-kNN graph has at most K·N/2 edges pre-filter and the mutual
@@ -49,9 +49,7 @@ object CorpusGraph {
     * distributed path automatically; the boundary spec pins that the
     * star-contraction path activates above the bound and agrees with
     * the driver path on the same graph. */
-  val CcLocalEdges: Long =
-    sys.env.get("SPARK_GRAFT_CC_LOCAL_EDGES").flatMap(_.toLongOption)
-      .filter(_ >= 0).getOrElse(1L << 22)
+  val CcLocalEdges: Long = 1L << 22
 
   /** One large-star round: every vertex connects its LARGER neighbors to
     * the minimum of its closed neighborhood. */

@@ -88,12 +88,9 @@ object Sampling {
     * shard, so production sizes NumShards to ~task-sized data (shard ≈
     * corpus / NumShards; at 100 TB and ~1 GB tasks that is ~10⁵ shards —
     * the shard count is the parallelism knob, not a semantic choice).
-    * Env-tunable via SPARK_GRAFT_SHARDS (the oracle SQL interpolates the
-    * same constant, so Spark and the DuckDB replay agree at any value);
-    * default 16 keeps the committed floors comparable. */
-  val NumShards: Int =
-    sys.env.get("SPARK_GRAFT_SHARDS").flatMap(_.toIntOption).filter(_ > 0)
-      .getOrElse(16)
+    * The oracle SQL interpolates the same constant, so Spark and the
+    * DuckDB replay agree; 16 keeps the committed floors comparable. */
+  val NumShards: Int = 16
 
   def trainShuffle(spark: SparkSession, dir: String): DataFrame = {
     val key = md5(concat(lit("shd:"), col("doc_id").cast("string")).cast("binary"))

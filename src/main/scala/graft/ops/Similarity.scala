@@ -180,9 +180,8 @@ object Similarity {
     * integer arithmetic — independent of partition order — and the DuckDB
     * oracle reproduces the centroids bit-for-bit.
     *
-    * GEOMETRY SCALES WITH THE CORPUS: lists = max(32, floor(sqrt(N)))
-    * (overridable via SPARK_GRAFT_IVF_LISTS), so each list holds ~sqrt(N)
-    * vectors and the per-list candidate join stays flat as data grows —
+    * GEOMETRY SCALES WITH THE CORPUS: lists = max(32, floor(sqrt(N))),
+    * so each list holds ~sqrt(N) vectors and the per-list candidate join stays flat as data grows —
     * at N = 10^10 that is ~10^5 lists of ~10^5 vectors, not N/32 per
     * list. Probe counts derive from the list count (probes = lists/8
     * floored at the historical 4; the kNN-graph build probes 3·lists/16
@@ -193,8 +192,7 @@ object Similarity {
   val MinIvfLists = 32
 
   def ivfListsFor(n: Long): Int =
-    sys.env.get("SPARK_GRAFT_IVF_LISTS").map(_.trim.toInt)
-      .getOrElse(math.max(MinIvfLists, math.sqrt(n.toDouble).toLong.toInt))
+    math.max(MinIvfLists, math.sqrt(n.toDouble).toLong.toInt)
 
   def probesFor(lists: Int): Int = math.max(4, lists / 8)
   def knnProbesFor(lists: Int): Int = math.max(6, 3 * lists / 16)
@@ -1088,15 +1086,11 @@ object Similarity {
   /** centroid-assignment CTE chain shared by the IVF and semantic-dedup
     * oracles: seeds → one exact k-means step → refined cents → a1 maps
     * every vector to its nearest refined centroid */
-  /** SQL twin of [[ivfListsFor]]: the env override wins, else
-    * max(32, floor(sqrt(N))) — floor(sqrt) over IEEE doubles is
-    * correctly rounded in both engines, so the list count agrees. */
-  private def listsSqlSelect: String =
-    sys.env.get("SPARK_GRAFT_IVF_LISTS") match {
-      case Some(v) => s"SELECT CAST(${v.trim.toInt} AS BIGINT) AS lists"
-      case None =>
-        s"SELECT GREATEST($MinIvfLists, CAST(floor(sqrt(CAST(COUNT(*) AS DOUBLE))) AS BIGINT)) AS lists FROM e"
-    }
+  /** SQL twin of [[ivfListsFor]]: max(32, floor(sqrt(N))) — floor(sqrt)
+    * over IEEE doubles is correctly rounded in both engines, so the list
+    * count agrees. */
+  private val listsSqlSelect =
+    s"SELECT GREATEST($MinIvfLists, CAST(floor(sqrt(CAST(COUNT(*) AS DOUBLE))) AS BIGINT)) AS lists FROM e"
   private val listsSql = "(SELECT lists FROM prm)"
   /** SQL twins of [[probesFor]] / [[knnProbesFor]] / [[dedupProbesFor]] */
   private val probesSql = s"GREATEST(4, $listsSql // 8)"

@@ -28,14 +28,12 @@ object TextOps {
     * crawl). The side is pinned once (localCheckpoint — one
     * materialization shared by the row count and the join), counted,
     * and broadcast only at or under the tunable row bound
-    * (`graft.text.bcast.rows` system property / SPARK_GRAFT_TEXT_BCAST_ROWS
-    * env, default 4M); past it the caller's equi-join falls back to a
+    * (`graft.text.bcast.rows` system property, default 4M); past it the caller's equi-join falls back to a
     * shuffle — the exact [[graft.table.GraftTable.merge]] bcast-gate
     * pattern (same default bound). PlanSpec pins BroadcastHashJoin at
     * test scale AND drives the fallback (bound=0) to the same result. */
   private[ops] def gatedBroadcast(df: DataFrame): DataFrame = {
     val bound = sys.props.get("graft.text.bcast.rows")
-      .orElse(sys.env.get("SPARK_GRAFT_TEXT_BCAST_ROWS"))
       .flatMap(_.toLongOption).getOrElse(4000000L)
     val pinned = df.localCheckpoint()
     if (pinned.count() <= bound) broadcast(pinned) else pinned

@@ -794,7 +794,6 @@ class GraftTable(val spark: SparkSession, val location: String) extends TableCha
     * set is unknowable until the metadata publishes — a later pass,
     * milliseconds after publish in practice, resumes normal GC). */
   private def leaseGraceMs: Long = sys.props.get("graft.clone.lease.grace.ms")
-    .orElse(sys.env.get("SPARK_GRAFT_CLONE_LEASE_GRACE_MS"))
     .flatMap(_.toLongOption).getOrElse(10L * 60 * 1000)
 
   /** Normalized absolute file paths under this table's root that registered

@@ -3,112 +3,81 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
-/** Pins Bench's BASELINE.md parsing. Round 5's canary-normalized verdict
-  * silently never fired because the `canary floor:` phrase was
-  * line-wrapped in the committed file and the regex wasn't
-  * whitespace-tolerant — this spec makes both the committed-file parse
-  * and the wrap-tolerance named assertions. */
+/** Pins Bench's committed floors and its summary line. The floors once
+  * lived in BASELINE.md prose and were regex-parsed (round 5's
+  * canary-normalized verdict silently never fired because a phrase was
+  * line-wrapped); they now live in `floors.json`, read by
+  * [[Bench.loadFloors]]. The committed-value legs keep their names from
+  * the BASELINE.md era and pin the same values against the file. */
 class BenchParseSpec extends AnyFunSuite {
+  private val committed = Bench.loadFloors()
 
   test("canary floor parses from the committed BASELINE.md") {
-    val f = Bench.canaryFloor()
-    assert(f.nonEmpty, "BASELINE.md lost its `canary floor: N s` phrase")
+    val f = committed.canaryFloor
+    assert(f.nonEmpty, "floors.json lost its canary_floor")
     assert(f.get > 0.0 && f.get < 10.0, s"implausible canary floor: $f")
   }
 
-  test("canary floor parse tolerates a line-wrapped phrase") {
-    val t = Files.createTempFile("baseline", ".md")
-    Files.writeString(t, "blah codegen; canary\nfloor: 0.055 s, measured")
-    assert(Bench.canaryFloor(t.toString).contains(0.055))
-    Files.delete(t)
-  }
-
   test("per-query floors parse from the committed BASELINE.md") {
-    val fl = Bench.floors()
-    assert(fl.size > 100, s"floor table shrank: ${fl.size} rows parsed")
-    // refresh semantics: a LATER table row overrides the main table.
+    val fl = committed.floors
+    assert(fl.size > 100, s"floor table shrank: ${fl.size} rows")
+    // refresh semantics: each value is the latest committed re-floor.
     // q_dedup_jaccard has four generations — the pre-reshape 1.43, the
     // round-7 post-reshape 3.72 (soft: it embedded warm-cache reruns via
     // the since-fixed CacheManager leak), the round-12 honest floor
     // 6.327, and the round-13 xxhash64-key floor; the pin is the
-    // round-13 window-B value, proving the LAST row wins
+    // round-13 window-B value
     assert(fl.get("q_dedup_jaccard").contains(5.87),
-      s"round-13 floor row must override: ${fl.get("q_dedup_jaccard")}")
+      s"round-13 floor must hold: ${fl.get("q_dedup_jaccard")}")
     // round-7 additions present
     assert(fl.contains("q_geo_sphere"))
-    // round-8 refresh of the stale r4-pristine floors must override
+    // round-8 refresh of the stale r4-pristine floors
     assert(fl.get("q_ann_ivf").contains(0.56),
-      s"r8 floor-refresh row must override: ${fl.get("q_ann_ivf")}")
+      s"r8 floor refresh must hold: ${fl.get("q_ann_ivf")}")
     assert(fl.get("q_events_window").contains(0.25))
     // round-11 refresh: the r3/r4-era recheck cluster + the documented
-    // q_stream_topk re-floor override their earlier rows (min of the
-    // two clean-window columns per the committed semantics)
+    // q_stream_topk re-floor (min of the two clean-window columns per
+    // the committed semantics)
     assert(fl.get("q01_pricing_summary").contains(0.326),
-      s"r11 floor-refresh row must override q01: ${fl.get("q01_pricing_summary")}")
+      s"r11 floor refresh must hold for q01: ${fl.get("q01_pricing_summary")}")
     assert(fl.get("q_bm25").contains(0.821),
-      s"r11 floor-refresh row must override q_bm25: ${fl.get("q_bm25")}")
+      s"r11 floor refresh must hold for q_bm25: ${fl.get("q_bm25")}")
     assert(fl.get("q_stream_topk").contains(1.372),
-      s"r11 topk re-floor must override the r10 row: ${fl.get("q_stream_topk")}")
+      s"r11 topk re-floor must hold: ${fl.get("q_stream_topk")}")
     // first floor for the round-11 interop query
     assert(fl.get("q_interop_extbranch").contains(3.655))
     // round-16 re-floors (three-consecutive-sole-flag precedent executed
-    // with an io-1.09x CLEAN window) must override the r8-era rows
+    // with an io-1.09x CLEAN window)
     assert(fl.get("q_overwrite_partitions").contains(1.249),
-      s"r16 re-floor must override: ${fl.get("q_overwrite_partitions")}")
+      s"r16 re-floor must hold: ${fl.get("q_overwrite_partitions")}")
     assert(fl.get("q_update_cow").contains(1.727),
-      s"r16 re-floor must override: ${fl.get("q_update_cow")}")
+      s"r16 re-floor must hold: ${fl.get("q_update_cow")}")
     // first floor for the round-16 escapable-partition seam guard
     assert(fl.get("q_escaped_partition").contains(4.02))
   }
 
   test("sched floor parses from the committed BASELINE.md (round-8 commitment)") {
-    val f = Bench.schedFloor()
-    assert(f.nonEmpty, "BASELINE.md lost its `sched floor: N s` phrase")
+    val f = committed.schedFloor
+    assert(f.nonEmpty, "floors.json lost its sched_floor")
     assert(f.get > 0.0 && f.get < 2.0, s"implausible sched floor: $f")
-    // wrap tolerance, same guarantee as the CPU canary's phrase
-    val t = Files.createTempFile("baseline", ".md")
-    Files.writeString(t, "committed: sched\nfloor: 0.090 s, kept-round median")
-    assert(Bench.schedFloor(t.toString).contains(0.090))
-    Files.delete(t)
   }
 
   test("io floor parses from the committed BASELINE.md (round-8 closing commitment)") {
-    val f = Bench.ioFloor()
-    assert(f.nonEmpty, "BASELINE.md lost its `io floor: N s` phrase")
+    val f = committed.ioFloor
+    assert(f.nonEmpty, "floors.json lost its io_floor")
     assert(f.get > 0.0 && f.get < 5.0, s"implausible io floor: $f")
   }
 
   test("aging threshold parses from the committed BASELINE.md (round-12 commitment)") {
-    val t = Bench.agingThreshold()
-    assert(t.nonEmpty, "BASELINE.md lost its `aging threshold: N` phrase")
+    val t = committed.agingThreshold
+    assert(t.nonEmpty, "floors.json lost its aging_threshold")
     assert(t.get > 1.0 && t.get < 3.0, s"implausible aging threshold: $t")
   }
 
-  test("floor phrases refresh LAST-match-wins, like the per-query floor rows") {
-    // a future round appends a refreshed phrase instead of editing
-    // history — the parse must take the LAST occurrence of each (the
-    // round-12 agingThreshold took the FIRST, silently ignoring any
-    // appended refresh; ADVICE r12)
-    val t = Files.createTempFile("baseline", ".md")
-    Files.writeString(t,
-      """canary floor: 0.055 s (round 3)
-        |sched floor: 0.090 s io floor: 0.33 s aging threshold: 1.5
-        |## later refresh
-        |canary floor: 0.060 s sched floor: 0.095 s
-        |io floor: 0.41 s aging threshold: 1.4
-        |""".stripMargin)
-    assert(Bench.canaryFloor(t.toString).contains(0.060))
-    assert(Bench.schedFloor(t.toString).contains(0.095))
-    assert(Bench.ioFloor(t.toString).contains(0.41))
-    assert(Bench.agingThreshold(t.toString).contains(1.4))
-    Files.delete(t)
-  }
-
   test("floor classes parse from the committed BASELINE.md (round-13 commitment)") {
-    val fc = Bench.floorClasses()
-    assert(fc.contains("subprocess"),
-      "BASELINE.md lost its `floor class subprocess (tolerance Nx):` line")
-    val (tol, keys) = fc("subprocess")
+    val fc = committed.floorClasses
+    assert(fc.contains("subprocess"), "floors.json lost its subprocess floor class")
+    val Bench.FloorClass(tol, keys) = fc("subprocess")
     assert(tol == 3.0, s"committed subprocess tolerance drifted: $tol")
     // the six extwriter three-process queries plus the round-13 pyarrow
     // third-reader pair — floors dominated by interpreter startup, never
@@ -119,18 +88,12 @@ class BenchParseSpec extends AnyFunSuite {
       "q_interop_extmerge", "q_interop_extbranch",
       "q_interop_pyread", "q_interop_pyread_evolved"),
       s"subprocess class membership drifted: $keys")
-    // every tagged query must actually have a floor row — a tag on a
-    // floor-less query would silently judge nothing
-    val fl = Bench.floors()
-    assert(keys.forall(fl.contains), s"tagged query without a floor row: " +
-      keys.filterNot(fl.contains).mkString(", "))
   }
 
   test("io clean threshold + io-bound queries parse from the committed BASELINE.md (round-14 commitment)") {
-    val t = Bench.ioCleanStrict()
-    assert(t.contains(1.35),
-      s"BASELINE.md's `io clean threshold:` phrase drifted: $t")
-    val ks = Bench.ioBoundKeys()
+    val t = committed.ioCleanThreshold
+    assert(t.contains(1.35), s"floors.json's io_clean_threshold drifted: $t")
+    val ks = committed.ioBound
     // the table-format keys whose plan writes the full input table at
     // least once — the class round 8 observed flagging together under
     // neighbor disk traffic, and the class round 13's recheck mis-ruled.
@@ -143,52 +106,49 @@ class BenchParseSpec extends AnyFunSuite {
       "q_update_cow", "q_compaction", "q_maintenance", "q_zorder",
       "q_partition_evolution", "q_sql_ctas", "q_escaped_partition"),
       s"io-bound membership drifted: $ks")
-    // every tagged key must be a registry query with a floor row — a tag
-    // on a floor-less or unknown key would silently judge nothing
-    val fl = Bench.floors()
-    assert(ks.forall(fl.contains), "io-bound key without a floor row: " +
-      ks.filterNot(fl.contains).mkString(", "))
-    assert(ks.subsetOf(SparkEntry.queries.keySet), "io-bound key not in " +
-      "the registry: " + (ks -- SparkEntry.queries.keySet).mkString(", "))
   }
 
-  test("io clean threshold and io-bound list refresh LAST-match-wins, single-line contract") {
-    val t = Files.createTempFile("baseline", ".md")
-    Files.writeString(t,
-      """io clean threshold: 1.35
-        |io-bound queries: q_a q_b
-        |## later refresh
-        |io clean threshold: 1.20
-        |io-bound queries: q_one, q_two q_three
-        |quoting prose that must NOT join the list
-        |""".stripMargin)
-    assert(Bench.ioCleanStrict(t.toString).contains(1.20))
-    assert(Bench.ioBoundKeys(t.toString) == Set("q_one", "q_two", "q_three"),
-      s"parse drifted: ${Bench.ioBoundKeys(t.toString)}")
-    Files.delete(t)
-    // absent phrases: no strict bar (caller degrades to the loose gate),
-    // empty io-bound set (round-13 behavior)
-    val t2 = Files.createTempFile("baseline", ".md")
-    Files.writeString(t2, "no committed phrases here")
-    assert(Bench.ioCleanStrict(t2.toString).isEmpty)
-    assert(Bench.ioBoundKeys(t2.toString).isEmpty)
-    Files.delete(t2)
+  test("floors.json covers exactly the registered queries; every tagged key has a floor") {
+    // a new operator key without a floor would never be judged, and a
+    // floor left behind for a deleted key would judge nothing
+    val fl = committed.floors
+    val reg = SparkEntry.queries.keySet
+    assert(fl.keySet == reg, s"keys without a floor: ${(reg -- fl.keySet).mkString(", ")}; " +
+      s"floors without a key: ${(fl.keySet -- reg).mkString(", ")}")
+    // a tag on a floor-less key would silently judge nothing
+    val tagged = committed.ioBound ++ committed.floorClasses.values.flatMap(_.keys)
+    assert(tagged.forall(fl.contains), "tagged key without a floor: " +
+      tagged.filterNot(fl.contains).mkString(", "))
   }
 
-  test("key lists reject same-line trailing prose (ADVICE r14: greedy q-word absorption)") {
-    // the round-14 regex absorbed ANY q-prefixed word following the keys
-    // on the SAME line ("queries" below would have joined the list);
-    // keys must match the committed registry shape q[digits]*_<word>
-    val t = Files.createTempFile("baseline", ".md")
-    Files.writeString(t,
-      """io-bound queries: q_one q02_two — see the queries quoted above, q.v. round 8
-        |floor class subprocess (tolerance 3.0x): q_a q01_b quoting prose queries
-        |""".stripMargin)
-    assert(Bench.ioBoundKeys(t.toString) == Set("q_one", "q02_two"),
-      s"prose joined the io-bound list: ${Bench.ioBoundKeys(t.toString)}")
-    assert(Bench.floorClasses(t.toString)("subprocess")._2 == Set("q_a", "q01_b"),
-      s"prose joined the class: ${Bench.floorClasses(t.toString)}")
-    Files.delete(t)
+  test("a malformed floors file throws; a missing one means no floors") {
+    val t = Files.createTempFile("floors", ".json")
+    def write(floor: String, aging: String = "1.5", extra: String = "") = Files.writeString(t,
+      s"""{$extra"canary_floor": 0.055, "sched_floor": 0.09, "io_floor": 0.33,
+         | "aging_threshold": $aging, "io_clean_threshold": 1.35,
+         | "io_bound": ["q_a"], "floor_classes": {"c": {"tolerance": 3.0, "keys": ["q_a"]}},
+         | "floors": {"q_a": $floor}}""".stripMargin)
+    try {
+      write("1.25")
+      val ok = Bench.loadFloors(t.toString)
+      assert(ok.floors == Map("q_a" -> 1.25) && ok.agingThreshold.contains(1.5) &&
+        ok.floorClasses == Map("c" -> Bench.FloorClass(3.0, Set("q_a"))), ok)
+      // an integer literal still reads as a Double
+      write("2")
+      assert(Bench.loadFloors(t.toString).floors("q_a") == 2.0)
+      write("\"fast\"")
+      intercept[Exception](Bench.loadFloors(t.toString))
+      write("1.25", aging = "\"1.5x\"")
+      intercept[Exception](Bench.loadFloors(t.toString))
+      // a misspelt or dropped field is an error, not a silently absent floor
+      write("1.25", extra = "\"canary_flor\": 0.06, ")
+      intercept[Exception](Bench.loadFloors(t.toString))
+      Files.writeString(t, """{"floors": {"q_a": 1.25}}""")
+      intercept[Exception](Bench.loadFloors(t.toString))
+    } finally Files.delete(t)
+    val none = Bench.loadFloors(t.toString)
+    assert(none.floors.isEmpty && none.canaryFloor.isEmpty && none.ioBound.isEmpty &&
+      none.floorClasses.isEmpty, none)
   }
 
   test("summary line: single line, compact, carries the adjudicable numbers (round-15 commitment)") {
@@ -225,22 +185,5 @@ class BenchParseSpec extends AnyFunSuite {
       None, None, Nil, Nil, Nil)
     assert(bare.contains("\"median_ratio\":null") &&
       bare.contains("\"recheck\":{}"), bare)
-  }
-
-  test("floor class parse: comma tolerance, single-line list, last-definition-wins") {
-    val t = Files.createTempFile("baseline", ".md")
-    Files.writeString(t,
-      """floor class subprocess (tolerance 2.5x): q_a q_b
-        |refresh:
-        |floor class subprocess (tolerance 3.0x): q_one, q_two q_three
-        |quoting prose that must NOT join the list
-        |""".stripMargin)
-    val fc = Bench.floorClasses(t.toString)
-    // later definition overrides; the list is SINGLE-LINE by contract —
-    // a wrapped list would let any following prose word starting with
-    // 'q' silently join the class ("quoting" above)
-    assert(fc("subprocess") == ((3.0, Set("q_one", "q_two", "q_three"))),
-      s"parse drifted: $fc")
-    Files.delete(t)
   }
 }

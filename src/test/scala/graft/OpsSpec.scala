@@ -529,7 +529,6 @@ class OpsSpec extends SparkSpec {
   }
 
   test("ivf geometry scales with corpus size (lists ~ sqrt(N), probes track lists)") {
-    assume(sys.env.get("SPARK_GRAFT_IVF_LISTS").isEmpty)
     // floor at the historical 32-list geometry for small corpora
     assert(Similarity.ivfListsFor(500) == 32)
     assert(Similarity.ivfListsFor(1024) == 32)
