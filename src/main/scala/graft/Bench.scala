@@ -29,8 +29,9 @@ import java.lang.{Double => JDouble}
   * adjudication) and the JSON says so via per-round provenance. */
 object Bench {
   // Sampling and recheck policy: fixed, every committed run used these.
-  /** rounds keep running, up to this many in total (or SPARK_GRAFT_RUNS
-    * when larger), until [[CleanRounds]] rounds are clean */
+  /** where the canary floor applies, rounds keep running, up to this many
+    * in total (or SPARK_GRAFT_RUNS when larger), until [[CleanRounds]]
+    * rounds are clean; elsewhere exactly SPARK_GRAFT_RUNS rounds run */
   val MaxRounds = 7
   val CleanRounds = 3
   /** a round is clean when both canary brackets read under this
@@ -372,10 +373,10 @@ object Bench {
     // the committed canary floor was measured at local[32] and the canary
     // workload parallelizes — at any other thread count the comparison is
     // meaningless (observed: CPUS=8 reads ~4x the floor on an idle box),
-    // so round cleanliness is only judged at the driver's 32-thread
-    // config; other configs count every round clean, so they run
-    // max(runs, CleanRounds) rounds and keep them all. The sched and io
-    // floors were measured at local[32] too.
+    // so round cleanliness, the retry budget and the canary ratio are only
+    // judged at the driver's 32-thread config; other configs count every
+    // round clean, run exactly `runs` rounds and keep them all. The sched
+    // and io floors were measured at local[32] too.
     def at32(f: Option[Double]) = if (cpus == "32") f else None
     val gateFloor = at32(committed.canaryFloor)
     val samples = scala.collection.mutable.Map[String, Vector[Double]]()
@@ -396,7 +397,8 @@ object Bench {
     var round = 0
     // bounded retry budget: keep adding rounds (up to MaxRounds total)
     // until CleanRounds rounds have clean brackets
-    while (round < runs || (round < MaxRounds && cleanCount < CleanRounds)) {
+    while (round < runs ||
+        (gateFloor.isDefined && round < MaxRounds && cleanCount < CleanRounds)) {
       val pre = canarySample()
       val sched = schedCanary()
       val io = ioCanary()
@@ -499,7 +501,7 @@ object Bench {
     // steal-aware selection the kept windows are usually clean, so the
     // normalization is ~identity; it earns its keep exactly when no
     // clean window existed all run.
-    val canaryR = committed.canaryFloor.map(canary / _)
+    val canaryR = gateFloor.map(canary / _)
     // scheduling-canary verdict inputs: kept-round median vs the committed
     // quiet-window floor (32-thread config only, same rule as the CPU
     // canary). The EXCESS over the floor is the additive dispatch-latency
@@ -577,10 +579,10 @@ object Bench {
     val flaggedNormList = normRatios.getOrElse(Nil)
       .filter { case (k, r) => r > 2.0 && !classOf.contains(k) }.sortBy(-_._2)
     val vsFloor = if (ratios.isEmpty) "null" else {
-      val norm = normMedOpt.map { nm =>
-        s""","median_ratio_normalized":${f"$nm%.3f"},""" +
-          s""""flagged_normalized":${ratioMap(flaggedNormList)}"""
-      }.getOrElse("")
+      // null / {} when no canary floor applies (fresh checkout, or a
+      // thread count the floor was not measured at): same field paths
+      val norm = s""","median_ratio_normalized":${num3(normMedOpt)},""" +
+        s""""flagged_normalized":${ratioMap(flaggedNormList)}"""
       // per-class report: every tagged query's ratio plus the flags that
       // exceed the CLASS tolerance — separated from the default lists so
       // a subprocess-bound ratio never masquerades as an engine verdict

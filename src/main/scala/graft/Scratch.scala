@@ -18,6 +18,10 @@ object Scratch {
   /** a fresh scratch directory, reclaimed at JVM exit */
   def dir(prefix: String): Path = Files.createTempDirectory(root, prefix)
 
+  /** a fresh table location (not yet created) inside a fresh scratch
+    * directory */
+  def table(): String = dir("q").resolve("t").toString
+
   /** best-effort recursive delete (exit path: never throws) */
   def deleteRecursively(p: Path): Unit =
     try graft.table.GraftTable.deleteTree(p, bestEffort = true) catch { case _: Exception => () }

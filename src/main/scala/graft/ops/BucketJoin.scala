@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -61,7 +59,7 @@ object BucketJoin {
   /** driver query: orders ⋈ customer, both bucketed 8-ways on custkey;
     * readback aggregates per market segment */
   def bucketJoinQuery(spark: SparkSession, dir: String): DataFrame = {
-    val base = Files.createTempDirectory("graft-bj")
+    val base = graft.Scratch.dir("bj")
     val facts = GraftTable.create(spark, base.resolve("orders").toString,
       "o_orderkey bigint, o_custkey bigint, o_totalprice double",
       partitionBy = Seq("bucket(8, o_custkey)"))

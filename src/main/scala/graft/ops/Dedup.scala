@@ -45,37 +45,21 @@ object Dedup {
     shingleArr(docs).select(col("doc_id"), explode(col("sh")).as("s0"))
       .select(col("doc_id"), xxhash64(col("s0")).as("s"))
 
-  /** Candidate pairs for exact Jaccard: self-equi-join on the shingle,
-    * restricted to shingles whose document frequency is ≤ maxDf. Without
-    * the cap one hot shingle shared by k docs emits k²/2 candidate rows —
-    * a skew bomb at corpus scale (a boilerplate phrase in a million docs
+  /** The df cap on Jaccard candidates: a pair is a candidate iff it
+    * shares a shingle whose document frequency is ≤ maxDf. Without the
+    * cap one hot shingle shared by k docs emits k²/2 candidate rows — a
+    * skew bomb at corpus scale (a boilerplate phrase in a million docs
     * would emit 5·10¹¹ pairs). With it, any shingle emits at most
     * maxDf²/2 rows regardless of corpus size, and a pair is still found
     * as long as it shares ONE sub-cap shingle — near-dup pairs share
     * many, overwhelmingly including rare ones. The df filter is a plain
     * equi-join against the aggregated df table (NOT a broadcast of the
     * hot set: at 10¹² shingle occurrences the >cap set can itself be
-    * billions of keys); after the filter every join key carries ≤ maxDf
-    * rows, so the self-join has no skew left by construction. */
-  private[ops] def candidatesFromShingles(sh: DataFrame, maxDf: Int): DataFrame = {
-    val rare = sh.join(
-      sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
-        .filter(col("df") <= maxDf).select("s"),
-      "s")
-    rare.as("a").join(rare.as("b"),
-        col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .distinct()
-  }
-
-  /** spec hook: df-capped candidate pairs straight from documents */
-  private[graft] def jaccardCandidates(docs: DataFrame, maxDf: Int): DataFrame =
-    candidatesFromShingles(shingles(docs), maxDf)
-
-  /** default df cap: bounds any shingle's candidate fan-out to ≤ 256²/2
-    * rows at ANY corpus size while excluding nothing in practice — a true
-    * near-dup pair virtually always shares rare shingles too (testdata
-    * max df is 25; a natural-corpus shingle with df > 256 is boilerplate) */
+    * billions of keys). The default bounds any shingle's candidate
+    * fan-out to ≤ 256²/2 rows at ANY corpus size while excluding nothing
+    * in practice — a true near-dup pair virtually always shares rare
+    * shingles too (testdata max df is 25; a natural-corpus shingle with
+    * df > 256 is boilerplate) */
   val JACCARD_MAX_DF = 256
 
   /** Exact Jaccard verification of a candidate pair set, in the NARROW
@@ -106,7 +90,7 @@ object Dedup {
 
   /** n-gram Jaccard pairs ≥ tau with df-capped candidates: a pair is
     * examined iff it shares ≥1 shingle with df ≤ maxDf (skew-safe, see
-    * [[candidatesFromShingles]]), and its Jaccard value is EXACT over
+    * [[JACCARD_MAX_DF]]), and its Jaccard value is EXACT over
     * the full uncapped shingle sets. The full intersection splits by
     * the cap — |A∩B| = shared-rare + shared-hot — so:
     *
@@ -247,15 +231,6 @@ object Dedup {
         }
       }
       .toDF("doc_id", "band", "sig")
-  }
-
-  def minhashCandidates(docs: DataFrame): DataFrame = {
-    val sigs = bandSigs(shingleArr(docs)).drop("sh")
-    sigs.as("a").join(sigs.as("b"),
-        col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .distinct()
   }
 
   /** LSH candidates verified with exact Jaccard over the full shingle

@@ -1,14 +1,12 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import scala.annotation.unused
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.table._
 
 /** Driver-contract queries for the graft table format (SURVEY.md §2.1).
@@ -22,9 +20,6 @@ import graft.table._
 object GraftOps {
   type Q = (SparkSession, String) => DataFrame
 
-  private def scratch(): String =
-    Files.createTempDirectory("graft-q").resolve("t").toString
-
   private def d(c: Column): Column = c.cast("double")
   private def dec(c: Column): Column = c.cast(DecimalType(18, 2))
 
@@ -35,7 +30,7 @@ object GraftOps {
   private def mkOrders(spark: SparkSession,
       partitionBy: Seq[String] = Nil,
       props: Map[String, String] = Map.empty): GraftTable =
-    GraftTable.create(spark, scratch(), ordersDdl, partitionBy, props)
+    GraftTable.create(spark, Scratch.table(), ordersDdl, partitionBy, props)
 
   private def orders(spark: SparkSession, dir: String): DataFrame =
     Tables(spark, dir, "orders")
@@ -53,7 +48,7 @@ object GraftOps {
 
   // --- #1 table creation ----------------------------------------------------
   def tableCreate(spark: SparkSession, dir: String): DataFrame = {
-    val t = GraftTable.create(spark, scratch(),
+    val t = GraftTable.create(spark, Scratch.table(),
       "n_nationkey bigint, n_name string, n_regionkey bigint")
     t.append(Tables(spark, dir, "nation").select("n_nationkey", "n_name", "n_regionkey"))
     t.scan().orderBy("n_nationkey")
@@ -149,7 +144,7 @@ object GraftOps {
 
   // --- #10 schema evolution: add/rename/drop/promote, metadata-only --------
   def schemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val t = GraftTable.create(spark, scratch(),
+    val t = GraftTable.create(spark, Scratch.table(),
       "p_partkey bigint, p_name string, p_type string, p_size int, p_retailprice double")
     val p = Tables(spark, dir, "part")
     t.append(p.filter(col("p_partkey") % 2 === 0)
@@ -167,7 +162,7 @@ object GraftOps {
 
   // --- #11 type promotion: int->bigint, float->double, no rewrite ----------
   def typePromotion(spark: SparkSession, dir: String): DataFrame = {
-    val t = GraftTable.create(spark, scratch(), "k int, size int, price float")
+    val t = GraftTable.create(spark, Scratch.table(), "k int, size int, price float")
     val p = Tables(spark, dir, "part")
     t.append(p.filter(col("p_partkey") % 2 === 0)
       .select(col("p_partkey").cast("int").as("k"), col("p_size").as("size"),
@@ -182,7 +177,7 @@ object GraftOps {
 
   // --- #12 column default values (v3) ---------------------------------------
   def columnDefaults(spark: SparkSession, dir: String): DataFrame = {
-    val t = GraftTable.create(spark, scratch(), "o_orderkey bigint, o_totalprice double")
+    val t = GraftTable.create(spark, Scratch.table(), "o_orderkey bigint, o_totalprice double")
     val o = orders(spark, dir)
     t.append(o.filter(col("o_orderkey") % 2 === 0).select("o_orderkey", "o_totalprice"))
     t.addColumn("channel", "string", initialDefault = Some("'web'"))
@@ -390,7 +385,7 @@ object GraftOps {
     t.append(o.filter(col("o_orderkey") % 4 === 0))
     t.append(o.filter(col("o_orderkey") % 4 === 1))
     t.delete("o_orderkey % 10 = 0", WriteMode.MergeOnRead)
-    val c = t.shallowClone(scratch())
+    val c = t.shallowClone(Scratch.table())
     c.append(o.filter(col("o_orderkey") % 4 === 2))
     t.append(o.filter(col("o_orderkey") % 4 === 3))
     aggByStatus(t.scan()).withColumn("side", lit("source"))
@@ -435,7 +430,7 @@ object GraftOps {
 
   // --- #16 hidden partitioning: day(ts), pruning exercised -------------------
   def hiddenPartitioning(spark: SparkSession, dir: String): DataFrame = {
-    val t = GraftTable.create(spark, scratch(),
+    val t = GraftTable.create(spark, Scratch.table(),
       "event_id bigint, ts timestamp, user_id bigint, event_type string, value double",
       partitionBy = Seq("day(ts)"))
     t.append(Tables(spark, dir, "events")
@@ -451,7 +446,7 @@ object GraftOps {
     * corrected values; only that day's partition swaps, every other
     * partition's files survive untouched (the daily-backfill primitive) */
   def overwritePartitionsQuery(spark: SparkSession, dir: String): DataFrame = {
-    val t = GraftTable.create(spark, scratch(),
+    val t = GraftTable.create(spark, Scratch.table(),
       "event_id bigint, ts timestamp, user_id bigint, event_type string, value double",
       partitionBy = Seq("day(ts)"))
     val ev = Tables(spark, dir, "events")
@@ -479,7 +474,7 @@ object GraftOps {
     * itself (ManifestScanSpec pins the identity; this key makes the
     * DuckDB hash gate guard the seam end-to-end, permanently). */
   def escapedPartition(spark: SparkSession, dir: String): DataFrame = {
-    val t = GraftTable.create(spark, scratch(),
+    val t = GraftTable.create(spark, Scratch.table(),
       ordersDdl + ", o_tag string", partitionBy = Seq("o_tag"))
     // a third of orders is plenty for the seam — the key guards path
     // encoding, not scale (the write family's scale probe lives elsewhere)
@@ -538,7 +533,7 @@ object GraftOps {
 
   // --- #20 parquet bloom filters via write options ---------------------------
   def bloomFilter(spark: SparkSession, dir: String): DataFrame = {
-    val t = GraftTable.create(spark, scratch(), ordersDdl, Nil,
+    val t = GraftTable.create(spark, Scratch.table(), ordersDdl, Nil,
       // o_custkey is field id 2 -> physical column f2
       Map("write.option.parquet.bloom.filter.enabled#f2" -> "true",
         "write.option.parquet.bloom.filter.expected.ndv#f2" -> "20000"))
@@ -553,7 +548,7 @@ object GraftOps {
     * hits the SECOND z dimension, which a linear sort could not prune —
     * per-file min/max stay tight on both dims (see table/ZOrder.scala) */
   def zorderCluster(spark: SparkSession, dir: String): DataFrame = {
-    val t = GraftTable.create(spark, scratch(), ordersDdl, Nil,
+    val t = GraftTable.create(spark, Scratch.table(), ordersDdl, Nil,
       Map("write.zorder" -> "o_custkey,o_orderkey",
         "write.target-partitions" -> "16"))
     t.append(orders(spark, dir))
@@ -592,7 +587,7 @@ object GraftOps {
   private def catalogOpsOn(spark: SparkSession,
       mk: String => Catalog): DataFrame = {
     import spark.implicits._
-    val wh = Files.createTempDirectory("graft-wh").toString
+    val wh = Scratch.dir("wh").toString
     val cat = mk(wh)
     cat.createNamespace("db1")
     cat.createNamespace("db2")
@@ -621,7 +616,7 @@ object GraftOps {
     * on wall clock / write parallelism, and the gate needs exact rows. */
   def metaTablesQ(spark: SparkSession, @unused dir: String): DataFrame = {
     import spark.implicits._
-    val t = GraftTable.create(spark, scratch(),
+    val t = GraftTable.create(spark, Scratch.table(),
       "id bigint, status string, total double", Seq("identity(status)"))
     val rows = (1L to 30L).map(i => (i, if (i % 3 == 0) "A" else "B", i * 1.5))
     t.append(rows.toDF("id", "status", "total"))                    // snap 1
@@ -691,7 +686,7 @@ object GraftOps {
     * snapshot commit through the same paths the DataFrame API uses */
   def sqlDml(spark: SparkSession, dir: String): DataFrame =
     withSqlSession(spark) { s2 =>
-      val wh = Files.createTempDirectory("graft-sqlwh").toString
+      val wh = Scratch.dir("sqlwh").toString
       s2.conf.set("spark.graft.warehouse", wh)
       new GraftCatalog(s2, wh).createTable("db", "o", ordersDdl)
       Tables(s2, dir, "orders").createOrReplaceTempView("orders_src")
@@ -708,7 +703,7 @@ object GraftOps {
     * through SQL with user aliases — shares that query's oracle shape */
   def sqlMerge(spark: SparkSession, dir: String): DataFrame =
     withSqlSession(spark) { s2 =>
-      val wh = Files.createTempDirectory("graft-sqlwh").toString
+      val wh = Scratch.dir("sqlwh").toString
       s2.conf.set("spark.graft.warehouse", wh)
       val t = new GraftCatalog(s2, wh).createTable("db", "m", ordersDdl)
       val o = Tables(s2, dir, "orders")
@@ -735,7 +730,7 @@ object GraftOps {
     * a second INSERT carrying the new column, aggregate readback */
   def sqlLifecycle(spark: SparkSession, dir: String): DataFrame =
     withSqlSession(spark) { s2 =>
-      val wh = Files.createTempDirectory("graft-sqlwh").toString
+      val wh = Scratch.dir("sqlwh").toString
       s2.conf.set("spark.graft.warehouse", wh)
       Tables(s2, dir, "orders").createOrReplaceTempView("orders_src")
       s2.sql(s"CREATE TABLE graft.db.lc ($ordersDdl) " +
@@ -759,7 +754,7 @@ object GraftOps {
     * the first snapshot in one commit. */
   def sqlCtas(spark: SparkSession, dir: String): DataFrame =
     withSqlSession(spark) { s2 =>
-      val wh = Files.createTempDirectory("graft-ctaswh").toString
+      val wh = Scratch.dir("ctaswh").toString
       s2.conf.set("spark.graft.warehouse", wh)
       Tables(s2, dir, "orders").createOrReplaceTempView("orders_src")
       s2.sql("CREATE TABLE graft.db.ctas PARTITIONED BY (bucket(4, o_orderkey)) " +
@@ -781,7 +776,7 @@ object GraftOps {
     * proving imported files are first-class citizens of the format. */
   def addFilesQuery(spark: SparkSession, dir: String): DataFrame = {
     val src = Tables(spark, dir, "supplier")
-    val t = GraftTable.create(spark, scratch(), src.schema.toDDL)
+    val t = GraftTable.create(spark, Scratch.table(), src.schema.toDDL)
     t.addFiles(s"$dir/supplier.parquet")
     t.delete("s_suppkey % 10 = 0", WriteMode.MergeOnRead)
     t.scan()
@@ -798,7 +793,7 @@ object GraftOps {
     * changes() API is the general CDC path, this is the ad-hoc one. */
   def sqlTimeDiff(spark: SparkSession, dir: String): DataFrame =
     withSqlSession(spark) { s2 =>
-      val wh = Files.createTempDirectory("graft-tdwh").toString
+      val wh = Scratch.dir("tdwh").toString
       s2.conf.set("spark.graft.warehouse", wh)
       Tables(s2, dir, "orders").createOrReplaceTempView("orders_src")
       s2.sql("CREATE TABLE graft.db.td AS " +

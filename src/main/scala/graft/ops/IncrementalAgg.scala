@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -80,7 +78,7 @@ object IncrementalAgg {
   /** driver query: three append batches, three refreshes; the final
     * result table must equal the full aggregate of everything appended */
   def incrAggQuery(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = Files.createTempDirectory("graft-incr")
+    val tmp = graft.Scratch.dir("incr")
     val base = GraftTable.create(spark, tmp.resolve("base").toString,
       "o_orderkey bigint, o_orderpriority string, o_totalprice double")
     val result = createResult(spark, tmp.resolve("agg").toString,
@@ -105,8 +103,7 @@ object IncrementalAgg {
     * the final table equals the full aggregate regardless of how the
     * stream was chopped. */
   def streamIncrAggQuery(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = Files.createTempDirectory("graft-sincr")
+    val tmp = graft.Scratch.dir("sincr")
     val base = GraftTable.create(spark, tmp.resolve("base").toString,
       "o_orderkey bigint, o_orderpriority string, o_totalprice double")
     val result = createResult(spark, tmp.resolve("agg").toString,
@@ -116,14 +113,10 @@ object IncrementalAgg {
     o.repartition(3).write.parquet(tmp.resolve("in").toString)
     val stream = spark.readStream.schema(o.schema)
       .option("maxFilesPerTrigger", 1).parquet(tmp.resolve("in").toString)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        base.append(batch)
-        refresh(base, result, "o_orderpriority", "o_totalprice")
-      }
-      .option("checkpointLocation", tmp.resolve("ckpt").toString)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    StreamingOps.runBatches(stream, tmp.resolve("ckpt").toString) { batch =>
+      base.append(batch)
+      refresh(base, result, "o_orderpriority", "o_totalprice")
+    }
     result.scan()
       .select(col("o_orderpriority"), col("cnt").as("n"),
         col("total").cast("double").as("sum_total"))

@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -64,7 +62,7 @@ object IncrementalDedup {
     val docs = Tables(spark, dir, "documents")
     val hist = docs.filter(col("doc_id") % 10 =!= 0)
     val batch = docs.filter(col("doc_id") % 10 === 0)
-    val tmp = Files.createTempDirectory("graft-lshidx")
+    val tmp = graft.Scratch.dir("lshidx")
     val idx = GraftTable.create(spark, tmp.resolve("idx").toString,
       "doc_id bigint, band int, sig bigint")
     appendToIndex(idx, hist)

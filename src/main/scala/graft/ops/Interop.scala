@@ -170,10 +170,24 @@ object Interop {
       .find(Files.exists(_)).map(_.toAbsolutePath.toString)
       .getOrElse(throw new IllegalStateException("scripts/extwriter.py not found"))
 
-  /** exec ONE extwriter invocation (argv after the script path) */
-  private def runArgs(args: Seq[String]): Int = {
+  /** where the writer's JSON payload files are staged */
+  private lazy val payloadDir = graft.Scratch.dir("extpayload")
+
+  /** stage one JSON payload for the writer; returns its path */
+  private def payload(prefix: String, json: String): String = {
+    val f = Files.createTempFile(payloadDir, prefix, ".json")
+    Files.writeString(f, json)
+    f.toString
+  }
+
+  /** exec ONE extwriter invocation (argv after the script path), then
+    * delete the payload files it read: those `args` names, and those
+    * named by the ops it ran (`staged`) */
+  private def runArgs(args: Seq[String], staged: Seq[String] = Nil): Int = {
     import scala.sys.process._
-    Process(Seq("python3", extWriterScript) ++ args).!
+    try Process(Seq("python3", extWriterScript) ++ args).!
+    finally (args ++ staged).filter(_.startsWith(payloadDir.toString))
+      .foreach(f => Files.deleteIfExists(Paths.get(f)))
   }
 
   /** BATCH: run N extwriter ops in ONE python process — each op is the
@@ -185,11 +199,9 @@ object Interop {
     * for (guide §1.2: per-task work after the algorithm). */
   private[graft] def runExtWriterOps(ops: Seq[Seq[String]]): Int = {
     def js(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val payload = ops.map(_.map(js).mkString("[", ",", "]"))
+    val json = ops.map(_.map(js).mkString("[", ",", "]"))
       .mkString("""{"ops":[""", ",", "]}")
-    val f = Files.createTempFile("graft-extops", ".json")
-    Files.writeString(f, payload)
-    runArgs(Seq("--ops", f.toString))
+    runArgs(Seq("--ops", payload("extops", json)), ops.flatten)
   }
 
   /** stage `rows` as JSON and build the argv of the INDEPENDENT Python
@@ -200,12 +212,10 @@ object Interop {
       pin: Option[Int] = None,
       cols: (String, String, String) = ("id", "status", "total"),
       branch: Option[String] = None): Seq[String] = {
-    val payload = rows.map { case (id, st, total) =>
+    val f = payload("extwrite", rows.map { case (id, st, total) =>
       s"""{"${cols._1}":$id,"${cols._2}":"$st","${cols._3}":$total}"""
-    }.mkString("""{"rows":[""", ",", "]}")
-    val f = Files.createTempFile("graft-extwrite", ".json")
-    Files.writeString(f, payload)
-    Seq(loc, f.toString) ++
+    }.mkString("""{"rows":[""", ",", "]}"))
+    Seq(loc, f) ++
       pin.toSeq.flatMap(v => Seq("--pin", v.toString)) ++
       branch.toSeq.flatMap(b => Seq("--branch", b))
   }
@@ -224,9 +234,8 @@ object Interop {
   private[graft] def extDeleteArgs(loc: String, colName: String,
       values: Seq[Long], pin: Option[Int] = None,
       branch: Option[String] = None): Seq[String] = {
-    val f = Files.createTempFile("graft-extdel", ".json")
-    Files.writeString(f, values.mkString("""{"values":[""", ",", "]}"))
-    Seq(loc, "--delete", colName, f.toString) ++
+    val f = payload("extdel", values.mkString("""{"values":[""", ",", "]}"))
+    Seq(loc, "--delete", colName, f) ++
       pin.toSeq.flatMap(v => Seq("--pin", v.toString)) ++
       branch.toSeq.flatMap(b => Seq("--branch", b))
   }
@@ -242,10 +251,9 @@ object Interop {
   private[graft] def extDeleteEqArgs(loc: String, colName: String,
       values: Seq[String], pin: Option[Int] = None,
       branch: Option[String] = None): Seq[String] = {
-    val f = Files.createTempFile("graft-exteq", ".json")
-    Files.writeString(f,
+    val f = payload("exteq",
       values.map(v => "\"" + v + "\"").mkString("""{"values":[""", ",", "]}"))
-    Seq(loc, "--delete-eq", colName, f.toString) ++
+    Seq(loc, "--delete-eq", colName, f) ++
       pin.toSeq.flatMap(v => Seq("--pin", v.toString)) ++
       branch.toSeq.flatMap(b => Seq("--branch", b))
   }
@@ -263,10 +271,9 @@ object Interop {
   private[graft] def extUpdateArgs(loc: String, keyCol: String,
       values: Seq[Long], setCol: String, add: Double,
       pin: Option[Int] = None): Seq[String] = {
-    val f = Files.createTempFile("graft-extupd", ".json")
-    Files.writeString(f, values.mkString("""{"values":[""", ",",
+    val f = payload("extupd", values.mkString("""{"values":[""", ",",
       s"""],"set":{"col":"$setCol","add":$add}}"""))
-    Seq(loc, "--update", keyCol, f.toString) ++
+    Seq(loc, "--update", keyCol, f) ++
       pin.toSeq.flatMap(v => Seq("--pin", v.toString))
   }
 
@@ -283,9 +290,8 @@ object Interop {
     * can omit columns (an omitted column keeps the target's value). */
   private[graft] def extMergeArgs(loc: String, keyCol: String,
       rowJsons: Seq[String], pin: Option[Int] = None): Seq[String] = {
-    val f = Files.createTempFile("graft-extmerge", ".json")
-    Files.writeString(f, rowJsons.mkString("""{"rows":[""", ",", "]}"))
-    Seq(loc, "--merge", keyCol, f.toString) ++
+    val f = payload("extmerge", rowJsons.mkString("""{"rows":[""", ",", "]}"))
+    Seq(loc, "--merge", keyCol, f) ++
       pin.toSeq.flatMap(v => Seq("--pin", v.toString))
   }
 
@@ -313,12 +319,9 @@ object Interop {
     * payload shape no longer fits */
   private[graft] def extScoredArgs(loc: String,
       rows: Seq[(Long, String, Double, Double)]): Seq[String] = {
-    val payload = rows.map { case (id, st, total, score) =>
+    Seq(loc, payload("extsc", rows.map { case (id, st, total, score) =>
       s"""{"id":$id,"status":"$st","total":$total,"score":$score}"""
-    }.mkString("""{"rows":[""", ",", "]}")
-    val f = Files.createTempFile("graft-extsc", ".json")
-    Files.writeString(f, payload)
-    Seq(loc, f.toString)
+    }.mkString("""{"rows":[""", ",", "]}")))
   }
 
   private[graft] def runExtWriterScored(loc: String,

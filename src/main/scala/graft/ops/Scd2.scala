@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -56,7 +54,7 @@ object Scd2 {
   /** seed the customer dimension at v1 and apply the two standard change
     * batches (v2: +100 for key%10=0; v3: +400 for key%20=0) */
   private def buildDim(spark: SparkSession, dir: String): GraftTable = {
-    val tmp = Files.createTempDirectory("graft-scd2")
+    val tmp = graft.Scratch.dir("scd2")
     val c = Tables(spark, dir, "customer")
     val dim = GraftTable.create(spark, tmp.resolve("dim").toString,
       "c_custkey bigint, c_acctbal double, c_mktsegment string, " +

@@ -1,21 +1,22 @@
 package graft.ops
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.util.UUID
 
 import scala.annotation.unused
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
+  OutputMode, Trigger}
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
 
 /** Structured Streaming surface (SURVEY.md §2.4): the batch events table is
   * staged as a file-stream source — its parquet files HARD-LINKED, never
-  * copied ([[stageLinked]]) — and processed with Trigger.AvailableNow,
+  * copied ([[stageLinked]]) — and drained by an AvailableNow trigger,
   * so the STREAMING execution path (watermarks, stateful sessionization)
   * produces results the batch DuckDB oracle can check exactly. */
 object StreamingOps {
@@ -43,9 +44,25 @@ object StreamingOps {
 
   private val EventCols = Seq("event_id", "ts", "user_id", "event_type", "value")
 
-  /** Drain a FINISHED memory sink: pin the (small — these are all
-    * window/key aggregates) result eagerly, then drop the sink's temp
-    * view. Without this every streaming query pins its sink rows +
+  /** The one streaming run every operator here (and
+    * [[IncrementalAgg.streamIncrAggQuery]]) goes through: the configured
+    * `writer` checkpoints at `ckpt` and drains its source to the end
+    * under an AvailableNow trigger. */
+  private[ops] def runToEnd(writer: DataStreamWriter[_], ckpt: String): Unit =
+    writer.option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow())
+      .start().awaitTermination()
+
+  /** [[runToEnd]] into a foreachBatch sink: `sink` receives every
+    * micro-batch */
+  private[ops] def runBatches(stream: DataFrame, ckpt: String,
+      mode: String = "append")(sink: DataFrame => Unit): Unit =
+    runToEnd(stream.writeStream.outputMode(mode)
+      .foreachBatch((batch: DataFrame, _: Long) => sink(batch)), ckpt)
+
+  /** [[runToEnd]] into a fresh memory sink checkpointed at `tmp/ckpt`,
+    * then return `readBack` of the sink PINNED (localCheckpoint — these
+    * are all small window/key aggregates) and drop the sink's temp view.
+    * Without the drain every streaming query pins its sink rows +
     * catalog entry for the JVM's lifetime: the round-11 aging diagnosis
     * measured q_stream_topk climbing 1.34 → 1.70 s across 7
     * streaming-family rounds in one JVM (heap 0.7 → 2.7 GB, 100
@@ -63,11 +80,56 @@ object StreamingOps {
     * last termination's state for awaitAnyTermination), so leaving it
     * alone keeps the JVM flat — the round-11 leak was the catalog-pinned
     * sink views, which the dropTempView below releases per query. */
-  private def drainSink(spark: SparkSession, name: String)(out: DataFrame): DataFrame = {
-    val pinned = out.localCheckpoint()
-    spark.catalog.dropTempView(name)
-    pinned
+  private def drainMemory(out: Dataset[_], tmp: String, mode: String = "append")(
+      readBack: DataFrame => DataFrame): DataFrame = {
+    val name = s"sink_${UUID.randomUUID.toString.replace("-", "")}"
+    try {
+      runToEnd(out.writeStream.format("memory").queryName(name).outputMode(mode),
+        s"$tmp/ckpt")
+      readBack(out.sparkSession.table(name)).localCheckpoint()
+    } finally out.sparkSession.catalog.dropTempView(name)
   }
+
+  /** (n, sum_value) per `keys`: the row count and exact decimal value sum
+    * every events aggregate here reports */
+  private def totals(events: DataFrame, keys: Column*): DataFrame =
+    events.groupBy(keys: _*).agg(count(lit(1)).as("n"),
+      sum(col("value").cast(DecimalType(18, 6))).cast("double").as("sum_value"))
+
+  private val HourUs = 3600000000L
+
+  /** what a sentinel row carries in each event column it is not keyed on */
+  private val SentinelFill =
+    Map("event_id" -> lit(-1L), "user_id" -> lit(-1L), "value" -> lit(0.0))
+
+  /** Stage `events` ([[stageLinked]]) and open its ts-normalized stream
+    * over `cols`; returns (scratch dir, stream). With `sentinelAfterHours`,
+    * sentinel rows land first ([[writeSentinels]]) at the global max
+    * event time plus that many hours — one per row of `keys` (carrying
+    * its columns), else a single row; every other column comes from
+    * [[SentinelFill]]. Their watermark closes every real window, session
+    * and join bound, while their own stays open and is never emitted. */
+  private def eventStream(spark: SparkSession, dir: String,
+      cols: Seq[String] = EventCols, sentinelAfterHours: Option[Long] = None,
+      keys: Option[DataFrame] = None): (String, DataFrame) = {
+    val (tmp, raw) = stageLinked(spark, dir)
+    sentinelAfterHours.foreach { h =>
+      val base = keys.getOrElse(spark.range(1).select())
+      val ts = timestamp_micros(lit(maxTsMicros(spark, dir) + h * HourUs))
+      writeSentinels(base.select(cols.map {
+        case "ts" => ts.as("ts")
+        case c if base.columns.contains(c) => col(c)
+        case c => SentinelFill(c).as(c)
+      }: _*), raw, tmp)
+    }
+    (tmp, Tables.normalizeEventTs(rawStream(spark, tmp, raw, cols)))
+  }
+
+  private def eventTypes(spark: SparkSession, dir: String): DataFrame =
+    Tables(spark, dir, "events").select(col("event_type")).distinct()
+
+  private def users(spark: SparkSession, dir: String): DataFrame =
+    Tables(spark, dir, "events").select("user_id").distinct()
 
   /** Link-stage a source table: every data file of `<dir>/<table>.parquet`
     * is HARD-LINKED into `tmp/in` — one directory entry per file, no data
@@ -148,23 +210,17 @@ object StreamingOps {
 
   // --- tumbling window + watermark ------------------------------------------
   def streamWindow(spark: SparkSession, dir: String): DataFrame = {
-    val (tmp, raw) = stageLinked(spark, dir)
-    val stream = Tables.normalizeEventTs(rawStream(spark, tmp, raw, EventCols))
-    val agg = stream
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 6))).cast("double").as("sum_value"))
-    val name = s"w_${UUID.randomUUID.toString.replace("-", "")}"
-    val q = agg.writeStream.format("memory").queryName(name)
-      .outputMode("complete")
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    drainSink(spark, name)(spark.table(name)
-      .select(col("window.start").as("ws"), col("event_type"), col("n"), col("sum_value"))
-      .orderBy("ws", "event_type"))
+    val (tmp, stream) = eventStream(spark, dir)
+    drainHourly(stream, tmp, "complete")
   }
+
+  /** per-(hourly window, event_type) totals: the aggregate and readback
+    * both window operators share */
+  private def drainHourly(stream: DataFrame, tmp: String, mode: String): DataFrame =
+    drainMemory(totals(stream.withWatermark("ts", "1 hour"),
+      window(col("ts"), "1 hour"), col("event_type")), tmp, mode)(
+      _.select(col("window.start").as("ws"), col("event_type"), col("n"),
+        col("sum_value")).orderBy("ws", "event_type"))
 
   // --- tumbling window, APPEND mode (bounded state) -------------------------
   /** the production shape at scale: complete mode re-emits every window on
@@ -178,30 +234,9 @@ object StreamingOps {
     * (their own window stays open and is never emitted, so the output
     * equals the batch truth). */
   def streamWindowAppend(spark: SparkSession, dir: String): DataFrame = {
-    val (tmp, raw) = stageLinked(spark, dir)
-    val maxUs = maxTsMicros(spark, dir)
-    val sentinels = Tables(spark, dir, "events").select(col("event_type")).distinct()
-      .withColumn("event_id", lit(-1L))
-      .withColumn("ts", timestamp_micros(lit(maxUs + 10800000000L)))
-      .withColumn("user_id", lit(-1L))
-      .withColumn("value", lit(0.0))
-      .select(EventCols.map(col): _*)
-    writeSentinels(sentinels, raw, tmp)
-    val stream = Tables.normalizeEventTs(rawStream(spark, tmp, raw, EventCols))
-    val agg = stream
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 6))).cast("double").as("sum_value"))
-    val name = s"wa_${UUID.randomUUID.toString.replace("-", "")}"
-    val q = agg.writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    drainSink(spark, name)(spark.table(name)
-      .select(col("window.start").as("ws"), col("event_type"), col("n"), col("sum_value"))
-      .orderBy("ws", "event_type"))
+    val (tmp, stream) = eventStream(spark, dir, sentinelAfterHours = Some(3),
+      keys = Some(eventTypes(spark, dir)))
+    drainHourly(stream, tmp, "append")
   }
 
   // --- windowed NDV sketch in a stream --------------------------------------
@@ -215,26 +250,13 @@ object StreamingOps {
     * truth and the DuckDB oracle replays the register algebra per window
     * bit-exactly. */
   def streamSketch(spark: SparkSession, dir: String): DataFrame = {
-    val (tmp, raw) = stageLinked(spark, dir)
-    val maxUs = maxTsMicros(spark, dir)
-    val sentinel = spark.range(1).select(
-      timestamp_micros(lit(maxUs + 10800000000L)).as("ts"),
-      lit(-1L).as("user_id"))
-    writeSentinels(sentinel, raw, tmp)
-    val stream = Tables.normalizeEventTs(
-      rawStream(spark, tmp, raw, Seq("ts", "user_id")))
+    val (tmp, stream) = eventStream(spark, dir, Seq("ts", "user_id"), Some(3))
     val agg = stream
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"))
       .agg(count(lit(1)).as("n"),
         graft.functions.HllNdvAgg.hllNdv(col("user_id")).as("sk"))
-    val name = s"sk_${UUID.randomUUID.toString.replace("-", "")}"
-    val q = agg.writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    drainSink(spark, name)(spark.table(name)
+    drainMemory(agg, tmp)(_
       .select(col("window.start").as("ws"), col("n"),
         col("sk.n_registers").as("n_registers"), col("sk.t").as("t"),
         col("sk.ndv_est").as("ndv_est"))
@@ -255,25 +277,12 @@ object StreamingOps {
   val TopK = 3
 
   def streamTopk(spark: SparkSession, dir: String): DataFrame = {
-    val (tmp, raw) = stageLinked(spark, dir)
-    val maxUs = maxTsMicros(spark, dir)
-    val sentinel = spark.range(1).select(
-      timestamp_micros(lit(maxUs + 10800000000L)).as("ts"),
-      lit(-1L).as("event_id"), lit(0.0).as("value"))
-    writeSentinels(sentinel, raw, tmp)
-    val stream = Tables.normalizeEventTs(
-      rawStream(spark, tmp, raw, Seq("ts", "event_id", "value")))
+    val (tmp, stream) = eventStream(spark, dir, Seq("ts", "event_id", "value"), Some(3))
     val agg = stream
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"))
       .agg(graft.functions.TopKAgg.topK(col("value"), col("event_id"), TopK).as("top"))
-    val name = s"tk_${UUID.randomUUID.toString.replace("-", "")}"
-    val q = agg.writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    drainSink(spark, name)(spark.table(name)
+    drainMemory(agg, tmp)(_
       .select(col("window.start").as("ws"), explode(col("top")).as("t"))
       .select(col("ws"), col("t.rank").as("rank"),
         col("t.id").as("event_id"), col("t.value").as("value"))
@@ -303,31 +312,11 @@ object StreamingOps {
     * DuckDB oracle replays the pick bit-exactly. Append mode + the usual
     * max+3h sentinel (its own window stays open and is never emitted). */
   def streamQuantile(spark: SparkSession, dir: String): DataFrame = {
-    val (tmp, raw) = stageLinked(spark, dir)
-    val maxUs = maxTsMicros(spark, dir)
-    val sentinel = spark.range(1).select(
-      timestamp_micros(lit(maxUs + 10800000000L)).as("ts"),
-      lit(0.0).as("value"))
-    writeSentinels(sentinel, raw, tmp)
-    val stream = Tables.normalizeEventTs(
-      rawStream(spark, tmp, raw, Seq("ts", "value")))
-    val agg = stream
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour"),
-        floor(col("value") / QuantileBucketWidth).cast("long").as("bucket"))
-      .agg(count(lit(1)).as("bn"))
-    val name = s"qt_${UUID.randomUUID.toString.replace("-", "")}"
-    val q = agg.writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
     // batch tail over the emitted histogram (windows × live buckets rows,
     // tiny by construction): cumulative pick of each quantile's bucket
     val byWs = org.apache.spark.sql.expressions.Window.partitionBy("ws")
     val cumW = byWs.orderBy("bucket")
-    drainSink(spark, name)(spark.table(name)
-      .select(col("window.start").as("ws"), col("bucket"), col("bn"))
+    drainHistogram(spark, dir)(_
       .withColumn("cum", sum(col("bn")).over(cumW))
       .withColumn("n", sum(col("bn")).over(byWs))
       .groupBy(col("ws"), col("n"))
@@ -354,49 +343,45 @@ object StreamingOps {
     * normalization, so the DuckDB oracle replays the verdict exactly.
     * The pair comparison runs over (windows × live buckets) rows — the
     * emitted histogram, not the stream. */
-  def streamDrift(spark: SparkSession, dir: String): DataFrame = {
-    val (tmp, raw) = stageLinked(spark, dir)
-    val maxUs = maxTsMicros(spark, dir)
-    val sentinel = spark.range(1).select(
-      timestamp_micros(lit(maxUs + 10800000000L)).as("ts"),
-      lit(0.0).as("value"))
-    writeSentinels(sentinel, raw, tmp)
-    val stream = Tables.normalizeEventTs(
-      rawStream(spark, tmp, raw, Seq("ts", "value")))
+  def streamDrift(spark: SparkSession, dir: String): DataFrame =
+    drainHistogram(spark, dir) { hist =>
+      val n = hist.groupBy(col("ws")).agg(sum(col("bn")).as("n"))
+      val pairs = n.as("a").join(n.as("b"),
+          col("b.ws") === col("a.ws") + expr("INTERVAL 1 HOUR"))
+        .select(col("a.ws").as("ws"), col("b.ws").as("ws_next"),
+          col("a.n").as("n_a"), col("b.n").as("n_b"))
+      // bucket union of each adjacent pair with zero-fill, via union + sum
+      // (an outer join on (pair, bucket) would zero-fill the same way with
+      // a second shuffle)
+      val contrib = hist
+        .select(col("ws"), col("bucket"), col("bn").as("ba"), lit(0L).as("bb"))
+        .unionByName(hist.select(
+          (col("ws") - expr("INTERVAL 1 HOUR")).as("ws"), col("bucket"),
+          lit(0L).as("ba"), col("bn").as("bb")))
+        .groupBy(col("ws"), col("bucket"))
+        .agg(sum(col("ba")).as("bn_a"), sum(col("bb")).as("bn_b"))
+      contrib.join(pairs, "ws")
+        .groupBy(col("ws"), col("ws_next"), col("n_a"), col("n_b"))
+        .agg(sum(abs(col("bn_a") * col("n_b") - col("bn_b") * col("n_a")))
+          .as("l1_num"))
+        .withColumn("drifted", col("l1_num") * lit(2L) > col("n_a") * col("n_b"))
+        .orderBy("ws")
+    }
+
+  /** The bounded histogram stream [[streamQuantile]] and [[streamDrift]]
+    * share: one count per (hourly window, value bucket), append mode +
+    * the max+3h sentinel; `readBack` receives the emitted
+    * (ws, bucket, bn) rows. */
+  private def drainHistogram(spark: SparkSession, dir: String)(
+      readBack: DataFrame => DataFrame): DataFrame = {
+    val (tmp, stream) = eventStream(spark, dir, Seq("ts", "value"), Some(3))
     val agg = stream
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"),
         floor(col("value") / QuantileBucketWidth).cast("long").as("bucket"))
       .agg(count(lit(1)).as("bn"))
-    val name = s"dr_${UUID.randomUUID.toString.replace("-", "")}"
-    val q = agg.writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val hist = spark.table(name)
-      .select(col("window.start").as("ws"), col("bucket"), col("bn"))
-    val totals = hist.groupBy(col("ws")).agg(sum(col("bn")).as("n"))
-    val pairs = totals.as("a").join(totals.as("b"),
-        col("b.ws") === col("a.ws") + expr("INTERVAL 1 HOUR"))
-      .select(col("a.ws").as("ws"), col("b.ws").as("ws_next"),
-        col("a.n").as("n_a"), col("b.n").as("n_b"))
-    // bucket union of each adjacent pair with zero-fill, via union + sum
-    // (an outer join on (pair, bucket) would zero-fill the same way with
-    // a second shuffle)
-    val contrib = hist
-      .select(col("ws"), col("bucket"), col("bn").as("ba"), lit(0L).as("bb"))
-      .unionByName(hist.select(
-        (col("ws") - expr("INTERVAL 1 HOUR")).as("ws"), col("bucket"),
-        lit(0L).as("ba"), col("bn").as("bb")))
-      .groupBy(col("ws"), col("bucket"))
-      .agg(sum(col("ba")).as("bn_a"), sum(col("bb")).as("bn_b"))
-    drainSink(spark, name)(contrib.join(pairs, "ws")
-      .groupBy(col("ws"), col("ws_next"), col("n_a"), col("n_b"))
-      .agg(sum(abs(col("bn_a") * col("n_b") - col("bn_b") * col("n_a")))
-        .as("l1_num"))
-      .withColumn("drifted", col("l1_num") * lit(2L) > col("n_a") * col("n_b"))
-      .orderBy("ws"))
+    drainMemory(agg, tmp)(sink => readBack(
+      sink.select(col("window.start").as("ws"), col("bucket"), col("bn"))))
   }
 
   // --- stateful sessionization via flatMapGroupsWithState -------------------
@@ -435,28 +420,16 @@ object StreamingOps {
 
   def streamSessions(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val (tmp, raw) = stageLinked(spark, dir)
-    val maxUs = maxTsMicros(spark, dir)
-    val sentinels = Tables(spark, dir, "events").select("user_id").distinct()
-      .withColumn("ts", timestamp_micros(lit(maxUs + 7200000000L)))
-      .withColumn("event_id", lit(-1L))
-      .select("user_id", "ts", "event_id")
-    writeSentinels(sentinels, raw, tmp)
-    val stream = Tables.normalizeEventTs(
-      rawStream(spark, tmp, raw, Seq("user_id", "ts", "event_id")))
+    val (tmp, stream) = eventStream(spark, dir, Seq("user_id", "ts", "event_id"),
+      Some(2), Some(users(spark, dir)))
+    val sessions = stream
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("event_id"))
       .as[SEv]
-    val sessions = stream.groupByKey(_.user_id)
+      .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(sessionFn)
-    val name = s"s_${UUID.randomUUID.toString.replace("-", "")}"
-    val q = sessions.writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
     // Session bounds stay epoch-micro BIGINTs (the portable representation for
     // the physically-TIMESTAMP(NANOS) events table; see Analytics.sessionize).
-    drainSink(spark, name)(spark.table(name)
+    drainMemory(sessions, tmp)(_
       .select(col("user_id"), col("session_id"), col("n_events"),
         col("start_us").as("session_start_us"),
         col("end_us").as("session_end_us"))
@@ -503,31 +476,22 @@ object StreamingOps {
 
   def streamAttribution(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val (tmp, raw) = stageLinked(spark, dir)
-    val stream = Tables.normalizeEventTs(rawStream(spark, tmp, raw,
-      Seq("user_id", "ts", "event_id", "event_type", "value", "props")))
+    val (tmp, stream) = eventStream(spark, dir,
+      Seq("user_id", "ts", "event_id", "event_type", "value", "props"))
+    val credited = stream
       .filter(col("event_type").isin("click", "purchase"))
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_id"), col("event_type"), col("value"),
         coalesce(get_json_object(col("props"), "$.k").cast("long") % 10,
           lit(-1L)).as("campaign"))
       .as[AEv]
-    val credited = withStatePartitions(spark) {
-      val out = stream.groupByKey(_.user_id)
-        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(attributionFn)
-      val name = s"a_${UUID.randomUUID.toString.replace("-", "")}"
-      val q = out.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      drainSink(spark, name)(spark.table(name)
-        .groupBy(col("campaign"))
-        .agg(count(lit(1)).as("n_purchases"),
-          sum(col("value").cast(DecimalType(18, 6))).cast("double").as("revenue"))
-        .orderBy("campaign"))
-    }
-    credited
+      .groupByKey(_.user_id)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(attributionFn)
+    drainMemory(credited, tmp)(_
+      .groupBy(col("campaign"))
+      .agg(count(lit(1)).as("n_purchases"),
+        sum(col("value").cast(DecimalType(18, 6))).cast("double").as("revenue"))
+      .orderBy("campaign"))
   }
 
   // --- native session_window sessionization ---------------------------------
@@ -540,30 +504,17 @@ object StreamingOps {
     * [start, last+gap): an event exactly at last+gap starts a new
     * session — the oracle encodes `diff >= gap` accordingly. */
   def streamSessionWindow(spark: SparkSession, dir: String): DataFrame = {
-    val (tmp, raw) = stageLinked(spark, dir)
-    val maxUs = maxTsMicros(spark, dir)
-    val sentinels = Tables(spark, dir, "events").select("user_id").distinct()
-      .withColumn("ts", timestamp_micros(lit(maxUs + 10800000000L)))
-      .withColumn("event_id", lit(-1L))
-      .select("user_id", "ts", "event_id")
-    writeSentinels(sentinels, raw, tmp)
-    val stream = Tables.normalizeEventTs(
-      rawStream(spark, tmp, raw, Seq("user_id", "ts", "event_id")))
+    val (tmp, stream) = eventStream(spark, dir, Seq("user_id", "ts", "event_id"),
+      Some(3), Some(users(spark, dir)))
     val agg = stream
       .withWatermark("ts", "1 hour")
       .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
       .agg(count(lit(1)).as("n_events"),
         min(unix_micros(col("ts"))).as("session_start_us"),
         max(unix_micros(col("ts"))).as("session_end_us"))
-    val name = s"sw_${UUID.randomUUID.toString.replace("-", "")}"
-    val q = agg.writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
     val byStart = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("session_start_us"))
-    drainSink(spark, name)(spark.table(name)
+    drainMemory(agg, tmp)(_
       .select(col("user_id"), col("n_events"),
         col("session_start_us"), col("session_end_us"))
       .withColumn("session_id", row_number().over(byStart).cast("long"))
@@ -592,18 +543,11 @@ object StreamingOps {
     a.append(src.filter(col("event_id") % 2 =!= 0))
     val b = graft.table.GraftTable.create(spark, s"$tmp/b",
       "ws timestamp, event_type string, n bigint, sum_value double")
-    val agg = a.readStream(maxFilesPerTrigger = Some(3))
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 6))).cast("double").as("sum_value"))
+    val agg = totals(a.readStream(maxFilesPerTrigger = Some(3)),
+        window(col("ts"), "1 hour"), col("event_type"))
       .select(col("window.start").as("ws"), col("event_type"), col("n"),
         col("sum_value"))
-    val q = agg.writeStream
-      .outputMode("complete")
-      .foreachBatch((batch: DataFrame, _: Long) => { b.overwrite(batch); () })
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    runBatches(agg, s"$tmp/ckpt", "complete")(b.overwrite(_))
     b.scan().orderBy("ws", "event_type")
   }
 
@@ -638,17 +582,10 @@ object StreamingOps {
       .filter(col("o_orderkey") % 3 === 1)
     val updates = spark.readStream.schema(o.schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$tmp/upd")
-    val stream = inserts.unionByName(updates)
-    val q = stream.writeStream
-      .foreachBatch((batch: DataFrame, _: Long) => {
-        t.merge(batch, on = "t.o_orderkey = s.o_orderkey",
-          matchedSet = Map("o_totalprice" -> "s.o_totalprice"),
-          insertValues = Some(cols.map(c => c -> s"s.$c").toMap))
-        ()
-      })
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    runBatches(inserts.unionByName(updates), s"$tmp/ckpt")(
+      t.merge(_, on = "t.o_orderkey = s.o_orderkey",
+        matchedSet = Map("o_totalprice" -> "s.o_totalprice"),
+        insertValues = Some(cols.map(c => c -> s"s.$c").toMap)))
     t.scan().groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n"),
         sum(col("o_totalprice").cast(DecimalType(18, 2))).cast("double").as("sum_total"))
@@ -658,22 +595,18 @@ object StreamingOps {
   // --- streaming ingest INTO the graft table format -------------------------
   /** micro-batch writes through foreachBatch → GraftTable.append: each
     * batch is one atomic snapshot commit, so a crash between batches leaves
-    * the table readable at the last committed snapshot (exactly the
-    * Iceberg streaming-write contract) */
+    * the table readable at the last committed snapshot. The sink ignores
+    * the batch id, so a batch replayed after a crash between its commit
+    * and the offset commit appends twice: at-least-once, not the
+    * exactly-once Iceberg streaming-write contract (the commit_seq
+    * watermark of [[runCdcPump]] is the only replay guard among these
+    * sinks). */
   def streamIngest(spark: SparkSession, dir: String): DataFrame = {
-    val (tmp, raw) = stageLinked(spark, dir)
+    val (tmp, stream) = eventStream(spark, dir)
     val t = graft.table.GraftTable.create(spark, s"$tmp/tbl",
       "event_id bigint, ts timestamp, user_id bigint, event_type string, value double")
-    val stream = Tables.normalizeEventTs(rawStream(spark, tmp, raw, EventCols))
-    val q = stream.writeStream
-      .foreachBatch((batch: DataFrame, _: Long) => { t.append(batch); () })
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    t.scan().groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 6))).cast("double").as("sum_value"))
-      .orderBy("event_type")
+    runBatches(stream, s"$tmp/ckpt")(t.append(_))
+    totals(t.scan(), col("event_type")).orderBy("event_type")
   }
 
   // --- streaming tail FROM the graft table format ---------------------------
@@ -688,16 +621,7 @@ object StreamingOps {
       "event_id bigint, ts timestamp, user_id bigint, event_type string, value double")
     t.append(src.filter(col("event_id") % 2 === 0))
     t.append(src.filter(col("event_id") % 2 =!= 0))
-    val name = s"t_${UUID.randomUUID.toString.replace("-", "")}"
-    val q = t.readStream().writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    drainSink(spark, name)(spark.table(name).groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 6))).cast("double").as("sum_value"))
-      .orderBy("event_type"))
+    drainMemory(t.readStream(), tmp)(totals(_, col("event_type")).orderBy("event_type"))
   }
 
   // --- streaming CDC FROM the graft table format ----------------------------
@@ -758,77 +682,72 @@ object StreamingOps {
       .option("maxFilesPerTrigger", 1)
       .load(s"$loc/metadata/v*.json")
       .select(col("_metadata.file_path").as("p"))
-    val q = mdStream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val vs = batch.select("p").distinct().collect().map(_.getString(0))
-          .flatMap(p => verRe.findFirstMatchIn(p).map(_.group(1).toInt))
-        if (vs.nonEmpty) {
-          // window endpoints from PUBLISHED metadata versions only —
-          // immutable files, so a replayed batch recomputes identically
-          val fromSnap =
-            if (vs.min <= 1) 0L
-            else graft.table.Meta.readJsonVersion(loc, vs.min - 1).lastSnapshotId
-          val toSnap = graft.table.Meta.readJsonVersion(loc, vs.max).lastSnapshotId
-          // Idempotency watermark: foreachBatch is at-least-once on crash
-          // (a failure between the sink commit and the offset commit
-          // replays the micro-batch), so the sink commit must be a no-op
-          // for an already-applied window. The sink's max committed
-          // commit_seq is read METADATA-ONLY from its file stats (keyed
-          // by field id, O(sink files) driver work, no job); a window
-          // whose endpoint sequence is at or below it was fully applied —
-          // append is atomic, partial application cannot exist.
-          val sinkMeta = graft.table.GraftTable.load(spark, out.location).meta
-          val seqFid = sinkMeta.currentSchema.byName("commit_seq").id.toString
-          val applied = sinkMeta.head("main").toSeq
-            .flatMap(s => graft.table.Meta.readEntries(out.location, s))
-            .filter(_.fileType == "data")
-            .flatMap(_.stats.get(seqFid).flatMap(_.max).flatMap(_.toLongOption))
-            .foldLeft(0L)(math.max)
-          // For a REAL window (endpoints differ), the endpoint snapshot's
-          // sequence must resolve — fail LOUDLY if it cannot: a defaulted
-          // sentinel would poison the sink's commit_seq watermark and
-          // silently skip every subsequent window forever, the worst
-          // possible failure mode in an exactly-once path. (The v1
-          // creation batch has toSnap == fromSnap == 0 and never needs it.)
-          def toSeq: Long = graft.table.Meta.readJsonVersion(loc, vs.max)
-            .snapshots.find(_.snapshotId == toSnap).map(_.sequenceNumber)
-            .getOrElse(throw new IllegalStateException(
-              s"CDC pump: endpoint snapshot $toSnap not found in $loc " +
-                s"metadata v${vs.max} — cannot stamp commit_seq"))
-          if (toSnap != fromSnap && toSeq > applied) {
-            val tbl = graft.table.GraftTable.load(spark, loc)
-            val delta =
-              if (fromSnap == 0L)
-                // no from-snapshot exists yet: the whole window is inserts
-                tbl.scan(snapshotId = Some(toSnap), withLineage = true)
-                  .select(col("id"), col("status"), col("total"),
-                    lit("insert").as("change_type"),
-                    col("_last_updated_sequence_number").as("commit_seq"))
-              else
-                // batch changes() leaves deletes unstamped (the lineage
-                // squash cannot attribute the removing commit); here the
-                // window endpoint IS the covering commit, so stamp them
-                // with its sequence — Iceberg-changelog semantics, and it
-                // keeps the idempotency watermark advancing on
-                // delete-only windows
-                tbl.changes(fromSnap, Some(toSnap))
-                  .select(col("id"), col("status"), col("total"),
-                    col("_change_type").as("change_type"),
-                    coalesce(col("_commit_seq"), lit(toSeq)).as("commit_seq"))
-            // second idempotency guard, row-level: a replayed window whose
-            // ENDPOINT commit carries no stamped row changes (e.g. a
-            // compaction) passes the sequence gate above; dropping rows at
-            // or below the applied watermark makes its re-append a no-op
-            // too. A fresh window never loses rows to this — its changes
-            // all carry seqs above the previously applied endpoint.
-            out.append(delta.filter(col("commit_seq") > lit(applied)))
-          }
+    runBatches(mdStream, ckpt) { batch =>
+      val vs = batch.select("p").distinct().collect().map(_.getString(0))
+        .flatMap(p => verRe.findFirstMatchIn(p).map(_.group(1).toInt))
+      if (vs.nonEmpty) {
+        // window endpoints from PUBLISHED metadata versions only —
+        // immutable files, so a replayed batch recomputes identically
+        val fromSnap =
+          if (vs.min <= 1) 0L
+          else graft.table.Meta.readJsonVersion(loc, vs.min - 1).lastSnapshotId
+        val toSnap = graft.table.Meta.readJsonVersion(loc, vs.max).lastSnapshotId
+        // Idempotency watermark: foreachBatch is at-least-once on crash
+        // (a failure between the sink commit and the offset commit
+        // replays the micro-batch), so the sink commit must be a no-op
+        // for an already-applied window. The sink's max committed
+        // commit_seq is read METADATA-ONLY from its file stats (keyed
+        // by field id, O(sink files) driver work, no job); a window
+        // whose endpoint sequence is at or below it was fully applied —
+        // append is atomic, partial application cannot exist.
+        val sinkMeta = graft.table.GraftTable.load(spark, out.location).meta
+        val seqFid = sinkMeta.currentSchema.byName("commit_seq").id.toString
+        val applied = sinkMeta.head("main").toSeq
+          .flatMap(s => graft.table.Meta.readEntries(out.location, s))
+          .filter(_.fileType == "data")
+          .flatMap(_.stats.get(seqFid).flatMap(_.max).flatMap(_.toLongOption))
+          .foldLeft(0L)(math.max)
+        // For a REAL window (endpoints differ), the endpoint snapshot's
+        // sequence must resolve — fail LOUDLY if it cannot: a defaulted
+        // sentinel would poison the sink's commit_seq watermark and
+        // silently skip every subsequent window forever, the worst
+        // possible failure mode in an exactly-once path. (The v1
+        // creation batch has toSnap == fromSnap == 0 and never needs it.)
+        def toSeq: Long = graft.table.Meta.readJsonVersion(loc, vs.max)
+          .snapshots.find(_.snapshotId == toSnap).map(_.sequenceNumber)
+          .getOrElse(throw new IllegalStateException(
+            s"CDC pump: endpoint snapshot $toSnap not found in $loc " +
+              s"metadata v${vs.max} — cannot stamp commit_seq"))
+        if (toSnap != fromSnap && toSeq > applied) {
+          val tbl = graft.table.GraftTable.load(spark, loc)
+          val delta =
+            if (fromSnap == 0L)
+              // no from-snapshot exists yet: the whole window is inserts
+              tbl.scan(snapshotId = Some(toSnap), withLineage = true)
+                .select(col("id"), col("status"), col("total"),
+                  lit("insert").as("change_type"),
+                  col("_last_updated_sequence_number").as("commit_seq"))
+            else
+              // batch changes() leaves deletes unstamped (the lineage
+              // squash cannot attribute the removing commit); here the
+              // window endpoint IS the covering commit, so stamp them
+              // with its sequence — Iceberg-changelog semantics, and it
+              // keeps the idempotency watermark advancing on
+              // delete-only windows
+              tbl.changes(fromSnap, Some(toSnap))
+                .select(col("id"), col("status"), col("total"),
+                  col("_change_type").as("change_type"),
+                  coalesce(col("_commit_seq"), lit(toSeq)).as("commit_seq"))
+          // second idempotency guard, row-level: a replayed window whose
+          // ENDPOINT commit carries no stamped row changes (e.g. a
+          // compaction) passes the sequence gate above; dropping rows at
+          // or below the applied watermark makes its re-append a no-op
+          // too. A fresh window never loses rows to this — its changes
+          // all carry seqs above the previously applied endpoint.
+          out.append(delta.filter(col("commit_seq") > lit(applied)))
         }
-        ()
       }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    }
   }
 
   // --- streaming ingest with IN-JOB post-commit maintenance -----------------
@@ -865,24 +784,17 @@ object StreamingOps {
       a.append(src.filter(col("event_id") % 6 === i).coalesce(1)))
     graft.table.GraftTable.create(spark, s"$tmp/b", ddl)
     var commits = 0
-    val q = a.readStream(maxFilesPerTrigger = Some(1)).writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val sink = graft.table.GraftTable.load(spark, s"$tmp/b")
-        sink.append(batch)
-        commits += 1
-        // post-commit maintenance, in-job: same thread as the sink
-        // commit, so the rewrite serializes with the stream's appends
-        if (commits % CompactEveryCommits == 0) sink.compact(targetMB = 128)
-        ()
-      }
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    runBatches(a.readStream(maxFilesPerTrigger = Some(1)), s"$tmp/ckpt") { batch =>
+      val sink = graft.table.GraftTable.load(spark, s"$tmp/b")
+      sink.append(batch)
+      commits += 1
+      // post-commit maintenance, in-job: same thread as the sink
+      // commit, so the rewrite serializes with the stream's appends
+      if (commits % CompactEveryCommits == 0) sink.compact(targetMB = 128)
+    }
     val fin = graft.table.GraftTable.load(spark, s"$tmp/b")
     val nReplace = fin.meta.snapshots.count(_.operation == "replace").toLong
-    fin.scan().groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 6))).cast("double").as("sum_value"))
+    totals(fin.scan(), col("event_type"))
       .withColumn("n_replace", lit(nReplace))
       .orderBy("event_type")
   }
@@ -896,45 +808,11 @@ object StreamingOps {
     * advance — state is O(rate × window), not O(stream), the only shape
     * that survives an unbounded stream. Sentinels staged 3h past the
     * global max push the final watermark beyond every real pair under
-    * Trigger.AvailableNow (append is the sole output mode stream-stream
+    * the AvailableNow trigger (append is the sole output mode stream-stream
     * joins support); sentinel rows use user_id = -1 and are dropped in
     * the batch readback. */
-  def streamJoin(spark: SparkSession, dir: String): DataFrame = {
-    val (tmp, raw) = stageLinked(spark, dir)
-    val maxUs = maxTsMicros(spark, dir)
-    val sentinels = Tables(spark, dir, "events").select(col("event_type")).distinct()
-      .filter(col("event_type").isin("click", "purchase"))
-      .withColumn("event_id", lit(-1L))
-      .withColumn("ts", timestamp_micros(lit(maxUs + 10800000000L)))
-      .withColumn("user_id", lit(-1L))
-      .withColumn("value", lit(0.0))
-      .select(EventCols.map(col): _*)
-    writeSentinels(sentinels, raw, tmp)
-    val stream = Tables.normalizeEventTs(rawStream(spark, tmp, raw, EventCols))
-    val clicks = stream.filter(col("event_type") === "click")
-      .select(col("event_id").as("c_id"), col("ts").as("c_ts"),
-        col("user_id").as("c_user"))
-      .withWatermark("c_ts", "1 hour")
-    val purchases = stream.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("p_id"), col("ts").as("p_ts"),
-        col("user_id").as("p_user"))
-      .withWatermark("p_ts", "1 hour")
-    val joined = clicks.join(purchases,
-      col("c_user") === col("p_user") &&
-        col("p_ts") >= col("c_ts") &&
-        col("p_ts") <= col("c_ts") + expr("INTERVAL 30 MINUTES"))
-    val name = s"j_${UUID.randomUUID.toString.replace("-", "")}"
-    val q = joined.writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    drainSink(spark, name)(spark.table(name).filter(col("c_user") >= 0)
-      .groupBy(col("c_user"))
-      .agg(count(lit(1)).as("n_pairs"))
-      .select(col("c_user").as("user_id"), col("n_pairs"))
-      .orderBy("user_id"))
-  }
+  def streamJoin(spark: SparkSession, dir: String): DataFrame =
+    drainClickPurchase(spark, dir, "inner", count(lit(1)).as("n_pairs"))
 
   /** Stream-stream LEFT OUTER interval join — the harder semantics: a
     * click with no purchase inside its 30-minute window must STILL emit
@@ -944,18 +822,18 @@ object StreamingOps {
     * every click's window end so each unmatched click resolves before
     * AvailableNow drains. Output counts both outcomes per user, which
     * pins the padding logic, not just the matches. */
-  def streamJoinOuter(spark: SparkSession, dir: String): DataFrame = {
-    val (tmp, raw) = stageLinked(spark, dir)
-    val maxUs = maxTsMicros(spark, dir)
-    val sentinels = Tables(spark, dir, "events").select(col("event_type")).distinct()
-      .filter(col("event_type").isin("click", "purchase"))
-      .withColumn("event_id", lit(-1L))
-      .withColumn("ts", timestamp_micros(lit(maxUs + 10800000000L)))
-      .withColumn("user_id", lit(-1L))
-      .withColumn("value", lit(0.0))
-      .select(EventCols.map(col): _*)
-    writeSentinels(sentinels, raw, tmp)
-    val stream = Tables.normalizeEventTs(rawStream(spark, tmp, raw, EventCols))
+  def streamJoinOuter(spark: SparkSession, dir: String): DataFrame =
+    drainClickPurchase(spark, dir, "leftOuter",
+      sum(when(col("p_id").isNotNull, 1L).otherwise(0L)).as("n_pairs"),
+      sum(when(col("p_id").isNull, 1L).otherwise(0L)).as("n_unmatched"))
+
+  /** The click→purchase interval join both join operators run (`how` =
+    * inner | leftOuter), read back as `aggs` per clicking user with the
+    * sentinel user (-1) dropped. */
+  private def drainClickPurchase(spark: SparkSession, dir: String, how: String,
+      aggs: Column*): DataFrame = {
+    val (tmp, stream) = eventStream(spark, dir, sentinelAfterHours = Some(3),
+      keys = Some(eventTypes(spark, dir).filter(col("event_type").isin("click", "purchase"))))
     val clicks = stream.filter(col("event_type") === "click")
       .select(col("event_id").as("c_id"), col("ts").as("c_ts"),
         col("user_id").as("c_user"))
@@ -968,18 +846,10 @@ object StreamingOps {
       col("c_user") === col("p_user") &&
         col("p_ts") >= col("c_ts") &&
         col("p_ts") <= col("c_ts") + expr("INTERVAL 30 MINUTES"),
-      "leftOuter")
-    val name = s"jo_${UUID.randomUUID.toString.replace("-", "")}"
-    val q = joined.writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    drainSink(spark, name)(spark.table(name).filter(col("c_user") >= 0)
-      .groupBy(col("c_user"))
-      .agg(sum(when(col("p_id").isNotNull, 1L).otherwise(0L)).as("n_pairs"),
-        sum(when(col("p_id").isNull, 1L).otherwise(0L)).as("n_unmatched"))
-      .select(col("c_user").as("user_id"), col("n_pairs"), col("n_unmatched"))
+      how)
+    drainMemory(joined, tmp)(_.filter(col("c_user") >= 0)
+      .groupBy(col("c_user").as("user_id"))
+      .agg(aggs.head, aggs.tail: _*)
       .orderBy("user_id"))
   }
 
@@ -990,25 +860,15 @@ object StreamingOps {
     * shuffle for the join). The everyday "attach user segment to the
     * clickstream" shape. */
   def streamEnrich(spark: SparkSession, dir: String): DataFrame = {
-    val (tmp, raw) = stageLinked(spark, dir)
+    val (tmp, stream) = eventStream(spark, dir)
     val dim = graft.table.GraftTable.create(spark, s"$tmp/dim",
       "user_id bigint, segment string")
     dim.append(Tables(spark, dir, "events").select(col("user_id")).distinct()
       .withColumn("segment",
         concat(lit("seg"), pmod(col("user_id"), lit(4L)).cast("string"))))
-    val stream = Tables.normalizeEventTs(rawStream(spark, tmp, raw, EventCols))
     val enriched = stream.join(broadcast(dim.scan()), Seq("user_id"))
-    val name = s"en_${UUID.randomUUID.toString.replace("-", "")}"
-    val q = enriched.writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    drainSink(spark, name)(spark.table(name)
-      .groupBy(col("segment"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 6))).cast("double").as("sum_value"))
-      .orderBy("segment", "event_type"))
+    drainMemory(enriched, tmp)(
+      totals(_, col("segment"), col("event_type")).orderBy("segment", "event_type"))
   }
 
   // --- streaming exactly-once dedup -----------------------------------------
@@ -1022,23 +882,14 @@ object StreamingOps {
     * dropDuplicates would grow state forever). First-seen rows emit
     * immediately in append mode, so no sentinels are needed. */
   def streamDedup(spark: SparkSession, dir: String): DataFrame = {
-    val (tmp, raw) = stageLinked(spark, dir)
-    linkInto(java.nio.file.Paths.get(tmp, "in"),
-      java.nio.file.Paths.get(dir, "events.parquet"), tag = "redeliver")
-    val stream = Tables.normalizeEventTs(rawStream(spark, tmp, raw, EventCols))
+    val (tmp, stream) = eventStream(spark, dir)
+    // the file source lists its directory when the query runs, so the
+    // re-delivered links count though they land after the stream opens
+    linkInto(Paths.get(tmp, "in"), Paths.get(dir, "events.parquet"), tag = "redeliver")
     val deduped = stream
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
-    val name = s"d_${UUID.randomUUID.toString.replace("-", "")}"
-    val q = deduped.writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    drainSink(spark, name)(spark.table(name).groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 6))).cast("double").as("sum_value"))
-      .orderBy("event_type"))
+    drainMemory(deduped, tmp)(totals(_, col("event_type")).orderBy("event_type"))
   }
 
   val queries: Map[String, Q] = Map[String, Q](
@@ -1066,14 +917,24 @@ object StreamingOps {
       k -> ((s: SparkSession, d: String) => withStatePartitions(s)(f(s, d)))
     }
 
+  /** batch truth of every operator that streams the whole events table
+    * into per-event_type totals (dedup, ingest, tail) */
+  private val eventTypeTotalsSql =
+      """SELECT event_type, COUNT(*) AS n,
+        | CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
+
+  /** batch truth of both hourly-window operators */
+  private val hourlyTotalsSql =
+      """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS ws, event_type,
+        | COUNT(*) AS n, CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
+
   val oracles: Map[String, String] = Map(
     // the streaming state machine must reproduce the BATCH attribution
     // window exactly — one oracle serves both
     "q_stream_attribution" -> Behavioral.oracles("q_attribution"),
-    "q_stream_dedup" ->
-      """SELECT event_type, COUNT(*) AS n,
-        | CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+    "q_stream_dedup" -> eventTypeTotalsSql,
     "q_stream_join" ->
       """WITH c AS (SELECT * FROM events WHERE event_type = 'click'),
         |p AS (SELECT * FROM events WHERE event_type = 'purchase')
@@ -1112,14 +973,8 @@ object StreamingOps {
         |  SELECT o_orderpriority, o_totalprice
         |  FROM orders WHERE o_orderkey % 3 = 1) t
         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q_stream_ingest" ->
-      """SELECT event_type, COUNT(*) AS n,
-        | CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q_stream_tail" ->
-      """SELECT event_type, COUNT(*) AS n,
-        | CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+    "q_stream_ingest" -> eventTypeTotalsSql,
+    "q_stream_tail" -> eventTypeTotalsSql,
     // in-job maintenance: 6 single-file batches → 6 append commits →
     // a rewrite every 2 commits = exactly 3 replace snapshots; the data
     // survives every interleaved compaction bit-for-bit
@@ -1204,10 +1059,7 @@ object StreamingOps {
          |FROM c JOIN p ON c.ws = p.ws
          |GROUP BY p.ws, p.ws_next, p.n_a, p.n_b
          |ORDER BY p.ws""".stripMargin,
-    "q_stream_window" ->
-      """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS ws, event_type,
-        | COUNT(*) AS n, CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+    "q_stream_window" -> hourlyTotalsSql,
     "q_stream_sketch" ->
       s"""WITH h AS (
          |  SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS ws,
@@ -1238,10 +1090,7 @@ object StreamingOps {
          |  ${Sketches.sqlHllEst} AS ndv_est
          |FROM sk JOIN cnt USING (ws)
          |ORDER BY ws""".stripMargin,
-    "q_stream_window_append" ->
-      """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS ws, event_type,
-        | COUNT(*) AS n, CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+    "q_stream_window_append" -> hourlyTotalsSql,
     "q_stream_pipeline" ->
       """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS ws, event_type,
         | COUNT(*) AS n,

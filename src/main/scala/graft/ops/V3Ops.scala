@@ -1,11 +1,9 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.table._
 
 /** Format-v3 typed-column capabilities (SURVEY.md §2.1 #23–27): variant,
@@ -15,12 +13,9 @@ import graft.table._
 object V3Ops {
   type Q = (SparkSession, String) => DataFrame
 
-  private def scratch(): String =
-    Files.createTempDirectory("graft-q").resolve("t").toString
-
   // --- #23 variant type: semi-structured props stored as Spark VARIANT ------
   def variant(spark: SparkSession, dir: String): DataFrame = {
-    val t = GraftTable.create(spark, scratch(), "event_id bigint, props variant")
+    val t = GraftTable.create(spark, Scratch.table(), "event_id bigint, props variant")
     t.append(Tables(spark, dir, "events")
       .select(col("event_id"), parse_json(col("props")).as("props")))
     t.scan()
@@ -31,7 +26,7 @@ object V3Ops {
 
   // --- #24 shredded variant: hot field also stored typed; reads recombine ---
   def variantShredded(spark: SparkSession, dir: String): DataFrame = {
-    val t = GraftTable.create(spark, scratch(),
+    val t = GraftTable.create(spark, Scratch.table(),
       "event_id bigint, k bigint, props variant")
     val ev = Tables(spark, dir, "events")
     // write-side shredding: extract $.k to a typed column (stats + pruning
@@ -64,7 +59,7 @@ object V3Ops {
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n"),
         slice(sort_array(collect_list(col("e"))), 1, 3).as("events"))
-    val t = GraftTable.create(spark, scratch(), "user_id bigint, doc variant")
+    val t = GraftTable.create(spark, Scratch.table(), "user_id bigint, doc variant")
     t.append(packed.select(col("user_id"),
       parse_json(to_json(struct(col("n"), col("events")))).as("doc")))
     t.scan()
@@ -86,7 +81,7 @@ object V3Ops {
   private def wkbY(w: Column): Column = graft.functions.GraftFunctions.wkbY(w)
 
   def geoBbox(spark: SparkSession, dir: String): DataFrame = {
-    val t = GraftTable.create(spark, scratch(), "id bigint, geom binary")
+    val t = GraftTable.create(spark, Scratch.table(), "id bigint, geom binary")
     val pts = Tables(spark, dir, "orders").select(
       col("o_orderkey").as("id"),
       wkbPoint((col("o_orderkey") % 360 - 180).cast("double"),
@@ -128,7 +123,7 @@ object V3Ops {
     * columns are exact integer-valued doubles, so the hash compare is
     * safe. */
   def geoSphere(spark: SparkSession, dir: String): DataFrame = {
-    val t = GraftTable.create(spark, scratch(), "id bigint, geom binary")
+    val t = GraftTable.create(spark, Scratch.table(), "id bigint, geom binary")
     t.append(Tables(spark, dir, "orders").select(
       col("o_orderkey").as("id"),
       wkbPoint((col("o_orderkey") % 360 - 180).cast("double"),
@@ -152,7 +147,7 @@ object V3Ops {
       (unix_micros(col("ts")) * 1000L + col("event_id") % 1000).as("ts_ns"))
 
   def nanoTs(spark: SparkSession, dir: String): DataFrame = {
-    val t = GraftTable.create(spark, scratch(), "event_id bigint, ts_ns bigint")
+    val t = GraftTable.create(spark, Scratch.table(), "event_id bigint, ts_ns bigint")
     t.append(nanoEvents(spark, dir))
     // full nanosecond precision is stored (spec-checked: the planted
     // residue survives the round-trip bit-exactly); the oracle compares
@@ -174,7 +169,7 @@ object V3Ops {
     * proving bit-exact sub-µs storage) and rows with a nonzero residue
     * (must be >0, proving the check isn't vacuous). */
   def nanoResidue(spark: SparkSession, dir: String): (Long, Long) = {
-    val t = GraftTable.create(spark, scratch(), "event_id bigint, ts_ns bigint")
+    val t = GraftTable.create(spark, Scratch.table(), "event_id bigint, ts_ns bigint")
     t.append(nanoEvents(spark, dir))
     val s = t.scan()
     (s.filter(col("ts_ns") % 1000 =!= col("event_id") % 1000).count(),
@@ -183,7 +178,7 @@ object V3Ops {
 
   // --- #27 row lineage: _row_id stable, sequence bumps on update ------------
   def lineage(spark: SparkSession, dir: String): DataFrame = {
-    val t = GraftTable.create(spark, scratch(),
+    val t = GraftTable.create(spark, Scratch.table(),
       "o_orderkey bigint, o_totalprice double")
     val o = Tables(spark, dir, "orders").select("o_orderkey", "o_totalprice")
     t.append(o.filter(col("o_orderkey") % 2 === 0)) // seq 1

@@ -66,10 +66,15 @@ trait Catalog {
     Meta.currentVersion(location).isDefined &&
       scala.util.Try(Meta.readJson(location).snapshots.nonEmpty).getOrElse(false)
 
+  /** the dot-prefixed staging tables of `ns` (hidden from
+    * [[listTables]]) as (name, data location) */
+  protected def stagingTables(ns: String): Seq[(String, String)]
+
   /** Reconcile in-flight staging tables (from CTAS REPLACE swaps) whose
-    * last write is older than `olderThanMs`. Age guard for the same reason
-    * removeOrphanFiles has one: a LIVE RTAS may still be materializing into
-    * a young staging table.
+    * last write — the data directory's mtime; a location that vanished
+    * is trivially stale — is older than `olderThanMs`. Age guard for the
+    * same reason removeOrphanFiles has one: a LIVE RTAS may still be
+    * materializing into a young staging table.
     *
     * RESTORE-FIRST: a swap that crashed between dropTable(old) and
     * renameTable(staging, target) leaves the fully-materialized staging
@@ -77,10 +82,32 @@ trait Catalog {
     * destroy the table. So a stale staging whose parsed target is missing
     * and whose materialization completed (>= 1 snapshot) is renamed into
     * place, finishing the interrupted swap; everything else (target alive,
-    * or crashed mid-materialize with zero snapshots) is removed.
+    * or crashed mid-materialize with zero snapshots) is removed. Another
+    * writer (a second JVM on the same warehouse, another client of the
+    * same service) can create or restore the target between the
+    * tableExists probe and the rename; the rename then fails with "table
+    * exists", and first writer wins: the staging leftover is dropped
+    * instead of aborting the sweep.
     *
     * @return (restored, removed) counts */
-  def cleanStaging(ns: String, olderThanMs: Long): (Int, Int)
+  def cleanStaging(ns: String, olderThanMs: Long): (Int, Int) = {
+    var restored = 0; var removed = 0
+    stagingTables(ns).foreach { case (s, loc) =>
+      val dir = Paths.get(loc)
+      val mtime = if (Files.exists(dir)) Files.getLastModifiedTime(dir).toMillis
+        else Long.MinValue
+      if (mtime < olderThanMs) {
+        val target = s match { case StagingRe(t) => Some(t); case _ => None }
+        target.filter(t => stagingComplete(loc) && !tableExists(ns, t)) match {
+          case Some(t) =>
+            try { renameTable(ns, s, t); restored += 1 }
+            catch { case _: IllegalStateException => dropTable(ns, s); removed += 1 }
+          case None => dropTable(ns, s); removed += 1
+        }
+      }
+    }
+    (restored, removed)
+  }
 }
 
 object Catalog {
@@ -128,12 +155,18 @@ class GraftCatalog(val spark: SparkSession, val warehouse: String)
   def createNamespace(ns: String): Unit =
     Files.createDirectories(nsPath(ns))
 
-  def listNamespaces(): Seq[String] = {
-    val w = Paths.get(warehouse)
-    if (!Files.isDirectory(w)) return Nil
-    Files.list(w).iterator().asScala.filter(Files.isDirectory(_))
-      .map(_.getFileName.toString).toSeq.sorted
-  }
+  /** the entries of directory `p` (none when it is missing); the listing
+    * is closed before returning, so it holds no file descriptor */
+  private def children(p: Path): Seq[Path] =
+    if (!Files.isDirectory(p)) Nil
+    else {
+      val ls = Files.list(p)
+      try ls.iterator().asScala.toSeq finally ls.close()
+    }
+
+  def listNamespaces(): Seq[String] =
+    children(Paths.get(warehouse)).filter(Files.isDirectory(_))
+      .map(_.getFileName.toString).sorted
 
   def createTable(ns: String, name: String, ddl: String,
       partitionBy: Seq[String] = Nil, properties: Map[String, String] = Map.empty,
@@ -151,21 +184,22 @@ class GraftCatalog(val spark: SparkSession, val warehouse: String)
   def tableExists(ns: String, name: String): Boolean =
     Meta.currentVersion(tblPath(ns, name).toString).isDefined
 
-  def listTables(ns: String): Seq[String] = {
-    val p = nsPath(ns)
-    if (!Files.isDirectory(p)) return Nil
-    Files.list(p).iterator().asScala
+  def listTables(ns: String): Seq[String] =
+    children(nsPath(ns))
       .filter(d => Meta.currentVersion(d.toString).isDefined)
       .map(_.getFileName.toString)
       // dot-prefixed dirs are in-flight staging tables (CTAS REPLACE swap)
       .filterNot(_.startsWith("."))
-      .toSeq.sorted
-  }
+      .sorted
 
   def renameTable(ns: String, from: String, to: String): Unit = {
     require(tableExists(ns, from), s"no such table $ns.$from")
-    require(!tableExists(ns, to), s"table $ns.$to exists")
-    Files.move(tblPath(ns, from), tblPath(ns, to))
+    def exists = new IllegalStateException(s"table $ns.$to exists")
+    if (tableExists(ns, to)) throw exists
+    // the move refuses an existing target: a racing creator surfaces as
+    // the same "exists" failure as the probe above
+    try Files.move(tblPath(ns, from), tblPath(ns, to))
+    catch { case _: java.nio.file.FileAlreadyExistsException => throw exists }
   }
 
   def dropTable(ns: String, name: String): Unit =
@@ -174,24 +208,8 @@ class GraftCatalog(val spark: SparkSession, val warehouse: String)
   def dropNamespace(ns: String): Unit =
     Files.deleteIfExists(nsPath(ns))
 
-  def cleanStaging(ns: String, olderThanMs: Long): (Int, Int) = {
-    val p = nsPath(ns)
-    if (!Files.isDirectory(p)) return (0, 0)
-    val stale = Files.list(p).iterator().asScala
+  protected def stagingTables(ns: String): Seq[(String, String)] =
+    children(nsPath(ns))
       .filter(d => d.getFileName.toString.startsWith(".") && Files.isDirectory(d))
-      .filter(d => Files.getLastModifiedTime(d).toMillis < olderThanMs)
-      .toSeq
-    var restored = 0
-    stale.foreach { d =>
-      val target = d.getFileName.toString match {
-        case StagingRe(t) => Some(t)
-        case _ => None
-      }
-      target.filter(t => stagingComplete(d.toString) && !tableExists(ns, t)) match {
-        case Some(t) => Files.move(d, tblPath(ns, t)); restored += 1
-        case None => GraftTable.deleteTree(d)
-      }
-    }
-    (restored, stale.size - restored)
-  }
+      .map(d => d.getFileName.toString -> d.toString)
 }

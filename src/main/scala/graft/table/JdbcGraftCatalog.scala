@@ -1,6 +1,6 @@
 package graft.table
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 import java.sql.{Connection, DriverManager, SQLException}
 
 import org.apache.spark.sql.SparkSession
@@ -105,7 +105,7 @@ class JdbcGraftCatalog(val spark: SparkSession, val url: String,
 
   def renameTable(ns: String, from: String, to: String): Unit = lock.synchronized {
     require(tableExists(ns, from), s"no such table $ns.$from")
-    require(!tableExists(ns, to), s"table $ns.$to exists")
+    if (tableExists(ns, to)) throw new IllegalStateException(s"table $ns.$to exists")
     // single-row UPDATE: the data dir never moves (see class doc); the PK
     // turns a lost race into a 23505, not a silent overwrite
     try update("UPDATE graft_tables SET tbl = ? WHERE ns = ? AND tbl = ?",
@@ -123,26 +123,13 @@ class JdbcGraftCatalog(val spark: SparkSession, val url: String,
     }
   }
 
-  def cleanStaging(ns: String, olderThanMs: Long): (Int, Int) = lock.synchronized {
-    val staging = queryStrings(
-      "SELECT tbl FROM graft_tables WHERE ns = ? AND tbl LIKE '.%'", ns)
-    var restored = 0; var removed = 0
-    staging.foreach { s =>
-      val loc = location(ns, s).get
-      // age via the data dir, same signal as the filesystem backend; a
-      // pointer whose dir vanished is trivially stale garbage
-      val mtime = if (Files.exists(Paths.get(loc)))
-        Files.getLastModifiedTime(Paths.get(loc)).toMillis else Long.MinValue
-      if (mtime < olderThanMs) {
-        val target = s match { case StagingRe(t) => Some(t); case _ => None }
-        target.filter(t => stagingComplete(loc) && !tableExists(ns, t)) match {
-          case Some(t) => renameTable(ns, s, t); restored += 1
-          case None => dropTable(ns, s); removed += 1
-        }
-      }
-    }
-    (restored, removed)
-  }
+  protected def stagingTables(ns: String): Seq[(String, String)] =
+    queryStrings("SELECT tbl FROM graft_tables WHERE ns = ? AND tbl LIKE '.%'", ns)
+      .flatMap(s => location(ns, s).map(s -> _))
+
+  // the whole sweep holds the catalog lock, as every pointer update does
+  override def cleanStaging(ns: String, olderThanMs: Long): (Int, Int) =
+    lock.synchronized(super.cleanStaging(ns, olderThanMs))
 }
 
 object JdbcGraftCatalog {

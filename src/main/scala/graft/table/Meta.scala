@@ -193,10 +193,15 @@ object Meta {
   def currentVersion(location: String): Option[Int] = {
     val dir = Paths.get(location, "metadata")
     if (!Files.isDirectory(dir)) return None
-    val vs = Files.list(dir).iterator().asScala
+    // close the listing: an unclosed directory stream holds its file
+    // descriptor until the JVM exits, and this runs on every metadata
+    // read, commit and tableExists
+    val ls = Files.list(dir)
+    val vs = try ls.iterator().asScala
       .map(_.getFileName.toString)
       .collect { case s if s.matches("v\\d+\\.json") => s.drop(1).dropRight(5).toInt }
       .toSeq
+    finally ls.close()
     if (vs.isEmpty) None else Some(vs.max)
   }
 

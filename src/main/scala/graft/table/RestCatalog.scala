@@ -3,7 +3,7 @@ package graft.table
 import java.net.{InetSocketAddress, URLDecoder, URLEncoder}
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
@@ -138,35 +138,8 @@ class RestGraftCatalog(val spark: SparkSession, val baseUrl: String,
       .foreach(l => GraftTable.deleteTree(Paths.get(l)))
   }
 
-  def cleanStaging(ns: String, olderThanMs: Long): (Int, Int) = {
-    val staging = listAll(ns).filter(_.startsWith("."))
-    var restored = 0; var removed = 0
-    staging.foreach { s =>
-      val loc = location(ns, s).getOrElse("")
-      // age via the data dir, same signal as the peer backends; a pointer
-      // whose dir vanished is trivially stale garbage
-      val mtime = if (loc.nonEmpty && Files.exists(Paths.get(loc)))
-        Files.getLastModifiedTime(Paths.get(loc)).toMillis else Long.MinValue
-      if (mtime < olderThanMs) {
-        val target = s match { case StagingRe(t) => Some(t); case _ => None }
-        target.filter(t => stagingComplete(loc) && !tableExists(ns, t)) match {
-          case Some(t) =>
-            // unlike the fs/jdbc peers (which hold a JVM lock around the
-            // whole sweep), another client sharing the SERVICE can create
-            // or restore the target between the tableExists probe and the
-            // rename — the server-side CAS then 409s. First writer wins:
-            // degrade to dropping the staging leftover instead of
-            // aborting the sweep.
-            try { renameTable(ns, s, t); restored += 1 }
-            catch { case _: IllegalStateException =>
-              dropTable(ns, s); removed += 1
-            }
-          case None => dropTable(ns, s); removed += 1
-        }
-      }
-    }
-    (restored, removed)
-  }
+  protected def stagingTables(ns: String): Seq[(String, String)] =
+    listAll(ns).filter(_.startsWith(".")).flatMap(s => location(ns, s).map(s -> _))
 }
 
 object RestGraftCatalog {

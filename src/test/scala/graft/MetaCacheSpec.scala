@@ -38,6 +38,19 @@ class MetaCacheSpec extends SparkSpec {
     assert(Meta.readManifest(l, rel2).map(_.path) == Seq("c.parquet"))
   }
 
+  test("metadata reads close their directory listing (no descriptor growth)") {
+    val fdDir = new java.io.File("/proc/self/fd")
+    assume(fdDir.isDirectory, "needs /proc/self/fd")
+    def openFds(): Int = fdDir.list().length
+    val l = loc()
+    GraftTable.create(spark, l, "k bigint")
+    Meta.readJson(l) // warm: class loading and the mapper open nothing later
+    val before = openFds()
+    (1 to 1000).foreach(_ => Meta.readJson(l))
+    val grown = openFds() - before
+    assert(grown < 10, s"1000 metadata reads left $grown more descriptors open")
+  }
+
   test("cache hits still feed the read log (decision-layer proofs keep their meaning)") {
     val l = loc()
     val rel = Meta.writeManifest(l, "seg-logged", Seq(entry("a.parquet", "1")))

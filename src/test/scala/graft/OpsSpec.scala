@@ -369,8 +369,10 @@ class OpsSpec extends SparkSpec {
     val docs = Tables(spark, sf01, "documents")
     val truth = Dedup.jaccardPairs(docs, 0.9).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(truth.nonEmpty, "expected planted near-duplicates at sf0.01")
-    val cand = Dedup.minhashCandidates(docs).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(truth.subsetOf(cand), s"missing: ${truth.diff(cand)}")
+    // the production LSH path: banded candidates, then exact verify
+    val found = Dedup.minhashVerifiedPairs(docs, 0.9).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(truth.subsetOf(found), s"missing: ${truth.diff(found)}")
   }
 
   test("jaccard df cap bounds hot-shingle candidate fan-out") {
@@ -383,12 +385,13 @@ class OpsSpec extends SparkSpec {
         (100L, "quick brown fox jumps over the lazy dog tonight"),
         (101L, "quick brown fox jumps over the lazy dog today")))
       .toDF("doc_id", "text")
-    // uncapped baseline (cap ≥ 40 disables the filter): the hot shingles
-    // alone emit all 780 boilerplate pairs
-    assert(Dedup.jaccardCandidates(docs, 40).count() == 781)
+    // at tau = 0 every candidate pair is verified, so the pair set IS
+    // the candidate set. Uncapped baseline (cap ≥ 40 disables the
+    // filter): the hot shingles alone emit all 780 boilerplate pairs
+    assert(Dedup.jaccardPairs(docs, 0.0, maxDf = 40).count() == 781)
     // capped: boilerplate shingles (df=40 > 5) generate NOTHING; the
     // planted pair still surfaces via its df=2 shingles
-    val cand = Dedup.jaccardCandidates(docs, 5).collect()
+    val cand = Dedup.jaccardPairs(docs, 0.0, maxDf = 5).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(cand == Set((100L, 101L)), s"capped candidates: $cand")
     // and verification is still exact over the FULL shingle sets: the
