@@ -7,17 +7,10 @@ import scala.collection.immutable.ArraySeq
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.mapreduce.TaskAttemptID
-import org.apache.hadoop.mapred.FileSplit
-import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.parquet.hadoop.ParquetInputFormat
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BoundReference, Cast, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, VectorizedParquetRecordReader}
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{BooleanType, DataType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -112,10 +105,11 @@ case class KeyDeleted(children: Seq[Expression], keys: DeletedKeys) extends Expr
 }
 
 /** Delete files read on the driver: each part file is read with the
-  * schema the format fixes for its kind, by Spark's vectorized parquet
-  * reader, with no Spark job and no broadcast. [[DeleteReader]] decodes
-  * the rows and caches them in [[Meta]]'s bounded cache under the
-  * entry's absolute path — delete files are immutable once published. */
+  * schema the format fixes for its kind, by the driver-side parquet
+  * reader ([[DriverParquet]]), with no Spark job and no broadcast.
+  * [[DeleteReader]] decodes the rows and caches them in [[Meta]]'s
+  * bounded cache under the entry's absolute path — delete files are
+  * immutable once published. */
 private[table] object DeleteFiles {
 
   /** The decoded cost of one key tuple of `fields` fields, apart from the
@@ -161,28 +155,9 @@ private[table] object DeleteFiles {
   }
 
   /** Every row of a delete entry's part files, in `schema`. */
-  def rows(spark: SparkSession, dir: String, schema: StructType): Seq[InternalRow] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val sql = spark.sessionState.conf
-    conf.set(ParquetInputFormat.READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)
-    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, schema.json)
-    conf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, sql.sessionLocalTimeZone)
-    Seq(SQLConf.CASE_SENSITIVE, SQLConf.PARQUET_BINARY_AS_STRING,
-      SQLConf.PARQUET_INT96_AS_TIMESTAMP, SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
-      SQLConf.LEGACY_PARQUET_NANOS_AS_LONG)
-      .foreach(e => conf.setBoolean(e.key, sql.getConf(e)))
-    partFiles(dir).flatMap { p =>
-      val reader = new VectorizedParquetRecordReader(false, 4096)
-      try {
-        reader.initialize(
-          new FileSplit(new org.apache.hadoop.fs.Path(p.toUri), 0, Files.size(p), Array.empty[String]),
-          new TaskAttemptContextImpl(conf, new TaskAttemptID()))
-        reader.initBatch(new StructType(), InternalRow.empty)
-        val out = mutable.ArrayBuffer.empty[InternalRow]
-        while (reader.nextBatch())
-          reader.resultBatch().rowIterator().asScala.foreach(r => out += r.copy())
-        out
-      } finally reader.close()
-    }
+  def rows(io: DriverParquet, dir: String, schema: StructType): Seq[InternalRow] = {
+    val out = mutable.ArrayBuffer.empty[InternalRow]
+    for (p <- partFiles(dir)) io.foreach(p.toString, Files.size(p), schema)(out += _.copy())
+    out.toSeq
   }
 }

@@ -98,12 +98,13 @@ private[table] final class DeleteReader(spark: SparkSession, path: String => Str
   }
 
   /** Stored target -> deleted positions of one position or vector file
-    * (several vectors for one target in one file unite). */
-  def targets(m: TableMeta, f: FileMeta): Map[String, BitSet] = {
+    * (several vectors for one target in one file unite), read through
+    * `io` unless cached. */
+  def targets(m: TableMeta, f: FileMeta, io: DriverParquet): Map[String, BitSet] = {
     val d = dir(f.path)
     Meta.cached(d, () => {
       val acc = mutable.HashMap.empty[String, BitSet]
-      for (r <- DeleteFiles.rows(spark, d, deleteSchema(m, f)) if !r.isNullAt(0) && !r.isNullAt(1)) {
+      for (r <- DeleteFiles.rows(io, d, deleteSchema(m, f)) if !r.isNullAt(0) && !r.isNullAt(1)) {
         val bits = acc.getOrElseUpdate(r.getUTF8String(0).toString, new BitSet)
         if (f.fileType == "dv") bits.or(BitSet.valueOf(r.getBinary(1)))
         else {
@@ -119,13 +120,14 @@ private[table] final class DeleteReader(spark: SparkSession, path: String => Str
 
   /** The key tuples of one equality-delete file, normalized
     * ([[DeletedKeys.key]]), in the types it was written in. */
-  def keys(m: TableMeta, f: FileMeta): Set[Any] = keysIn(deleteSchema(m, f), f)
+  def keys(m: TableMeta, f: FileMeta, io: DriverParquet): Set[Any] =
+    keysIn(deleteSchema(m, f), f, io)
 
-  private def keysIn(schema: StructType, f: FileMeta): Set[Any] = {
+  private def keysIn(schema: StructType, f: FileMeta, io: DriverParquet): Set[Any] = {
     val d = dir(f.path)
     Meta.cached(d, () => {
       val types = schema.fields.map(_.dataType)
-      val ks = DeleteFiles.rows(spark, d, schema)
+      val ks = DeleteFiles.rows(io, d, schema)
         .map(r => DeletedKeys.key(types.indices.map(i => r.get(i, types(i))))).toSet
       def payload(v: Any): Long = v match {
         case s: UTF8String => s.numBytes
@@ -142,11 +144,12 @@ private[table] final class DeleteReader(spark: SparkSession, path: String => Str
     * is deleted. Positions: `NOT deleted(_gf, _gp)` over one bitmap per
     * live data file, position files united, and per file the
     * highest-sequence vector (ties unite). Equality deletes, per file:
-    * `NOT (_seq < dseq AND deleted(keys))`, keys in the presented types. */
-  def deleteFilter(m: TableMeta, presented: SchemaMeta, live: Seq[String], posDel: Seq[FileMeta],
-      dvs: Seq[FileMeta], eqDels: Seq[FileMeta]): Option[Column] = {
+    * `NOT (_seq < dseq AND deleted(keys))`, keys in the presented types.
+    * Files not yet cached are read through `io`. */
+  def deleteFilter(io: DriverParquet, m: TableMeta, presented: SchemaMeta, live: Seq[String],
+      posDel: Seq[FileMeta], dvs: Seq[FileMeta], eqDels: Seq[FileMeta]): Option[Column] = {
     val resolve = resolver(live)
-    def named(f: FileMeta) = targets(m, f).toSeq.flatMap { case (t, b) => resolve(t).map(_ -> b) }
+    def named(f: FileMeta) = targets(m, f, io).toSeq.flatMap { case (t, b) => resolve(t).map(_ -> b) }
     // cached bitmaps are shared: OR into a copy
     val bits = mutable.HashMap.empty[String, BitSet]
     def or(t: String, b: BitSet): Unit = bits(t) = bits.get(t).fold(b) { cur =>
@@ -168,7 +171,7 @@ private[table] final class DeleteReader(spark: SparkSession, path: String => Str
       val fields = f.eqFieldIds.map(id => presented.byId(id)
         .getOrElse(throw new IllegalStateException(s"eq-delete field $id dropped")))
       val schema = deleteSchema(m, f)
-      val ks = DeleteFiles.convert(keysIn(schema, f), schema.fields.map(_.dataType).toSeq,
+      val ks = DeleteFiles.convert(keysIn(schema, f, io), schema.fields.map(_.dataType).toSeq,
         fields.map(pf => sparkType(pf.dtype)), tz)
       if (ks.isEmpty) None
       else Some(!(col("_seq") < lit(f.sequenceNumber) && Bridge.column(KeyDeleted(
@@ -185,7 +188,8 @@ private[table] final class DeleteReader(spark: SparkSession, path: String => Str
     val named = overlays.filter(f => f.fileType == "posdel" || f.fileType == "dv")
     if (named.isEmpty || !decodable(m, data, named)) return Set.empty
     val resolve = resolver(data.map(f => path(f.path)))
-    named.filter(f => targets(m, f).keys.forall(t => resolve(t).exists(removed)))
+    val io = new DriverParquet(spark)
+    named.filter(f => targets(m, f, io).keys.forall(t => resolve(t).exists(removed)))
       .map(f => path(f.path)).toSet
   }
 

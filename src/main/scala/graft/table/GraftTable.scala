@@ -333,12 +333,13 @@ class GraftTable(val spark: SparkSession, val location: String) extends TableCha
   }
 
   /** read only `files` of the plan's snapshot, its deletes applied, lineage
-    * materialized — the input to any copy-on-write rewrite. Reusing the
-    * plan that found the files rewrites exactly the snapshot they came
-    * from, without planning it again. */
+    * materialized — the input to any copy-on-write rewrite, so on the
+    * Spark leaf ([[TableScan]]). Reusing the plan that found the files
+    * rewrites exactly the snapshot they came from, without planning it
+    * again. */
   private def readForRewrite(plan: ScanPlan, files: Set[String],
       withPos: Boolean = false): DataFrame =
-    scanSnapshot(plan.only(files), None, withLineage = true, withPos = withPos)
+    scanSnapshot(plan.only(files), None, withLineage = true, withPos = withPos, rewrite = true)
       .withColumnRenamed("_last_updated_sequence_number", "_last_seq")
 
   def delete(cond: String, mode: WriteMode.Value = WriteMode.CopyOnWrite,
@@ -896,7 +897,8 @@ class GraftTable(val spark: SparkSession, val location: String) extends TableCha
     val entries = Meta.readEntries(location, snap)
     val totalBytes = entries.filter(_.fileType == "data").map(_.sizeBytes).sum
     val n = math.max(1, (totalBytes / (targetMB.toLong << 20)).toInt)
-    val all = scan(withLineage = true, ref = Some(branch))
+    val all = scanSnapshot(planRead(ref = Some(branch)), None, withLineage = true,
+      withPos = false, rewrite = true)
       .withColumnRenamed("_last_updated_sequence_number", "_last_seq")
     val out = writeDataFiles(all, snapId, seq, repartitionTo = Some(n))
     val removed = entries.map(e => entryPath(location, e.path)).toSet

@@ -9,7 +9,11 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** A [[FileIndex]] over exactly the data files a scan planned from the
   * manifest: Spark lists nothing and reads no file status, because the
-  * manifest entry already holds the path and length.
+  * manifest entry already holds the path and length. It is the Spark
+  * leaf of a scan ([[TableScan]]): a file group past the driver-leaf
+  * bound, and every group whose rows feed a rewrite, since a rewrite's
+  * write job runs anyway and reads the files in parallel. A group read
+  * on the driver instead gets the same columns from [[DriverParquet]].
   *
   * Each file is its own partition, whose values are the per-file
   * constants merge-on-read needs: `_gf` (the file's raw absolute path —
@@ -48,8 +52,9 @@ private[table] final case class ManifestFileIndex(files: Seq[ManifestFileIndex.E
 }
 
 private[table] object ManifestFileIndex {
-  /** One planned data file. `sizeBytes` must be the file's length:
-    * parquet splits and the footer offset are planned from it. */
+  /** One planned data file, on either leaf. `sizeBytes` must be the
+    * file's length: parquet splits and the footer offset are planned
+    * from it, and the driver leaf opens the file with it. */
   final case class Entry(path: String, sizeBytes: Long, seq: Long, firstRowId: Long) {
     require(sizeBytes > 0,
       s"manifest data entry $path has sizeBytes $sizeBytes; it must be the file's length")

@@ -1,6 +1,6 @@
 package graft.table
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -10,6 +10,7 @@ import graft.table.TableScan.entryPath
   * CDC), [[appendsBetween]] (strict append window) and [[scanIncremental]]
   * (delta by sequence number), each over one resolved [[window]]. */
 trait TableChanges {
+  def spark: SparkSession
   def location: String
   protected def scans: TableScan
   protected def deletes: DeleteReader
@@ -149,7 +150,8 @@ trait TableChanges {
       else if (!deletes.decodable(m, data, fileScoped)) survivors
       else {
         val resolve = deletes.resolver(survivors.toSeq)
-        fileScoped.flatMap(e => deletes.targets(m, e).keys.flatMap(resolve)).toSet
+        val io = new DriverParquet(spark)
+        fileScoped.flatMap(e => deletes.targets(m, e, io).keys.flatMap(resolve)).toSet
       }
     // (d): survivors an in-window equality delete could touch, bounded by
     // their manifest column stats against the delete's key values — a
@@ -182,7 +184,7 @@ trait TableChanges {
   private def eqScopePreds(m: TableMeta, e: FileMeta): Seq[Pruning.Pred] = {
     if (e.rowCount > EqScopeMaxKeys || !deletes.decodable(m, Nil, Seq(e))) return Nil
     val schema = m.schema(e.schemaId)
-    val tuples = deletes.keys(m, e).toSeq.map {
+    val tuples = deletes.keys(m, e, new DriverParquet(spark)).toSeq.map {
       case k if e.eqFieldIds.size == 1 => Seq(k)
       case k => k.asInstanceOf[Seq[Any]]
     }

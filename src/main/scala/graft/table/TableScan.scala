@@ -1,12 +1,19 @@
 package graft.table
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetUtils}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** What one read of a snapshot involves, from its manifest alone: the
   * entries of the segments it read (`read`; `skipped` names the segments
@@ -29,14 +36,26 @@ private[table] final case class ScanPlan(location: String, m: TableMeta, present
 }
 
 /** The scan unit of a table: plans a read from the manifest and builds
-  * the DataFrame of a plan. A scan is planned from the manifest alone:
-  * each file group is a relation over a [[ManifestFileIndex]] of the
-  * planned entries, so Spark neither lists files nor infers a schema.
-  * The index gives every row its file's constants (`_gf` path, `_fseq`
-  * sequence number, `_frid` first row id) as partition values, and
-  * Spark's `_metadata.row_index` gives its position. Merge-on-read
-  * deletes key on (`_gf`, position) or on equality-key values, and are
-  * read through [[DeleteReader]]. */
+  * the DataFrame of a plan. A scan is planned from the manifest alone,
+  * so Spark neither lists files nor infers a schema. Each file group
+  * (the planned files of one schema) is one of two leaves with the same
+  * columns: the group's physical fields, its file's constants (`_gf`
+  * path, `_fseq` sequence number, `_frid` first row id) and the row's
+  * position in its file.
+  *  - The driver leaf: a group small enough to read on the driver
+  *    ([[TableScan.onDriver]]) is read whole by [[DriverParquet]] into a
+  *    `LocalRelation`, so Spark folds the query above it into a
+  *    `LocalTableScan` and a point lookup's `collect()` runs no job.
+  *  - The Spark leaf: any other group is a relation over a
+  *    [[ManifestFileIndex]] of its entries, which gives the constants as
+  *    partition values; `_metadata.row_index` gives the position.
+  * A scan whose rows feed a rewrite (`rewrite`) keeps the Spark leaf:
+  * its write job runs anyway and reads those files in parallel, where
+  * the driver would read them one after another before the job starts.
+  * Everything above the leaf is one path: alignment to the presented
+  * schema, merge-on-read deletes (keyed on (`_gf`, position) or on
+  * equality-key values, read through [[DeleteReader]]), lineage and the
+  * caller's filter. */
 private[table] final class TableScan(spark: SparkSession, location: String,
     deletes: DeleteReader) {
   import TableScan._
@@ -92,10 +111,11 @@ private[table] final class TableScan(spark: SparkSession, location: String,
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], st)
   }
 
-  /** The DataFrame of a plan: its data files read through manifest-built
-    * relations, its delete files applied, `filter` on top. */
+  /** The DataFrame of a plan: its data files read through the driver or
+    * the Spark leaf (the Spark leaf always when the rows feed a
+    * `rewrite`), its delete files applied, `filter` on top. */
   def scanSnapshot(plan: ScanPlan, filter: Option[String],
-      withLineage: Boolean, withPos: Boolean): DataFrame = {
+      withLineage: Boolean, withPos: Boolean, rewrite: Boolean = false): DataFrame = {
     val m = plan.m
     val presented = m.schema(plan.presentedId)
     val dataFiles = plan.data
@@ -116,8 +136,8 @@ private[table] final class TableScan(spark: SparkSession, location: String,
     // per-schema file groups: read with that schema's physical layout, align.
     // name-mapped (imported) files form their own group per schema and are
     // read by LOGICAL column name — Iceberg's name-mapping analog. Each group
-    // is a relation over exactly its manifest entries: no listing, and the
-    // per-file constants arrive as partition values (ManifestFileIndex).
+    // reads exactly its manifest entries, on the driver or through Spark.
+    val io = new DriverParquet(spark)
     val groups = dataFiles.groupBy(f => (f.schemaId, f.nameMapped)).toSeq
       .map { case ((sid, mapped), files) =>
       val gs = m.schema(sid)
@@ -125,10 +145,12 @@ private[table] final class TableScan(spark: SparkSession, location: String,
       val physSchema = StructType(
         gs.fields.map(f => StructField(pname(f), sparkType(f.dtype))) ++
           Seq(StructField("_row_id", LongType), StructField("_last_seq", LongType)))
-      val index = ManifestFileIndex(files.map(f => ManifestFileIndex.Entry(
-        entryPath(location, f.path), f.sizeBytes, f.sequenceNumber, f.firstRowId)))
-      val df = Bridge.ofRows(spark, LogicalRelation(HadoopFsRelation(index,
-        index.partitionSchema, physSchema, None, new ParquetFileFormat, Map.empty)(spark)))
+      val entries = files.map(f => ManifestFileIndex.Entry(
+        entryPath(location, f.path), f.sizeBytes, f.sequenceNumber, f.firstRowId))
+      val (df, pos) =
+        if (!rewrite && onDriver(spark, files, physSchema))
+          (driverLeaf(io, files.map(_.rowCount).zip(entries), physSchema), col(RowIndex))
+        else (sparkLeaf(entries, physSchema), col("_metadata.row_index"))
       val aligned = presented.fields.map { pf =>
         gs.byId(pf.id) match {
           case Some(gf) => col(pname(gf)).cast(sparkType(pf.dtype)).as(pf.name)
@@ -138,7 +160,6 @@ private[table] final class TableScan(spark: SparkSession, location: String,
           }
         }
       }
-      val pos = col("_metadata.row_index")
       val extras =
         (if (needPos) Seq(col("_gf"), pos.as("_gp")) else Nil) ++
         (if (needFileMeta) Seq(coalesce(col("_last_seq"), col("_fseq")).as("_seq"),
@@ -158,7 +179,7 @@ private[table] final class TableScan(spark: SparkSession, location: String,
       def snapshotData = (plan.read ++ plan.skipped.flatMap(Meta.readManifest(location, _)))
         .filter(_.fileType == "data")
       df = if (deletes.decodable(m, snapshotData, deleteSet))
-        deletes.deleteFilter(m, presented, livePaths, posDel, dvs, eqDels)
+        deletes.deleteFilter(io, m, presented, livePaths, posDel, dvs, eqDels)
           .map(df.filter).getOrElse(df)
       else deletes.antiJoinDeletes(df, m, presented, livePaths, posDel, dvs, eqDels)
     }
@@ -170,10 +191,66 @@ private[table] final class TableScan(spark: SparkSession, location: String,
     df = df.select(out: _*)
     filter.map(f => df.filter(expr(f))).getOrElse(df)
   }
+
+  /** A group's files as a relation over their manifest entries. */
+  private def sparkLeaf(entries: Seq[ManifestFileIndex.Entry], physSchema: StructType): DataFrame = {
+    val index = ManifestFileIndex(entries)
+    Bridge.ofRows(spark, LogicalRelation(HadoopFsRelation(index,
+      index.partitionSchema, physSchema, None, new ParquetFileFormat, Map.empty)(spark)))
+  }
+
+  /** A group's files read whole on the driver, each `(rowCount, entry)`,
+    * into a `LocalRelation` with the Spark leaf's columns: `physSchema`,
+    * the file constants and the row's position ([[RowIndex]]). */
+  private def driverLeaf(io: DriverParquet, files: Seq[(Long, ManifestFileIndex.Entry)],
+      physSchema: StructType): DataFrame = {
+    val schema = StructType(physSchema.fields ++ ManifestFileIndex.PartitionSchema.fields :+
+      StructField(RowIndex, LongType, nullable = false))
+    val toUnsafe = UnsafeProjection.create(schema.fields.map(_.dataType))
+    val (joined, ordinal) = (new JoinedRow, new GenericInternalRow(1))
+    val rows = mutable.ArrayBuffer.empty[InternalRow]
+    val batch = spark.sessionState.conf.parquetVectorizedReaderBatchSize
+    for ((n, e) <- files) {
+      var i = 0L
+      io.foreach(e.path, e.sizeBytes, physSchema, ManifestFileIndex.PartitionSchema,
+        InternalRow(UTF8String.fromString(e.path), e.seq, e.firstRowId),
+        capacity = math.max(1L, math.min(n, batch.toLong)).toInt) { r =>
+        ordinal.setLong(0, i)
+        i += 1
+        rows += toUnsafe(joined(r, ordinal)).copy()
+      }
+    }
+    Bridge.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(schema), rows.toSeq))
+  }
 }
 
-/** The naming rules every unit of a table shares. */
+/** The naming rules every unit of a table shares, and the leaf rule. */
 private[table] object TableScan {
+  /** The driver leaf's column of a row's position in its file: Spark's
+    * `_metadata.row_index` (no row-group skipping, so the ordinal). */
+  val RowIndex = "_row_index"
+
+  /** Is a file group read on the driver: its planned rows (the manifest
+    * row counts) fit one vectorized-reader batch, its planned bytes are
+    * within Spark's broadcast bound (the bound the driver-side delete
+    * decode uses; `-1` never is), and Spark's vectorized reader reads its
+    * physical schema in batches. Only existing Spark settings decide it;
+    * switching off the vectorized reader forces the Spark leaf. A group
+    * with a nested column keeps the Spark leaf too: Spark's nested
+    * vectorized reader would accept it, but the driver leaf is pinned
+    * against the Spark leaf on flat schemas only. */
+  def onDriver(spark: SparkSession, files: Seq[FileMeta], physSchema: StructType): Boolean = {
+    val conf = spark.sessionState.conf
+    val bound = conf.autoBroadcastJoinThreshold
+    files.map(_.rowCount).sum <= conf.parquetVectorizedReaderBatchSize &&
+      bound >= 0 && files.map(_.sizeBytes).sum <= bound &&
+      ParquetUtils.isBatchReadSupportedForSchema(conf, physSchema) &&
+      !physSchema.exists(f => f.dataType match {
+        case _: StructType | _: ArrayType | _: MapType => true
+        case _ => false
+      })
+  }
+
   /** A field's physical parquet column name. */
   def phys(f: FieldMeta): String = s"f${f.id}"
 

@@ -25,7 +25,7 @@ class CatalogSpec extends SparkSpec {
 
   test("both backends run the same lifecycle to the same listing") {
     for ((label, mk) <- backends) {
-      val wh = Files.createTempDirectory(s"graft-cat-$label").toString
+      val wh = Scratch.dir(s"graft-cat-$label").toString
       val cat = mk(wh)
       cat.createNamespace("db1")
       cat.createNamespace("db2")
@@ -62,7 +62,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("jdbc rename is a pointer update: the data directory never moves") {
-    val wh = Files.createTempDirectory("graft-cat-ptr").toString
+    val wh = Scratch.dir("graft-cat-ptr").toString
     val cat = new JdbcGraftCatalog(spark, JdbcGraftCatalog.defaultUrl(wh), wh)
     val t = cat.createTable("db", "a", "k bigint")
     t.append(Seq(1L, 2L, 3L).toDF("k"))
@@ -77,7 +77,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("jdbc cleanStaging keeps restore-first parity with the fs backend") {
-    val wh = Files.createTempDirectory("graft-cat-stg").toString
+    val wh = Scratch.dir("graft-cat-stg").toString
     val cat = new JdbcGraftCatalog(spark, JdbcGraftCatalog.defaultUrl(wh), wh)
     // crashed swap window: staging fully materialized, target dropped,
     // rename never ran — restore, don't delete
@@ -94,8 +94,8 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("SQL DDL/DML honor the spark.graft.catalog switch mid-session") {
-    val whJ = Files.createTempDirectory("graft-sql-jdbc").toString
-    val whF = Files.createTempDirectory("graft-sql-fs").toString
+    val whJ = Scratch.dir("graft-sql-jdbc").toString
+    val whF = Scratch.dir("graft-sql-fs").toString
     // getOrCreate returns the extension-less shared session unless the
     // active/default slots are cleared first (same dance as withSqlSession)
     SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
@@ -144,7 +144,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("rest rename is a server-side pointer CAS: data never moves") {
-    val wh = Files.createTempDirectory("graft-cat-rest").toString
+    val wh = Scratch.dir("graft-cat-rest").toString
     val cat = new RestGraftCatalog(spark, restServer.url, wh)
     val t = cat.createTable("rdb", "a", "k bigint")
     t.append(Seq(1L, 2L, 3L).toDF("k"))
@@ -162,7 +162,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("rest cleanStaging keeps restore-first parity with the peers") {
-    val wh = Files.createTempDirectory("graft-cat-rstg").toString
+    val wh = Scratch.dir("graft-cat-rstg").toString
     val cat = new RestGraftCatalog(spark, restServer.url, wh)
     val stg = cat.stagingName("orders")
     cat.createTable("rstg", stg, "k bigint").append(Seq(7L, 8L).toDF("k"))
@@ -194,7 +194,7 @@ class CatalogSpec extends SparkSpec {
     // service with no shared filesystem/JVM — so race two CLIENTS (each
     // its own HTTP session) through the same server and assert the CAS
     // contract holds under real concurrency, not just sequentially
-    val wh = Files.createTempDirectory("graft-cat-race").toString
+    val wh = Scratch.dir("graft-cat-race").toString
     val cats = Seq.fill(2)(new RestGraftCatalog(spark, restServer.url, wh))
     cats.head.createNamespace("race")
     // create race, several rounds (one round could always luck into
@@ -232,7 +232,7 @@ class CatalogSpec extends SparkSpec {
     // making the probe LIE (as a concurrent restore/create would): the
     // sweep must fall back to dropping the staging row — first writer
     // wins — never abort the sweep
-    val wh = Files.createTempDirectory("graft-cat-rdeg").toString
+    val wh = Scratch.dir("graft-cat-rdeg").toString
     val cat = new RestGraftCatalog(spark, restServer.url, wh)
     val stg = cat.stagingName("hot")
     cat.createTable("rdeg", stg, "k bigint").append(Seq(1L, 2L).toDF("k"))

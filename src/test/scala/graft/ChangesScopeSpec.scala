@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import scala.util.Random
 
 import org.apache.spark.sql.DataFrame
@@ -26,7 +24,7 @@ import graft.table._
 class ChangesScopeSpec extends SparkSpec {
 
   private def tmp(): String =
-    Files.createTempDirectory("graft-chscope").resolve("t").toString
+    Scratch.dir("graft-chscope").resolve("t").toString
 
   private def mk(loc: String, partitionBy: Seq[String] = Nil): GraftTable =
     GraftTable.create(spark, loc, "id bigint, k bigint, s string", partitionBy)

@@ -22,7 +22,7 @@ import graft.table._
 class DeleteReadSpec extends SparkSpec {
 
   private def tmp(): String =
-    Files.createTempDirectory("graft-delread").resolve("t").toString
+    Scratch.dir("graft-delread").resolve("t").toString
 
   /** Model rows: k -> (p, v). */
   private type Model = Map[Long, (String, String)]

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.LeftAnti
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
@@ -12,16 +12,16 @@ import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 
 import graft.table._
 
-/** The manifest-planned scan: data files are read through a
-  * [[ManifestFileIndex]] over the planned entries and delete files with
-  * the schemas the format fixes, so building a scan starts no Spark job
-  * (no listing, no schema inference) and the per-file constants need no
-  * join. A delete set within Spark's broadcast bound applies as one
-  * filter in the scan stage; beyond it, as anti-joins Spark plans. */
+/** The manifest-planned scan: data files are read on the driver (a group
+  * within the leaf bound) or through a [[ManifestFileIndex]] over the
+  * planned entries, and delete files with the schemas the format fixes,
+  * so building a scan starts no Spark job (no listing, no schema
+  * inference) and the per-file constants need no join. A delete set
+  * within Spark's broadcast bound applies as one filter above the leaf;
+  * beyond it, as anti-joins Spark plans. */
 class ManifestScanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
-  private def tmp(): String =
-    Files.createTempDirectory("graft-mscan").resolve("t").toString
+  private def tmp(): String = Scratch.dir("graft-mscan").resolve("t").toString
 
   private def dataEntries(t: GraftTable): Seq[FileMeta] =
     Meta.readEntries(t.location, t.meta.head("main").get).filter(_.fileType == "data")
@@ -51,18 +51,70 @@ class ManifestScanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private def keysOf(rows: Array[Row]): Seq[(Long, String)] =
     rows.map(r => (r.getLong(0), r.getString(1))).toSeq
 
-  test("a point scan over posdel, DV and eqdel builds with 0 jobs and collects with 1") {
+  test("a point scan over posdel, DV and eqdel below the leaf bound builds and collects with 0 jobs") {
     val t = morTable()
     val (df, buildJobs) = jobsDuring(t.scan(filter = Some("k = 35")))
     assert(buildJobs == 0, "building the scan must not list files, infer schemas or read deletes")
-    // the deletes are one filter in the scan stage: no broadcast job
+    // the planned file is read on the driver and the deletes fold into
+    // the local rows: collect runs no job
     val (rows, collectJobs) = jobsDuring(df.collect())
     val plan = df.queryExecution.executedPlan.treeString
-    assert(collectJobs == 1, plan)
-    assert(!nodes(df).exists(_.isInstanceOf[BroadcastExchangeExec]), plan)
+    assert(collectJobs == 0, plan)
+    assert(nodes(df).exists(_.isInstanceOf[LocalTableScanExec]), plan)
+    assert(!nodes(df).exists(_.isInstanceOf[FileSourceScanExec]), plan)
     assert(keysOf(rows) == Seq((35L, "v35")))
     for (gone <- Seq(31L, 32L, 25L))
       assert(t.scan(filter = Some(s"k = $gone")).collect().isEmpty, s"k=$gone")
+  }
+
+  test("a point scan over posdel, DV and eqdel builds with 0 jobs and collects with 1") {
+    val t = morTable()
+    withSparkLeaf {
+      val (df, buildJobs) = jobsDuring(t.scan(filter = Some("k = 35")))
+      assert(buildJobs == 0, "building the scan must not list files, infer schemas or read deletes")
+      // the deletes are one filter in the scan stage: no broadcast job
+      val (rows, collectJobs) = jobsDuring(df.collect())
+      val plan = df.queryExecution.executedPlan.treeString
+      assert(collectJobs == 1, plan)
+      assert(nodes(df).exists(_.isInstanceOf[FileSourceScanExec]), plan)
+      assert(!nodes(df).exists(_.isInstanceOf[BroadcastExchangeExec]), plan)
+      assert(keysOf(rows) == Seq((35L, "v35")))
+      for (gone <- Seq(31L, 32L, 25L))
+        assert(t.scan(filter = Some(s"k = $gone")).collect().isEmpty, s"k=$gone")
+    }
+  }
+
+  test("the leaf rule: a group within one reader batch and the broadcast bound runs 0 jobs; past either, 1") {
+    import spark.implicits._
+    val batch = spark.sessionState.conf.parquetVectorizedReaderBatchSize
+    def oneFile(n: Int): GraftTable = {
+      val t = GraftTable.create(spark, tmp(), "k bigint, v string")
+      t.append((0L until n.toLong).map(k => (k, s"v$k")).toDF("k", "v").coalesce(1))
+      assert(dataEntries(t).map(_.rowCount) == Seq(n.toLong))
+      t
+    }
+    def lookup(t: GraftTable): (Int, Seq[SparkPlan]) = {
+      val df = t.scan(filter = Some("k = 35"))
+      val (rows, jobs) = jobsDuring(df.collect())
+      assert(keysOf(rows) == Seq((35L, "v35")))
+      (jobs, nodes(df))
+    }
+    def onDriver(t: GraftTable): Unit = {
+      val (jobs, plan) = lookup(t)
+      assert(jobs == 0 && !plan.exists(_.isInstanceOf[FileSourceScanExec]), plan.head.treeString)
+    }
+    def onSpark(t: GraftTable): Unit = {
+      val (jobs, plan) = lookup(t)
+      assert(jobs == 1 && plan.exists(_.isInstanceOf[FileSourceScanExec]), plan.head.treeString)
+    }
+    val fits = oneFile(batch)
+    onDriver(fits)
+    onSpark(oneFile(batch + 1))
+    // the planned bytes against Spark's broadcast bound
+    val bytes = dataEntries(fits).map(_.sizeBytes).sum
+    withBroadcastBound(bytes)(onDriver(fits))
+    withBroadcastBound(bytes - 1)(onSpark(fits))
+    withBroadcastBound(-1)(onSpark(fits))
   }
 
   test("with the broadcast bound off, the same scan plans shuffled anti-joins and returns the same rows") {
@@ -135,7 +187,7 @@ class ManifestScanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     t.update("id = 2", Map("total" -> "total + 1"))               // CoW rewrite
     t.compact(targetMB = 1)                                        // compaction
     assert(graft.ops.Interop.runExtWriter(loc, Seq((6L, "e", 6.0))) == 0)
-    val ext = Files.createTempDirectory("graft-mscan-import").toString
+    val ext = Scratch.dir("graft-mscan-import").toString
     rows(7L, 8L).coalesce(1).write.mode("overwrite").parquet(ext)
     val t2 = GraftTable.load(spark, loc)
     t2.addFiles(ext)

@@ -10,7 +10,7 @@ class MarkupQuantileSpec extends SparkSpec {
   import spark.implicits._
 
   private def docsDir(rows: Seq[(Long, String, String, String, Long)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-markup").toString
+    val dir = Scratch.dir("graft-markup").toString
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
     dir

@@ -13,7 +13,7 @@ import graft.table._
 class MetaCacheSpec extends SparkSpec {
 
   private def loc(): String =
-    Files.createTempDirectory("graft-metacache").toString
+    Scratch.dir("graft-metacache").toString
 
   private def entry(path: String, day: String) =
     FileMeta(path, "data", 0, 0, Map("d" -> day), 1, 1, 1, Map.empty)
@@ -159,7 +159,7 @@ class MetaCacheSpec extends SparkSpec {
 
   test("a second scan of the same snapshot reads no delete file") {
     import spark.implicits._
-    val t = GraftTable.create(spark, Files.createTempDirectory("graft-metacache")
+    val t = GraftTable.create(spark, Scratch.dir("graft-metacache")
       .resolve("t").toString, "k bigint, v string")
     t.append((0L until 40L).map(k => (k, s"v$k")).toDF("k", "v"))
     t.delete("k % 5 = 0", WriteMode.MergeOnRead)

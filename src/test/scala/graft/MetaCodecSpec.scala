@@ -13,7 +13,7 @@ import graft.table._
   * written by the earlier pretty-printing codec still reads. */
 class MetaCodecSpec extends AnyFunSuite {
 
-  private def loc(): String = Files.createTempDirectory("graft-codec").toString
+  private def loc(): String = Scratch.dir("graft-codec").toString
 
   /** A state where every `Option` field occurs both set and absent. */
   private val state = TableMeta(

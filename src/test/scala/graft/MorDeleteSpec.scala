@@ -8,15 +8,16 @@ import org.apache.spark.sql.functions.{col, lit}
 import graft.table._
 
 /** Merge-on-read edge cases, each read through both delete paths: the
-  * filter the driver builds from the decoded delete files (the default)
-  * and the anti-joins used beyond Spark's broadcast bound (bound off).
+  * filter the driver builds from the decoded delete files (the default,
+  * over the driver leaf and over the Spark leaf) and the anti-joins used
+  * beyond Spark's broadcast bound (bound off, so the Spark leaf).
   * Equality deletes match keys with `<=>`: null matches null, NaN
   * matches NaN, -0.0 matches 0.0, and a delete removes only rows older
   * than itself. */
 class MorDeleteSpec extends SparkSpec {
 
   private def tmp(): String =
-    Files.createTempDirectory("graft-mordel").resolve("t").toString
+    Scratch.dir("graft-mordel").resolve("t").toString
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().toSeq.map(_.toSeq.map {
@@ -25,20 +26,26 @@ class MorDeleteSpec extends SparkSpec {
     }.mkString("|")).sorted
 
   /** Did this scan apply its deletes as the driver-built filter (else as
-    * anti-joins)? It must be one or the other. */
+    * anti-joins)? It must be one or the other. The analyzed plan shows the
+    * choice on either leaf (the optimizer folds a filter over the driver
+    * leaf into its rows). */
   private def viaFilter(df: DataFrame): Boolean = {
-    val plan = df.queryExecution.optimizedPlan.treeString
+    val plan = df.queryExecution.analyzed.treeString
     assert(plan.contains("deleted(") != plan.contains("LeftAnti"), plan)
     plan.contains("deleted(")
   }
 
-  /** The head scan must equal `want` through both paths, and each path
-    * must be the one it claims: a filter with no join, or anti-joins. */
+  /** The head scan must equal `want` through both paths, the filter path
+    * on both leaves, and each path must be the one it claims: a filter
+    * with no join, or anti-joins. */
   private def check(t: GraftTable, want: Seq[String]): Unit = {
-    val filtered = t.scan()
-    assert(viaFilter(filtered))
-    assert(!filtered.queryExecution.optimizedPlan.treeString.contains("Join"))
-    assert(rows(filtered) == want.sorted, "filter path")
+    for ((leaf, read) <- Seq("driver" -> (() => t.scan()),
+        "spark" -> (() => withSparkLeaf(t.scan())))) {
+      val filtered = read()
+      assert(viaFilter(filtered), leaf)
+      assert(!filtered.queryExecution.optimizedPlan.treeString.contains("Join"), leaf)
+      assert(rows(filtered) == want.sorted, s"filter path, $leaf leaf")
+    }
     withJoinDeletes {
       val joined = t.scan()
       assert(!viaFilter(joined))
@@ -200,7 +207,8 @@ class MorDeleteSpec extends SparkSpec {
     val ls = Files.list(dir)
     try ls.forEach(p => if (p.getFileName.toString.endsWith(".parquet")) Files.delete(p))
     finally ls.close()
-    for (read <- Seq(() => t.scan(), () => withJoinDeletes(t.scan()))) {
+    for (read <- Seq(() => t.scan(), () => withSparkLeaf(t.scan()),
+        () => withJoinDeletes(t.scan()))) {
       val err = intercept[IllegalArgumentException](read().collect())
       assert(err.getMessage.contains(dir.toString), err.getMessage)
     }

@@ -180,7 +180,7 @@ class OpsSpec extends SparkSpec {
 
   test("q22 returns empty (not NPE) when no customer has a positive balance") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-q22").toString
+    val dir = Scratch.dir("graft-q22").toString
     Seq((1L, "c1", 1, -5.0, "SEG"), (2L, "c2", 2, 0.0, "SEG"))
       .toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
       .write.parquet(s"$dir/customer.parquet")
@@ -302,7 +302,7 @@ class OpsSpec extends SparkSpec {
     // the one read-group shape the registry keys don't cover; a MoR
     // delete on top proves overlay targeting works for external paths
     val src = Tables(spark, sf, "supplier")
-    val loc = java.nio.file.Files.createTempDirectory("graft-pyread-af").toString
+    val loc = Scratch.dir("graft-pyread-af").toString
     val t = graft.table.GraftTable.create(spark, loc, src.schema.toDDL)
     t.addFiles(s"$sf/supplier.parquet")
     t.delete("s_suppkey % 10 = 0", graft.table.WriteMode.MergeOnRead)
@@ -440,7 +440,7 @@ class OpsSpec extends SparkSpec {
     //  - hot leg DROPPED   → J = 8/18  = 0.44 < 0.6 → pair missing (fn=1)
     //  - hot leg DOUBLED   → boilerplate pairs J = 8/6 ≥ 0.6 → truth
     //    explodes to 33k pairs (fn huge) — both directions fail tp/fp/fn
-    val tmp = java.nio.file.Files.createTempDirectory("graft-evalhot").toString
+    val tmp = Scratch.dir("graft-evalhot").toString
     val boiler = (0L until 260L).map(i =>
       (i, s"all rights reserved by the site u$i v$i w$i", "src0"))
     val planted = Seq(
@@ -703,7 +703,7 @@ class OpsSpec extends SparkSpec {
 
   test("incremental agg: refresh consumes only the delta; mutation is rejected") {
     import graft.table.GraftTable
-    val tmp = java.nio.file.Files.createTempDirectory("graft-incrspec")
+    val tmp = Scratch.dir("graft-incrspec")
     val base = GraftTable.create(spark, tmp.resolve("b").toString,
       "k string, v double")
     val result = IncrementalAgg.createResult(spark, tmp.resolve("r").toString,
@@ -733,7 +733,7 @@ class OpsSpec extends SparkSpec {
 
   test("overwritePartitions swaps only touched partitions' files") {
     import graft.table.{GraftTable, Meta}
-    val tmp = java.nio.file.Files.createTempDirectory("graft-dpo").toString
+    val tmp = Scratch.dir("graft-dpo").toString
     val t = GraftTable.create(spark, s"$tmp/t",
       "k bigint, day string, v double", partitionBy = Seq("identity(day)"))
     import spark.implicits._
@@ -763,7 +763,7 @@ class OpsSpec extends SparkSpec {
 
   test("scd2: as-of reads reconstruct every version; one open row per key") {
     import graft.table.GraftTable
-    val tmp = java.nio.file.Files.createTempDirectory("graft-scd2spec")
+    val tmp = Scratch.dir("graft-scd2spec")
     val dim = GraftTable.create(spark, tmp.resolve("d").toString,
       "k bigint, v double, valid_from bigint, valid_to bigint, is_current boolean")
     import spark.implicits._
@@ -1370,7 +1370,7 @@ class OpsSpec extends SparkSpec {
 
   test("SQL INSERT OVERWRITE honors dynamic partitionOverwriteMode") {
     import org.apache.spark.sql.SparkSession
-    val wh = java.nio.file.Files.createTempDirectory("graft-dynwh").toString
+    val wh = Scratch.dir("graft-dynwh").toString
     SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
     val s2 = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
@@ -1401,7 +1401,7 @@ class OpsSpec extends SparkSpec {
 
   test("SQL CTAS: schema from query, guards, OR REPLACE swaps") {
     import org.apache.spark.sql.SparkSession
-    val wh = java.nio.file.Files.createTempDirectory("graft-ctaswh2").toString
+    val wh = Scratch.dir("graft-ctaswh2").toString
     SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
     val s2 = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
@@ -1449,7 +1449,7 @@ class OpsSpec extends SparkSpec {
 
   test("SQL DDL + procedures: full lifecycle through spark.sql") {
     import org.apache.spark.sql.SparkSession
-    val wh = java.nio.file.Files.createTempDirectory("graft-ddlwh").toString
+    val wh = Scratch.dir("graft-ddlwh").toString
     SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
     val s2 = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
@@ -1583,7 +1583,7 @@ class OpsSpec extends SparkSpec {
 
   test("SQL DML: INSERT / UPDATE / DELETE / MERGE through spark.sql") {
     import org.apache.spark.sql.SparkSession
-    val wh = java.nio.file.Files.createTempDirectory("graft-dmlwh").toString
+    val wh = Scratch.dir("graft-dmlwh").toString
     SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
     val s2 = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
@@ -1650,7 +1650,7 @@ class OpsSpec extends SparkSpec {
 
   test("SQL resolution: SELECT from graft.<ns>.<table> via extensions") {
     import org.apache.spark.sql.SparkSession
-    val wh = java.nio.file.Files.createTempDirectory("graft-sqlwh").toString
+    val wh = Scratch.dir("graft-sqlwh").toString
     // a session built WITH GraftExtensions (shares the SparkContext)
     SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
     val s2 = SparkSession.builder().master("local[4]")
@@ -1684,15 +1684,17 @@ class OpsSpec extends SparkSpec {
       // metadata-only COUNT(*): with live delete files the scan answers...
       val slow = s2.sql("SELECT count(*) FROM graft.db1.kv")
       assert(slow.head().getLong(0) == 2)
-      assert(slow.queryExecution.executedPlan.toString.contains("Scan parquet"),
-        "delete files live: count must run through the scan")
+      // the scan reads the table's data files on either leaf (here the
+      // driver leaf); the manifest-only count would plan a Range instead
+      assert(plannedFiles(slow).nonEmpty && !slow.queryExecution.executedPlan.toString
+        .contains("Range"), "delete files live: count must run through the scan")
       // ...after compaction (deletes applied), the manifests answer alone
       t.compact()
       val fast = s2.sql("SELECT count(*) AS n FROM graft.db1.kv")
       assert(fast.head().getLong(0) == 2)
       val plan = fast.queryExecution.executedPlan.toString
-      assert(!plan.contains("Scan parquet") && plan.contains("Range"),
-        s"metadata count must not scan data files:\n$plan")
+      assert(!plan.contains("Scan parquet") && plan.contains("Range") &&
+        plannedFiles(fast).isEmpty, s"metadata count must not scan data files:\n$plan")
       // count(col) / grouped counts are untouched by the rewrite
       assert(s2.sql("SELECT count(v) FROM graft.db1.kv").head().getLong(0) == 2)
       // SQL time travel: snapshot 1 predates the MoR delete
@@ -1711,8 +1713,7 @@ class OpsSpec extends SparkSpec {
 
   test("SQL-path reads prune the manifest like the DataFrame path") {
     import org.apache.spark.sql.SparkSession
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    val wh = java.nio.file.Files.createTempDirectory("graft-sqlwh2").toString
+    val wh = Scratch.dir("graft-sqlwh2").toString
     SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
     val s2 = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
@@ -1726,10 +1727,8 @@ class OpsSpec extends SparkSpec {
         partitionBy = Seq("bucket(8, k)"))
       import s2.implicits._
       t.append((0L until 64L).map(k => (k, s"v$k")).toDF("k", "v"))
-      def scanFiles(df: org.apache.spark.sql.DataFrame): Long =
-        df.queryExecution.executedPlan.collectLeaves().collect {
-          case f: FileSourceScanExec => f.relation.location.inputFiles.length.toLong
-        }.sum
+      // files the plan reads, from either leaf
+      def scanFiles(df: org.apache.spark.sql.DataFrame): Long = plannedFiles(df).size.toLong
       val sqlDf = s2.sql("SELECT v FROM graft.db1.pt WHERE k = 17")
       val apiPruned = t.prunedFiles("k = 17").size.toLong
       val total = t.liveFiles().count(_.fileType == "data").toLong
@@ -1745,8 +1744,7 @@ class OpsSpec extends SparkSpec {
 
   test("SQL reads of a branch prune the manifest like head reads") {
     import org.apache.spark.sql.SparkSession
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    val wh = java.nio.file.Files.createTempDirectory("graft-sqlwh3").toString
+    val wh = Scratch.dir("graft-sqlwh3").toString
     SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
     val s2 = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
@@ -1762,19 +1760,15 @@ class OpsSpec extends SparkSpec {
       t.append((0L until 64L).map(k => (k, s"v$k")).toDF("k", "v"))
       t.createBranch("b")
       t.append((64L until 128L).map(k => (k, s"v$k")).toDF("k", "v"), branch = "b")
-      // files in the relations the plan was built from (one
-      // ManifestFileIndex per schema group)
-      def plannedFiles(df: org.apache.spark.sql.DataFrame): Long =
-        df.queryExecution.executedPlan.collectLeaves().collect {
-          case f: FileSourceScanExec => f.relation.location.inputFiles.length.toLong
-        }.sum
+      // files the plan reads, from either leaf
+      def planned(df: org.apache.spark.sql.DataFrame): Long = plannedFiles(df).size.toLong
       val sqlDf = s2.sql("SELECT v FROM graft.db1.`bt@b` WHERE k = 17")
       val apiDf = t.scan(filter = Some("k = 17"), ref = Some("b"))
       val branchFiles = t.liveFiles("b").count(_.fileType == "data").toLong
-      assert(plannedFiles(apiDf) < branchFiles, "bucket pruning must drop files")
-      assert(plannedFiles(sqlDf) == plannedFiles(apiDf),
-        s"SQL branch read plans ${plannedFiles(sqlDf)} of $branchFiles files, " +
-          s"the API read ${plannedFiles(apiDf)}")
+      assert(planned(apiDf) < branchFiles, "bucket pruning must drop files")
+      assert(planned(sqlDf) == planned(apiDf),
+        s"SQL branch read plans ${planned(sqlDf)} of $branchFiles files, " +
+          s"the API read ${planned(apiDf)}")
       assert(sqlDf.collect().map(_.getString(0)).toSeq == Seq("v17"))
       // the branch's own appends are planned, main's head is not
       assert(s2.sql("SELECT v FROM graft.db1.`bt@b` WHERE k = 81").collect()
@@ -1788,8 +1782,7 @@ class OpsSpec extends SparkSpec {
 
   test("SQL time-travel reads prune the manifest like API reads") {
     import org.apache.spark.sql.SparkSession
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    val wh = java.nio.file.Files.createTempDirectory("graft-sqlwh4").toString
+    val wh = Scratch.dir("graft-sqlwh4").toString
     SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
     val s2 = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
@@ -1804,24 +1797,20 @@ class OpsSpec extends SparkSpec {
       import s2.implicits._
       val s1 = t.append((0L until 64L).map(k => (k, s"v$k")).toDF("k", "v"))
       t.append((64L until 128L).map(k => (k, s"v$k")).toDF("k", "v"))
-      // files in the relations the plan was built from (one
-      // ManifestFileIndex per schema group)
-      def plannedFiles(df: org.apache.spark.sql.DataFrame): Long =
-        df.queryExecution.executedPlan.collectLeaves().collect {
-          case f: FileSourceScanExec => f.relation.location.inputFiles.length.toLong
-        }.sum
+      // files the plan reads, from either leaf
+      def planned(df: org.apache.spark.sql.DataFrame): Long = plannedFiles(df).size.toLong
       val v = s1.snapshotId
       val apiDf = t.scan(filter = Some("k = 17"), snapshotId = Some(v))
       val snapFiles = graft.table.Meta.readEntries(t.location, s1)
         .count(_.fileType == "data").toLong
-      assert(plannedFiles(apiDf) < snapFiles, "bucket pruning must drop files")
+      assert(planned(apiDf) < snapFiles, "bucket pruning must drop files")
       for (sql <- Seq(
           s"SELECT v FROM graft.db1.tt FOR VERSION AS OF $v WHERE k = 17",
           s"SELECT v FROM graft.db1.tt FOR VERSION AS OF $v AS x WHERE k = 17")) {
         val sqlDf = s2.sql(sql)
-        assert(plannedFiles(sqlDf) == plannedFiles(apiDf),
-          s"$sql plans ${plannedFiles(sqlDf)} of $snapFiles files, " +
-            s"the API read ${plannedFiles(apiDf)}")
+        assert(planned(sqlDf) == planned(apiDf),
+          s"$sql plans ${planned(sqlDf)} of $snapFiles files, " +
+            s"the API read ${planned(apiDf)}")
         assert(sqlDf.collect().map(_.getString(0)).toSeq == Seq("v17"))
       }
       // the snapshot's state is read, not the head's

@@ -47,8 +47,12 @@ class PlanSpec extends SparkSpec {
       s"q06 must not read unreferenced columns, got $read")
   }
 
+  // at sf0.001 the tables below are within the leaf bound, so their
+  // scans are local relations the optimizer folds: the Spark leaf shows
+  // the scan and the expressions that a larger table runs in its tasks
+
   test("graft table read: filters push through the field-id layer") {
-    val plan = fullPlan(GraftOps.queries("q_read_filter_project")(spark, sf))
+    val plan = withSparkLeaf(fullPlan(GraftOps.queries("q_read_filter_project")(spark, sf)))
     val pushed = "PushedFilters: \\[[^\\]]*\\]".r.findAllIn(plan).mkString
     assert(pushed.contains("f4") || pushed.contains("f3"),
       s"expected physical-column pushdown, got $pushed")
@@ -56,11 +60,14 @@ class PlanSpec extends SparkSpec {
 
   test("geo queries run the WKB codec as native expressions (no ScalaUDF)") {
     for (q <- Seq("q_geo_bbox", "q_geo_sphere")) {
-      val plan = fullPlan(V3Ops.queries(q)(spark, sf))
+      val plan = withSparkLeaf(fullPlan(V3Ops.queries(q)(spark, sf)))
       assert(!plan.contains("ScalaUDF"),
         s"$q must not fall out of codegen via a UDF:\n$plan")
       assert(plan.contains("graft_wkb"),
         s"$q must decode through the native WKB expressions")
+      // on the driver leaf the optimizer evaluates the same expressions
+      val analyzed = V3Ops.queries(q)(spark, sf).queryExecution.analyzed.toString
+      assert(!analyzed.contains("ScalaUDF") && analyzed.contains("graft_wkb"), analyzed)
     }
   }
 
@@ -77,7 +84,7 @@ class PlanSpec extends SparkSpec {
 
   test("bucket join: co-located — every bucket joins broadcast, no join shuffle") {
     import graft.table.GraftTable
-    val base = java.nio.file.Files.createTempDirectory("graft-bjspec")
+    val base = Scratch.dir("graft-bjspec")
     val facts = GraftTable.create(spark, base.resolve("f").toString,
       "k bigint, v double", partitionBy = Seq("bucket(4, k)"))
     import spark.implicits._
@@ -295,7 +302,7 @@ class PlanSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     import graft.table.{GraftTable, MergeStats}
-    val loc = java.nio.file.Files.createTempDirectory("graft-mergeplan").toString
+    val loc = Scratch.dir("graft-mergeplan").toString
     val t = GraftTable.create(spark, loc, "k bigint, v double")
     t.append((0L until 100L).map(k => (k, k * 1.0)).toDF("k", "v"))
     val src = (50L until 150L).map(k => (k, k + 0.5)).toDF("k", "v")
@@ -340,7 +347,7 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     // an ingest-sized merge: 8 of 12 source rows match, 4 insert
     def run(): (Seq[SparkPlan], SparkPlan, Seq[String]) = {
-      val loc = java.nio.file.Files.createTempDirectory("graft-mergebound").toString
+      val loc = Scratch.dir("graft-mergebound").toString
       val t = GraftTable.create(spark, loc, "k bigint, v double, s string")
       t.append((0L until 200L).map(k => (k, k * 1.0, s"r$k")).toDF("k", "v", "s"))
       val src = ((40L until 48L) ++ (500L until 504L))

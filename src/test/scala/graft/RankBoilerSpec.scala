@@ -67,7 +67,7 @@ class RankBoilerSpec extends SparkSpec {
   }
 
   test("boilerplate: df-threshold drops ALL occurrences, scoped per source") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-boiler").toString
+    val dir = Scratch.dir("graft-boiler").toString
     Seq(
       (1L, "a b c d x1 x2 x3 x4", "en", "srcA", 19L),
       (2L, "a b c d y1 y2 y3 y4", "en", "srcA", 19L),

@@ -18,7 +18,7 @@ import graft.table._
 class SegStatsSpec extends SparkSpec {
 
   private def loc(): String =
-    Files.createTempDirectory("graft-segstats").toString
+    Scratch.dir("graft-segstats").toString
 
   private def part(d: String) = Map("ts_day" -> d)
 
@@ -342,7 +342,7 @@ class SegStatsSpec extends SparkSpec {
     add(1, "2024-01-01"); add(2, "2024-01-01")
     add(3, "2024-02-01"); add(4, "2024-03-01")
     val t = src.shallowClone(
-      Files.createTempDirectory("graft-segstats-clone").resolve("c").toString)
+      Scratch.dir("graft-segstats-clone").resolve("c").toString)
     t.rewriteManifests()
     val head = t.meta.head("main").get
     assert(head.manifests.size == 2, s"got ${head.manifests}")

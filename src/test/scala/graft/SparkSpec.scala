@@ -4,8 +4,10 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.graft.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,16 +22,40 @@ trait SparkSpec extends AnyFunSuite {
   def withJoinDeletes[T](body: => T): T = withBroadcastBound(-1)(body)
 
   /** `body` with Spark's broadcast bound at `bytes`. */
-  def withBroadcastBound[T](bytes: Long)(body: => T): T = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
+  def withBroadcastBound[T](bytes: Long)(body: => T): T =
+    withConf("spark.sql.autoBroadcastJoinThreshold", bytes.toString)(body)
+
+  /** `body` with every file group of a scan read through the Spark leaf
+    * (a `ManifestFileIndex` relation): the leaf rule reads a group on the
+    * driver only when Spark's vectorized parquet reader may read it, and
+    * this switches that reader off. */
+  def withSparkLeaf[T](body: => T): T =
+    withConf("spark.sql.parquet.enableVectorizedReader", "false")(body)
+
+  /** `body` with the session setting `key` at `value`. */
+  def withConf[T](key: String, value: String)(body: => T): T = {
     val prev = spark.conf.getOption(key)
-    spark.conf.set(key, bytes.toString)
+    spark.conf.set(key, value)
     try body
     finally prev match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
     }
   }
+
+  /** The data files `df` reads, as raw absolute paths, from either leaf of
+    * a table scan: the inputs of its file relations (Spark leaf) and the
+    * `_gf` values of its local relations (driver leaf, whose every row
+    * carries its file's path). */
+  def plannedFiles(df: DataFrame): Set[String] =
+    df.queryExecution.analyzed.collectLeaves().flatMap {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) =>
+        r.location.inputFiles.toSeq.map(f => new java.net.URI(f).getPath)
+      case l: LocalRelation =>
+        val i = l.output.indexWhere(_.name == "_gf")
+        if (i < 0) Nil else l.data.map(_.getUTF8String(i).toString)
+      case _ => Nil
+    }.toSet
 
   /** `body`'s result and the number of Spark jobs started while it ran. */
   def jobsDuring[T](body: => T): (T, Int) = {

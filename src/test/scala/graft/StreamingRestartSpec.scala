@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.util.UUID
 
 import scala.collection.mutable.ArrayBuffer
@@ -21,7 +20,7 @@ class StreamingRestartSpec extends SparkSpec {
   import spark.implicits._
 
   test("tail resumes from committed offsets: exactly-once across restarts") {
-    val tmp = Files.createTempDirectory("graft-restart").toString
+    val tmp = Scratch.dir("graft-restart").toString
     val a = GraftTable.create(spark, s"$tmp/a", "k bigint, v double")
     a.append((1L to 100L).map(k => (k, k * 1.0)).toDF("k", "v"))
 
@@ -56,7 +55,7 @@ class StreamingRestartSpec extends SparkSpec {
   }
 
   test("CDC stream resumes from committed versions: exactly-once across restarts") {
-    val tmp = Files.createTempDirectory("graft-cdcrestart").toString
+    val tmp = Scratch.dir("graft-cdcrestart").toString
     val loc = s"$tmp/tbl"
     val t = GraftTable.create(spark, loc, "id bigint, status string, total double")
     val out = GraftTable.create(spark, s"$tmp/out",
@@ -98,7 +97,7 @@ class StreamingRestartSpec extends SparkSpec {
   }
 
   test("in-job post-commit compaction: op log interleaves with the stream, data intact") {
-    val tmp = Files.createTempDirectory("graft-sc").toString
+    val tmp = Scratch.dir("graft-sc").toString
     val a = GraftTable.create(spark, s"$tmp/a", "k bigint, v double")
     (0 until 4).foreach(i => a.append(Seq((i.toLong, i * 1.0)).toDF("k", "v")))
     GraftTable.create(spark, s"$tmp/b", "k bigint, v double")
@@ -125,7 +124,7 @@ class StreamingRestartSpec extends SparkSpec {
   }
 
   test("stateful aggregation state survives a checkpoint restart") {
-    val tmp = Files.createTempDirectory("graft-restate").toString
+    val tmp = Scratch.dir("graft-restate").toString
     val a = GraftTable.create(spark, s"$tmp/a", "k bigint, v double")
     a.append((1L to 100L).map(k => (k, k * 1.0)).toDF("k", "v"))
     val name = s"rs_${UUID.randomUUID.toString.replace("-", "")}"

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -16,7 +14,7 @@ import org.apache.spark.sql.streaming.Trigger
 class StreamingStateSpec extends SparkSpec {
 
   test("watermark evicts stream-stream join state across micro-batches") {
-    val tmp = Files.createTempDirectory("graft-sstate").toString
+    val tmp = Scratch.dir("graft-sstate").toString
     import spark.implicits._
 
     // 2000 events over ~16h: click at t, matching-user purchase 30s later

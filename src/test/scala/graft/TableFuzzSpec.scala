@@ -33,7 +33,7 @@ import graft.table._
 class TableFuzzSpec extends SparkSpec {
 
   private def tmp(): String =
-    Files.createTempDirectory("graft-fuzz").resolve("t").toString
+    Scratch.dir("graft-fuzz").resolve("t").toString
 
   /** one model row; `cols` tracks the live schema width */
   private type MRow = mutable.LinkedHashMap[String, Any]
@@ -42,10 +42,14 @@ class TableFuzzSpec extends SparkSpec {
     rows.map(_.map(String.valueOf).mkString("|")).sorted.toVector
 
   /** `read` through both merge-on-read paths — the driver-built delete
-    * filter (the default) and anti-joins (broadcast bound off) — which
-    * must agree; the caller checks the result against its model. */
+    * filter (the default), on the driver leaf where a file group is small
+    * enough and on the Spark leaf, and anti-joins (broadcast bound off,
+    * so the Spark leaf) — which must agree; the caller checks the result
+    * against its model. */
   private def bothPaths[T](tag: => String)(read: => T): T = {
     val viaFilter = read
+    val viaSparkLeaf = withSparkLeaf(read)
+    assert(viaSparkLeaf == viaFilter, s"$tag: the Spark leaf diverged from the driver leaf")
     val viaJoins = withJoinDeletes(read)
     assert(viaJoins == viaFilter, s"$tag: the anti-join path diverged from the filter path")
     viaFilter
@@ -430,7 +434,7 @@ class TableFuzzSpec extends SparkSpec {
          |    WHERE d.file_path = r.fp AND d.pos = r.pos)
          |  AND NOT EXISTS (SELECT 1 FROM eqdel e
          |    WHERE e.key_id = r.id AND r.fseq < e.dseq)""".stripMargin
-    val out = Files.createTempDirectory("graft-fuzz-duck").resolve("out.parquet")
+    val out = Scratch.dir("graft-fuzz-duck").resolve("out.parquet")
     val sqlFile = Files.createTempFile("fuzz-duck", ".sql")
     Files.writeString(sqlFile, s"COPY ($sql) TO '$out' (FORMAT PARQUET);")
     val rc = Process(Seq("python3", "-c",
@@ -722,7 +726,7 @@ class TableFuzzSpec extends SparkSpec {
     import spark.implicits._
     val loc = tmp()
     val t = GraftTable.create(spark, loc, "id bigint, k bigint, s string")
-    val ext = Files.createTempDirectory("graft-extimport").toString
+    val ext = Scratch.dir("graft-extimport").toString
     Seq((1L, 10L, "a"), (2L, 20L, "b"), (3L, 30L, "c")).toDF("id", "k", "s")
       .coalesce(1).write.mode("overwrite").parquet(ext)
     t.addFiles(ext)

@@ -14,7 +14,7 @@ import graft.table._
 class TableSpec extends SparkSpec {
 
   private def tmp(): String =
-    Files.createTempDirectory("graft-spec").resolve("t").toString
+    Scratch.dir("graft-spec").resolve("t").toString
 
   private def mkOrders(loc: String, partitionBy: Seq[String] = Nil): GraftTable = {
     val t = GraftTable.create(spark, loc,
@@ -921,7 +921,7 @@ class TableSpec extends SparkSpec {
   }
 
   test("catalog: namespaces, create/list/rename/drop") {
-    val wh = Files.createTempDirectory("graft-wh").toString
+    val wh = Scratch.dir("graft-wh").toString
     val cat = new GraftCatalog(spark, wh)
     cat.createNamespace("db1")
     val t = cat.createTable("db1", "orders", "k bigint, v string")
@@ -938,7 +938,7 @@ class TableSpec extends SparkSpec {
   }
 
   test("cleanStaging removes stale crashed-RTAS dirs, keeps young ones") {
-    val wh = Files.createTempDirectory("graft-stg").toString
+    val wh = Scratch.dir("graft-stg").toString
     val cat = new GraftCatalog(spark, wh)
     cat.createNamespace("db")
     // a "crashed" staging table whose TARGET IS ALIVE (crash before the
@@ -956,7 +956,7 @@ class TableSpec extends SparkSpec {
   }
 
   test("cleanStaging finishes a swap that crashed between drop and rename") {
-    val wh = Files.createTempDirectory("graft-stg2").toString
+    val wh = Scratch.dir("graft-stg2").toString
     val cat = new GraftCatalog(spark, wh)
     import spark.implicits._
     // simulate the RTAS crash window: the staging table is FULLY
@@ -1068,7 +1068,7 @@ class TableSpec extends SparkSpec {
     val loc = tmp()
     val t = mkOrders(loc)
     t.append(seedDf(seed.take(3)))
-    val ckpt = Files.createTempDirectory("graft-tail-ck").toString
+    val ckpt = Scratch.dir("graft-tail-ck").toString
     // foreachBatch sink: supports restart from the same checkpoint, so the
     // second drain resumes the file-stream offsets and sees only new files
     def drain(outDir: String): Long = {
@@ -1083,8 +1083,8 @@ class TableSpec extends SparkSpec {
         spark.read.parquet(outDir).count()
       else 0L
     }
-    val o1 = Files.createTempDirectory("graft-tail-o1").toString
-    val o2 = Files.createTempDirectory("graft-tail-o2").toString
+    val o1 = Scratch.dir("graft-tail-o1").toString
+    val o2 = Scratch.dir("graft-tail-o2").toString
     assert(drain(s"$o1/out") == 3, "first drain sees the initial snapshot")
     t.append(seedDf(seed.drop(3)))
     assert(drain(s"$o2/out") == 3, "second drain sees ONLY the new commit's rows")
@@ -1487,8 +1487,8 @@ class TableSpec extends SparkSpec {
     assert(inc.select("o_orderkey").collect().map(_.getLong(0)).sorted.toSeq == Seq(3L, 4L))
     // file-subset pruning: the incremental read plans strictly fewer
     // files than the full scan (this is the whole point at 100 TB)
-    val incFiles = inc.inputFiles.toSet
-    val allFiles = t.scan().inputFiles.toSet
+    val incFiles = plannedFiles(inc)
+    val allFiles = plannedFiles(t.scan())
     assert(incFiles.nonEmpty && incFiles.subsetOf(allFiles) && incFiles.size < allFiles.size,
       s"delta must plan a strict file subset: ${incFiles.size} vs ${allFiles.size}")
     // empty window -> empty result, full schema
@@ -1799,7 +1799,7 @@ class TableSpec extends SparkSpec {
     // the warehouse ancestor where no GC ever runs
     def keys(tt: GraftTable): Set[Long] =
       tt.scan().select("o_orderkey").collect().map(_.getLong(0)).toSet
-    val base = Files.createTempDirectory("graft-spec").toString
+    val base = Scratch.dir("graft-spec").toString
     val t = mkOrders(s"$base/data/warehouse/t1")
     t.append(seedDf(seed).coalesce(1))
     val c = t.shallowClone(s"$base/data/warehouse/t2")

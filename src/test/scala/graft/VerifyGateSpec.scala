@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 class VerifyGateSpec extends SparkSpec {
 
   test("a throwing query leaves an _ERROR marker dir, not silence") {
-    val out = Files.createTempDirectory("graft-vgate").toString
+    val out = Scratch.dir("graft-vgate").toString
     val ok = Verify.runOne(spark, sf, out, "q_boom",
       (_, _) => throw new RuntimeException("deliberate"))
     assert(!ok)
@@ -19,7 +19,7 @@ class VerifyGateSpec extends SparkSpec {
   }
 
   test("a succeeding query writes parquet and no marker") {
-    val out = Files.createTempDirectory("graft-vgate2").toString
+    val out = Scratch.dir("graft-vgate2").toString
     val ok = Verify.runOne(spark, sf, out, "q_tiny",
       (s, _) => s.range(3).select(col("id")))
     assert(ok)
@@ -32,7 +32,7 @@ class VerifyGateSpec extends SparkSpec {
     // queries.json: registry key set == output dir set. Proven here on
     // the mechanism (runOne always creates the dir), and cheaply on a
     // sample of real queries rather than re-running all 180.
-    val out = Files.createTempDirectory("graft-vgate3").toString
+    val out = Scratch.dir("graft-vgate3").toString
     val sample = SparkEntry.queries.keys.toSeq.sorted.take(3)
     sample.foreach(n => Verify.runOne(spark, sf, out, n, SparkEntry.queries(n)))
     val dirs = new java.io.File(out).listFiles().filter(_.isDirectory)

@@ -28,7 +28,7 @@ class WritePathSpec extends SparkSpec {
   private val DayUs = 86400000000L
   private val Day0 = 1704067200000000L // 2024-01-01T00:00:00Z
 
-  private def tmp(): String = Files.createTempDirectory("graft-writepath").toString
+  private def tmp(): String = Scratch.dir("graft-writepath").toString
 
   private def mk(loc: String): GraftTable =
     GraftTable.create(spark, s"$loc/t", "id bigint, ts timestamp, v string",
